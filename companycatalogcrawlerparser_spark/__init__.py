@@ -22,12 +22,14 @@ Layers
 - ``operators``  url-seen anti-join w/ per-partition bloom, priority
                  frontier + politeness scheduling, dedup family (exact,
                  minhash-LSH, simhash, n-gram jaccard, embedding cosine),
-                 similarity search, text quality, multimodal plumbing.
+                 similarity search, text quality, training-corpus
+                 curation.
 - ``plans``      end-to-end crawl loop (round-based BFS with snapshot
                  checkpointing + resume), catalog scrape, mailer read.
 - ``storage``    atomic parquet snapshot commit/restore (Iceberg-style
                  snapshot semantics without the Iceberg runtime).
-- ``streaming``  Structured Streaming ingestion of page-fetch event logs.
+- ``streaming``  Structured Streaming over page-fetch event logs (per-host
+                 politeness audit) and streaming near-dup pairs.
 """
 
 __version__ = "0.1.0"

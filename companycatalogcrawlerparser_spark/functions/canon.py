@@ -88,12 +88,6 @@ def canonical_host(url: Column) -> Column:
     return hostname(url)
 
 
-def host_salt(url: Column, num_partitions: int) -> Column:
-    """Salted-hash partition key: hot hosts spread over partitions only
-    AFTER politeness stamps are assigned (SURVEY.md §4 strategy 1)."""
-    return F.pmod(F.xxhash64(canonical_host(url)), F.lit(num_partitions))
-
-
 # --------------------------------------------------------------------------
 # Reference-quirk URL pieces (X1-X3)
 

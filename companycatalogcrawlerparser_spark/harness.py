@@ -25,7 +25,9 @@ seq values (admission.py docstring).
 from __future__ import annotations
 
 import datetime
+import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, Window
@@ -107,11 +109,49 @@ def _write(dirpath: str, name: str, cols: dict) -> None:
     pq.write_table(pa.table(cols), os.path.join(dirpath, f"{name}.parquet"))
 
 
-def oracle_dir() -> str:
-    """Generate (once per process) every oracle parquet; returns the dir."""
-    if "oracle_dir" in _memo:
-        return _memo["oracle_dir"]
-    d = tempfile.mkdtemp(prefix="ccp_crawl_oracle_")
+def _tree_digest(d: str) -> str:
+    """sha256 (16 hex) over every file's relative path and bytes under ``d``."""
+    digest = hashlib.sha256()
+    for root, dirs, files in os.walk(d):
+        dirs.sort()
+        for fn in sorted(files):
+            path = os.path.join(root, fn)
+            digest.update(os.path.relpath(path, d).encode() + b"\0")
+            with open(path, "rb") as f:
+                digest.update(f.read())
+    return digest.hexdigest()[:16]
+
+
+def _fixture_dir(name: str, build) -> str:
+    """Directory holding the files ``build(d)`` writes into ``d``.
+
+    The path is ``<tempdir>/<name>-<digest of the files>``, so the
+    ``oracle_sql()`` text that names it is the same in every process that
+    builds the same bytes. ``build`` runs in a private temp dir that is
+    then renamed into place in one step. A target that exists already is
+    reused only if this user owns it and its files still hash to the
+    digest; otherwise (partly cleaned, or someone else's) the private
+    build is served instead. Memoized per process."""
+    if name in _memo:
+        return _memo[name]
+    tmp = tempfile.mkdtemp(prefix=f"{name}-build-")
+    build(tmp)
+    digest = _tree_digest(tmp)
+    d = os.path.join(tempfile.gettempdir(), f"{name}-{digest}")
+    try:
+        os.rename(tmp, d)
+    except OSError:
+        if not os.path.isdir(d):
+            raise
+        if os.stat(d).st_uid == os.getuid() and _tree_digest(d) == digest:
+            shutil.rmtree(tmp)
+        else:
+            d = tmp
+    _memo[name] = d
+    return d
+
+
+def _build_oracle(d: str) -> None:
     res = _oracle_crawl()
 
     rows = _norm_trace(res.trace)
@@ -263,9 +303,16 @@ def oracle_dir() -> str:
     _write(d, "markdown", {
         "page_url": [u for u, _ in md], "value": [v for _, v in md],
     })
+    _write_nested_categories(d)
+    _write_robots_gate(d)
+    _write_warc_ingest(d)
+    _write_sitemap_ingest(d)
+    _write_recrawl_select(d)
 
-    _memo["oracle_dir"] = d
-    return d
+
+def oracle_dir() -> str:
+    """Generate (once per process) every oracle parquet; returns the dir."""
+    return _fixture_dir("ccp_crawl_oracle", _build_oracle)
 
 
 def _layout_fixtures():
@@ -538,7 +585,6 @@ def crawl_oracle_sql() -> dict:
     def rp(name: str) -> str:
         return f"read_parquet('{os.path.join(d, name + '.parquet')}')"
 
-    _write_nested_categories(d)
     return {
         "crawl_trace": f"SELECT company_id, priority, ord, url, action FROM {rp('trace')}",
         "crawl_url_seen": f"SELECT scope, canonical_url FROM {rp('url_seen')}",
@@ -781,10 +827,7 @@ def _py_semdedup():
     return sorted(out)
 
 
-def ann_oracle_dir() -> str:
-    if "ann_oracle_dir" in _memo:
-        return _memo["ann_oracle_dir"]
-    d = tempfile.mkdtemp(prefix="ccp_ann_oracle_")
+def _build_ann_oracle(d: str) -> None:
     for name, kind in (
         ("ann_brute", "brute"), ("ann_lsh", "lsh"), ("ann_ivf", "ivf"),
     ):
@@ -802,8 +845,10 @@ def ann_oracle_dir() -> str:
         "component": [r[3] for r in sd],
         "keep": [r[4] for r in sd],
     })
-    _memo["ann_oracle_dir"] = d
-    return d
+
+
+def ann_oracle_dir() -> str:
+    return _fixture_dir("ccp_ann_oracle", _build_ann_oracle)
 
 
 # --- BPE tokenizer fixture (corpus_curation kinds bpe_merge/word/doc) ------
@@ -921,7 +966,7 @@ def _py_bpe() -> list:
         ("bpe_merge", i, f"{a} {b}", n)
         for i, (a, b, n) in enumerate(merges)
     ]
-    enc_cache = {w: enc(w) for w in {w for w in wc}}
+    enc_cache = {w: enc(w) for w in sorted(wc)}
     for w, toks in enc_cache.items():
         rows.append(("bpe_word", len(toks), w, _md5_int15(" ".join(toks))))
     for d, text in docs:
@@ -931,10 +976,7 @@ def _py_bpe() -> list:
     return rows
 
 
-def bpe_oracle_dir() -> str:
-    if "bpe_oracle_dir" in _memo:
-        return _memo["bpe_oracle_dir"]
-    d = tempfile.mkdtemp(prefix="ccp_bpe_oracle_")
+def _build_bpe_oracle(d: str) -> None:
     rows = _py_bpe()
     _write(d, "bpe", {
         "kind": [r[0] for r in rows],
@@ -942,8 +984,10 @@ def bpe_oracle_dir() -> str:
         "grp": [r[2] for r in rows],
         "val": [r[3] for r in rows],
     })
-    _memo["bpe_oracle_dir"] = d
-    return d
+
+
+def bpe_oracle_dir() -> str:
+    return _fixture_dir("ccp_bpe_oracle", _build_bpe_oracle)
 
 
 def _md5_int15_col(c) -> "F.Column":
@@ -1156,17 +1200,16 @@ TEMPLATE_FILES = [
 ]
 
 
-def template_dir() -> str:
-    if "template_dir" in _memo:
-        return _memo["template_dir"]
-    d = tempfile.mkdtemp(prefix="ccp_templates_")
+def _build_templates(d: str) -> None:
     for rel, data in TEMPLATE_FILES:
         path = os.path.join(d, rel)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "wb") as f:
             f.write(data)
-    _memo["template_dir"] = d
-    return d
+
+
+def template_dir() -> str:
+    return _fixture_dir("ccp_templates", _build_templates)
 
 
 def q_s7_template_scan(spark, sf_dir) -> DataFrame:
@@ -1233,11 +1276,10 @@ def q_robots_gate(spark, sf_dir) -> DataFrame:
     )
 
 
-def robots_oracle_sql() -> str:
+def _write_robots_gate(d: str) -> None:
     from .refsem.robots import RobotsOracle
 
     oracle = RobotsOracle(ROBOTS_FIXTURES, agent="ccc-spark")
-    d = oracle_dir()
     rows = []
     for u in ROBOTS_URLS:
         host = u.split("//")[1].split("/")[0]
@@ -1246,6 +1288,10 @@ def robots_oracle_sql() -> str:
         "url": [r[0] for r in rows],
         "robots_allowed": [r[1] for r in rows],
     })
+
+
+def robots_oracle_sql() -> str:
+    d = oracle_dir()
     return (
         f"SELECT url, robots_allowed FROM "
         f"read_parquet('{os.path.join(d, 'robots_gate.parquet')}')"
@@ -1311,37 +1357,35 @@ def warc_fixture_bytes() -> dict:
     ]
     return {
         "seg-a.warc": b"".join(recs_a),
-        "seg-b.warc.gz": b"".join(_gz.compress(r) for r in recs_b),
+        "seg-b.warc.gz": b"".join(_gz.compress(r, mtime=0) for r in recs_b),
     }
 
 
-def warc_dir() -> str:
-    if "warc_dir" in _memo:
-        return _memo["warc_dir"]
-    d = tempfile.mkdtemp(prefix="ccp_warc_")
+def _build_warc(d: str) -> None:
     for name, data in warc_fixture_bytes().items():
         with open(os.path.join(d, name), "wb") as f:
             f.write(data)
-    _memo["warc_dir"] = d
-    return d
+
+
+def warc_dir() -> str:
+    return _fixture_dir("ccp_warc", _build_warc)
+
+
+def _build_cdx(d: str) -> None:
+    from .sources.warc import build_cdx_lines
+
+    lines = build_cdx_lines(
+        warc_fixture_bytes()["seg-b.warc.gz"], "seg-b.warc.gz"
+    )
+    with open(os.path.join(d, "seg-b.cdx"), "w") as f:
+        f.write("\n".join(lines) + "\n")
 
 
 def cdx_dir() -> str:
     """CDXJ index for the fixture's ``.warc.gz`` segment (the compressed
     file is the one whose members a CDX makes individually addressable —
     see ``sources/warc.py`` module docstring)."""
-    if "cdx_dir" in _memo:
-        return _memo["cdx_dir"]
-    from .sources.warc import build_cdx_lines
-
-    d = tempfile.mkdtemp(prefix="ccp_cdx_")
-    lines = build_cdx_lines(
-        warc_fixture_bytes()["seg-b.warc.gz"], "seg-b.warc.gz"
-    )
-    with open(os.path.join(d, "seg-b.cdx"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-    _memo["cdx_dir"] = d
-    return d
+    return _fixture_dir("ccp_cdx", _build_cdx)
 
 
 def q_warc_ingest(spark, sf_dir) -> DataFrame:
@@ -1380,12 +1424,9 @@ def q_warc_ingest(spark, sf_dir) -> DataFrame:
     return whole.unionByName(ranged).unionByName(indexed)
 
 
-def warc_oracle_sql() -> str:
-    import hashlib
-
+def _write_warc_ingest(d: str) -> None:
     from .refsem.warc import pages_from_warc
 
-    d = oracle_dir()
     fixtures = warc_fixture_bytes()
     rows = []
     for kind, datas in (
@@ -1405,6 +1446,10 @@ def warc_oracle_sql() -> str:
         "n_bytes": [r[3] for r in rows],
         "html_md5": [r[4] for r in rows],
     })
+
+
+def warc_oracle_sql() -> str:
+    d = oracle_dir()
     return (
         "SELECT kind, url, warc_ts, CAST(n_bytes AS BIGINT) AS n_bytes, "
         "html_md5 "
@@ -1490,10 +1535,9 @@ def q_sitemap_ingest(spark, sf_dir) -> DataFrame:
     return SM.sitemap_urls(pages, roots)
 
 
-def sitemap_oracle_sql() -> str:
+def _write_sitemap_ingest(d: str) -> None:
     from .refsem import sitemap as RSM
 
-    d = oracle_dir()
     rows = RSM.crawl_sitemaps(SITEMAP_FIXTURES, SITEMAP_ROOTS)
     _write(d, "sitemap_ingest", {
         "root_url": [r[0] for r in rows],
@@ -1501,6 +1545,10 @@ def sitemap_oracle_sql() -> str:
         "url": [r[2] for r in rows],
         "lastmod": [r[3] for r in rows],
     })
+
+
+def sitemap_oracle_sql() -> str:
+    d = oracle_dir()
     return (
         "SELECT root_url, ord, url, lastmod FROM "
         f"read_parquet('{os.path.join(d, 'sitemap_ingest.parquet')}')"
@@ -1582,10 +1630,9 @@ def q_recrawl_select(spark, sf_dir) -> DataFrame:
     return rc.unionByName(seeds)
 
 
-def recrawl_oracle_sql() -> str:
+def _write_recrawl_select(d: str) -> None:
     from .refsem import sitemap as RSM
 
-    d = oracle_dir()
     entries = RSM.crawl_sitemaps(RECRAWL_FIXTURES, RECRAWL_ROOTS)
     rows = [
         ("recrawl", url, ts, reason)
@@ -1606,6 +1653,10 @@ def recrawl_oracle_sql() -> str:
         "ts": [r[2] for r in rows],
         "label": [r[3] for r in rows],
     })
+
+
+def recrawl_oracle_sql() -> str:
+    d = oracle_dir()
     return (
         "SELECT kind, url, ts, label FROM "
         f"read_parquet('{os.path.join(d, 'recrawl_select.parquet')}')"
@@ -1630,8 +1681,6 @@ def _nested_fixture(layout):
 def _write_nested_categories(d: str) -> None:
     """Pure-Python H2/H3 nested-load oracle (refsem walk with a fetch
     callback), written as parquet for the folded h_categories twin."""
-    if os.path.exists(os.path.join(d, "categories_nested.parquet")):
-        return
     rows = []
     for layout in ("jsprav", "spravker"):
         base, cat, subs = _nested_fixture(layout)

@@ -1,2 +1,2 @@
 """Operators: extraction, url-seen dedup, frontier scheduling, dedup
-family, similarity search, text quality, multimodal plumbing."""
+family, similarity search, text quality, training-corpus curation."""

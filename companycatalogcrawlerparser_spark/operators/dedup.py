@@ -542,9 +542,8 @@ def simhash_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     Returns ``(simhash, n_docs, min_id)`` — a BOUNDED row per bucket. The
     previous ``collect_list(ids)`` form put an entire bucket's membership
     into one aggregation buffer, which is unbounded for a mega-cluster of
-    identical docs; consumers that need the membership join
-    :func:`simhash_members` (one row per doc — spills like any table)
-    against these group rows instead."""
+    identical docs; consumers that need the membership join the per-doc
+    ``(doc_id, simhash16(text))`` table against these group rows instead."""
     d = df.select(F.col(id_col), simhash16(F.col(text_col)).alias("simhash"))
     return (
         d.groupBy("simhash")
@@ -554,13 +553,6 @@ def simhash_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         )
         .filter(F.col("n_docs") >= 2)
     )
-
-
-def simhash_members(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exploded membership table for :func:`simhash_groups`: one
-    ``(doc_id, simhash)`` row per doc — join on ``simhash`` to enumerate a
-    bucket without ever materializing it in a single aggregation buffer."""
-    return df.select(F.col(id_col), simhash16(F.col(text_col)).alias("simhash"))
 
 
 # ---------------------------------------------------------------------------

@@ -38,12 +38,6 @@ def insert_if_absent(
     return existing.unionByName(fresh, allowMissingColumns=True)
 
 
-def append_blind(existing: DataFrame, new: DataFrame) -> DataFrame:
-    """K3 — blind bulk append, duplicates expected and resolved downstream
-    by A2/W1 (quirk Q7; ``DbAccess.fs:97-115``)."""
-    return existing.unionByName(new, allowMissingColumns=True)
-
-
 def assign_dense_ids(
     df: DataFrame,
     order_col: str,

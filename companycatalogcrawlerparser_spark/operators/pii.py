@@ -15,8 +15,8 @@ or lookaround) so the DuckDB oracle evaluates the IDENTICAL pattern
 text: detection counts and the redacted string are bit-comparable
 across engines. Patterns deliberately favor precision over recall
 (false redactions destroy training text silently); swapping in a
-heavier NER model would ride ``mapInPandas`` like the multimodal
-kernels, behind the same column contract.
+heavier NER model would ride ``mapInPandas``, behind the same column
+contract.
 """
 
 from __future__ import annotations

@@ -39,10 +39,6 @@ def _norm(a):
     )
 
 
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,

@@ -417,16 +417,3 @@ def synthesize_city_seeds(
         spark = cities.sparkSession
         static_seeds = spark.createDataFrame(CITY_SEEDS_STATIC, "url string, city_code string")
     return static_seeds.unionByName(reachable)
-
-
-def dedup_companies_by_site(companies: DataFrame) -> DataFrame:
-    """A2/W1 — the reference's own ROW_NUMBER dedup
-    (``UsefulSQLQuery.sql:33-36``)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("site_url").orderBy("company_id")
-    return (
-        companies.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )

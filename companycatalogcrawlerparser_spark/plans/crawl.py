@@ -21,7 +21,6 @@ host. No collect() except tiny control counts and manifest counters.
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -43,20 +42,6 @@ from ..operators import robots as RB
 from ..operators.urlseen import UrlSeen, seen_key
 from ..sources.pages import fetch_join, redirect_map
 from ..storage.snapshots import SnapshotStore
-
-_TIMING = os.environ.get("SPARK_GRAFT_TIMING", "") == "1"
-_t_last = [time.monotonic()]
-
-
-def _mark(label: str) -> None:
-    """Phase-timing telemetry, enabled via SPARK_GRAFT_TIMING=1."""
-    if _TIMING:
-        now = time.monotonic()
-        print(f"@@@ {label}: {now - _t_last[0]:.1f}s", flush=True)
-        _t_last[0] = now
-
-
-FRONTIER_COLS = ["company_id", "url", "priority", "seq", "base_url"]
 
 EMPTY_SEEN_SCHEMA = "seen_key long, scope string, canonical_url string, round int"
 
@@ -139,7 +124,6 @@ def run_crawl(
 
     # redirect closure depends only on the corpus — compute once, cache
     # (small: the 3xx subset), reuse across rounds
-    _mark("run_crawl entered")
     restore_split = _tune_input_splits(spark, pages)
 
     # robots rules parsed ONCE per run from the corpus's own robots.txt
@@ -155,9 +139,7 @@ def run_crawl(
             robots_rules_df = rr
             delays = RB.crawl_delays(rr)
             robots_politeness = delays if not delays.isEmpty() else None
-    _mark("robots rules built")
     rmap = redirect_map(pages).cache() if start_round < cfg.max_depth else None
-    _mark("redirect_map built (lazy+cache)")
 
     for round_id in range(start_round, cfg.max_depth):
         if round_id == 0:
@@ -190,7 +172,6 @@ def run_crawl(
                     useen.set_blooms(store.read(round_id - 1, "blooms"))
                 else:
                     useen.build_blooms(seen)
-                _mark(f"round {round_id} load/build blooms")
             cand = (
                 frontier.withColumn("canonical_url", canonicalize_url(F.col("url")))
                 .withColumn("scope", F.col("company_id").cast("string"))
@@ -224,7 +205,6 @@ def run_crawl(
         )
         sched = FR.salted(sched, cfg.num_partitions)
 
-        _mark(f"round {round_id} plan: frontier+schedule built")
         # the fetch join stays LAZY: html streams from the corpus scan
         # straight through ONE Arrow pass that emits fetch metadata +
         # per-page token arrays; only that metadata-sized frame is
@@ -243,7 +223,6 @@ def run_crawl(
             X.extract_tokens_native if cfg.native_extract else X.extract_tokens_meta
         )
         tokens = extract(fetched).localCheckpoint(eager=True)
-        _mark(f"round {round_id} plan: fetch+extract materialized (eager)")
 
         trace = tokens.select(
             F.lit(round_id).alias("round"),
@@ -271,7 +250,6 @@ def run_crawl(
                         pages, ok_tokens, result["frontier_next"]
                     )
                 )
-            _mark(f"round {round_id} plan: seed_round built")
         else:
             bag = X.regex_emails(ok_tokens).select("company_id", "email")
             result = {
@@ -324,7 +302,6 @@ def run_crawl(
         else:
             counters = {}
 
-        _mark(f"round {round_id} pre-commit")
         tables = {
             "trace": trace,
             "bag": result["bag"],
@@ -340,11 +317,8 @@ def run_crawl(
         if cfg.compact_every and (round_id + 1) % cfg.compact_every == 0:
             store.compact(["bag", "trace", "flags"], upto=round_id)
             store.prune_compacted(round_id)
-            _mark(f"round {round_id} compacted")
 
-    _mark("rounds done")
     out = finalize(spark, store, cfg)
-    _mark("finalize built")
     restore_split()
     return out
 
@@ -480,7 +454,6 @@ def _seed_round(spark, cfg, tokens, ok_tokens) -> dict:
     # checkpoint CALLS execute under AQE, so independent subtrees are
     # checkpointed from concurrent threads (tokens, their shared ancestor,
     # is already checkpointed by the caller).
-    _mark("seed: plans built (tokens checkpoint executed)")
     # contact-like hrefs (F8 ∘ F4): the expensive admission chain is
     # independent of data_link, so it checkpoints in the SAME parallel
     # group; the cheap per-company anti-join ("only companies with no
@@ -498,7 +471,6 @@ def _seed_round(spark, cfg, tokens, ok_tokens) -> dict:
             admitted.filter(F.col("is_contact")),
         ]
     )
-    _mark("seed: mailto/emails/anchors/F8-chain checkpointed (parallel)")
 
     # error / empty-html companies → (true, true, false); the
     # IsNullOrWhiteSpace gate lives in has_html (extract_tokens_meta)

@@ -23,10 +23,6 @@ from ..functions.canon import base_url as base_url_expr
 MAX_REDIRECTS = 20
 
 
-def load_pages(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def _redirect_admissible(url, status, loc):
     """F11 — ``Crawler.fs:218-221`` (incl. the reference's operator-
     precedence quirk: reject only when location starts '://' AND does not

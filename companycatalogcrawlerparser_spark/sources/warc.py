@@ -363,12 +363,6 @@ def read_warc(
 # --------------------------------------------------------------------------
 # CDX-indexed access — record-level parallelism inside .warc.gz segments
 
-CDX_SCHEMA = (
-    "urlkey string, cdx_ts string, url string, warc_file string, "
-    "offset long, length long, status int"
-)
-
-
 def read_cdx(spark: SparkSession, path: str, glob: str = "*.cdx*") -> DataFrame:
     """Parse CDXJ index files (the Common-Crawl index layout: per line
     ``urlkey timestamp {json}`` with ``url`` / ``filename`` / ``offset``

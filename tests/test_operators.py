@@ -1,5 +1,5 @@
 """Unit tests: url-seen bloom exactness, dedup family, similarity,
-text quality, multimodal plumbing, streaming ingestion."""
+text quality, streaming ingestion, graph and curation operators."""
 
 import numpy as np
 import pytest
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from companycatalogcrawlerparser_spark.operators import dedup as D
 from companycatalogcrawlerparser_spark.operators import linkgraph as LG
-from companycatalogcrawlerparser_spark.operators import multimodal as MM
 from companycatalogcrawlerparser_spark.operators import similarity as SIM
 from companycatalogcrawlerparser_spark.operators import textquality as TQ
 from companycatalogcrawlerparser_spark.operators.urlseen import (
@@ -798,857 +797,6 @@ class TestTextQuality:
         )
         out = {r["doc_id"]: r["fps"] for r in df.select("doc_id", TQ.winnow_fingerprints(F.col("text")).alias("fps")).collect()}
         assert out[1] == out[2] and out[1] != out[3]
-
-
-class TestMultimodal:
-    def test_image_features_plumbing(self, spark):
-        assets = MM.make_assets(spark, 10, "image")
-        feats = MM.image_features(assets, fake=True)
-        rows = feats.collect()
-        assert len(rows) == 10
-        assert all(len(r["feature"]) == 8 for r in rows)
-        # deterministic: same input → same features
-        again = MM.image_features(assets, fake=True).collect()
-        assert sorted(r["feature"] for r in rows) == sorted(r["feature"] for r in again)
-
-    def test_real_decode_raises_for_compressed_formats(self):
-        """JPEG/unknown payloads still need a codec lib (Pillow absent in
-        this container, re-probed r5) — honestly raised, never silently
-        faked. PNG no longer raises: it decodes for real (zlib+numpy)."""
-        with pytest.raises(NotImplementedError):
-            MM._decode_image_real(b"xx")
-        with pytest.raises(NotImplementedError):
-            MM._decode_image_real(b"\xff\xd8\xff\xe0jpeg-soi")
-        # corrupt PNG: classified, not decoded
-        with pytest.raises(NotImplementedError):
-            MM._decode_image_real(b"\x89PNG\r\n\x1a\nrest")
-
-    def test_png_roundtrip_all_colortypes(self):
-        """REAL PNG kernel: encode→decode is the identity for 8-bit
-        grayscale / gray+alpha / RGB / RGBA, incl. 1-px edges."""
-        import numpy as np
-
-        rng = np.random.default_rng(11)
-        for ch in (1, 2, 3, 4):
-            for w, h in ((5, 3), (1, 1), (63, 2)):
-                img = rng.integers(0, 256, (h, w, ch), dtype=np.uint8)
-                got = MM.decode_png(MM.encode_png(img))
-                assert np.array_equal(got, img), (ch, w, h)
-
-    def test_png_unfilters_all_five_filter_types(self):
-        """Golden-array check of the scanline unfilterers: craft an IDAT
-        whose rows cycle through filters None/Sub/Up/Average/Paeth
-        (applying the spec's forward filter math), then assert decode
-        reproduces the original pixels exactly."""
-        import zlib
-
-        import numpy as np
-
-        rng = np.random.default_rng(5)
-        img = rng.integers(0, 256, (10, 7, 3), dtype=np.uint8)
-        h, w, ch = img.shape
-        flat = img.reshape(h, w * ch).astype(np.int32)
-        stride = w * ch
-        raw = bytearray()
-        prior = np.zeros(stride, np.int32)
-        for y in range(h):
-            ftype = y % 5
-            line = flat[y]
-            left = np.concatenate([np.zeros(ch, np.int32), line[:-ch]])
-            upleft = np.concatenate([np.zeros(ch, np.int32), prior[:-ch]])
-            if ftype == 0:
-                filt = line
-            elif ftype == 1:
-                filt = line - left
-            elif ftype == 2:
-                filt = line - prior
-            elif ftype == 3:
-                filt = line - ((left + prior) >> 1)
-            else:
-                pred = np.array(
-                    [MM._paeth(int(a), int(b), int(c))
-                     for a, b, c in zip(left, prior, upleft)],
-                    np.int32,
-                )
-                filt = line - pred
-            raw.append(ftype)
-            raw += (filt & 0xFF).astype(np.uint8).tobytes()
-            prior = line
-
-        def chunk(typ, body):
-            return (len(body).to_bytes(4, "big") + typ + body
-                    + zlib.crc32(typ + body).to_bytes(4, "big"))
-
-        ihdr = (w.to_bytes(4, "big") + h.to_bytes(4, "big")
-                + bytes((8, 2, 0, 0, 0)))
-        png = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-               + chunk(b"IDAT", zlib.compress(bytes(raw)))
-               + chunk(b"IEND", b""))
-        assert np.array_equal(MM.decode_png(png), img)
-
-    def test_png_rejects_unsupported_variants(self):
-        import numpy as np
-
-        img = np.zeros((2, 2, 3), np.uint8)
-        ok = MM.encode_png(img)
-        # flip IHDR fields: depth (byte 24 after sig+len+type), colortype,
-        # interlace live at fixed offsets in the first chunk
-        sig = len(b"\x89PNG\r\n\x1a\n") + 8
-        for off, val in ((sig + 8, 16), (sig + 9, 3), (sig + 12, 1)):
-            bad = bytearray(ok)
-            bad[off] = val
-            with pytest.raises(ValueError):
-                MM.decode_png(bytes(bad))
-
-    def test_jpeg_roundtrip_psnr_all_layouts(self):
-        """REAL baseline JPEG codec (pure numpy, T.81): encode→decode
-        stays high-fidelity on smooth content across 4:4:4 / 4:2:0,
-        restart intervals, odd dims, and grayscale; flat blocks are
-        exact at q90."""
-        import numpy as np
-
-        from companycatalogcrawlerparser_spark.operators.jpeg import (
-            decode_jpeg, encode_jpeg,
-        )
-
-        def psnr(a, b):
-            mse = ((a.astype(float) - b.astype(float)) ** 2).mean()
-            return 10 * np.log10(255 ** 2 / max(mse, 1e-9))
-
-        for h, w in ((16, 16), (17, 23), (64, 48), (1, 1)):
-            yy, xx = np.mgrid[0:h, 0:w]
-            img = np.stack([
-                (xx * 255 // max(w - 1, 1)).astype(np.uint8),
-                (yy * 255 // max(h - 1, 1)).astype(np.uint8),
-                np.full((h, w), 100, np.uint8),
-            ], axis=2)
-            for sub in ("444", "420"):
-                for ri in (0, 2):
-                    back = decode_jpeg(encode_jpeg(
-                        img, quality=90, subsampling=sub,
-                        restart_interval=ri,
-                    ))
-                    assert back.shape == img.shape
-                    bar = 30.0 if sub == "420" else 38.0
-                    assert psnr(back, img) > bar, (h, w, sub, ri)
-        # flat grayscale is exactly reconstructed
-        g = np.full((24, 24), 77, np.uint8)
-        back = decode_jpeg(encode_jpeg(g, quality=90))
-        assert (back == 77).all() and back.shape == (24, 24, 3)
-
-    def test_jpeg_huffman_tables_prefix_free_and_inverse(self):
-        """The Annex-K code generation must yield prefix-free codes
-        (no code is a prefix of a longer one — the decoder's bit-at-a-
-        time walk relies on it) and the decode lookup must invert the
-        encode table exactly, for all four standard tables."""
-        from companycatalogcrawlerparser_spark.operators import jpeg as J
-
-        tables = (
-            (J.DC_LUMA_BITS, J.DC_LUMA_VALS),
-            (J.DC_CHROMA_BITS, J.DC_CHROMA_VALS),
-            (J.AC_LUMA_BITS, J.AC_LUMA_VALS),
-            (J.AC_CHROMA_BITS, J.AC_CHROMA_VALS),
-        )
-        for bits, vals in tables:
-            enc = J._huff_codes(bits, vals)
-            dec = J._huff_lookup(bits, vals)
-            assert len(enc) == len(vals) and len(dec) == len(vals)
-            for sym, (code, ln) in enc.items():
-                assert dec[(code, ln)] == sym
-            # prefix-free: no (code, len) extends to another valid code
-            codes = set(dec)
-            for code, ln in codes:
-                for ln2, in [(l,) for l in range(1, ln)]:
-                    assert (code >> (ln - ln2), ln2) not in codes
-
-    def test_jpeg_rejects_non_baseline(self):
-        import numpy as np
-        import pytest as _pytest
-
-        from companycatalogcrawlerparser_spark.operators.jpeg import (
-            decode_jpeg, encode_jpeg,
-        )
-
-        ok = bytearray(encode_jpeg(np.zeros((8, 8, 3), np.uint8)))
-        with _pytest.raises(ValueError):
-            decode_jpeg(b"nope")
-        # flip SOF0 (FFC0) to SOF2 (FFC2, progressive) → classified reject
-        i = bytes(ok).find(b"\xff\xc0")
-        bad = bytearray(ok)
-        bad[i + 1] = 0xC2
-        with _pytest.raises(ValueError):
-            decode_jpeg(bytes(bad))
-        # 4-component SOF (Adobe CMYK/YCCK shape) → classified reject
-        # instead of silently decoding the first 3 planes as YCbCr
-        # (r5 advice). Rebuild the SOF segment with a duplicated 4th
-        # component and a matching length field.
-        seg_len = (ok[i + 2] << 8) | ok[i + 3]
-        body = bytes(ok[i + 4:i + 2 + seg_len])
-        comp4 = body[:5] + bytes([4]) + body[6:] + bytes([4, 0x11, 1])
-        new_len = len(comp4) + 2
-        cmyk = (
-            bytes(ok[:i + 2])
-            + bytes([new_len >> 8, new_len & 0xFF])
-            + comp4
-            + bytes(ok[i + 2 + seg_len:])
-        )
-        with _pytest.raises(ValueError, match="component count"):
-            decode_jpeg(cmyk)
-
-    def test_real_jpeg_image_features_and_resize_e2e(self, spark):
-        """fake=False over REAL JPEG payloads: Spark features equal the
-        driver-side kernel, and resize_images re-encodes IN-FORMAT (JFIF
-        magic preserved, aspect dims, still decodable)."""
-        from companycatalogcrawlerparser_spark.operators.jpeg import (
-            decode_jpeg,
-        )
-
-        assets = MM.make_jpeg_assets(spark, 6)
-        got = {
-            r["asset_id"]: r["feature"]
-            for r in MM.image_features(assets, fake=False).collect()
-        }
-        assert len(got) == 6
-        for r in assets.collect():
-            want = MM._decode_image_real(bytes(r["bytes"]))
-            assert [round(float(x), 6) for x in got[r["asset_id"]]] == want
-        resized = {
-            r["asset_id"]: r
-            for r in MM.resize_images(assets, max_px=32).collect()
-        }
-        for r in assets.collect():
-            out = resized[r["asset_id"]]
-            raw = bytes(out["bytes"])
-            assert raw[:2] == b"\xff\xd8" and out["resized"]
-            img = decode_jpeg(raw)
-            assert img.shape[:2] == (out["height"], out["width"])
-            assert max(out["width"], out["height"]) <= 32
-
-    def test_real_png_image_features_e2e(self, spark):
-        """fake=False over REAL PNG payloads: Spark features equal the
-        driver-side kernel output per asset (all four colortypes)."""
-        assets = MM.make_png_assets(spark, 8)
-        got = {
-            r["asset_id"]: r["feature"]
-            for r in MM.image_features(assets, fake=False).collect()
-        }
-        assert len(got) == 8
-        for r in assets.collect():
-            want = MM._decode_image_real(bytes(r["bytes"]))
-            assert [round(float(x), 6) for x in got[r["asset_id"]]] == want
-
-    def test_png_resize_stays_png_and_into_cosine_pairs(self, spark):
-        """resize_images over PNG assets re-encodes IN-FORMAT with the
-        aspect-preserving dims, and the resized features still feed the
-        similarity operators: a duplicated asset surfaces as a top
-        cosine neighbour (decode→resize→feature→ANN, all real)."""
-        import numpy as np
-
-        from companycatalogcrawlerparser_spark.operators import (
-            similarity as SIM,
-        )
-
-        assets = MM.make_png_assets(spark, 6)
-        resized = MM.resize_images(assets, max_px=32)
-        rows = {r["asset_id"]: r for r in resized.collect()}
-        for r in assets.collect():
-            out = rows[r["asset_id"]]
-            raw = bytes(out["bytes"])
-            assert raw[:8] == b"\x89PNG\r\n\x1a\n"
-            assert out["resized"]
-            img = MM.decode_png(raw)
-            assert img.shape[:2] == (out["height"], out["width"])
-            assert max(out["width"], out["height"]) <= 32
-            # channel count preserved in-format
-            assert img.shape[2] == r["asset_id"] % 4 + 1
-        # duplicate asset 0 under a new id → its feature vector is
-        # identical, so brute-force cosine top-1 must pair them
-        dup = assets.filter(F.col("asset_id") == 0).select(
-            F.lit(100).cast("long").alias("asset_id"), "kind", "bytes",
-            "mime", "width", "height", "duration_ms",
-        )
-        feats = MM.image_features(
-            assets.unionByName(dup), fake=False, dim=8
-        ).select(
-            F.col("asset_id").alias("vec_id"),
-            F.col("feature").alias("embedding"),
-        )
-        top = SIM.cosine_topk_bruteforce(
-            feats.filter(F.col("vec_id").isin(0, 100)), feats, k=1
-        ).collect()
-        assert {(r["query_id"], r["neighbor_id"]) for r in top} == {
-            (0, 100), (100, 0)
-        }
-
-    def test_bmp_roundtrip_and_padding(self):
-        """REAL kernel: encode→decode is the identity, incl. widths whose
-        3-byte rows need 4-byte padding and top-down (negative height)
-        files."""
-        import numpy as np
-
-        rng = np.random.default_rng(7)
-        for w, h in ((5, 3), (4, 4), (63, 2), (1, 1)):
-            img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-            assert np.array_equal(MM.decode_bmp(MM.encode_bmp(img)), img)
-        # hand-built top-down 32bpp: 1×2, pixels BGRA
-        px = bytes([10, 20, 30, 0, 40, 50, 60, 0])  # rows already 4-aligned
-        hdr = (
-            b"BM" + (14 + 40 + len(px)).to_bytes(4, "little") + b"\0\0\0\0"
-            + (54).to_bytes(4, "little") + (40).to_bytes(4, "little")
-            + (2).to_bytes(4, "little")
-            + (-1).to_bytes(4, "little", signed=True)
-            + (1).to_bytes(2, "little") + (32).to_bytes(2, "little")
-            + (0).to_bytes(4, "little") + len(px).to_bytes(4, "little")
-            + bytes(16)
-        )
-        got = MM.decode_bmp(hdr + px)
-        assert got.shape == (1, 2, 3)
-        assert got[0, 0].tolist() == [30, 20, 10]  # BGR→RGB
-        assert got[0, 1].tolist() == [60, 50, 40]
-
-    def test_resize_nearest_known_case(self):
-        import numpy as np
-
-        img = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-        half = MM.resize_nearest(img, 2, 2)
-        assert half.shape == (2, 2, 3)
-        assert np.array_equal(half[0, 0], img[0, 0])
-        assert np.array_equal(half[1, 1], img[2, 2])
-
-    def test_real_image_features_e2e(self, spark):
-        """fake=False over REAL BMP payloads: the Spark features equal the
-        driver-side kernel output per asset."""
-        assets = MM.make_bmp_assets(spark, 6)
-        got = {
-            r["asset_id"]: r["feature"]
-            for r in MM.image_features(assets, fake=False).collect()
-        }
-        for r in assets.collect():
-            want = MM._decode_image_real(bytes(r["bytes"]))
-            assert [round(float(x), 6) for x in got[r["asset_id"]]] == want
-
-    def test_wav_roundtrip_and_audio_features_e2e(self, spark):
-        """REAL audio kernel: encode→decode roundtrip within 16-bit
-        quantization, and Spark features match driver-side numpy — a
-        louder signal has higher RMS, a higher-frequency one higher ZCR."""
-        import numpy as np
-
-        rate = 8000
-        t = np.arange(400) / rate
-        x = 0.5 * np.sin(2 * np.pi * 440 * t)
-        r2, back = MM.decode_wav(MM.encode_wav(rate, x))
-        assert r2 == rate
-        assert np.abs(back - x).max() < 1e-3  # 16-bit quantization bound
-
-        assets = MM.make_wav_assets(spark, 5)
-        rows = {r["asset_id"]: r for r in MM.audio_features(assets).collect()}
-        assert len(rows) == 5
-        for r in rows.values():
-            assert r["sample_rate"] == 8000
-            assert 0.2 < r["rms"] < 0.5  # 0.5-amplitude sine → rms ≈ 0.35
-            assert len(r["feature"]) == 8
-        # higher tone index → higher frequency → strictly more crossings
-        assert rows[4]["zcr"] > rows[0]["zcr"]
-
-    def test_decode_wav_rejects_non_wav(self):
-        with pytest.raises(ValueError):
-            MM.decode_wav(b"not a riff file at all")
-
-    def test_audio_features_similarity_integration(self, spark):
-        """The real audio envelope feeds the similarity family e2e: a
-        duplicated waveform is its twin's top cosine neighbour."""
-        assets = MM.make_wav_assets(spark, 5)
-        dup = assets.unionByName(
-            assets.filter(F.col("asset_id") == 0).select(
-                (F.col("asset_id") + 100).alias("asset_id"),
-                "kind", "bytes", "mime", "width", "height", "duration_ms",
-            )
-        )
-        emb = MM.audio_features(dup).select(
-            F.col("asset_id").alias("vec_id"),
-            F.col("feature").cast("array<float>").alias("embedding"),
-        )
-        q = emb.filter(F.col("vec_id") == 0)
-        top = sorted(
-            SIM.cosine_topk_bruteforce(q, emb, k=2).collect(),
-            key=lambda r: r["rank"],
-        )
-        assert top and top[0]["neighbor_id"] == 100  # the exact duplicate
-
-    def test_resize_images_real_e2e(self, spark):
-        """The real resize kernel honors resize_plan's target dims, its
-        output decodes at those dims, and within-bound images pass
-        through byte-identical (the reference's Resize behavior)."""
-        assets = MM.make_bmp_assets(spark, 6)
-        plan = {
-            r["asset_id"]: (r["target_width"], r["target_height"], r["needs_resize"])
-            for r in MM.resize_plan(assets, max_px=32).collect()
-        }
-        out = {r["asset_id"]: r for r in MM.resize_images(assets, max_px=32).collect()}
-        orig = {r["asset_id"]: bytes(r["bytes"]) for r in assets.collect()}
-        for aid, (tw, th, needs) in plan.items():
-            r = out[aid]
-            assert (r["width"], r["height"], r["resized"]) == (tw, th, needs)
-            dec = MM.decode_bmp(bytes(r["bytes"]))
-            assert dec.shape == (th, tw, 3)
-            if not needs:
-                assert bytes(r["bytes"]) == orig[aid]
-
-    def test_avi_roundtrip_lossless_and_rejects_compressed(self):
-        """REAL video kernel: uncompressed-AVI encode→decode is the
-        IDENTITY on frames and fps (unlike lossy JPEG); a compressed
-        fourcc is classified, not silently faked."""
-        import numpy as np
-
-        from companycatalogcrawlerparser_spark.operators.avi import (
-            decode_avi, encode_avi,
-        )
-
-        rng = np.random.default_rng(13)
-        for h, w, n in ((24, 32, 5), (17, 23, 3), (8, 8, 1)):
-            frames = [
-                rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                for _ in range(n)
-            ]
-            fps, back = decode_avi(encode_avi(frames, fps=10))
-            assert fps == 10.0 and len(back) == n
-            for a, b in zip(frames, back):
-                assert np.array_equal(a, b)
-        bad = bytearray(encode_avi([np.zeros((8, 8, 3), np.uint8)], 5))
-        i = bytes(bad).find(b"strf")
-        bad[i + 8 + 16] = 0x34  # biCompression != BI_RGB
-        with pytest.raises(ValueError):
-            decode_avi(bytes(bad))
-
-    def test_avi_mjpeg_roundtrip_and_dhtless_frames(self):
-        """r6: the first COMPRESSED video codec is real — MJPG AVIs
-        (every '00dc' chunk an independent baseline JPEG, OpenDML
-        layout) decode through the pure-numpy T.81 kernel. JPEG is
-        lossy, so the contract is near-identity on smooth frames; and a
-        frame whose DHT segments are stripped (OpenDML allows headerless
-        MJPEG) must decode bit-identically via the Annex-K defaults."""
-        import struct
-
-        import numpy as np
-
-        from companycatalogcrawlerparser_spark.operators.avi import (
-            decode_avi, encode_avi,
-        )
-        from companycatalogcrawlerparser_spark.operators.jpeg import (
-            decode_jpeg, encode_jpeg,
-        )
-
-        h, w = 40, 56
-        yy, xx = np.mgrid[0:h, 0:w]
-        frames = [
-            np.stack([
-                (xx * 3 + t * 10) % 256, (yy * 4) % 256,
-                ((xx + yy) * 2) % 256,
-            ], axis=2).astype(np.uint8)
-            for t in range(3)
-        ]
-        fps, back = decode_avi(encode_avi(frames, fps=12, codec="mjpg"))
-        assert fps == 12.0 and len(back) == 3
-        for a, b in zip(frames, back):
-            assert b.shape == a.shape
-            assert np.abs(a.astype(int) - b.astype(int)).mean() < 6.0
-
-        # strip every DHT (0xFFC4) segment; decode must not change —
-        # the Annex-K defaults ARE the tables our encoder emits
-        j = encode_jpeg(frames[0], quality=90)
-        out, pos, stripped = j[:2], 2, 0
-        while pos + 4 <= len(j):
-            assert j[pos] == 0xFF
-            m = j[pos + 1]
-            if m == 0xDA:
-                out += j[pos:]
-                break
-            ln = struct.unpack(">H", j[pos + 2:pos + 4])[0]
-            if m == 0xC4:
-                stripped += 1
-            else:
-                out += j[pos:pos + 2 + ln]
-            pos += 2 + ln
-        assert stripped == 4
-        assert np.array_equal(decode_jpeg(j), decode_jpeg(out))
-
-    def test_mjpeg_avi_frame_sample_e2e(self, spark):
-        """frame_sample(fake=False) samples motion-JPEG AVIs in Spark:
-        hashes equal the driver-side kernel run on the same payloads."""
-        import hashlib as _hl
-
-        assets = MM.make_avi_assets(spark, 3, frames=4, fps=4,
-                                    codec="mjpg")
-        got = sorted(
-            (r["asset_id"], r["frame_no"], r["frame_hash"])
-            for r in MM.frame_sample(
-                assets, every_ms=500, fake=False
-            ).collect()
-        )
-        want = sorted(
-            (r["asset_id"], fno,
-             _hl.blake2b(img.tobytes(), digest_size=8).hexdigest())
-            for r in assets.collect()
-            for fno, img in MM._sample_avi_frames(bytes(r["bytes"]), 500)
-        )
-        assert got == want and len(got) >= 6
-
-    def test_real_avi_frame_sample_and_features_e2e(self, spark):
-        """fake=False frame sampling decodes REAL AVIs in Spark: sampled
-        frame hashes equal the driver-side kernel; a duplicated video
-        surfaces as its twin's top cosine neighbour via
-        video_frame_features → brute-force ANN (video → embedding →
-        similarity, all real)."""
-        from companycatalogcrawlerparser_spark.operators import (
-            similarity as SIM,
-        )
-
-        assets = MM.make_avi_assets(spark, 4, frames=6, fps=4)
-        got = sorted(
-            (r["asset_id"], r["frame_no"], r["frame_hash"])
-            for r in MM.frame_sample(
-                assets, every_ms=500, fake=False
-            ).collect()
-        )
-        want = []
-        for r in assets.collect():
-            import hashlib as _hl
-
-            for fno, img in MM._sample_avi_frames(bytes(r["bytes"]), 500):
-                want.append((
-                    r["asset_id"], fno,
-                    _hl.blake2b(img.tobytes(), digest_size=8).hexdigest(),
-                ))
-        assert got == sorted(want) and len(got) >= 8
-        # duplicate asset 0 under id 100 → per-frame features identical →
-        # its frames' nearest neighbours are the twin's frames
-        dup = assets.filter(F.col("asset_id") == 0).select(
-            F.lit(100).cast("long").alias("asset_id"), "kind", "bytes",
-            "mime", "width", "height", "duration_ms",
-        )
-        feats = MM.video_frame_features(
-            assets.unionByName(dup), every_ms=1500
-        ).select(
-            (F.col("asset_id") * 1000 + F.col("frame_no")).alias("vec_id"),
-            F.col("feature").alias("embedding"),
-        )
-        q = feats.filter(F.col("vec_id") == 0)
-        top = SIM.cosine_topk_bruteforce(q, feats, k=1).collect()
-        assert top and top[0]["neighbor_id"] == 100000  # dup's frame 0
-
-    def test_avi_decode_classifies_non_avi(self):
-        from companycatalogcrawlerparser_spark.operators.avi import (
-            decode_avi,
-        )
-
-        with pytest.raises(ValueError):
-            decode_avi(b"not an avi")
-
-    def test_avi_audio_stream_before_video(self):
-        """r5 advice: an audio strl ahead of the video strl must not have
-        its WAVEFORMATEX read as BITMAPINFOHEADER, and '01db' video
-        chunks of stream 1 must decode while stream 0's audio chunks are
-        ignored. Built by splicing an auds strl + '00wb' chunks into an
-        encoder-produced file, renumbering the video stream to 1."""
-        import struct
-
-        import numpy as np
-
-        from companycatalogcrawlerparser_spark.operators.avi import (
-            _chunk, _list, decode_avi, encode_avi,
-        )
-
-        rng = np.random.default_rng(29)
-        frames = [
-            rng.integers(0, 256, (12, 16, 3), dtype=np.uint8)
-            for _ in range(3)
-        ]
-        base = encode_avi(frames, fps=8)
-
-        # audio strl: strh(auds) + strf(WAVEFORMATEX — whose wFormatTag/
-        # nChannels would misparse as a huge biSize if latched as a DIB
-        # header)
-        a_strh = struct.pack(
-            "<4s4sIHHIIIIIIIIhhhh",
-            b"auds", b"\x00\x00\x00\x00",
-            0, 0, 0, 0, 1, 8000, 0, 8000, 0, 0xFFFFFFFF, 0, 0, 0, 0, 0,
-        )
-        a_strf = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-        audio_strl = _list(
-            b"strl", _chunk(b"strh", a_strh) + _chunk(b"strf", a_strf)
-        )
-
-        data = bytearray(base)
-        # locate the video strl LIST (first hdrl child after avih)
-        hdrl_at = bytes(data).find(b"hdrl")
-        avih_at = bytes(data).find(b"avih", hdrl_at)
-        avih_sz = struct.unpack("<I", data[avih_at + 4:avih_at + 8])[0]
-        strl_list_at = avih_at + 8 + avih_sz + (avih_sz & 1)
-        assert data[strl_list_at:strl_list_at + 4] == b"LIST"
-
-        # video frames become stream 1: rename 00db → 01db
-        out = bytes(data).replace(b"00db", b"01db")
-        out = (
-            out[:strl_list_at] + audio_strl + out[strl_list_at:]
-        )
-        # also splice an audio data chunk ('00wb') ahead of the frames in
-        # movi so the frame matcher sees a non-video stream chunk
-        movi_at = out.find(b"movi")
-        wb = _chunk(b"00wb", b"\x80" * 64)
-        out = out[:movi_at + 4] + wb + out[movi_at + 4:]
-        # fix the RIFF / LIST sizes we grew
-        out = bytearray(out)
-        riff_sz = len(out) - 8
-        out[4:8] = struct.pack("<I", riff_sz)
-        hdrl_list_at = out.find(b"LIST", 12)
-        old = struct.unpack("<I", out[hdrl_list_at + 4:hdrl_list_at + 8])[0]
-        out[hdrl_list_at + 4:hdrl_list_at + 8] = struct.pack(
-            "<I", old + len(audio_strl)
-        )
-        movi_list_at = out.find(b"movi") - 8
-        old = struct.unpack("<I", out[movi_list_at + 4:movi_list_at + 8])[0]
-        out[movi_list_at + 4:movi_list_at + 8] = struct.pack(
-            "<I", old + len(wb)
-        )
-
-        fps, back = decode_avi(bytes(out))
-        assert fps == 8.0 and len(back) == 3
-        for a, b in zip(frames, back):
-            assert np.array_equal(a, b)
-
-    def test_frame_sample_dedup_integration(self, spark):
-        """VERDICT r01 #10 — the frame_sample plumbing composes with the
-        dedup family end-to-end: duplicated video payloads produce
-        identical frame-hash signatures, so an exact groupBy dedup over
-        the sampled frames finds the duplicate pair and nothing else."""
-        payload_a = b"A" * 256
-        payload_b = b"B" * 256
-        rows = [
-            (1, "video", payload_a, "video/x-fake", 64, 48, 15000),
-            (2, "video", payload_a, "video/x-fake", 64, 48, 15000),  # dup of 1
-            (3, "video", payload_b, "video/x-fake", 64, 48, 15000),
-        ]
-        assets = spark.createDataFrame(rows, MM.ASSET_SCHEMA)
-        frames = MM.frame_sample(assets, every_ms=5000)
-        sig = frames.groupBy("asset_id").agg(
-            F.concat_ws("|", F.sort_array(F.collect_list("frame_hash"))).alias("sig")
-        )
-        groups = (
-            sig.groupBy("sig")
-            .agg(F.sort_array(F.collect_list("asset_id")).alias("ids"), F.count("*").alias("n"))
-            .filter(F.col("n") >= 2)
-            .collect()
-        )
-        assert len(groups) == 1 and list(groups[0]["ids"]) == [1, 2]
-
-    def test_image_features_similarity_integration(self, spark):
-        """Multimodal → similarity e2e plumbing (VERDICT r02 #7, codec-free
-        container): image_features' deterministic feature vectors feed
-        cosine_pairs directly — an identical image payload pair is the
-        top near-dup, and the LSH bucketing/cap machinery runs on the
-        multimodal-derived vectors unchanged."""
-        payload_a = b"X" * 512
-        payload_b = b"Y" * 512
-        rows = [
-            (1, "image", payload_a, "image/x-fake", 32, 32, None),
-            (2, "image", payload_a, "image/x-fake", 32, 32, None),  # dup of 1
-            (3, "image", payload_b, "image/x-fake", 32, 32, None),
-        ]
-        assets = spark.createDataFrame(rows, MM.ASSET_SCHEMA)
-        feats = MM.image_features(assets, fake=True, dim=8)
-        emb = feats.select(
-            F.col("asset_id").alias("vec_id"),
-            F.col("feature").alias("embedding"),
-        )
-        pairs = SIM.cosine_pairs(emb, threshold=0.999, dim=8, max_bucket=16)
-        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-        assert (1, 2) in got and (1, 3) not in got and (2, 3) not in got
-
-    def test_frame_sample_and_resize(self, spark):
-        vids = MM.make_assets(spark, 4, "video")
-        frames = MM.frame_sample(vids, every_ms=5000)
-        n = frames.groupBy("asset_id").count().collect()
-        assert all(r["count"] >= 1 for r in n)
-        plan = MM.resize_plan(vids, max_px=32).collect()
-        assert all(r["target_width"] <= 32 and r["target_height"] <= 32 for r in plan)
-
-    # -- GIF kernel (round 6, operators/gif.py) -------------------------
-
-    def test_gif_roundtrip_palettes_and_interlace(self):
-        """r6: GIF LZW encode→decode is the IDENTITY on indexed pixels
-        for every palette size class (2-slot .. 256-slot → LZW min code
-        sizes 2..8) and for both scan orders (progressive/interlaced) —
-        GIF is lossless by construction, unlike JPEG."""
-        from companycatalogcrawlerparser_spark.operators.gif import (
-            decode_gif_first, encode_gif, gif_dims,
-        )
-
-        rng = np.random.default_rng(61)
-        for n_col in (2, 5, 17, 64, 256):
-            pal = rng.integers(0, 256, (n_col, 3), dtype=np.uint8)
-            idx = rng.integers(0, n_col, (37, 53)).astype(np.uint8)
-            for interlace in (False, True):
-                data = encode_gif(idx, pal, interlace=interlace)
-                assert gif_dims(data) == (53, 37)
-                assert np.array_equal(decode_gif_first(data), pal[idx])
-
-    def test_gif_lzw_dictionary_reset(self):
-        """A large repetitive image drives the LZW table past 4096 codes
-        so the encoder's CLEAR/reset path and the decoder's 12-bit cap
-        are both exercised; roundtrip stays exact and the stream really
-        compresses (sanity that LZW is doing LZW)."""
-        from companycatalogcrawlerparser_spark.operators.gif import (
-            decode_gif_first, encode_gif,
-        )
-
-        pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-        rng = np.random.default_rng(62)
-        # half structured tiles (dictionary-friendly), half noise bursts
-        # (dictionary-hostile) → multiple resets
-        a = np.tile(np.arange(64, dtype=np.uint8), (150, 100))
-        b = rng.integers(0, 256, a.shape).astype(np.uint8)
-        img = np.where(np.mgrid[0 : a.shape[0], 0 : a.shape[1]][0] % 2 == 0, a, b)
-        data = encode_gif(img, pal)
-        assert np.array_equal(decode_gif_first(data), pal[img])
-        rep = np.tile(np.arange(16, dtype=np.uint8), (300, 80))
-        small = encode_gif(rep, pal[:16])
-        assert len(small) < rep.size // 10  # actually compressed
-        assert np.array_equal(decode_gif_first(small), pal[:16][rep])
-
-    def test_gif_animation_transparency_disposal(self):
-        """GIF89a animation semantics: per-frame delays surface, a
-        transparent index keeps the prior screen's pixels, disposal 2
-        restores the background after the frame, disposal 3 restores the
-        previous screen — checked against hand-composited expectations."""
-        from companycatalogcrawlerparser_spark.operators.gif import (
-            decode_gif, encode_gif,
-        )
-
-        pal = np.array(
-            [[9, 9, 9], [255, 0, 0], [0, 255, 0], [0, 0, 255]], np.uint8
-        )
-        f0 = np.full((10, 12), 1, np.uint8)
-        f1 = np.zeros((10, 12), np.uint8)  # transparent everywhere...
-        f1[2:5, 3:6] = 2  # ...except a green patch
-        f2 = np.full((10, 12), 3, np.uint8)
-
-        # disposal=1 (keep): frame1 = green patch over red screen
-        anim = encode_gif(
-            [f0, f1, f2], pal, delays_ms=[40, 80, 120], transparent=0,
-            disposal=1,
-        )
-        frames, delays = decode_gif(anim)
-        assert delays == [40, 80, 120]
-        exp1 = pal[f0].copy()
-        exp1[2:5, 3:6] = pal[2]
-        assert np.array_equal(frames[1], exp1)
-        assert np.array_equal(frames[2], pal[f2])
-
-        # disposal=2 (restore background, bg index 0 = dark gray):
-        # frame1's canvas starts from bg, not from frame0's red
-        anim2 = encode_gif(
-            [f0, f1, f2], pal, delays_ms=[10, 10, 10], transparent=0,
-            disposal=2,
-        )
-        frames2, _ = decode_gif(anim2)
-        exp1b = np.tile(pal[0], (10, 12, 1))
-        exp1b[2:5, 3:6] = pal[2]
-        assert np.array_equal(frames2[1], exp1b)
-
-    def test_gif_indexed_decode_and_classification(self):
-        """decode_gif_indexed is the lossless in-format rewrite surface:
-        full-screen index frames + palette + delays roundtrip exactly;
-        non-GIF bytes classify as ValueError (decode_image contract)."""
-        from companycatalogcrawlerparser_spark.operators.gif import (
-            decode_gif, decode_gif_indexed, encode_gif,
-        )
-
-        rng = np.random.default_rng(63)
-        pal = rng.integers(0, 256, (32, 3), dtype=np.uint8)
-        frames = [
-            rng.integers(0, 32, (21, 34)).astype(np.uint8) for _ in range(3)
-        ]
-        data = encode_gif(frames, pal, delays_ms=[30, 60, 90])
-        fidx, p2, delays = decode_gif_indexed(data)
-        assert delays == [30, 60, 90] and np.array_equal(p2[:32], pal)
-        for a, b in zip(frames, fidx):
-            assert np.array_equal(a, b)
-        with pytest.raises(ValueError):
-            decode_gif(b"not a gif at all")
-        with pytest.raises(ValueError):
-            MM.decode_image(b"\x00\x01rubbish")
-
-    def test_gif_image_features_and_resize_e2e(self, spark):
-        """REAL GIF assets through the Spark surfaces: image_features
-        (fake=False) equals the driver-side kernel per asset, and
-        resize_images emits IN-FORMAT GIFs — index space, palette and
-        frame count preserved, nearest-neighbour-exact pixels."""
-        from companycatalogcrawlerparser_spark.operators.gif import (
-            decode_gif_indexed,
-        )
-
-        assets = MM.make_gif_assets(spark, 6)
-        feats = {
-            r["asset_id"]: r["feature"]
-            for r in MM.image_features(assets, fake=False, dim=8).collect()
-        }
-        for r in assets.collect():
-            want = MM._decode_image_real(bytes(r["bytes"]), 8)
-            got = feats[r["asset_id"]]
-            assert np.allclose(got, want, atol=1e-6)
-
-        resized = {
-            r["asset_id"]: r
-            for r in MM.resize_images(assets, max_px=32).collect()
-        }
-        for r in assets.collect():
-            rr = resized[r["asset_id"]]
-            assert rr["width"] <= 32 and rr["height"] <= 32
-            assert rr["resized"]
-            out = bytes(rr["bytes"])
-            assert out[:6] == b"GIF89a"  # stayed in-format
-            fidx, pal, _ = decode_gif_indexed(out)
-            src_f, src_pal, _ = decode_gif_indexed(bytes(r["bytes"]))
-            assert np.array_equal(pal, src_pal) and len(fidx) == len(src_f)
-            want = MM.resize_nearest(
-                src_f[0][:, :, None], rr["width"], rr["height"]
-            )[:, :, 0]
-            assert np.array_equal(fidx[0], want)
-
-    def test_gif_animated_frame_sample_and_features_e2e(self, spark):
-        """Animated GIF is the second real compressed video path next to
-        MJPEG-AVI: frame_sample(fake=False) hashes equal the driver-side
-        kernel (delay-weighted sampling), and a duplicated animation is
-        its twin's top cosine neighbour via video_frame_features —
-        GIF → frames → embedding → ANN, all real."""
-        import hashlib as _hl
-
-        assets = MM.make_gif_assets(spark, 3, animated=True, frames=5,
-                                    fps=10)
-        got = sorted(
-            (r["asset_id"], r["frame_no"], r["frame_hash"])
-            for r in MM.frame_sample(assets, every_ms=200, fake=False).collect()
-        )
-        want = sorted(
-            (r["asset_id"], fno,
-             _hl.blake2b(img.tobytes(), digest_size=8).hexdigest())
-            for r in assets.collect()
-            for fno, img in MM._sample_gif_frames(bytes(r["bytes"]), 200)
-        )
-        assert got == want and len(got) >= 6
-        dup = assets.filter(F.col("asset_id") == 0).select(
-            F.lit(100).cast("long").alias("asset_id"), "kind", "bytes",
-            "mime", "width", "height", "duration_ms",
-        )
-        feats = MM.video_frame_features(
-            assets.unionByName(dup), every_ms=300
-        ).select(
-            (F.col("asset_id") * 1000 + F.col("frame_no")).alias("vec_id"),
-            F.col("feature").alias("embedding"),
-        )
-        q = feats.filter(F.col("vec_id") == 0)
-        top = SIM.cosine_topk_bruteforce(q, feats, k=1).collect()
-        assert top and top[0]["neighbor_id"] == 100000
 
 
 class TestStreaming:

@@ -179,6 +179,54 @@ class TestDriverRegistryContract:
         assert [k for k in qs if k not in oracles] == []
         assert [k for k in oracles if k not in qs] == []
 
+    def test_oracle_sql_byte_stable_across_processes(self, tmp_path):
+        """oracle_sql() text is compared across runs, so the fixture dirs
+        it names must not depend on the process: two fresh interpreters
+        (different string-hash seeds, one shared tempdir) print the same
+        text for every row, the second reusing the first's dirs."""
+        import json
+        import os
+        import subprocess
+        import sys
+
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = ("import json, __spark_entry__ as e; "
+                  "print(json.dumps(e.oracle_sql(), sort_keys=True))")
+        runs = []
+        for seed in ("1", "2"):
+            env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONHASHSEED=seed)
+            out = subprocess.run([sys.executable, "-c", script], cwd=root,
+                                 env=env, capture_output=True, text=True,
+                                 check=True, timeout=300).stdout
+            runs.append(json.loads(out))
+        assert runs[0].keys() == runs[1].keys()
+        assert [k for k in runs[0] if runs[0][k] != runs[1][k]] == []
+        assert any(str(tmp_path) in sql for sql in runs[0].values())
+
+    def test_fixture_dir_not_reused_when_files_changed(self, tmp_path, monkeypatch):
+        """A content-keyed dir whose files no longer hash to its name
+        (partly cleaned tmp) is not served; a fresh build is."""
+        import os
+        import tempfile
+
+        from companycatalogcrawlerparser_spark import harness as H
+
+        def build(d):
+            for fn in ("a.bin", "b.bin"):
+                with open(os.path.join(d, fn), "wb") as f:
+                    f.write(fn.encode())
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        monkeypatch.setattr(H, "_memo", {})
+        first = H._fixture_dir("probe", build)
+        H._memo.clear()
+        assert H._fixture_dir("probe", build) == first
+        os.remove(os.path.join(first, "b.bin"))
+        H._memo.clear()
+        again = H._fixture_dir("probe", build)
+        assert again != first
+        assert sorted(os.listdir(again)) == ["a.bin", "b.bin"]
+
 
 class TestSitemapProperties:
     _xml = st.builds(
