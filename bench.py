@@ -107,7 +107,6 @@ def run_crawl_bench(
     cfg = CrawlConfig(
         num_partitions=max(cores, 8),
         n_buckets=64,
-        collect_counters=False,
         take_limit=take_limit,
     )
     t0 = time.monotonic()

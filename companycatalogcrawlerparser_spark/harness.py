@@ -335,7 +335,7 @@ def _engine_crawl(spark) -> dict:
         out = tempfile.mkdtemp(prefix="ccp_crawl_engine_")
         res = run_crawl(
             spark, pages, seeds, out,
-            CrawlConfig(num_partitions=8, n_buckets=16, collect_counters=False),
+            CrawlConfig(num_partitions=8, n_buckets=16),
         )
         _memo["engine_crawl"] = res
     return _memo["engine_crawl"]

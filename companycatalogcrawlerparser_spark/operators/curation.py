@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "sample_bucket",
     "deterministic_sample",
@@ -90,9 +92,7 @@ def stratified_sample(
     broadcast join (strata counts are language/quality-bucket sized), so
     the plan stays one scan + one codegen filter at any corpus size."""
     spark = df.sparkSession
-    rdf = spark.createDataFrame(
-        list(rates.items()), f"{strata_col} string, __keep int"
-    )
+    rdf = local_frame(spark, list(rates.items()), f"{strata_col} string, __keep int")
     return (
         df.join(F.broadcast(rdf), strata_col, "left")
         .filter(
@@ -332,7 +332,7 @@ def exact_quantiles(
         F.coalesce(F.sum("__t").over(w_off), F.lit(0)).alias("__off"),
     )
     ks = (
-        spark.createDataFrame([(float(f),) for f in fracs], "frac double")
+        local_frame(spark, [(float(f),) for f in fracs], "frac double")
         .crossJoin(F.broadcast(counts.agg(F.sum("__t").alias("__n"))))
         .select(
             "frac",

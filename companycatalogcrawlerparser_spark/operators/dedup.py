@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def normalized(text) -> "F.Column":
     """Lowercase, collapse whitespace — the dedup canonical form."""
@@ -698,9 +700,7 @@ def connected_components(
         schema = StructType(
             [StructField("node", ntype), StructField("component", ntype)]
         )
-        return spark.createDataFrame(
-            sorted(labels.items()), schema
-        )
+        return local_frame(spark, sorted(labels.items()), schema)
 
     def _sig(e: DataFrame) -> tuple:
         r = e.agg(

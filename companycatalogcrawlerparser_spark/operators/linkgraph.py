@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = ["pagerank"]
 
 # below this DISTINCT edge count the power iteration runs driver-side on
@@ -101,9 +103,7 @@ def pagerank(
                 summed[v] = summed.get(v, 0) + c
             ranks_d = {n: base + summed.get(n, 0) for n in node_set}
         spark = edges.sparkSession
-        return spark.createDataFrame(
-            sorted(ranks_d.items()), "node long, rank_q long"
-        )
+        return local_frame(spark, sorted(ranks_d.items()), "node long, rank_q long")
     nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))

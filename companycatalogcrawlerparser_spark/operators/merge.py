@@ -14,6 +14,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # below this row count assign_dense_ids builds the id map driver-side
 # (one collect + sort) instead of the range-partition + local-rank +
 # offsets machinery — the size-gated discipline of sources/pages.py
@@ -82,9 +84,8 @@ def assign_dense_ids(
         schema = StructType(
             list(df.schema.fields) + [StructField(id_col, LongType())]
         )
-        return spark.createDataFrame(
-            [tuple(r) + (offset + i + 1,) for i, r in enumerate(rows)],
-            schema,
+        return local_frame(
+            spark, [tuple(r) + (offset + i + 1,) for i, r in enumerate(rows)], schema
         )
     n_part = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = (
@@ -101,7 +102,7 @@ def assign_dense_ids(
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += counts[pid]
-    offsets_df = spark.createDataFrame(offsets, "__pid int, __off long")
+    offsets_df = local_frame(spark, offsets, "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(order_col)
     out = (
         ranged.join(F.broadcast(offsets_df), "__pid")
@@ -182,6 +183,6 @@ def set_high_water_mark(
     state: DataFrame, spark, name_col: str, name: str, value: int, id_col: str = "last_id"
 ) -> DataFrame:
     """K7 — upsert the (file, last_id) row (``ConsoleAppMailer/DbAccess.fs:25-45``)."""
-    new = spark.createDataFrame([(name, value)], f"{name_col} string, {id_col} long")
+    new = local_frame(spark, [(name, value)], f"{name_col} string, {id_col} long")
     kept = state.filter(F.col(name_col) != name)
     return kept.unionByName(new)

@@ -37,12 +37,16 @@ RULES_SCHEMA = (
 )
 
 
+def is_robots_url(url):
+    """True for a ``scheme://host/robots.txt`` URL."""
+    return url.rlike(r"^https?://[^/?#]+/robots\.txt$")
+
+
 def robots_pages(pages: DataFrame) -> DataFrame:
     """The corpus rows that ARE robots.txt files → (host, text)."""
     from ..functions.canon import canonical_host
 
-    is_robots = F.col("url").rlike(r"^https?://[^/?#]+/robots\.txt$")
-    return pages.filter(is_robots & F.col("html").isNotNull()).select(
+    return pages.filter(is_robots_url(F.col("url")) & F.col("html").isNotNull()).select(
         canonical_host(F.col("url")).alias("host"),
         F.col("html").cast("string").alias("text"),
     )

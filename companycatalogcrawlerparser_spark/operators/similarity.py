@@ -20,6 +20,8 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -509,7 +511,7 @@ def _ivf_topk_arrow(
     out_schema = _ivf_out_schema(queries, corpus, id_col)
     if not qrows:
         return (
-            corpus.sparkSession.createDataFrame([], out_schema)
+            local_frame(corpus.sparkSession, [], out_schema)
             .withColumn("rank", F.lit(1))
             .limit(0)
         )

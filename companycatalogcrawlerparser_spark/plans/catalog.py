@@ -19,6 +19,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 CATEGORY_SCHEMA = (
     "page_url string, category_id long, name string, parent_id long, "
     "href string, city_code string"
@@ -415,5 +417,5 @@ def synthesize_city_seeds(
     ).select("url", "city_code")
     if static_seeds is None:
         spark = cities.sparkSession
-        static_seeds = spark.createDataFrame(CITY_SEEDS_STATIC, "url string, city_code string")
+        static_seeds = local_frame(spark, CITY_SEEDS_STATIC, "url string, city_code string")
     return static_seeds.unionByName(reachable)

@@ -15,7 +15,8 @@ round without refetching (C7).
 
 Scale shape per round: one big shuffle (fetch join, AQE-skew-handled), one
 narrow Arrow UDF (extract), window dedups keyed by (company, page) and
-host. No collect() except tiny control counts and manifest counters.
+host. No collect() except tiny control counts; the manifest counters are
+observed on the commit writes.
 """
 
 from __future__ import annotations
@@ -40,10 +41,15 @@ from ..operators import extract as X
 from ..operators import frontier as FR
 from ..operators import robots as RB
 from ..operators.urlseen import UrlSeen, seen_key
+from ..session import local_frame
 from ..sources.pages import fetch_join, redirect_map
 from ..storage.snapshots import SnapshotStore
 
 EMPTY_SEEN_SCHEMA = "seen_key long, scope string, canonical_url string, round int"
+FLAGS_SCHEMA = (
+    "company_id long, bad_url boolean, email_processed boolean, email_finded boolean"
+)
+FRONTIER_SCHEMA = "company_id long, url string, priority int, seq int, base_url string"
 
 
 @dataclass
@@ -55,8 +61,6 @@ class CrawlConfig:
     n_buckets: int = 64         # url_seen filter buckets (power of two)
     use_bloom: bool = True
     url_seen_filter: str = "bloom"  # or "cuckoo" (deletable fingerprints)
-    collect_counters: bool = True  # manifest counters cost extra actions;
-    #                                bench runs disable them
     respect_robots: bool = True  # robots.txt gating + Crawl-delay
     #   politeness (north_rule); no-op when the corpus carries no
     #   robots.txt rows, so reference-parity corpora are unaffected
@@ -83,8 +87,17 @@ class CrawlConfig:
     #   fetched. See _sitemap_contact_frontier.
 
 
-def _empty_seen(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], EMPTY_SEEN_SCHEMA)
+def _round_counters() -> dict:
+    """The manifest counters of a round, per committed table: observed on
+    the commit writes (``DataFrame.observe``), so they cost no job."""
+    return {
+        "trace": [
+            F.count(F.when(F.col("action") == "fetched", 1)).alias("pages_fetched"),
+            F.count(F.when(F.col("action") == "error", 1)).alias("fetch_errors"),
+        ],
+        "frontier_next": [F.count(F.lit(1)).alias("urls_enqueued")],
+        "bag": [F.count(F.lit(1)).alias("emails_bagged")],
+    }
 
 
 def select_companies(seeds: DataFrame, take_limit: int) -> DataFrame:
@@ -122,205 +135,190 @@ def run_crawl(
     last = store.last_round()
     start_round = 0 if last is None else last + 1
 
-    # redirect closure depends only on the corpus — compute once, cache
-    # (small: the 3xx subset), reuse across rounds
+    # the corpus-tuned split size and the caches below are released in
+    # the finally, also when a round raises
     restore_split = _tune_input_splits(spark, pages)
+    cached: list = []
+    try:
+        # robots rules parsed ONCE per run from the corpus's own robots.txt
+        # rows ("the corpus is the web"). A JVM-only probe of the url
+        # column comes first: a corpus without robots.txt rows never
+        # starts the parse's Python workers, and gating short-circuits.
+        # Denied URLs are dropped BEFORE scheduling/fetching: no trace
+        # row, no url_seen entry (they were never attempted).
+        robots_rules_df = None
+        robots_politeness = None
+        if start_round < cfg.max_depth:
+            if cfg.respect_robots and not pages.filter(
+                RB.is_robots_url(F.col("url"))
+            ).isEmpty():
+                rr = RB.robots_rules(pages, agent=cfg.robots_agent).cache()
+                cached.append(rr)
+                if not rr.isEmpty():
+                    robots_rules_df = rr
+                    delays = RB.crawl_delays(rr)
+                    robots_politeness = delays if not delays.isEmpty() else None
+            # redirect closure depends only on the corpus — compute once,
+            # cache (small: the 3xx subset), reuse across rounds
+            rmap = redirect_map(pages).cache()
+            cached.append(rmap)
 
-    # robots rules parsed ONCE per run from the corpus's own robots.txt
-    # rows ("the corpus is the web"); empty → gating short-circuits so the
-    # reference-parity corpora pay one pruned scan, nothing more. Denied
-    # URLs are dropped BEFORE scheduling/fetching: no trace row, no
-    # url_seen entry (they were never attempted).
-    robots_rules_df = None
-    robots_politeness = None
-    if cfg.respect_robots and start_round < cfg.max_depth:
-        rr = RB.robots_rules(pages, agent=cfg.robots_agent).cache()
-        if not rr.isEmpty():
-            robots_rules_df = rr
-            delays = RB.crawl_delays(rr)
-            robots_politeness = delays if not delays.isEmpty() else None
-    rmap = redirect_map(pages).cache() if start_round < cfg.max_depth else None
-
-    for round_id in range(start_round, cfg.max_depth):
-        if round_id == 0:
-            companies = select_companies(seeds, cfg.take_limit)
-            frontier = companies.select(
-                "company_id",
-                F.col("site_url").alias("url"),
-                F.lit(FR.PRIO_SEED).alias("priority"),
-                F.lit(0).alias("seq"),
-                base_url_expr(F.col("site_url")).alias("base_url"),
-            )
-            seen = _empty_seen(spark)
-            # global scope G anti-join (no-op on a fresh store, real on reruns)
-            cand = (
-                frontier.withColumn("canonical_url", canonicalize_url(F.col("url")))
-                .withColumn("scope", F.lit("G"))
-                .withColumn("seen_key", seen_key(F.col("scope"), F.col("canonical_url")))
-            )
-            frontier = useen.filter_unseen(cand, seen).drop(
-                "seen_key", "scope", "canonical_url"
-            )
-        else:
-            frontier = store.read(round_id - 1, "frontier_next")
-            seen = store.read(round_id - 1, "url_seen")
-            if cfg.use_bloom:
-                # reuse the blooms committed with the previous snapshot —
-                # built distributed (applyInPandas per bucket); rebuild only
-                # if restoring from an older store without a blooms table
-                if store.has_table(round_id - 1, "blooms"):
-                    useen.set_blooms(store.read(round_id - 1, "blooms"))
-                else:
-                    useen.build_blooms(seen)
-            cand = (
-                frontier.withColumn("canonical_url", canonicalize_url(F.col("url")))
-                .withColumn("scope", F.col("company_id").cast("string"))
-                .withColumn("seen_key", seen_key(F.col("scope"), F.col("canonical_url")))
-            )
-            # within-round first-occurrence dedup (the sequential seen.Add)
-            w = Window.partitionBy("company_id", "url").orderBy("priority", "seq")
-            cand = (
-                cand.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            frontier = useen.filter_unseen(cand, seen).drop(
-                "seen_key", "scope", "canonical_url"
-            )
-            # extractor gate: non-empty ∧ F2 (Crawler.fs:241)
-            frontier = frontier.filter(
-                (F.col("url") != "") & is_not_image_script_css_ext(F.col("url"))
-            )
-
-        # robots gate (north_rule): drop disallowed URLs pre-schedule
-        if robots_rules_df is not None:
-            frontier = RB.gate_frontier(frontier, robots_rules_df)
-
-        # politeness stamps over full host, then salted spread (W2/C2/C3);
-        # per-host Crawl-delay rows override the default budget
-        sched = FR.schedule(
-            frontier,
-            politeness=robots_politeness,
-            default_delay_ms=cfg.delay_ms,
-        )
-        sched = FR.salted(sched, cfg.num_partitions)
-
-        # the fetch join stays LAZY: html streams from the corpus scan
-        # straight through ONE Arrow pass that emits fetch metadata +
-        # per-page token arrays; only that metadata-sized frame is
-        # checkpointed (html never hits the block manager — materializing
-        # 30 KB × frontier of html was the dominant core-count-independent
-        # cost at bench scale)
-        fetched = fetch_join(
-            sched, pages, rmap=rmap, broadcast_frontier=cfg.broadcast_frontier
-        )
-        # EAGER: the broadcast-join plan has no upstream shuffle stages, so
-        # a lazy checkpoint would defer the scan+extract to the first
-        # consumer — and CONCURRENT consumers (the parallel seed
-        # checkpoints) would then race to compute the same unmaterialized
-        # RDD, duplicating the extract. Materialize once, here.
-        extract = (
-            X.extract_tokens_native if cfg.native_extract else X.extract_tokens_meta
-        )
-        tokens = extract(fetched).localCheckpoint(eager=True)
-
-        trace = tokens.select(
-            F.lit(round_id).alias("round"),
-            "company_id",
-            "priority",
-            "seq",
-            F.col("page_url").alias("url"),
-            F.when(F.col("fetch_ok"), F.lit("fetched"))
-            .otherwise(F.lit("error"))
-            .alias("action"),
-            "host",
-            "host_rank",
-            "not_before",
-            "fetch_error",
-        )
-
-        # IsNullOrWhiteSpace gate on the fetched body (Crawler.fs:326)
-        ok_tokens = tokens.filter(F.col("fetch_ok") & F.col("has_html"))
-
-        if round_id == 0:
-            result = _seed_round(spark, cfg, tokens, ok_tokens)
-            if cfg.use_sitemaps:
-                result["frontier_next"] = result["frontier_next"].unionByName(
-                    _sitemap_contact_frontier(
-                        pages, ok_tokens, result["frontier_next"]
-                    )
+        for round_id in range(start_round, cfg.max_depth):
+            if round_id == 0:
+                companies = select_companies(seeds, cfg.take_limit)
+                frontier = companies.select(
+                    "company_id",
+                    F.col("site_url").alias("url"),
+                    F.lit(FR.PRIO_SEED).alias("priority"),
+                    F.lit(0).alias("seq"),
+                    base_url_expr(F.col("site_url")).alias("base_url"),
                 )
-        else:
-            bag = X.regex_emails(ok_tokens).select("company_id", "email")
-            result = {
-                "bag": bag,
-                "flags": spark.createDataFrame(
-                    [], "company_id long, bad_url boolean, email_processed boolean, email_finded boolean"
-                ),
-                "frontier_next": spark.createDataFrame([], ", ".join(
-                    f"{c} {t}" for c, t in [
-                        ("company_id", "long"), ("url", "string"), ("priority", "int"),
-                        ("seq", "int"), ("base_url", "string"),
-                    ]
-                )),
-            }
+                seen = local_frame(spark, [], EMPTY_SEEN_SCHEMA)
+                # global scope G anti-join (no-op on a fresh store, real on reruns)
+                cand = (
+                    frontier.withColumn("canonical_url", canonicalize_url(F.col("url")))
+                    .withColumn("scope", F.lit("G"))
+                    .withColumn("seen_key", seen_key(F.col("scope"), F.col("canonical_url")))
+                )
+                frontier = useen.filter_unseen(cand, seen).drop(
+                    "seen_key", "scope", "canonical_url"
+                )
+            else:
+                frontier = store.read(round_id - 1, "frontier_next")
+                seen = store.read(round_id - 1, "url_seen")
+                if cfg.use_bloom:
+                    # reuse the blooms committed with the previous snapshot —
+                    # built distributed (applyInPandas per bucket); rebuild only
+                    # if restoring from an older store without a blooms table
+                    if store.has_table(round_id - 1, "blooms"):
+                        useen.set_blooms(store.read(round_id - 1, "blooms"))
+                    else:
+                        useen.build_blooms(seen)
+                cand = (
+                    frontier.withColumn("canonical_url", canonicalize_url(F.col("url")))
+                    .withColumn("scope", F.col("company_id").cast("string"))
+                    .withColumn("seen_key", seen_key(F.col("scope"), F.col("canonical_url")))
+                )
+                # within-round first-occurrence dedup (the sequential seen.Add)
+                w = Window.partitionBy("company_id", "url").orderBy("priority", "seq")
+                cand = (
+                    cand.withColumn("__rn", F.row_number().over(w))
+                    .filter(F.col("__rn") == 1)
+                    .drop("__rn")
+                )
+                frontier = useen.filter_unseen(cand, seen).drop(
+                    "seen_key", "scope", "canonical_url"
+                )
+                # extractor gate: non-empty ∧ F2 (Crawler.fs:241)
+                frontier = frontier.filter(
+                    (F.col("url") != "") & is_not_image_script_css_ext(F.col("url"))
+                )
 
-        # url_seen delta: everything this round actually attempted
-        if round_id == 0:
-            delta = tokens.select(
-                seen_key(F.lit("G"), canonicalize_url(F.col("page_url"))).alias("seen_key"),
-                F.lit("G").alias("scope"),
-                canonicalize_url(F.col("page_url")).alias("canonical_url"),
-                F.lit(round_id).alias("round"),
+            # robots gate (north_rule): drop disallowed URLs pre-schedule
+            if robots_rules_df is not None:
+                frontier = RB.gate_frontier(frontier, robots_rules_df)
+
+            # politeness stamps over full host, then salted spread (W2/C2/C3);
+            # per-host Crawl-delay rows override the default budget
+            sched = FR.schedule(
+                frontier,
+                politeness=robots_politeness,
+                default_delay_ms=cfg.delay_ms,
             )
-            url_seen = delta
-        else:
-            delta = tokens.select(
-                seen_key(F.col("company_id").cast("string"), canonicalize_url(F.col("page_url"))).alias("seen_key"),
-                F.col("company_id").cast("string").alias("scope"),
-                canonicalize_url(F.col("page_url")).alias("canonical_url"),
-                F.lit(round_id).alias("round"),
+            sched = FR.salted(sched, cfg.num_partitions)
+
+            # the fetch join stays LAZY: html streams from the corpus scan
+            # straight through ONE Arrow pass that emits fetch metadata +
+            # per-page token arrays; only that metadata-sized frame is
+            # checkpointed (html never hits the block manager — materializing
+            # 30 KB × frontier of html was the dominant core-count-independent
+            # cost at bench scale)
+            fetched = fetch_join(
+                sched, pages, rmap=rmap, broadcast_frontier=cfg.broadcast_frontier
             )
-            url_seen = seen.unionByName(delta)
+            # EAGER: the broadcast-join plan has no upstream shuffle stages, so
+            # a lazy checkpoint would defer the scan+extract to the first
+            # consumer — and CONCURRENT consumers (the parallel seed
+            # checkpoints) would then race to compute the same unmaterialized
+            # RDD, duplicating the extract. Materialize once, here.
+            extract = (
+                X.extract_tokens_native if cfg.native_extract else X.extract_tokens_meta
+            )
+            tokens = extract(fetched).localCheckpoint(eager=True)
 
-        if cfg.collect_counters:
-            agg = trace.agg(
-                F.sum(F.when(F.col("action") == "fetched", 1).otherwise(0)).alias("ok"),
-                F.sum(F.when(F.col("action") == "error", 1).otherwise(0)).alias("err"),
-            ).first()
-            counters = {
-                "pages_fetched": int(agg["ok"] or 0),
-                "fetch_errors": int(agg["err"] or 0),
-                "urls_enqueued": result["frontier_next"].count(),
-                "emails_bagged": result["bag"].count(),
+            trace = tokens.select(
+                F.lit(round_id).alias("round"),
+                "company_id",
+                "priority",
+                "seq",
+                F.col("page_url").alias("url"),
+                F.when(F.col("fetch_ok"), F.lit("fetched"))
+                .otherwise(F.lit("error"))
+                .alias("action"),
+                "host",
+                "host_rank",
+                "not_before",
+                "fetch_error",
+            )
+
+            # IsNullOrWhiteSpace gate on the fetched body (Crawler.fs:326)
+            ok_tokens = tokens.filter(F.col("fetch_ok") & F.col("has_html"))
+
+            if round_id == 0:
+                result = _seed_round(spark, cfg, tokens, ok_tokens)
+                if cfg.use_sitemaps:
+                    result["frontier_next"] = result["frontier_next"].unionByName(
+                        _sitemap_contact_frontier(
+                            pages, ok_tokens, result["frontier_next"]
+                        )
+                    )
+            else:
+                bag = X.regex_emails(ok_tokens).select("company_id", "email")
+                result = {
+                    "bag": bag,
+                    "flags": local_frame(spark, [], FLAGS_SCHEMA),
+                    "frontier_next": local_frame(spark, [], FRONTIER_SCHEMA),
+                }
+
+            # url_seen delta: everything this round actually attempted
+            if round_id == 0:
+                delta = tokens.select(
+                    seen_key(F.lit("G"), canonicalize_url(F.col("page_url"))).alias("seen_key"),
+                    F.lit("G").alias("scope"),
+                    canonicalize_url(F.col("page_url")).alias("canonical_url"),
+                    F.lit(round_id).alias("round"),
+                )
+                url_seen = delta
+            else:
+                delta = tokens.select(
+                    seen_key(F.col("company_id").cast("string"), canonicalize_url(F.col("page_url"))).alias("seen_key"),
+                    F.col("company_id").cast("string").alias("scope"),
+                    canonicalize_url(F.col("page_url")).alias("canonical_url"),
+                    F.lit(round_id).alias("round"),
+                )
+                url_seen = seen.unionByName(delta)
+
+            tables = {
+                "trace": trace,
+                "bag": result["bag"],
+                "flags": result["flags"],
+                "frontier_next": result["frontier_next"],
+                "url_seen": url_seen,
             }
-            # per-partition lineage (north_rule): rows per salt bucket
-            counters["partition_rows"] = {
-                int(r["host_salt"]): r["n"]
-                for r in sched.groupBy("host_salt").agg(F.count("*").alias("n")).collect()
-            }
-        else:
-            counters = {}
+            if cfg.use_bloom and round_id + 1 < cfg.max_depth:
+                # persist next round's blooms with the snapshot (distributed
+                # applyInPandas build — seen keys never reach the driver)
+                tables["blooms"] = useen.bloom_table(url_seen)
+            store.commit(round_id, tables, observed=_round_counters())
+            if cfg.compact_every and (round_id + 1) % cfg.compact_every == 0:
+                store.compact(["bag", "trace", "flags"], upto=round_id)
+                store.prune_compacted(round_id)
 
-        tables = {
-            "trace": trace,
-            "bag": result["bag"],
-            "flags": result["flags"],
-            "frontier_next": result["frontier_next"],
-            "url_seen": url_seen,
-        }
-        if cfg.use_bloom and round_id + 1 < cfg.max_depth:
-            # persist next round's blooms with the snapshot (distributed
-            # applyInPandas build — seen keys never reach the driver)
-            tables["blooms"] = useen.bloom_table(url_seen)
-        store.commit(round_id, tables, counters=counters)
-        if cfg.compact_every and (round_id + 1) % cfg.compact_every == 0:
-            store.compact(["bag", "trace", "flags"], upto=round_id)
-            store.prune_compacted(round_id)
-
-    out = finalize(spark, store, cfg)
-    restore_split()
-    return out
+        return finalize(spark, store, cfg)
+    finally:
+        for df in cached:
+            df.unpersist()
+        restore_split()
 
 
 def _tune_input_splits(spark, pages: DataFrame):

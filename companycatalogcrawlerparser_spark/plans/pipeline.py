@@ -47,6 +47,7 @@ from ..operators import dsir as DSIR
 from ..operators import lm as LM
 from ..operators import pii as PII
 from ..operators import textquality as TQ
+from ..session import local_frame
 
 __all__ = ["CurationConfig", "curate_training_corpus", "pages_to_docs"]
 
@@ -264,7 +265,8 @@ def curate_training_corpus(
             # the map rides as a broadcast (lang, head, tail) frame —
             # languages absent from the map fall back to the scalar
             # cutoffs, or are kept untouched when none are set
-            cuts = survivors.sparkSession.createDataFrame(
+            cuts = local_frame(
+                survivors.sparkSession,
                 [(str(k), float(h), float(t))
                  for k, (h, t) in sorted(by_lang.items())],
                 "lang string, __head double, __tail double",

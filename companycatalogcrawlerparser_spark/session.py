@@ -11,7 +11,8 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _driver_memory() -> str:
@@ -95,3 +96,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A frame of driver-side rows (tuples, in ``schema`` column order).
+
+    Built through a ``pyarrow.Table`` so the plan is a ``LocalTableScan``
+    the JVM evaluates alone. ``createDataFrame(list)`` gives a
+    ``Scan ExistingRDD`` over a pickled PythonRDD instead, and every
+    evaluation of that frame runs a Python worker pass."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.canon import base_url as base_url_expr
+from ..session import local_frame
 
 MAX_REDIRECTS = 20
 
@@ -149,10 +150,11 @@ def redirect_map(pages: DataFrame) -> DataFrame:
     n_redirects = redirects.count()
     if n_redirects <= DRIVER_CLOSURE_MAX_ROWS:
         rows = [(r["r_url"], r["r_status"], r["r_loc"]) for r in redirects.collect()]
-        resolved = _resolve_chains_py(rows)
-        spark = pages.sparkSession
-        return spark.createDataFrame(
-            resolved, "src_url string, resolved_url string, resolve_error string, hops int"
+        redirects.unpersist()
+        return local_frame(
+            pages.sparkSession,
+            _resolve_chains_py(rows),
+            "src_url string, resolved_url string, resolve_error string, hops int",
         )
 
     cur = redirects.select(

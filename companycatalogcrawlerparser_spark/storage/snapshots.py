@@ -9,7 +9,7 @@ Layout:
     root/data/round=K/<table>/*.parquet     (written first)
     root/manifests/round-K.json             (os.rename = the commit point)
 
-A manifest lists its tables + row counts + per-partition lineage counters
+A manifest lists its tables (path + schema) and the round's counters
 (north_rule). A killed job leaves at most an orphan data dir that the next
 run ignores (no manifest) and overwrites.
 """
@@ -21,7 +21,13 @@ import os
 import re
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
+
+
+def _entry(path: str, df: DataFrame) -> dict:
+    """A manifest's record of one written table."""
+    return {"path": path, "schema": df.schema.jsonValue()}
 
 
 class SnapshotStore:
@@ -38,9 +44,21 @@ class SnapshotStore:
         round_id: int,
         tables: Dict[str, DataFrame],
         counters: Optional[Dict[str, int]] = None,
+        observed: Optional[Dict[str, list]] = None,
     ) -> dict:
+        """Writes ``tables`` and renames the round's manifest into place.
+
+        ``observed`` maps a table name to aggregate Columns; they are
+        computed by that table's write (``DataFrame.observe``) and land in
+        the manifest's counters next to ``counters``, at no extra job."""
         data_dir = os.path.join(self.root, "data", f"round={round_id}")
-        manifest: dict = {"round": round_id, "tables": {}, "counters": counters or {}}
+        manifest: dict = {"round": round_id, "tables": {}, "counters": dict(counters or {})}
+        tables = dict(tables)
+        observations = []
+        for name, exprs in (observed or {}).items():
+            obs = Observation()
+            tables[name] = tables[name].observe(obs, *exprs)
+            observations.append(obs)
 
         # write the tables from concurrent driver threads: the writes are
         # independent jobs over (mostly) already-checkpointed inputs, so the
@@ -64,13 +82,15 @@ class SnapshotStore:
             # coalesce never increases partition count — smaller frames
             # pass through untouched
             df.coalesce(n_write).write.mode("overwrite").parquet(path)
-            return name, path
+            return name, _entry(path, df)
 
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=max(1, len(tables))) as ex:
-            for name, path in ex.map(_write, list(tables.items())):
-                manifest["tables"][name] = {"path": path}
+            for name, entry in ex.map(_write, list(tables.items())):
+                manifest["tables"][name] = entry
+        for obs in observations:
+            manifest["counters"].update(obs.get)
         tmp = os.path.join(self.root, "manifests", f".round-{round_id}.json.tmp")
         final = os.path.join(self.root, "manifests", f"round-{round_id}.json")
         with open(tmp, "w") as f:
@@ -188,7 +208,16 @@ class SnapshotStore:
             return json.load(f)
 
     def read(self, round_id: int, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.manifest(round_id)["tables"][table]["path"])
+        return self._read(self.manifest(round_id)["tables"][table])
+
+    def _read(self, entry: dict) -> DataFrame:
+        """A committed table, read with the schema its manifest recorded:
+        without one, ``spark.read.parquet`` runs a schema-inference job.
+        Manifests written before schemas were recorded still infer."""
+        reader = self.spark.read
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(entry["schema"]))
+        return reader.parquet(entry["path"])
 
     def has_table(self, round_id: int, table: str) -> bool:
         return table in self.manifest(round_id)["tables"]
@@ -225,7 +254,7 @@ class SnapshotStore:
             # coalesce, not repartition: file-count reduction needs no
             # shuffle — each output file just concatenates input splits
             df.coalesce(target_partitions).write.mode("overwrite").parquet(path)
-            manifest["tables"][name] = {"path": path}
+            manifest["tables"][name] = _entry(path, df)
         tmp = os.path.join(self.root, "manifests", f".compact-{upto}.json.tmp")
         final = os.path.join(self.root, "manifests", f"compact-{upto}.json")
         with open(tmp, "w") as f:
@@ -256,9 +285,7 @@ class SnapshotStore:
         start_after = -1
         for c in reversed(self.committed_compactions()):
             if c <= upto and table in self.compaction_manifest(c)["tables"]:
-                base = self.spark.read.parquet(
-                    self.compaction_manifest(c)["tables"][table]["path"]
-                )
+                base = self._read(self.compaction_manifest(c)["tables"][table])
                 start_after = c
                 break
         out = base

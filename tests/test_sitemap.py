@@ -213,7 +213,7 @@ class TestSparkSitemap:
         pages_df = spark.createDataFrame(pages, schema=webgen.PAGES_SCHEMA)
         seeds_df = spark.createDataFrame(seeds, schema=webgen.SEEDS_SCHEMA)
 
-        base_cfg = dict(num_partitions=4, n_buckets=8, collect_counters=False)
+        base_cfg = dict(num_partitions=4, n_buckets=8)
         off = run_crawl(
             spark, pages_df, seeds_df, str(tmp_path / "off"),
             CrawlConfig(**base_cfg),
@@ -313,7 +313,6 @@ class TestSparkSitemap:
             spark, pages_df, seeds_df, str(tmp_path / "store"),
             CrawlConfig(
                 use_sitemaps=True, num_partitions=4, n_buckets=8,
-                collect_counters=False,
             ),
         )
         pairs = {(r["company_id"], r["email"])

@@ -71,7 +71,7 @@ def _shard_job(args) -> None:
         )
     out_dir = tempfile.mkdtemp(prefix=f"shard_{args.shard_k}_")
     cfg = CrawlConfig(
-        num_partitions=8, n_buckets=64, collect_counters=False,
+        num_partitions=8, n_buckets=64,
         take_limit=args.companies,
     )
     t0 = time.monotonic()
