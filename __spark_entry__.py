@@ -816,8 +816,8 @@ def q_corpus_curation(spark, sf_dir):
     # the six frames whose CONSTRUCTION runs eager Spark jobs (the
     # prefix-sum builders' range-sample + __pid-freeze checkpoints, the
     # BPE word-count collect) are built from concurrent driver threads —
-    # independent jobs whose materialization latency overlaps (the
-    # plans/crawl.py _checkpoint_parallel discipline; measured: the
+    # independent jobs whose materialization latency overlaps (as
+    # SnapshotStore.commit writes a round's tables; measured: the
     # sequential builds were ~4.3 s of the row's build wall, ≈ the sum
     # of six ~0.5-0.9 s materializations). Everything else stays lazy.
     from concurrent.futures import ThreadPoolExecutor

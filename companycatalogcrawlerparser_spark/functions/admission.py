@@ -1,22 +1,19 @@
-"""F8 — the 13-stage frontier-admission chain as a native DataFrame
-transform (``Crawler.fs:135-187``; SURVEY.md §2.2 F8).
+"""F8 — the 13-stage frontier-admission chain as a per-page array
+expression (``Crawler.fs:135-187``; SURVEY.md §2.2 F8).
 
-Input: one row per raw href candidate with its document position. All
-stages are Column expressions; the two ``Seq.distinct`` passes become
-first-occurrence window dedups scoped to the page (the reference dedups
-within one page's href list). Whole chain stays in whole-stage codegen —
-the only shuffles are the two window dedups, both partitioned by the scope
-key, and AQE coalesces them.
+The reference runs the chain over one page's href list, so it runs here
+over the page's ``hrefs`` array: every stage is a ``filter`` or
+``transform`` on the list, and the two ``Seq.distinct`` passes are
+:func:`~..operators.extract.first_occurrences` on it. Nothing crosses a
+row — no aggregation, no shuffle, no Python.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.extract import _first_occurrence
+from ..operators.extract import first_occurrences, indexed
 from .canon import host_token
 from .predicates import (
     count_substring,
@@ -28,99 +25,92 @@ from .predicates import (
 )
 
 
-def admit_frontier(
-    df: DataFrame,
-    href_col: str = "href",
-    base_url_col: str = "base_url",
-    seq_col: str = "seq",
-    scope_cols: Sequence[str] = ("company_id",),
-) -> DataFrame:
-    """Returns admitted frontier URLs: scope cols + ``url`` + ``seq`` (the
-    document position of the first occurrence — crawl-order key) +
-    ``is_contact`` (F4 on the admitted URL, drives C2 priority)."""
-    scope = list(scope_cols)
-    x = F.col(href_col)
+def admit_frontier(df: DataFrame, base_url_col: str = "base_url") -> DataFrame:
+    """Adds the list column ``admitted`` (``array<struct<seq, v>>``): the
+    page's admitted frontier URLs ``v`` over its ``hrefs`` array, each
+    with ``seq``, the document position of its first occurrence (the
+    crawl-order key)."""
     raw_base = F.col(base_url_col)
     base = F.when(raw_base.endswith("/"), raw_base).otherwise(
         F.concat(raw_base, F.lit("/"))
     )
 
-    contacts = is_contacts_page(x)
-    ends_html = x.endswith(".html") | x.endswith(".htm")
-
-    stage = (
-        df.withColumn("__base", base)
-        .filter(F.length(x) >= 5)
-        .filter(~F.lower(x).startswith("mailto:"))
-        .filter(
-            is_not_image_script_css_ext(x)
+    def raw_ok(x):
+        contacts = is_contacts_page(x)
+        ends_html = x.endswith(".html") | x.endswith(".htm")
+        return (
+            (F.length(x) >= 5)
+            & ~F.lower(x).startswith("mailto:")
+            & is_not_image_script_css_ext(x)
             & (contacts | (x.contains("?") & x.contains("topmenu")))
-        )
-        .filter(
-            ends_html
-            | (
-                ~ends_html
-                & (F.substring(x, -4, 1) != ".")
-                & (F.substring(x, -5, 1) != ".")
+            & (
+                ends_html
+                | (
+                    ~ends_html
+                    & (F.substring(x, -4, 1) != ".")
+                    & (F.substring(x, -5, 1) != ".")
+                )
+                | contacts
             )
-            | contacts
+            & (
+                ends_html
+                | x.endswith("/")
+                | x.startswith("/")
+                | start_http(x)
+                | contacts
+            )
         )
-        .filter(
-            ends_html
-            | x.endswith("/")
-            | x.startswith("/")
-            | start_http(x)
-            | contacts
-        )
-    )
 
     # Seq.distinct #1 — first occurrence of each raw href within the page
-    # (hash aggregation with map-side combine; see extract._first_occurrence)
-    stage = _first_occurrence(stage, [*scope, href_col], seq_col)
-
-    # relative→absolute (inline twin of convertUrl, Crawler.fs:171-180)
-    resolved = (
-        F.when(
-            ~start_http(x) & x.startswith("/") & ~x.startswith("//"),
-            F.concat(F.rtrim(F.col("__base"), F.lit("/")), x),
-        )
-        .when(
-            ~start_http(x) & ~x.startswith("/") & ~x.startswith("//"),
-            F.concat(F.col("__base"), x),
-        )
-        .otherwise(x)
+    df = first_occurrences(
+        df.withColumn(
+            "admitted", F.filter(indexed("hrefs"), lambda e: raw_ok(e["v"]))
+        ),
+        "admitted",
     )
-    stage = stage.withColumn("url", resolved)
 
-    u = F.col("url")
-    host = host_token(F.col("__base"))
-    https_base_len = F.length(F.replace(F.col("__base"), F.lit("http://"), F.lit("https://")))
-
-    stage = (
-        stage.filter((host == "") | (F.instr(u, host) > 0))  # .NET ''.Contains = true
-        .withColumn(
-            "url",
-            F.when(u.startswith("//"), F.replace(u, F.lit("//"), F.lit("http://"))).otherwise(u),
-        )
-        .filter(count_substring(F.col("url"), "://") == 1)
-        .filter(
-            ~(
-                (F.length("url") == F.length("__base"))
-                | (F.length("url") == https_base_len)
+    def resolved(x):
+        """relative→absolute (inline twin of convertUrl, Crawler.fs:171-180)"""
+        return (
+            F.when(
+                ~start_http(x) & x.startswith("/") & ~x.startswith("//"),
+                F.concat(F.rtrim(base, F.lit("/")), x),
             )
+            .when(
+                ~start_http(x) & ~x.startswith("/") & ~x.startswith("//"),
+                F.concat(base, x),
+            )
+            .otherwise(x)
         )
-        .filter(~F.col("url").endswith("//"))
-        .filter(not_social_network(F.col("url")))
-        .filter(~is_end_with_digits(F.col("url")))
-        .filter(F.length("url") <= 80)
-    )
 
+    host = host_token(base)
+    https_base_len = F.length(F.replace(base, F.lit("http://"), F.lit("https://")))
+
+    def slashes(u):
+        return F.when(
+            u.startswith("//"), F.replace(u, F.lit("//"), F.lit("http://"))
+        ).otherwise(u)
+
+    def url_ok(u):
+        return (
+            (count_substring(u, "://") == 1)
+            & ~((F.length(u) == F.length(base)) | (F.length(u) == https_base_len))
+            & ~u.endswith("//")
+            & not_social_network(u)
+            & ~is_end_with_digits(u)
+            & (F.length(u) <= 80)
+        )
+
+    def with_v(e, v):
+        return F.struct(e["seq"].alias("seq"), v.alias("v"))
+
+    same_host = F.filter(
+        F.transform("admitted", lambda e: with_v(e, resolved(e["v"]))),
+        lambda e: (host == "") | (F.instr(e["v"], host) > 0),  # .NET ''.Contains = true
+    )
+    urls = F.filter(
+        F.transform(same_host, lambda e: with_v(e, slashes(e["v"]))),
+        lambda e: url_ok(e["v"]),
+    )
     # Seq.distinct #2 — first occurrence of each admitted URL within the page
-    stage = _first_occurrence(stage, [*scope, "url"], seq_col)
-
-    return stage.select(
-        *scope,
-        "url",
-        F.col(seq_col).alias("seq"),
-        is_contacts_page(F.col("url")).alias("is_contact"),
-    )
+    return first_occurrences(df.withColumn("admitted", urls), "admitted")

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from .functions.canon import base_url as base_url_expr
 from .functions.canon import sniff_encoding
 from .functions import admission as admission_mod
+from .functions.predicates import is_contacts_page as is_contacts_page_col
 from .operators import extract as X
 from .plans import catalog as CAT
 from .plans.crawl import CrawlConfig, run_crawl
@@ -342,14 +343,15 @@ def _engine_crawl(spark) -> dict:
 
 
 def _engine_tokens(spark) -> DataFrame:
-    """extract_tokens over every corpus content page, base_url attached."""
+    """The crawl's extractor (``extract_tokens_native``) over every corpus
+    content page, base_url attached."""
     if "engine_tokens" not in _memo:
         rows = [
             (0, url, bytearray(html.encode("utf-8")))
             for url, html in _content_pages()
         ]
         df = spark.createDataFrame(rows, "company_id long, page_url string, html binary")
-        tokens = X.extract_tokens(df).withColumn(
+        tokens = X.extract_tokens_native(df).withColumn(
             "base_url", base_url_expr(F.col("page_url"))
         )
         _memo["engine_tokens"] = tokens.localCheckpoint(eager=False)
@@ -401,11 +403,14 @@ def q_crawl_email_upsert(spark, sf_dir) -> DataFrame:
 
 
 def q_f8_admission(spark, sf_dir) -> DataFrame:
-    tokens = _engine_tokens(spark)
-    cand = X.href_candidates(tokens)
-    admitted = admission_mod.admit_frontier(cand, scope_cols=("page_url",))
+    admitted = X.inline_list(
+        admission_mod.admit_frontier(_engine_tokens(spark)), "admitted", "url"
+    )
     return _ord_by_seq(
-        admitted.select("page_url", "seq", "url", "is_contact"),
+        admitted.select(
+            "page_url", "seq", "url",
+            is_contacts_page_col(F.col("url")).alias("is_contact"),
+        ),
         ["page_url"], ["url", "is_contact"],
     )
 

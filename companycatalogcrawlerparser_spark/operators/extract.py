@@ -1,78 +1,38 @@
-"""Vectorized fetch+extract stage (SURVEY.md §2.11 UDF surface).
+"""Fetch+extract stage (SURVEY.md §2.11 UDF surface) and the page-scoped
+token lists built on it.
 
-One Arrow-batched ``mapInPandas`` UDTF turns fetched html into ONE compact
-row per page carrying token ARRAYS (href candidates, anchor pairs,
-plain-email matches) using the SAME regex + char-trim helpers as the
-pure-Python oracle (``refsem.extract``) — byte parity by construction.
-Downstream consumers ``posexplode`` only the array they need, JVM-side.
+The extractor turns fetched html into ONE compact row per page carrying
+token ARRAYS (href candidates, anchor pairs, plain-email matches). The
+crawl runs :func:`extract_tokens_native` (Java regexes, no Python);
+:func:`extract_tokens_meta` is its Arrow twin over the refsem regexes.
 
 Why arrays instead of one-row-per-token: a 100k-page round yields ~10M
-token rows; shipping them through Arrow row-by-row and re-reading them
-from the checkpoint for every consumer measured as the dominant cost.
-Per-page arrays cut the Arrow row count 100×, keep document order as
-array order (``posexplode`` regenerates ``seq``), and make the checkpoint
-compact.
+token rows; shipping them row by row and re-reading them from the
+checkpoint for every consumer measured as the dominant cost. Per-page
+arrays keep document order as array order (the element index is ``seq``)
+and make the checkpoint compact.
+
+Every reference dedup here is scoped to one page (``Seq.distinct`` over
+one page's matches), so each is an array expression on the page's token
+row (:func:`first_occurrences`) — no aggregation, no shuffle. The lists
+are ``array<struct<seq, v>>`` columns; the exploded forms
+(:func:`mailto_emails`, :func:`regex_emails`,
+:func:`contact_anchor_links`) ``inline`` them once.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.canon import convert_url
+from ..functions.canon import convert_url, host_token
 from ..functions.predicates import (
     is_not_image_script_css_ext,
     not_social_network,
 )
 from ..refsem.extract import CONTACT_ANCHOR_WORDS
-
-PAGE_TOKENS_SCHEMA = (
-    "company_id long, page_url string, hrefs array<string>, "
-    "anchor_names array<string>, anchor_urls array<string>, "
-    "emails array<string>"
-)
-
-
-def extract_tokens(fetched: DataFrame) -> DataFrame:
-    """fetched: (company_id, page_url, html binary, …) → one row per page:
-    ``hrefs``        char-trimmed href-match values (Crawler.fs:156-157)
-    ``anchor_names/anchor_urls`` parallel arrays from the anchor regex
-    ``emails``       raw plain-text email regex matches (doc order)
-    """
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # heavy imports once per worker, not per batch
-        from ..refsem.extract import (
-            ANCHOR_RE,
-            MULTIPLE_EMAIL_RE,
-            _href_match_values,
-        )
-
-        for b in batches:
-            out = {
-                "company_id": [], "page_url": [], "hrefs": [],
-                "anchor_names": [], "anchor_urls": [], "emails": [],
-            }
-            for cid, purl, html in zip(b["company_id"], b["page_url"], b["html"]):
-                if html is None:
-                    continue
-                text = bytes(html).decode("utf-8", errors="replace")
-                anchors = ANCHOR_RE.findall(text)  # [(url, name), ...]
-                out["company_id"].append(cid)
-                out["page_url"].append(purl)
-                out["hrefs"].append(_href_match_values(text))
-                out["anchor_urls"].append([a[0] for a in anchors])
-                out["anchor_names"].append([a[1] for a in anchors])
-                out["emails"].append(
-                    [m.group(0) for m in MULTIPLE_EMAIL_RE.finditer(text)]
-                )
-            yield pd.DataFrame(out)
-
-    cols = fetched.select("company_id", F.col("page_url"), "html")
-    return cols.mapInPandas(run, schema=PAGE_TOKENS_SCHEMA)
 
 
 def extract_tokens_meta(fetched: DataFrame) -> DataFrame:
@@ -165,7 +125,7 @@ def _href_trims(v):
 def extract_tokens_native(fetched: DataFrame) -> DataFrame:
     """JVM-native twin of :func:`extract_tokens_meta` — identical output
     schema, zero Python: the html string never leaves the JVM (no Arrow
-    transfer), the regexes run inside whole-stage codegen.
+    transfer). This is the extractor the crawl runs.
 
     Measured rationale: the Arrow path moves the full decompressed html
     (30 KB × frontier, ~16 GB/round at bench scale) through a pipe into
@@ -225,110 +185,137 @@ def extract_tokens_native(fetched: DataFrame) -> DataFrame:
     )
 
 
-def _explode(tokens: DataFrame, array_col: str, value_alias: str) -> DataFrame:
-    """posexplode one token array → (…, seq, <value_alias>), doc order."""
-    return tokens.select(
-        "company_id",
-        "page_url",
-        "base_url",
-        F.posexplode(F.col(array_col)).alias("seq", value_alias),
+def indexed(arr, value=lambda x: x) -> Column:
+    """``array<T>`` → ``array<struct<seq, v>>``: ``seq`` is the element's
+    index (its document position), ``v`` is ``value`` of the element."""
+    return F.transform(
+        arr, lambda x, i: F.struct(i.alias("seq"), value(x).alias("v"))
     )
 
 
-def _first_occurrence(df: DataFrame, keys, order_col="seq") -> DataFrame:
-    """F# ``Seq.distinct`` under parallelism: keep the minimum-seq row.
+def first_occurrences(df: DataFrame, name: str) -> DataFrame:
+    """F# ``Seq.distinct`` on the ``array<struct<seq, v>>`` column
+    ``name``: keeps the first element of each ``v``, in array order (so
+    ``seq`` is the first occurrence's position).
 
-    Implemented as a hash aggregation (``min`` over seq + any carried
-    columns packed in a struct) instead of a row_number window: aggregates
-    get map-side partial combine and skip the per-partition sort — at 10^7
-    token rows per round the sort was a measured hotspot. Carried columns
-    ride in the struct so ties resolve deterministically by seq order.
-    """
-    keys = list(keys)
-    carry = [c for c in df.columns if c not in keys and c != order_col]
-    packed = F.min(F.struct(F.col(order_col), *[F.col(c) for c in carry])).alias("__m")
-    out = df.groupBy(*keys).agg(packed)
-    cols = (
-        [F.col(k) for k in keys]
-        + [F.col(f"__m.{order_col}").alias(order_col)]
-        + [F.col(f"__m.{c}").alias(c) for c in carry]
+    The ``v`` values are bound in their own projection and read back as
+    ``values[i]``: referenced twice, the array is not inlined into the
+    lambda by CollapseProject, which would rebuild it for every element
+    (``x.v`` alone would be one reference, and ``name.v`` counts as cheap
+    and is inlined at any count)."""
+    vals = F.col("__vals")
+    kept = F.filter(
+        name, lambda x, i: F.array_position(vals, F.element_at(vals, i + 1)) == i + 1
     )
-    return out.select(*cols).select(*df.columns)
-
-
-def mailto_emails(tokens: DataFrame) -> DataFrame:
-    """X11 — ``searchMailToResults`` (Crawler.fs:125-133): href values that
-    start with ``mailto:`` (case-insensitive), lowercased, prefix removed
-    with Replace-all semantics, distinct per page."""
-    df = _explode(tokens, "hrefs", "value")
-    low = F.lower(F.col("value"))
-    df = df.filter(low.startswith("mailto:")).withColumn(
-        "email", F.replace(low, F.lit("mailto:"), F.lit(""))
-    )
-    return _first_occurrence(
-        df.select("company_id", "page_url", "email", "seq"),
-        ["company_id", "page_url", "email"],
+    return df.withColumn("__vals", F.transform(name, lambda x: x["v"])).select(
+        *[kept.alias(c) if c == name else F.col(c) for c in df.columns]
     )
 
 
-def regex_emails(tokens: DataFrame) -> DataFrame:
-    """Plain-text email matches, per-page distinct, ``Mail.ru`` suffix
-    dropped case-sensitively AFTER distinct (quirk Q10, Crawler.fs:334-337)."""
-    df = _explode(tokens, "emails", "email")
-    df = _first_occurrence(
-        df.select("company_id", "page_url", "email", "seq"),
-        ["company_id", "page_url", "email"],
+def with_mailto(tokens: DataFrame) -> DataFrame:
+    """X11 — ``searchMailToResults`` (Crawler.fs:125-133) as the list
+    column ``mailto``: href values that start with ``mailto:``
+    (case-insensitive), lowercased, prefix removed with Replace-all
+    semantics, distinct per page."""
+    hits = F.filter(
+        indexed("hrefs", F.lower), lambda x: x["v"].startswith("mailto:")
     )
-    return df.filter(~F.col("email").endswith("Mail.ru"))
+    emails = F.transform(
+        hits,
+        lambda x: F.struct(
+            x["seq"].alias("seq"),
+            F.replace(x["v"], F.lit("mailto:"), F.lit("")).alias("v"),
+        ),
+    )
+    return first_occurrences(tokens.withColumn("mailto", emails), "mailto")
 
 
-def contact_anchor_links(tokens: DataFrame, base_url_col: str = "base_url") -> DataFrame:
+def with_page_emails(tokens: DataFrame) -> DataFrame:
+    """Plain-text email matches as the list column ``page_emails``:
+    per-page distinct, ``Mail.ru`` suffix dropped case-sensitively AFTER
+    distinct (quirk Q10, Crawler.fs:334-337)."""
+    df = first_occurrences(
+        tokens.withColumn("page_emails", indexed("emails")), "page_emails"
+    )
+    return df.withColumn(
+        "page_emails",
+        F.filter("page_emails", lambda x: ~x["v"].endswith("Mail.ru")),
+    )
+
+
+def with_contact_anchors(tokens: DataFrame) -> DataFrame:
     """H10 ∘ C2 — ``FindLinksRegExp`` + contact-name filter
-    (Crawler.fs:51-63, 346-353). Returns (company_id, page_url, url, seq)
-    in document order of first occurrence of each (name, url) pair."""
-    from ..functions.canon import host_token
-
-    pairs = tokens.select(
-        "company_id",
-        "page_url",
-        "base_url",
-        F.posexplode(
-            F.arrays_zip(
-                F.col("anchor_names").alias("name"),
-                F.col("anchor_urls").alias("href"),
-            )
-        ).alias("seq", "pair"),
-    ).select(
-        "company_id", "page_url", "base_url", "seq",
-        F.col("pair.name").alias("name"), F.col("pair.href").alias("value"),
-    )
-    base_raw = F.col(base_url_col)
+    (Crawler.fs:51-63, 346-353) as the list column ``contact_anchors``:
+    converted same-host urls in document order of the first occurrence of
+    each (name, url) pair."""
+    base_raw = F.col("base_url")
     base = F.when(base_raw.endswith("/"), base_raw).otherwise(
         F.concat(base_raw, F.lit("/"))
     )
-    df = (
-        pairs.withColumn("url", convert_url(F.col("value"), base))
-        .withColumn("__host", host_token(base))
-    )
-    df = df.filter(
-        ((F.col("__host") == "") | (F.instr(F.col("url"), F.col("__host")) > 0))
-        & not_social_network(F.col("url"))
-        & is_not_image_script_css_ext(F.col("url"))
+    host = host_token(base)
+    pairs = F.filter(
+        indexed(
+            F.arrays_zip(
+                F.col("anchor_names").alias("name"),
+                F.col("anchor_urls").alias("href"),
+            ),
+            lambda p: F.struct(
+                p["name"].alias("name"),
+                convert_url(p["href"], base).alias("url"),
+            ),
+        ),
+        lambda x: ((host == "") | (F.instr(x["v"]["url"], host) > 0))
+        & not_social_network(x["v"]["url"])
+        & is_not_image_script_css_ext(x["v"]["url"]),
     )
     # Seq.distinct on the (name, url) PAIR, then the name filter
-    df = _first_occurrence(df, ["company_id", "page_url", "name", "url"])
-    low_name = F.lower(F.col("name"))
-    keyword_hit = None
-    for w in CONTACT_ANCHOR_WORDS:
-        cond = low_name.contains(w)
-        keyword_hit = cond if keyword_hit is None else (keyword_hit | cond)
-    return df.filter(keyword_hit).select("company_id", "page_url", "url", "seq")
-
-
-def href_candidates(tokens: DataFrame, base_url_col: str = "base_url") -> DataFrame:
-    """Raw href values + base, ready for the F8 admission chain
-    (``functions.admission.admit_frontier``)."""
-    return _explode(tokens, "hrefs", "href").select(
-        "company_id", "page_url", "href",
-        F.col(base_url_col).alias("base_url"), "seq",
+    df = first_occurrences(
+        tokens.withColumn("contact_anchors", pairs), "contact_anchors"
     )
+
+    def named(x):
+        low_name = F.lower(x["v"]["name"])
+        hit = None
+        for w in CONTACT_ANCHOR_WORDS:
+            cond = low_name.contains(w)
+            hit = cond if hit is None else (hit | cond)
+        return hit
+
+    return df.withColumn(
+        "contact_anchors",
+        F.transform(
+            F.filter("contact_anchors", named),
+            lambda x: F.struct(
+                x["seq"].alias("seq"), x["v"]["url"].alias("v")
+            ),
+        ),
+    )
+
+
+def inline_list(df: DataFrame, name: str, value_alias: str) -> DataFrame:
+    """One row per element of the list column ``name``: (company_id,
+    page_url, <value_alias>, seq).
+
+    The generator reads a renaming ``transform`` of the list, not the bare
+    column: for a bare column Spark infers a ``size(list) > 0`` filter and
+    pushes it below the projections, where it would rebuild the whole list
+    expression, bound values included, a second time."""
+    rows = F.transform(
+        name, lambda x: F.struct(x["v"].alias(value_alias), x["seq"].alias("seq"))
+    )
+    return df.select("company_id", "page_url", F.inline(rows))
+
+
+def mailto_emails(tokens: DataFrame) -> DataFrame:
+    """:func:`with_mailto`, one row per email."""
+    return inline_list(with_mailto(tokens), "mailto", "email")
+
+
+def regex_emails(tokens: DataFrame) -> DataFrame:
+    """:func:`with_page_emails`, one row per email."""
+    return inline_list(with_page_emails(tokens), "page_emails", "email")
+
+
+def contact_anchor_links(tokens: DataFrame) -> DataFrame:
+    """:func:`with_contact_anchors`, one row per link."""
+    return inline_list(with_contact_anchors(tokens), "contact_anchors", "url")

@@ -16,12 +16,14 @@ from pyspark.sql import functions as F
 
 from ..session import local_frame
 
-# below this row count assign_dense_ids builds the id map driver-side
-# (one collect + sort) instead of the range-partition + local-rank +
-# offsets machinery — the size-gated discipline of sources/pages.py
-# DRIVER_CLOSURE_MAX_ROWS. 100k key rows ≈ a few MB; the distributed
-# path runs unchanged above the gate (the 10^10 design).
-IDS_DRIVER_MAX_ROWS = 100_000
+# up to this many bytes of rows assign_dense_ids builds the id map
+# driver-side (one collect + sort) instead of the range-partition +
+# local-rank + offsets machinery — the size-gated discipline of
+# sources/pages.py DRIVER_CLOSURE_MAX_ROWS. Gated on bytes, not rows: the
+# collect holds whole rows, and a few wide ones cost as much driver memory
+# as many narrow ones. The distributed path runs unchanged above the gate
+# (the 10^10 design).
+IDS_DRIVER_MAX_BYTES = 4 << 20
 
 
 def insert_if_absent(
@@ -61,12 +63,21 @@ def assign_dense_ids(
     pins the sampled range boundaries between the count pass and the rank
     pass. ``order_col`` values must be unique (callers pass a distinct
     key column)."""
+    from pyspark.sql.types import BinaryType, StringType
     from pyspark.storagelevel import StorageLevel
 
     spark = df.sparkSession
     d = df.persist(StorageLevel.MEMORY_AND_DISK)
-    n_rows = d.count()
-    if n_rows <= IDS_DRIVER_MAX_ROWS:
+    # bytes a collect would hold: string/binary values at their length,
+    # 8 for any other value (the id included)
+    row_bytes = F.lit(8)
+    for f in df.schema:
+        if isinstance(f.dataType, (StringType, BinaryType)):
+            row_bytes += F.coalesce(F.octet_length(F.col(f"`{f.name}`")), F.lit(0))
+        else:
+            row_bytes += 8
+    n_bytes = d.agg(F.sum(row_bytes)).first()[0] or 0
+    if n_bytes <= IDS_DRIVER_MAX_BYTES:
         # size-gated driver path (r8 — the redirect-closure /
         # CC_DRIVER_MAX_EDGES discipline): below the gate the range
         # sampler + per-partition rank + offset machinery is three jobs

@@ -5,18 +5,24 @@ loop (SURVEY.md §3.2 "Spark shape"; reference ``Program.fs:492-567`` +
 Round 0 (seeds): F9 filter → A2 site_url dedup → cap → politeness schedule
 → fetch join → extract → mailto/email bag → per-company branch (mailto>1
 short-circuit / contact anchors / contact hrefs) → flags + next frontier.
-Round 1 (contact pages): extractor-scope dedup → schedule → fetch → email
-regex only (the reference's ``asyncEmailExtractor`` never expands further).
+Round 1 (contact pages): extractor-scope dedup → url-seen filter →
+schedule → fetch → email regex only (the reference's
+``asyncEmailExtractor`` never expands further).
 Finalize: F10 post-filter → K5 global email dedup + junction.
 
 Every round commits one atomic snapshot (trace, bag, url_seen delta, next
 frontier, flags, counters) — a killed job resumes at the last committed
 round without refetching (C7).
 
-Scale shape per round: one big shuffle (fetch join, AQE-skew-handled), one
-narrow Arrow UDF (extract), window dedups keyed by (company, page) and
-host. No collect() except tiny control counts; the manifest counters are
-observed on the commit writes.
+Scale shape per round: the fetch join streams the corpus past the
+broadcast frontier; the JVM-native extractor turns each fetched page into
+one row of token arrays, checkpointed once. Everything after it that the
+reference scopes to one page (its ``Seq.distinct`` passes, and in round 0
+the whole per-company branch, since round 0 fetches one page per company)
+is a per-row array projection or explode of that row — no shuffle. The
+windows are the seed selection's site_url dedup, the host politeness
+stamps and round 1's (company, url) dedup. No collect() except tiny
+control counts; the manifest counters are observed on the commit writes.
 """
 
 from __future__ import annotations
@@ -24,7 +30,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import admission as admission_mod
@@ -45,7 +51,6 @@ from ..session import local_frame
 from ..sources.pages import fetch_join, redirect_map
 from ..storage.snapshots import SnapshotStore
 
-EMPTY_SEEN_SCHEMA = "seen_key long, scope string, canonical_url string, round int"
 FLAGS_SCHEMA = (
     "company_id long, bad_url boolean, email_processed boolean, email_finded boolean"
 )
@@ -59,7 +64,6 @@ class CrawlConfig:
     delay_ms: int = 1000        # smallest reference Thread.Sleep
     num_partitions: int = 32
     n_buckets: int = 64         # url_seen filter buckets (power of two)
-    use_bloom: bool = True
     url_seen_filter: str = "bloom"  # or "cuckoo" (deletable fingerprints)
     respect_robots: bool = True  # robots.txt gating + Crawl-delay
     #   politeness (north_rule); no-op when the corpus carries no
@@ -173,27 +177,19 @@ def run_crawl(
                     F.lit(0).alias("seq"),
                     base_url_expr(F.col("site_url")).alias("base_url"),
                 )
-                seen = local_frame(spark, [], EMPTY_SEEN_SCHEMA)
-                # global scope G anti-join (no-op on a fresh store, real on reruns)
-                cand = (
-                    frontier.withColumn("canonical_url", canonicalize_url(F.col("url")))
-                    .withColumn("scope", F.lit("G"))
-                    .withColumn("seen_key", seen_key(F.col("scope"), F.col("canonical_url")))
-                )
-                frontier = useen.filter_unseen(cand, seen).drop(
-                    "seen_key", "scope", "canonical_url"
-                )
+                # no url-seen filter: round 0 starts a fresh store (a rerun
+                # that finds round 0 committed resumes at round 1), and
+                # select_companies already dedups the seed urls
             else:
                 frontier = store.read(round_id - 1, "frontier_next")
                 seen = store.read(round_id - 1, "url_seen")
-                if cfg.use_bloom:
-                    # reuse the blooms committed with the previous snapshot —
-                    # built distributed (applyInPandas per bucket); rebuild only
-                    # if restoring from an older store without a blooms table
-                    if store.has_table(round_id - 1, "blooms"):
-                        useen.set_blooms(store.read(round_id - 1, "blooms"))
-                    else:
-                        useen.build_blooms(seen)
+                # reuse the blooms committed with the previous snapshot —
+                # built distributed (applyInPandas per bucket); rebuild only
+                # if restoring from an older store without a blooms table
+                if store.has_table(round_id - 1, "blooms"):
+                    useen.set_blooms(store.read(round_id - 1, "blooms"))
+                else:
+                    useen.build_blooms(seen)
                 cand = (
                     frontier.withColumn("canonical_url", canonicalize_url(F.col("url")))
                     .withColumn("scope", F.col("company_id").cast("string"))
@@ -238,9 +234,10 @@ def run_crawl(
             )
             # EAGER: the broadcast-join plan has no upstream shuffle stages, so
             # a lazy checkpoint would defer the scan+extract to the first
-            # consumer — and CONCURRENT consumers (the parallel seed
-            # checkpoints) would then race to compute the same unmaterialized
-            # RDD, duplicating the extract. Materialize once, here.
+            # consumer — and CONCURRENT consumers (the commit's parallel
+            # table writes) would then race to compute the same
+            # unmaterialized RDD, duplicating the extract. Materialize once,
+            # here.
             extract = (
                 X.extract_tokens_native if cfg.native_extract else X.extract_tokens_meta
             )
@@ -265,7 +262,7 @@ def run_crawl(
             ok_tokens = tokens.filter(F.col("fetch_ok") & F.col("has_html"))
 
             if round_id == 0:
-                result = _seed_round(spark, cfg, tokens, ok_tokens)
+                result = _seed_round(tokens)
                 if cfg.use_sitemaps:
                     result["frontier_next"] = result["frontier_next"].unionByName(
                         _sitemap_contact_frontier(
@@ -305,7 +302,7 @@ def run_crawl(
                 "frontier_next": result["frontier_next"],
                 "url_seen": url_seen,
             }
-            if cfg.use_bloom and round_id + 1 < cfg.max_depth:
+            if round_id + 1 < cfg.max_depth:
                 # persist next round's blooms with the snapshot (distributed
                 # applyInPandas build — seen keys never reach the driver)
                 tables["blooms"] = useen.bloom_table(url_seen)
@@ -355,22 +352,6 @@ def _tune_input_splits(spark, pages: DataFrame):
     return restore
 
 
-def _checkpoint_parallel(dfs) -> list:
-    """``localCheckpoint(eager=False)`` under AQE still EXECUTES every
-    upstream query stage at CALL time (toRdd materializes the stages), so
-    checkpointing several independent subtrees in sequence serializes
-    their execution. Issue the checkpoint calls from concurrent driver
-    threads instead — Spark schedules the jobs in parallel and the
-    per-stage materialization latency overlaps. Inputs must not depend on
-    each other (shared ancestors should already be checkpointed)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(dfs) == 1:
-        return [dfs[0].localCheckpoint(eager=False)]
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        return list(ex.map(lambda d: d.localCheckpoint(eager=False), dfs))
-
-
 def _sitemap_contact_frontier(
     pages: DataFrame, ok_tokens: DataFrame, frontier_next: DataFrame
 ) -> DataFrame:
@@ -407,14 +388,9 @@ def _sitemap_contact_frontier(
     entries = SM.sitemap_urls(
         pages, roots.select(F.col("root_url").alias("url")).distinct()
     )
-    mailto_counts = (
-        X.mailto_emails(ok_tokens)
-        .groupBy("company_id")
-        .agg(F.count("*").alias("__n_mailto"))
-    )
     expandable = (
-        bases.join(mailto_counts, "company_id", "left")
-        .filter(F.coalesce(F.col("__n_mailto"), F.lit(0)) <= 1)
+        X.with_mailto(ok_tokens)
+        .filter(F.size("mailto") <= 1)
         .select("company_id")
     )
     cand = (
@@ -445,107 +421,73 @@ def _sitemap_contact_frontier(
     )
 
 
-def _seed_round(spark, cfg, tokens, ok_tokens) -> dict:
-    """Per-company branch logic of round 0 (``Crawler.fs:326-379``)."""
-    # each of these subtrees feeds bag + flags + frontier_next — checkpoint
-    # so the three commit writes don't recompute the window chains. The
-    # checkpoint CALLS execute under AQE, so independent subtrees are
-    # checkpointed from concurrent threads (tokens, their shared ancestor,
-    # is already checkpointed by the caller).
-    # contact-like hrefs (F8 ∘ F4): the expensive admission chain is
-    # independent of data_link, so it checkpoints in the SAME parallel
-    # group; the cheap per-company anti-join ("only companies with no
-    # contact ANCHOR expand via hrefs", Crawler.fs:357-358) stays lazy on
-    # top of the two checkpoints.
-    href_cand = X.href_candidates(ok_tokens)
-    admitted = admission_mod.admit_frontier(
-        href_cand, scope_cols=("company_id", "page_url")
-    )
-    mailto, emails0, data_link, contact_all = _checkpoint_parallel(
-        [
-            X.mailto_emails(ok_tokens),
-            X.regex_emails(ok_tokens),
-            X.contact_anchor_links(ok_tokens),  # priority 1
-            admitted.filter(F.col("is_contact")),
-        ]
-    )
+def _seed_round(tokens: DataFrame) -> dict:
+    """Per-company branch logic of round 0 (``Crawler.fs:326-379``).
 
-    # error / empty-html companies → (true, true, false); the
-    # IsNullOrWhiteSpace gate lives in has_html (extract_tokens_meta)
-    bad = tokens.filter(~F.col("fetch_ok") | ~F.col("has_html")).select("company_id")
-
-    dl_companies = data_link.select("company_id").distinct()
-    contact_hrefs = contact_all.join(dl_companies, "company_id", "left_anti")
-
-    # per-company stats in ONE shuffle: tag-union the five company streams
-    # and pivot by tag in a single aggregation (was: five separate
-    # aggregate+join chains — measured as pure AQE stage overhead)
-    tagged = (
-        mailto.select("company_id", F.lit("m").alias("__t"))
-        .unionByName(emails0.select("company_id", F.lit("e").alias("__t")))
-        .unionByName(bad.select("company_id", F.lit("b").alias("__t")))
-        .unionByName(dl_companies.select("company_id", F.lit("d").alias("__t")))
-        .unionByName(contact_hrefs.select("company_id", F.lit("c").alias("__t")))
+    Round 0 fetches one page per company: its ``tokens`` hold one row per
+    company (seeds are keyed on ``company_id``), so every per-company
+    count is the size of one row's list, and ``flags``, ``bag`` and
+    ``frontier_next`` are projections and explodes of the checkpointed
+    token rows."""
+    lists = admission_mod.admit_frontier(
+        X.with_contact_anchors(X.with_page_emails(X.with_mailto(tokens)))
     )
-    counts = tagged.groupBy("company_id").agg(
-        F.sum(F.when(F.col("__t") == "m", 1).otherwise(0)).alias("n_mailto"),
-        F.sum(F.when(F.col("__t") == "e", 1).otherwise(0)).alias("n_emails"),
-        F.max(F.col("__t") == "b").alias("__bad"),
-        F.max(F.col("__t") == "d").alias("__dl"),
-        F.max(F.col("__t") == "c").alias("__ch"),
-    )
-    stats = (
-        tokens.select("company_id")
-        .distinct()
-        .join(counts, "company_id", "left")
-        .fillna(0, ["n_mailto", "n_emails"])
-        .fillna(False, ["__bad", "__dl", "__ch"])
-        .localCheckpoint(eager=False)
-    )
-
-    flags = stats.select(
+    rows = lists.select(
         "company_id",
-        F.col("__bad").alias("bad_url"),
+        "base_url",
+        # error / empty-html pages → (true, true, false); their lists are
+        # empty (the IsNullOrWhiteSpace gate lives in has_html)
+        (~F.col("fetch_ok") | ~F.col("has_html")).alias("bad"),
+        "mailto",
+        "page_emails",
+        "contact_anchors",
+        F.filter("admitted", lambda e: is_contacts_page(e["v"])).alias(
+            "contact_hrefs"
+        ),
+    )
+    n_mailto = F.size("mailto")
+    has_anchor = F.size("contact_anchors") > 0
+
+    flags = rows.select(
+        "company_id",
+        F.col("bad").alias("bad_url"),
         F.lit(True).alias("email_processed"),
-        F.when(F.col("__bad"), F.lit(False))
-        .when(F.col("n_mailto") > 1, F.lit(True))
+        F.when(F.col("bad"), F.lit(False))
+        .when(n_mailto > 1, F.lit(True))
         .otherwise(
-            F.col("__dl") | F.col("__ch") | (F.col("n_mailto") > 0) | (F.col("n_emails") > 0)
+            has_anchor
+            | (F.size("contact_hrefs") > 0)
+            | (n_mailto > 0)
+            | (F.size("page_emails") > 0)
         )
         .alias("email_finded"),
     )
 
-    # frontier expansion blocked for mailto>1 companies (Crawler.fs:343-344)
-    expandable = stats.filter(F.col("n_mailto") <= 1).select("company_id")
-
-    base_urls = ok_tokens.select("company_id", "base_url").distinct()
-    fr_dl = (
-        data_link.join(expandable, "company_id")
-        .join(base_urls, "company_id")
-        .select(
-            "company_id",
-            "url",
-            F.lit(FR.PRIO_CONTACT_ANCHOR).alias("priority"),
-            F.col("seq").cast("int").alias("seq"),
-            "base_url",
-        )
+    bag = rows.select(
+        "company_id",
+        F.explode(F.concat("mailto.v", "page_emails.v")).alias("email"),
     )
-    fr_ch = (
-        contact_hrefs.join(expandable, "company_id")
-        .join(base_urls, "company_id")
-        .select(
-            "company_id",
-            "url",
-            F.lit(FR.PRIO_CONTACT_HREF).alias("priority"),
-            F.col("seq").cast("int").alias("seq"),
-            "base_url",
-        )
-    )
-    frontier_next = fr_dl.unionByName(fr_ch)
 
-    bag = (
-        mailto.select("company_id", "email")
-        .unionByName(emails0.select("company_id", "email"))
+    def with_priority(name: str, priority: int) -> Column:
+        return F.transform(
+            name,
+            lambda e: F.struct(
+                e["v"].alias("url"),
+                F.lit(priority).alias("priority"),
+                e["seq"].alias("seq"),
+            ),
+        )
+
+    # frontier expansion blocked for mailto>1 companies (Crawler.fs:343-344);
+    # contact hrefs only where the page has no contact anchor (:357-358)
+    links = (
+        F.when(n_mailto > 1, F.array().cast(
+            "array<struct<url:string,priority:int,seq:int>>"))
+        .when(has_anchor, with_priority("contact_anchors", FR.PRIO_CONTACT_ANCHOR))
+        .otherwise(with_priority("contact_hrefs", FR.PRIO_CONTACT_HREF))
+    )
+    frontier_next = rows.select("company_id", "base_url", F.inline(links)).select(
+        "company_id", "url", "priority", "seq", "base_url"
     )
     return {"bag": bag, "flags": flags, "frontier_next": frontier_next}
 

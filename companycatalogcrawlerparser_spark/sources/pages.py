@@ -240,6 +240,12 @@ def fetch_join(
     (cached) ``rmap`` when fetching repeatedly against the same corpus —
     the closure depends only on ``pages``.
 
+    Pages-table contract: at most one row per ``url`` ("the corpus is the
+    web": one response per url). Under it the output has exactly one row
+    per frontier row; the crawl's per-page token rows, and round 0's one
+    row per company, rest on this. A repeated url would repeat the
+    frontier row; nothing here dedups the corpus (docs/SEMANTICS.md §7).
+
     Join strategy (the engine's scale-critical decision): with
     ``broadcast_frontier`` (default), the per-round frontier — orders of
     magnitude smaller than the corpus — is BROADCAST and the corpus

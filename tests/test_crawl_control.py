@@ -20,10 +20,8 @@ from companycatalogcrawlerparser_spark.storage.snapshots import SnapshotStore
 
 N_COMPANIES = 20
 # Spark jobs of one two-round crawl of the fixture corpus at local[8],
-# finalize included: 69-70 measured. Per-round count actions for the
-# manifest counters, the robots parse and schema-inference reads made it
-# 121-126.
-MAX_CRAWL_JOBS = 75
+# finalize included: 49 measured.
+MAX_CRAWL_JOBS = 50
 
 
 def _cfg(**kw):

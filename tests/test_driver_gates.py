@@ -2,7 +2,7 @@
 
 connected_components / pagerank / assign_dense_ids each run a
 driver-side kernel below a size gate (CC_DRIVER_MAX_EDGES /
-PR_DRIVER_MAX_EDGES / IDS_DRIVER_MAX_ROWS) and the unchanged
+PR_DRIVER_MAX_EDGES / IDS_DRIVER_MAX_BYTES) and the unchanged
 distributed algorithm above it. The driver's larger scale factors can
 cross a gate that the local fixtures never do, so the equality of the
 two paths IS the correctness claim — these tests pin it by
@@ -108,7 +108,7 @@ class TestDenseIdsGate:
             r["email"]: r["email_id"]
             for r in M.assign_dense_ids(df, "email", "email_id", offset=7).collect()
         }
-        monkeypatch.setattr(M, "IDS_DRIVER_MAX_ROWS", -1)
+        monkeypatch.setattr(M, "IDS_DRIVER_MAX_BYTES", -1)
         dist = {
             r["email"]: r["email_id"]
             for r in M.assign_dense_ids(df, "email", "email_id", offset=7).collect()
@@ -116,3 +116,19 @@ class TestDenseIdsGate:
         assert dist == driver
         # dense, offset-anchored, no gaps
         assert sorted(driver.values()) == list(range(8, 8 + len(vals)))
+
+    def test_wide_rows_take_distributed_path(self, spark, monkeypatch):
+        """The gate counts bytes, not rows: three 2 MiB keys are over it
+        and take the distributed path, with the driver path's ids."""
+        vals = [c * (2 << 20) for c in "bca"]
+        df = spark.createDataFrame([(v,) for v in vals], ["email"])
+
+        def ids(out):
+            return {r["email"][0]: r["email_id"] for r in out.collect()}
+
+        wide = M.assign_dense_ids(df, "email", "email_id", offset=3)
+        assert "LocalTableScan" not in wide._jdf.queryExecution().executedPlan().toString()
+        monkeypatch.setattr(M, "IDS_DRIVER_MAX_BYTES", 1 << 30)
+        driver = M.assign_dense_ids(df, "email", "email_id", offset=3)
+        assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
+        assert ids(wide) == ids(driver) == {"a": 4, "b": 5, "c": 6}

@@ -221,14 +221,14 @@ class TestHrefRegexCaseSensitivity:
 
     def test_engine_extract_matches_refsem(self, spark):
         from companycatalogcrawlerparser_spark.operators.extract import (
-            extract_tokens,
+            extract_tokens_native,
         )
 
         df = spark.createDataFrame(
             [(1, "http://f.com", bytearray(self.HTML.encode()))],
             "company_id long, page_url string, html binary",
         )
-        row = extract_tokens(df).collect()[0]
+        row = extract_tokens_native(df).collect()[0]
         assert list(row["hrefs"]) == RE_._href_match_values(self.HTML)
 
 
@@ -251,17 +251,19 @@ class TestAdmissionChainParity:
     }
 
     def test_parity(self, spark):
-        rows = []
-        for page_id, (base, hrefs) in enumerate(self.PAGES.items()):
-            # reference extracts raw hrefs from html; feed the raw list here —
-            # the regex-extraction side is covered by refsem tests
-            for seq, h in enumerate(hrefs):
-                rows.append((page_id, base, h, seq))
-        df = spark.createDataFrame(rows, ["company_id", "base_url", "href", "seq"])
-        out = NA.admit_frontier(df, scope_cols=("company_id",))
+        # reference extracts raw hrefs from html; feed the raw list here —
+        # the regex-extraction side is covered by refsem tests
+        rows = [
+            (page_id, base, hrefs)
+            for page_id, (base, hrefs) in enumerate(self.PAGES.items())
+        ]
+        df = spark.createDataFrame(
+            rows, "company_id long, base_url string, hrefs array<string>"
+        )
+        out = NA.admit_frontier(df).select("company_id", F.inline("admitted"))
         got = {}
         for r in out.collect():
-            got.setdefault(r["company_id"], []).append((r["seq"], r["url"]))
+            got.setdefault(r["company_id"], []).append((r["seq"], r["v"]))
         for page_id, (base, hrefs) in enumerate(self.PAGES.items()):
             html = "".join(f'<a href="{h}">x</a>' for h in hrefs)
             expected = RE_.search_href_results(html, base)

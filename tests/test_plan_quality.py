@@ -173,8 +173,8 @@ class TestJoinStrategies:
 class TestJvmSideOnly:
     def test_admission_chain_has_no_python(self, spark):
         df = spark.createDataFrame(
-            [(1, "http://firm.com", "/contact.html", 0)],
-            ["company_id", "base_url", "href", "seq"],
+            [(1, "http://firm.com", ["/contact.html"])],
+            "company_id long, base_url string, hrefs array<string>",
         )
         plan = _plan(NA.admit_frontier(df))
         assert "BatchEvalPython" not in plan
