@@ -953,8 +953,8 @@ def q_corpus_curation(spark, sf_dir):
         F.col("epoch").cast("long").alias("val"),
     )
     # kind='quant' (r7-late): EXACT distributed quantiles
-    # (curation.exact_quantiles — the frozen-cutoff derivation path,
-    # e.g. lm_cutoffs) over the integer token counts at four fracs;
+    # (curation.exact_quantiles — the frozen-cutoff derivation path)
+    # over the integer token counts at four fracs;
     # doc_id = the 1-based rank k, val = the value AT that rank —
     # integer-exact end to end, vs the naive global row_number twin the
     # prefix-sum construction exists to avoid

@@ -3,8 +3,8 @@
 Canonical form (docs/SEMANTICS.md §1): lowercase scheme and host, strip the
 fragment, strip the default port (80/http, 443/443), sort query parameters
 lexicographically, normalize an empty path to ``/``, keep userinfo and
-non-default ports. ``url_hash = xxhash64(canonical_url)`` is the 64-bit key
-for the url_seen table, bloom filters, and host-salted partitioning.
+non-default ports. The url_seen table keys on it
+(``operators.urlseen.seen_key``).
 
 Also: the reference's own URL pieces as native exprs — ``getBaseUrl`` (X2,
 ``Utils.fs:111-114``), ``getHost`` host-token w/ quirk Q2 (X3,
@@ -75,11 +75,6 @@ def canonicalize_url(url: Column) -> Column:
         F.when(qry != "", F.concat(F.lit("?"), sorted_query)).otherwise(F.lit("")),
     )
     return F.when(sch != "", rebuilt).otherwise(F.trim(url))
-
-
-def url_hash(canonical: Column) -> Column:
-    """64-bit key for url_seen / bloom / partitioning."""
-    return F.xxhash64(canonical)
 
 
 def canonical_host(url: Column) -> Column:

@@ -1770,40 +1770,45 @@ def q_events_audit(spark, sf_dir) -> DataFrame:
             now = os.path.getmtime(dst)
         os.utime(dst, (now + i, now + i))
 
+    # the stream runs in a child session (shared SparkContext, its own SQL
+    # conf), so nothing here changes the caller's session conf while
+    # other rows build frames from thread pools. Stateful-operator
+    # parallelism = shuffle partitions AT STREAM START (frozen into the
+    # checkpoint): size it to the key universe (AUDIT_HOSTS_MOD hosts, a
+    # handful of keys per state partition), not the session's core-count
+    # default — 3 micro-batches × 32 state-store tasks of mostly-empty
+    # state was pure per-task overhead (state init + commit per partition
+    # per batch; measured 3.1 s @20 partitions vs 2.1 s @4 on the warm
+    # path). Per-host totals are partition-count-invariant; last_ts_ms
+    # depends on the session time zone, so the child takes the caller's.
+    child = spark.newSession()
+    child.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(min(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                max(2, AUDIT_HOSTS_MOD // 5))),
+    )
+    child.conf.set(
+        "spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone")
+    )
     stream = (
-        spark.readStream.schema("host string, ts timestamp")
+        child.readStream.schema("host string, ts timestamp")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     audited = host_budget_state(stream, delay_ms=AUDIT_DELAY_MS)
     name = "ccp_audit_" + uuid.uuid4().hex[:12]
-    # stateful-operator parallelism = shuffle partitions AT STREAM START
-    # (frozen into the checkpoint): size it to the key universe
-    # (AUDIT_HOSTS_MOD hosts, a handful of keys per state partition),
-    # not the session's core-count default — 3 micro-batches × 32
-    # state-store tasks of mostly-empty state was pure per-task overhead
-    # (state init + commit per partition per batch; measured 3.1 s @20
-    # partitions vs 2.1 s @4 on the warm path). Restored right after the
-    # one-shot run; per-host totals are partition-count-invariant.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(int(prev_sp), max(2, AUDIT_HOSTS_MOD // 5))),
+    q = (
+        audited.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(d, "chk"))
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            audited.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(d, "chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    q.awaitTermination()
+    # the memory sink's view lives in the child session
     return (
-        spark.table(name)
+        child.table(name)
         .groupBy("host")
         .agg(
             F.max("events").alias("events"),

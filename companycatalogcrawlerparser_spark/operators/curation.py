@@ -37,7 +37,6 @@ from ..session import local_frame
 
 __all__ = [
     "sample_bucket",
-    "deterministic_sample",
     "stratified_sample",
     "pack_shards",
     "shuffle_order_key",
@@ -63,18 +62,6 @@ def sample_bucket(key: Column, salt: str = "", denom: int = 10000) -> Column:
         10,
     ).cast("long")
     return F.pmod(h, F.lit(denom))
-
-
-def deterministic_sample(
-    df: DataFrame,
-    keep: int,
-    key_col: str = "doc_id",
-    salt: str = "",
-    denom: int = 10000,
-) -> DataFrame:
-    """Keep the deterministic ``keep/denom`` fraction of rows (bucket <
-    keep). Integer rate — no float thresholds to drift between engines."""
-    return df.filter(sample_bucket(F.col(key_col), salt, denom) < keep)
 
 
 def stratified_sample(
@@ -289,8 +276,8 @@ def exact_quantiles(
     """EXACT distributed quantiles — (frac, k, value) where ``value``
     is the element at 1-based global ascending rank
     k = clamp(⌈frac·n⌉, 1, n). The curation use: deriving the frozen
-    per-language CCNet perplexity cutoffs (:func:`..lm.lm_cutoffs`)
-    or token-length percentile gates from a reference corpus — jobs
+    per-language CCNet perplexity cutoffs (over the per-token −logp of a
+    :func:`..lm.lm_logprob` reference run) or token-length percentile gates from a reference corpus — jobs
     where ``approx_percentile`` won't do, because its Greenwald-Khanna
     merge is partition-order-sensitive and the whole point of a frozen
     cutoff is that every cluster derives the SAME number.

@@ -56,7 +56,6 @@ __all__ = [
     "train_bigram_lm",
     "lm_logprob",
     "ppl_bucket",
-    "lm_cutoffs",
 ]
 
 BOS = "<s>"
@@ -227,34 +226,6 @@ def lm_logprob(
             F.col("__n").isNotNull(),
             F.exp(-F.col("__s") / F.col("__n")),
         ).alias("ppl"),
-    )
-
-
-def lm_cutoffs(
-    scored: DataFrame,
-    head_frac: float = 1 / 3,
-    tail_frac: float = 2 / 3,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Derive the frozen head/tail cutoffs CCNet-style: the exact
-    ``head_frac``/``tail_frac`` quantiles of per-token −logp over a
-    REFERENCE scoring run (a :func:`lm_logprob` frame; empty docs are
-    excluded — they carry no distribution information). Returns
-    (frac, k, value); feed the two values to :func:`ppl_bucket` /
-    the pipeline's lm_head_max/lm_tail_min. Exactness matters because
-    the cutoffs are derived once and FROZEN across every cluster and
-    batch (see :func:`..curation.exact_quantiles`)."""
-    from .curation import exact_quantiles
-
-    nl = (
-        scored.filter(F.col("n_lm_terms") > 0)
-        .select(
-            (-F.col("lm_logp") / F.col("n_lm_terms")).alias("neg_lp")
-        )
-    )
-    return exact_quantiles(
-        nl, "neg_lp", [float(head_frac), float(tail_frac)],
-        num_partitions=num_partitions,
     )
 
 

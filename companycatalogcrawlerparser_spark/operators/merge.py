@@ -130,57 +130,6 @@ def assign_dense_ids(
     return out
 
 
-def upsert_emails(
-    existing_emails: DataFrame,
-    existing_junction: DataFrame,
-    new_pairs: DataFrame,
-) -> tuple:
-    """K5 — global email dedup + junction maintenance
-    (``DbAccess.fs:176-218``): two MERGEs —
-    ``MERGE INTO emails ON email WHEN NOT MATCHED INSERT`` then
-    ``MERGE INTO company_email ON (company_id, email_id) WHEN NOT MATCHED
-    INSERT``. email_id for fresh emails continues the dense id space
-    deterministically (ordered by email text), assigned distributed via
-    :func:`assign_dense_ids`."""
-    max_id = existing_emails.agg(F.coalesce(F.max("email_id"), F.lit(0))).first()[0]
-    fresh_base = (
-        new_pairs.select("email")
-        .distinct()
-        .join(existing_emails.select("email"), "email", "left_anti")
-    )
-    fresh = assign_dense_ids(
-        fresh_base, "email", "email_id", offset=int(max_id)
-    ).withColumn("bad_ignore_email", F.lit(False))
-    emails = existing_emails.unionByName(fresh)
-    links = (
-        new_pairs.join(emails.select("email", "email_id"), "email")
-        .select("company_id", "email_id")
-        .distinct()
-    )
-    junction = (
-        existing_junction.unionByName(links)
-        .dropDuplicates(["company_id", "email_id"])
-    )
-    return emails, junction
-
-
-def update_flags(
-    companies: DataFrame, flag_updates: DataFrame, key: str = "company_id"
-) -> DataFrame:
-    """K6/K8 — ``MERGE … WHEN MATCHED THEN UPDATE SET <flags>``
-    (``DbAccess.fs:232-242,282-311``): new flag values win per key."""
-    upd = flag_updates.select(
-        F.col(key),
-        *[F.col(c).alias(f"__u_{c}") for c in flag_updates.columns if c != key],
-    )
-    out = companies.join(upd, key, "left")
-    for c in flag_updates.columns:
-        if c == key:
-            continue
-        out = out.withColumn(c, F.coalesce(F.col(f"__u_{c}"), F.col(c))).drop(f"__u_{c}")
-    return out
-
-
 def high_water_mark(
     state: DataFrame, name_col: str, name: str, id_col: str = "last_id"
 ) -> int:

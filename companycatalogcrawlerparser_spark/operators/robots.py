@@ -138,30 +138,3 @@ def crawl_delays(rules: DataFrame) -> DataFrame:
         .groupBy("host")
         .agg(F.max("crawl_delay_ms").alias("delay_ms"))
     )
-
-
-def robots_sitemaps(pages: DataFrame) -> DataFrame:
-    """(host, sitemap_url) from ``Sitemap:`` directives in the corpus's
-    robots.txt rows — the standard sitemap DISCOVERY mechanism
-    (sitemaps.org; group-independent per RFC 9309), feeding
-    ``sitemap_urls``/``seeds_from_sitemaps`` roots that guessing
-    ``<base>/sitemap.xml`` would miss. Native Column work end-to-end:
-    split lines → comment-strip via the extract regex ([^#\\s]+ stops at
-    '#' or whitespace, matching the oracle's strip-then-parse) →
-    case-insensitive key match; only absolute http(s) values survive.
-    Twin: ``refsem.robots.sitemap_urls``."""
-    ex = robots_pages(pages).select(
-        "host",
-        F.explode(F.split(F.col("text"), r"\r?\n")).alias("__line"),
-    )
-    url = F.regexp_extract(
-        F.col("__line"), r"(?i)^\s*sitemap\s*:\s*([^#\s]+)", 1
-    )
-    return (
-        ex.select("host", url.alias("sitemap_url"))
-        .filter(
-            F.col("sitemap_url").startswith("http://")
-            | F.col("sitemap_url").startswith("https://")
-        )
-        .distinct()
-    )

@@ -10,6 +10,12 @@ schedule → fetch → email regex only (the reference's
 ``asyncEmailExtractor`` never expands further).
 Finalize: F10 post-filter → K5 global email dedup + junction.
 
+One configuration: robots.txt gating and Crawl-delay politeness always
+apply (a no-op on a corpus without robots.txt rows), and like the
+reference there is no sitemap discovery and no store compaction. Round 1
+commits an empty next frontier, so a crawl holds at most two rounds of
+rows.
+
 Every round commits one atomic snapshot (trace, bag, url_seen delta, next
 frontier, flags, counters) — a killed job resumes at the last committed
 round without refetching (C7).
@@ -40,7 +46,6 @@ from ..functions.emails import finalize_emails
 from ..functions.predicates import (
     is_contacts_page,
     is_not_image_script_css_ext,
-    not_social_network,
     seed_filter,
 )
 from ..operators import extract as X
@@ -65,30 +70,12 @@ class CrawlConfig:
     num_partitions: int = 32
     n_buckets: int = 64         # url_seen filter buckets (power of two)
     url_seen_filter: str = "bloom"  # or "cuckoo" (deletable fingerprints)
-    respect_robots: bool = True  # robots.txt gating + Crawl-delay
-    #   politeness (north_rule); no-op when the corpus carries no
-    #   robots.txt rows, so reference-parity corpora are unaffected
-    robots_agent: str = "ccc-spark"
+    robots_agent: str = "ccc-spark"  # the user agent robots.txt groups
+    #   are matched against (gating is always on; a no-op on corpora
+    #   without robots.txt rows)
     native_extract: bool = True  # JVM regex extraction (no Arrow/Python
     #   transfer of html); False = Arrow UDTF sharing the refsem regexes.
     #   Both are oracle-verified; native is ~2x crawl throughput
-    broadcast_frontier: bool = True  # per-round frontier ≤ take_limit rows
-    #   → broadcast it and STREAM the corpus (html never shuffles/sorts);
-    #   disable only for frontier batches beyond broadcast size, where the
-    #   pages table should be bucketed by url_hash instead
-    compact_every: int = 0  # ENGINE-NEW (opt-in, 0 = off): every K
-    #   committed rounds, rewrite the append-style tables (bag/trace/
-    #   flags) into one compacted base snapshot and prune the covered
-    #   per-round data dirs (manifests kept). At thousand-round scale
-    #   finalize() otherwise unions thousands of tiny scan legs — see
-    #   SnapshotStore.compact. Reader-invisible: finalize reads through
-    #   read_union; pytest pins crawl-output hash equality on/off.
-    use_sitemaps: bool = False  # ENGINE-NEW (opt-in, default off so the
-    #   reference-parity traces are untouched): after the seed round,
-    #   enrich the contact round's frontier with same-host contact-like
-    #   URLs from each company's /sitemap.xml in the corpus — sites whose
-    #   homepage hides the contact link still get their contact page
-    #   fetched. See _sitemap_contact_frontier.
 
 
 def _round_counters() -> dict:
@@ -153,9 +140,7 @@ def run_crawl(
         robots_rules_df = None
         robots_politeness = None
         if start_round < cfg.max_depth:
-            if cfg.respect_robots and not pages.filter(
-                RB.is_robots_url(F.col("url"))
-            ).isEmpty():
+            if not pages.filter(RB.is_robots_url(F.col("url"))).isEmpty():
                 rr = RB.robots_rules(pages, agent=cfg.robots_agent).cache()
                 cached.append(rr)
                 if not rr.isEmpty():
@@ -229,9 +214,7 @@ def run_crawl(
             # checkpointed (html never hits the block manager — materializing
             # 30 KB × frontier of html was the dominant core-count-independent
             # cost at bench scale)
-            fetched = fetch_join(
-                sched, pages, rmap=rmap, broadcast_frontier=cfg.broadcast_frontier
-            )
+            fetched = fetch_join(sched, pages, rmap=rmap)
             # EAGER: the broadcast-join plan has no upstream shuffle stages, so
             # a lazy checkpoint would defer the scan+extract to the first
             # consumer — and CONCURRENT consumers (the commit's parallel
@@ -258,18 +241,11 @@ def run_crawl(
                 "fetch_error",
             )
 
-            # IsNullOrWhiteSpace gate on the fetched body (Crawler.fs:326)
-            ok_tokens = tokens.filter(F.col("fetch_ok") & F.col("has_html"))
-
             if round_id == 0:
                 result = _seed_round(tokens)
-                if cfg.use_sitemaps:
-                    result["frontier_next"] = result["frontier_next"].unionByName(
-                        _sitemap_contact_frontier(
-                            pages, ok_tokens, result["frontier_next"]
-                        )
-                    )
             else:
+                # IsNullOrWhiteSpace gate on the fetched body (Crawler.fs:326)
+                ok_tokens = tokens.filter(F.col("fetch_ok") & F.col("has_html"))
                 bag = X.regex_emails(ok_tokens).select("company_id", "email")
                 result = {
                     "bag": bag,
@@ -307,11 +283,8 @@ def run_crawl(
                 # applyInPandas build — seen keys never reach the driver)
                 tables["blooms"] = useen.bloom_table(url_seen)
             store.commit(round_id, tables, observed=_round_counters())
-            if cfg.compact_every and (round_id + 1) % cfg.compact_every == 0:
-                store.compact(["bag", "trace", "flags"], upto=round_id)
-                store.prune_compacted(round_id)
 
-        return finalize(spark, store, cfg)
+        return finalize(spark, store)
     finally:
         for df in cached:
             df.unpersist()
@@ -350,75 +323,6 @@ def _tune_input_splits(spark, pages: DataFrame):
             spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
     return restore
-
-
-def _sitemap_contact_frontier(
-    pages: DataFrame, ok_tokens: DataFrame, frontier_next: DataFrame
-) -> DataFrame:
-    """ENGINE-NEW (CrawlConfig.use_sitemaps): same-host contact-like URLs
-    from each company's ``<base_url>/sitemap.xml`` in the corpus, shaped
-    as extra contact-round frontier rows. Gates mirror the crawl's own
-    admission surface: F2/F3/F4 + F7 same-host containment + the
-    reference's mailto>1 expansion block (Crawler.fs:343-344). Intra-round
-    duplicates drop via an anti-join on (company_id, url); cross-round
-    refetches are prevented by the normal url_seen scopes. ``seq`` offsets
-    by 1_000_000 so sitemap finds order AFTER document-extracted links —
-    supplementary, never reordering the reference's trace."""
-    from ..functions.canon import canonical_host, host_token
-    from ..operators import sitemap as SM
-
-    bases = ok_tokens.select("company_id", "base_url").distinct()
-    # roots = the conventional <base>/sitemap.xml guess ∪ the sitemaps
-    # the company's own robots.txt DECLARES (Sitemap: directive — the
-    # standard discovery mechanism; finds nonstandard paths the guess
-    # misses). Declared roots join per company by canonical host.
-    guessed = bases.withColumn(
-        "root_url", F.concat(F.col("base_url"), F.lit("/sitemap.xml"))
-    ).select("company_id", "base_url", "root_url")
-    declared = bases.withColumn(
-        "__host", canonical_host(F.col("base_url"))
-    ).join(
-        RB.robots_sitemaps(pages).select(
-            F.col("host").alias("__host"),
-            F.col("sitemap_url").alias("root_url"),
-        ),
-        "__host",
-    ).select("company_id", "base_url", "root_url")
-    roots = guessed.unionByName(declared).distinct()
-    entries = SM.sitemap_urls(
-        pages, roots.select(F.col("root_url").alias("url")).distinct()
-    )
-    expandable = (
-        X.with_mailto(ok_tokens)
-        .filter(F.size("mailto") <= 1)
-        .select("company_id")
-    )
-    cand = (
-        entries.join(roots, "root_url")
-        .join(expandable, "company_id")
-        .filter(
-            is_contacts_page(F.col("url"))
-            & is_not_image_script_css_ext(F.col("url"))
-            & not_social_network(F.col("url"))
-            & F.col("url").contains(host_token(F.col("base_url")))
-        )
-        .select(
-            "company_id",
-            "url",
-            F.lit(FR.PRIO_CONTACT_HREF).alias("priority"),
-            # seq stays LONG: sitemap_urls emits ord as long because one
-            # index root legitimately expands to ~2.5B entries — an int
-            # cast would wrap negative there and reorder sitemap finds
-            # BEFORE document links. The unionByName at the call site
-            # widens the document frontier's int seq to long (set-op type
-            # coercion); downstream only ever orders by seq.
-            (F.lit(1_000_000) + F.col("ord")).alias("seq"),
-            "base_url",
-        )
-    )
-    return cand.join(
-        frontier_next.select("company_id", "url"), ["company_id", "url"], "left_anti"
-    )
 
 
 def _seed_round(tokens: DataFrame) -> dict:
@@ -492,12 +396,9 @@ def _seed_round(tokens: DataFrame) -> dict:
     return {"bag": bag, "flags": flags, "frontier_next": frontier_next}
 
 
-def finalize(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig) -> dict:
+def finalize(spark: SparkSession, store: SnapshotStore) -> dict:
     """F10 post-filter + K5 global dedup over all committed rounds."""
     rounds = store.committed_rounds()
-    # compaction-aware: newest compacted base + tail rounds (row-equal to
-    # the raw per-round union, but at scale this is the difference between
-    # 3 scan legs and thousands — see SnapshotStore.compact)
     bag = store.read_union("bag")
     trace = store.read_union("trace")
     flags = store.read_union("flags")

@@ -261,7 +261,8 @@ def curate_training_corpus(
         )
         if by_lang is not None:
             # CCNet proper freezes cutoffs PER LANGUAGE (derive each
-            # with lm.lm_cutoffs over that language's reference run);
+            # with curation.exact_quantiles over the per-token -logp of
+            # that language's reference run);
             # the map rides as a broadcast (lang, head, tail) frame —
             # languages absent from the map fall back to the scalar
             # cutoffs, or are kept untouched when none are set

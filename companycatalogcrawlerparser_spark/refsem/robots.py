@@ -143,32 +143,3 @@ class RobotsOracle:
         if entry is None or entry[1] is None:
             return None
         return int(entry[1] * 1000)
-
-
-def sitemap_urls(text: str) -> List[str]:
-    """``Sitemap:`` directives, first-occurrence order, deduplicated —
-    the standard sitemap DISCOVERY mechanism (sitemaps.org "Sitemap
-    location"; RFC 9309 treats it as an other-record, group-INDEPENDENT —
-    it applies regardless of surrounding user-agent groups). The value is
-    the FIRST whitespace-delimited token after the first colon (URLs
-    contain ':'; a URL never contains raw whitespace, so trailing junk on
-    a malformed line is dropped — matching the engine's ``[^#\\s]+``
-    extract), comment-stripped; only absolute http(s) URLs survive (F1,
-    as for any frontier candidate). Deduplicated because the engine twin
-    ``operators.robots.robots_sitemaps`` feeds a frontier and applies
-    ``distinct()`` — set equality is the pinned contract (r4 advice)."""
-    out: List[str] = []
-    seen = set()
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if ":" not in line:
-            continue
-        key, _, value = line.partition(":")
-        if key.strip().lower() != "sitemap":
-            continue
-        toks = value.split()
-        v = toks[0] if toks else ""
-        if (v.startswith("http://") or v.startswith("https://")) and v not in seen:
-            seen.add(v)
-            out.append(v)
-    return out

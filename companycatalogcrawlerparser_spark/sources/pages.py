@@ -8,9 +8,9 @@ first compute a **redirect-resolution map** by iterating ONLY over the
 redirect subset (transitive closure, hop cap 20 mirroring
 ``MaxAutomaticRedirections``, cycle detection via an accumulated visited
 array — the reference's per-call ConcurrentHashSet, ``Crawler.fs:190,225``).
-The frontier then gets ONE broadcast-or-small join against that map to
-rewrite URLs, followed by ONE big shuffle join against content pages — the
-engine's single large shuffle, which AQE sizes and skew-splits.
+The frontier then gets ONE broadcast join against that map to rewrite
+URLs, and is itself broadcast to the content pages, which stream past it:
+page html is never shuffled or sorted.
 """
 
 from __future__ import annotations
@@ -229,7 +229,6 @@ def fetch_join(
     pages: DataFrame,
     url_col: str = "url",
     rmap: DataFrame | None = None,
-    broadcast_frontier: bool = True,
 ) -> DataFrame:
     """frontier(…, url) ⋈ pages → one row per frontier row, columns:
     frontier.* (url renamed page_url) + (final_url, html, fetch_ok,
@@ -246,19 +245,14 @@ def fetch_join(
     row per company, rest on this. A repeated url would repeat the
     frontier row; nothing here dedups the corpus (docs/SEMANTICS.md §7).
 
-    Join strategy (the engine's scale-critical decision): with
-    ``broadcast_frontier`` (default), the per-round frontier — orders of
-    magnitude smaller than the corpus — is BROADCAST and the corpus
-    STREAMS through an inner hash join, so page html is never shuffled or
-    sorted; unmatched frontier rows come from a cheap second pass that
-    column-prunes the scan to ``url`` only. A sort-merge join here would
-    sort the full html payload (measured: disk-bound and core-count-
-    independent). ``broadcast_frontier=False`` (a round's frontier beyond
-    broadcast size) keeps the SAME inner+anti shape but with a
-    ``shuffle_hash`` hint building the hash table from the frontier side:
-    html shuffles once by key and is still never SORTED (plan-pinned by
-    tests) — and on a corpus bucketed by the join key the shuffle
-    disappears too.
+    Join strategy (the engine's scale-critical decision): the per-round
+    frontier — a few rows per crawled company (``take_limit`` caps the
+    companies), orders of magnitude smaller than the corpus — is BROADCAST
+    and the corpus STREAMS through an inner hash join, so page html is
+    never shuffled or sorted; unmatched frontier rows come from a cheap
+    second pass that column-prunes the scan to ``url`` only. A sort-merge
+    join here would sort the full html payload (measured: disk-bound and
+    core-count-independent).
     """
     if rmap is None:
         rmap = redirect_map(pages)
@@ -283,13 +277,10 @@ def fetch_join(
         F.col("status").alias("__c_status"),
     )
 
-    # both branches share the inner+anti shape; only the hash-build
-    # mechanism differs (broadcast vs shuffled-hash with the frontier as
-    # build side). The left-outer formulation is deliberately avoided:
-    # Spark plans it as sort-merge, which SORTS the html payloads.
-    build = F.broadcast(fr) if broadcast_frontier else fr.hint("shuffle_hash")
+    # inner + anti, not one left-outer join: Spark plans the left-outer
+    # as sort-merge, which SORTS the html payloads
     found = content.join(
-        build, fr["final_url"] == content["__c_url"], "inner"
+        F.broadcast(fr), fr["final_url"] == content["__c_url"], "inner"
     )
     # frontier rows with no content row: second corpus pass, pruned to
     # the url column (parquet reads only that column)

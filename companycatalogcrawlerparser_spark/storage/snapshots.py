@@ -25,11 +25,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 
-def _entry(path: str, df: DataFrame) -> dict:
-    """A manifest's record of one written table."""
-    return {"path": path, "schema": df.schema.jsonValue()}
-
-
 class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -43,16 +38,15 @@ class SnapshotStore:
         self,
         round_id: int,
         tables: Dict[str, DataFrame],
-        counters: Optional[Dict[str, int]] = None,
         observed: Optional[Dict[str, list]] = None,
     ) -> dict:
         """Writes ``tables`` and renames the round's manifest into place.
 
         ``observed`` maps a table name to aggregate Columns; they are
-        computed by that table's write (``DataFrame.observe``) and land in
-        the manifest's counters next to ``counters``, at no extra job."""
+        computed by that table's write (``DataFrame.observe``) and are the
+        manifest's counters, at no extra job."""
         data_dir = os.path.join(self.root, "data", f"round={round_id}")
-        manifest: dict = {"round": round_id, "tables": {}, "counters": dict(counters or {})}
+        manifest: dict = {"round": round_id, "tables": {}, "counters": {}}
         tables = dict(tables)
         observations = []
         for name, exprs in (observed or {}).items():
@@ -82,7 +76,7 @@ class SnapshotStore:
             # coalesce never increases partition count — smaller frames
             # pass through untouched
             df.coalesce(n_write).write.mode("overwrite").parquet(path)
-            return name, _entry(path, df)
+            return name, {"path": path, "schema": df.schema.jsonValue()}
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -208,12 +202,10 @@ class SnapshotStore:
             return json.load(f)
 
     def read(self, round_id: int, table: str) -> DataFrame:
-        return self._read(self.manifest(round_id)["tables"][table])
-
-    def _read(self, entry: dict) -> DataFrame:
         """A committed table, read with the schema its manifest recorded:
         without one, ``spark.read.parquet`` runs a schema-inference job.
         Manifests written before schemas were recorded still infer."""
+        entry = self.manifest(round_id)["tables"][table]
         reader = self.spark.read
         if "schema" in entry:
             reader = reader.schema(StructType.fromJson(entry["schema"]))
@@ -222,98 +214,17 @@ class SnapshotStore:
     def has_table(self, round_id: int, table: str) -> bool:
         return table in self.manifest(round_id)["tables"]
 
-    # -- compaction ------------------------------------------------------------
-    #
-    # The small-file problem at 100 TB: a crawl that commits per-round bag/
-    # trace/flags tables accumulates rounds × partitions parquet files, and
-    # every finalize() re-unions ALL of them — thousands of rounds means a
-    # listing+footer-read storm per run and a plan with thousands of scan
-    # legs. Compaction is the Iceberg `rewrite_data_files` analogue on this
-    # store: rewrite rounds ≤ K of the append-style tables into ONE base
-    # snapshot, committed by the same tmp-write + os.rename protocol as a
-    # round (crash before the rename leaves an orphan data dir readers
-    # ignore). Readers use read_union(): newest compacted base + tail
-    # rounds — bit-identical rows to the raw union (pytest-pinned), just
-    # fewer files. Covered rounds' data stays for time travel unless
-    # prune_compacted() is called (manifests are NEVER deleted — lineage
-    # counters survive pruning).
-
-    def compact(
-        self,
-        tables: list,
-        upto: Optional[int] = None,
-        target_partitions: int = 8,
-    ) -> dict:
-        upto = self.last_round() if upto is None else upto
-        rounds = [r for r in self.committed_rounds() if r <= upto]
-        data_dir = os.path.join(self.root, "data", f"compact={upto}")
-        manifest: dict = {"compact_upto": upto, "tables": {}, "rounds": rounds}
-        for name in tables:
-            df = self.read_union(name, upto)
-            path = os.path.join(data_dir, name)
-            # coalesce, not repartition: file-count reduction needs no
-            # shuffle — each output file just concatenates input splits
-            df.coalesce(target_partitions).write.mode("overwrite").parquet(path)
-            manifest["tables"][name] = _entry(path, df)
-        tmp = os.path.join(self.root, "manifests", f".compact-{upto}.json.tmp")
-        final = os.path.join(self.root, "manifests", f"compact-{upto}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, final)  # atomic, same commit point protocol as rounds
-        return manifest
-
-    def committed_compactions(self) -> list:
-        out = []
-        for fn in os.listdir(os.path.join(self.root, "manifests")):
-            m = re.fullmatch(r"compact-(\d+)\.json", fn)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
-
-    def compaction_manifest(self, upto: int) -> dict:
-        with open(os.path.join(self.root, "manifests", f"compact-{upto}.json")) as f:
-            return json.load(f)
-
-    def read_union(self, table: str, upto: Optional[int] = None) -> DataFrame:
-        """All rows of an append-style table across rounds ≤ ``upto``:
-        newest covering compacted base (if any) + the tail rounds after
-        it. Row-equal to unioning every round's table directly."""
-        upto = self.last_round() if upto is None else upto
-        base = None
-        start_after = -1
-        for c in reversed(self.committed_compactions()):
-            if c <= upto and table in self.compaction_manifest(c)["tables"]:
-                base = self._read(self.compaction_manifest(c)["tables"][table])
-                start_after = c
-                break
-        out = base
+    def read_union(self, table: str) -> DataFrame:
+        """All rows of an append-style table across the committed rounds.
+        A plain union: every round after round 0 commits an empty
+        ``frontier_next``, so a crawl has at most two rounds of rows and
+        the union stays a few scan legs."""
+        out = None
         for r in self.committed_rounds():
-            if r <= start_after or r > upto or not self.has_table(r, table):
+            if not self.has_table(r, table):
                 continue
             df = self.read(r, table)
             out = df if out is None else out.unionByName(df)
         if out is None:
-            raise KeyError(f"table {table!r} has no committed data ≤ round {upto}")
+            raise KeyError(f"table {table!r} has no committed data")
         return out
-
-    def prune_compacted(self, upto: int) -> list:
-        """Delete covered rounds' data dirs for the tables a committed
-        compaction rewrote (storage reclaim; idempotent — a crash mid-way
-        just leaves fewer dirs for the next call). Round MANIFESTS are
-        kept: counters/lineage stay queryable, and read_union never
-        touches the pruned dirs because the compacted base shadows them."""
-        import shutil
-
-        man = self.compaction_manifest(upto)  # raises if not committed
-        removed = []
-        for r in man["rounds"]:
-            for name in man["tables"]:
-                if not self.has_table(r, name):
-                    continue
-                path = self.manifest(r)["tables"][name]["path"]
-                if os.path.exists(path):
-                    shutil.rmtree(path)
-                    removed.append(path)
-        return removed

@@ -1,125 +1,22 @@
-"""Streaming ingestion of page-fetch event logs (Structured Streaming).
+"""Streaming audit of page-fetch event logs (Structured Streaming).
 
 The reference is batch-iterative (SURVEY.md §2.10 — no watermarks or
 event-time anywhere), so streaming is an ENGINE EXTENSION, not parity
 surface: a production crawl emits per-fetch events (url, host, ts, ok,
-bytes, emails_found) and this module maintains live per-host throughput /
-politeness dashboards and an incremental url_seen feed.
-
-Patterns used (all standard Structured Streaming):
-- file source with schema pinned (no inference) → works with
-  ``Trigger.AvailableNow`` for deterministic tests and with continuous
-  micro-batches in production;
-- event-time tumbling windows with a watermark for late fetch events;
-- ``dropDuplicatesWithinWatermark`` as the streaming twin of the url_seen
-  anti-join for the bounded-lateness window;
-- ``foreachBatch`` to MERGE each micro-batch into the snapshot store
-  (same atomic-commit semantics as the batch rounds);
-- ``applyInPandasWithState`` for the custom stateful per-host politeness
-  auditor (state persists across micro-batches + checkpoint restarts).
+bytes, emails_found), and :func:`host_budget_state` audits the per-host
+politeness of that feed with ``applyInPandasWithState`` (state persists
+across micro-batches and checkpoint restarts). The ``events_windows``
+driver row runs it over a file-source stream with ``Trigger.AvailableNow``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 FETCH_EVENT_SCHEMA = (
     "ts timestamp, url string, host string, company_id long, ok boolean, "
     "bytes long, emails_found int"
 )
-
-
-def read_fetch_events(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream of fetch events (parquet files dropped per batch)."""
-    return spark.readStream.schema(FETCH_EVENT_SCHEMA).parquet(path)
-
-
-def host_throughput(
-    events: DataFrame, window: str = "1 minute", watermark: str = "2 minutes"
-) -> DataFrame:
-    """Per-host windowed throughput with late-event tolerance: the live
-    politeness dashboard (fetches + bytes + error rate per host/window)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("host"))
-        .agg(
-            F.count("*").alias("fetches"),
-            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("errors"),
-            F.sum("bytes").alias("bytes"),
-            F.sum("emails_found").alias("emails_found"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "host", "fetches", "errors", "bytes", "emails_found",
-        )
-    )
-
-
-def streaming_url_seen(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming twin of the url_seen dedup: first fetch per URL within the
-    watermark horizon survives; the exact global set still lives in the
-    snapshot-store table (this stream feeds its MERGE)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["url"])
-        .select("ts", "url", "host", "company_id")
-    )
-
-
-def run_available_now(stream_df: DataFrame, out_path: str, checkpoint: str):
-    """Drain everything currently available (deterministic test/batch-catchup
-    mode), writing parquet with exactly-once file-sink semantics."""
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def foreach_batch_merge(
-    stream_df: DataFrame,
-    store,
-    table: str,
-    checkpoint: str,
-    base_round: int = 0,
-):
-    """``foreachBatch`` writer committing each micro-batch through the
-    :class:`~..storage.snapshots.SnapshotStore` — the streaming twin of the
-    batch rounds' atomic commit (one manifest per micro-batch, counters
-    recorded in the same commit). ``round_id = base_round + batch_id`` so a
-    restarted stream (same checkpoint) replays a batch to the SAME round;
-    a replayed batch whose manifest already exists is SKIPPED entirely —
-    re-running the overwrite would delete/rewrite data files a committed
-    manifest already points at, so a crash mid-rewrite could leave a
-    committed manifest over partial data. Skipping makes the commit
-    genuinely exactly-once: first completion wins, replays are no-ops."""
-
-    def _merge(batch_df: DataFrame, batch_id: int):
-        round_id = base_round + batch_id
-        if round_id in store.committed_rounds():
-            return
-        n = batch_df.count()
-        store.commit(
-            round_id,
-            {table: batch_df},
-            counters={"rows": n, "batch_id": batch_id},
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def host_budget_state(
@@ -175,16 +72,3 @@ def host_budget_state(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_complete_to_memory(stream_df: DataFrame, name: str):
-    """Complete-mode memory sink for windowed aggregates (tests/dashboards)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

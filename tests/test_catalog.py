@@ -109,32 +109,6 @@ class TestMergeOps:
         rows = {(r["name"], r["city_code"]): r["id"] for r in out.collect()}
         assert rows == {("Ремонт", "77"): 1, ("Торговля", "77"): 3}
 
-    def test_upsert_emails_continues_ids(self, spark):
-        emails = spark.createDataFrame(
-            [(1, "a@b.com", False)], "email_id long, email string, bad_ignore_email boolean"
-        )
-        junction = spark.createDataFrame([(10, 1)], "company_id long, email_id long")
-        pairs = spark.createDataFrame(
-            [(10, "a@b.com"), (11, "a@b.com"), (11, "z@y.org")],
-            "company_id long, email string",
-        )
-        e2, j2 = M.upsert_emails(emails, junction, pairs)
-        em = {r["email"]: r["email_id"] for r in e2.collect()}
-        assert em["a@b.com"] == 1 and em["z@y.org"] == 2
-        got = {(r["company_id"], r["email_id"]) for r in j2.collect()}
-        assert got == {(10, 1), (11, 1), (11, 2)}
-
-    def test_update_flags(self, spark):
-        comp = spark.createDataFrame(
-            [(1, False, False), (2, False, False)],
-            "company_id long, bad_url boolean, email_processed boolean",
-        )
-        upd = spark.createDataFrame(
-            [(2, True, True)], "company_id long, bad_url boolean, email_processed boolean"
-        )
-        out = {r["company_id"]: (r["bad_url"], r["email_processed"]) for r in M.update_flags(comp, upd).collect()}
-        assert out == {1: (False, False), 2: (True, True)}
-
 
 class TestMailer:
     def test_resumable_batches(self, spark):

@@ -1,13 +1,6 @@
-"""Snapshot-store compaction (storage/snapshots.py).
-
-Pins the 100 TB-scale contract: compacting the append-style tables is
-invisible to readers (read_union row-equal before/after, tail rounds
-still included), atomic (an orphan compaction data dir without its
-manifest is ignored), and prune-safe (data reclaim keeps manifests and
-row equality).
+"""Snapshot-store union reads (storage/snapshots.py): ``read_union`` is
+row-equal to unioning every committed round's table.
 """
-
-import os
 
 from companycatalogcrawlerparser_spark.storage.snapshots import SnapshotStore
 
@@ -19,7 +12,7 @@ def _mk_store(spark, root):
             [(r * 10 + i, f"e{r}_{i}@x.com") for i in range(5)],
             "company_id long, email string",
         )
-        st.commit(r, {"bag": df}, counters={"rows": 5})
+        st.commit(r, {"bag": df})
     return st
 
 
@@ -33,75 +26,3 @@ def test_read_union_equals_raw_union(spark, tmp_path):
     for r in range(3):
         raw.extend(map(tuple, st.read(r, "bag").collect()))
     assert _rows(st.read_union("bag")) == sorted(raw)
-
-
-def test_compact_is_reader_invisible_and_reduces_files(spark, tmp_path):
-    st = _mk_store(spark, tmp_path)
-    before = _rows(st.read_union("bag"))
-    st.compact(["bag"], target_partitions=1)
-    assert st.committed_compactions() == [2]
-    assert _rows(st.read_union("bag")) == before
-    base = st.compaction_manifest(2)["tables"]["bag"]["path"]
-    n_files = len([f for f in os.listdir(base) if f.endswith(".parquet")])
-    assert n_files == 1
-
-    # a round committed AFTER the compaction joins the union as a tail
-    df = spark.createDataFrame([(99, "tail@x.com")], "company_id long, email string")
-    st.commit(3, {"bag": df})
-    assert _rows(st.read_union("bag")) == sorted(before + [(99, "tail@x.com")])
-
-
-def test_orphan_compaction_dir_is_ignored(spark, tmp_path):
-    st = _mk_store(spark, tmp_path)
-    before = _rows(st.read_union("bag"))
-    # crash-sim: data written, manifest rename never happened
-    orphan = tmp_path / "data" / "compact=2" / "bag"
-    orphan.mkdir(parents=True)
-    (orphan / "part-junk.parquet").write_bytes(b"not parquet")
-    assert st.committed_compactions() == []
-    assert _rows(st.read_union("bag")) == before
-
-
-def test_prune_keeps_rows_and_manifests(spark, tmp_path):
-    st = _mk_store(spark, tmp_path)
-    before = _rows(st.read_union("bag"))
-    st.compact(["bag"], target_partitions=1)
-    removed = st.prune_compacted(2)
-    assert len(removed) == 3  # one bag dir per covered round
-    assert _rows(st.read_union("bag")) == before
-    # manifests survive: lineage counters stay queryable after reclaim
-    assert st.manifest(0)["counters"]["rows"] == 5
-    # idempotent
-    assert st.prune_compacted(2) == []
-
-
-def test_crawl_with_compaction_equals_without(spark, tmp_path):
-    """compact_every wired into the round loop (compact + prune after
-    every committed round here) must not change any crawl output —
-    finalize reads through read_union, so rewritten bag/trace/flags are
-    invisible to results."""
-    from companycatalogcrawlerparser_spark.plans.crawl import (
-        CrawlConfig,
-        run_crawl,
-    )
-    from companycatalogcrawlerparser_spark.sources import webgen
-
-    pages_rows, seeds_rows = webgen.build_corpus_local(20)
-    pages = spark.createDataFrame(pages_rows, schema=webgen.PAGES_SCHEMA)
-    seeds = spark.createDataFrame(seeds_rows, schema=webgen.SEEDS_SCHEMA)
-
-    plain = run_crawl(
-        spark, pages, seeds, str(tmp_path / "plain"),
-        CrawlConfig(num_partitions=8, n_buckets=16),
-    )
-    compacted = run_crawl(
-        spark, pages, seeds, str(tmp_path / "compacted"),
-        CrawlConfig(num_partitions=8, n_buckets=16, compact_every=1),
-    )
-    st = SnapshotStore(spark, str(tmp_path / "compacted"))
-    assert st.committed_compactions()  # it actually ran
-
-    for tbl in ("email_pairs", "trace", "flags"):
-        a = sorted(map(tuple, plain[tbl].collect()))
-        b = sorted(map(tuple, compacted[tbl].collect()))
-        assert a == b, tbl

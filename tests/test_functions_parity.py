@@ -179,14 +179,6 @@ class TestCanonicalization:
         out = df.select(NC.canonicalize_url(F.col("u")).alias("c")).first()["c"]
         assert out == expected
 
-    def test_hash_stability(self, spark):
-        df = spark.createDataFrame([("http://a.com/x",), ("http://a.com/x",)], ["u"])
-        vals = [
-            r["h"]
-            for r in df.select(NC.url_hash(NC.canonicalize_url(F.col("u"))).alias("h")).collect()
-        ]
-        assert vals[0] == vals[1]
-
 
 class TestHrefRegexCaseSensitivity:
     """Crawler.fs:76,126,156 — ``EmailRegex()`` (the href matcher) is

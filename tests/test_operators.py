@@ -800,85 +800,6 @@ class TestTextQuality:
 
 
 class TestStreaming:
-    def test_host_throughput_available_now(self, spark, tmp_path):
-        from companycatalogcrawlerparser_spark.streaming import events as SE
-        import datetime as dt
-
-        src = str(tmp_path / "events_in")
-        base = dt.datetime(2026, 1, 1, 10, 0, 0)
-        rows = [
-            (base + dt.timedelta(seconds=10 * i), f"http://h{i % 2}.ru/p{i}",
-             f"h{i % 2}.ru", i, i % 5 != 0, 1000 + i, i % 3)
-            for i in range(20)
-        ]
-        spark.createDataFrame(rows, SE.FETCH_EVENT_SCHEMA).write.parquet(src)
-
-        stream = SE.read_fetch_events(spark, src)
-        agg = SE.host_throughput(stream, window="1 minute", watermark="2 minutes")
-        SE.run_complete_to_memory(agg, "host_tp")
-        out = spark.sql("SELECT * FROM host_tp").collect()
-        assert sum(r["fetches"] for r in out) == 20
-        assert {r["host"] for r in out} == {"h0.ru", "h1.ru"}
-
-    def test_streaming_url_seen_dedup(self, spark, tmp_path):
-        from companycatalogcrawlerparser_spark.streaming import events as SE
-        import datetime as dt
-
-        src = str(tmp_path / "seen_in")
-        base = dt.datetime(2026, 1, 1, 10, 0, 0)
-        rows = [
-            (base + dt.timedelta(seconds=i), "http://a.ru/x", "a.ru", 1, True, 10, 0)
-            for i in range(5)
-        ] + [(base + dt.timedelta(seconds=9), "http://a.ru/y", "a.ru", 1, True, 10, 0)]
-        spark.createDataFrame(rows, SE.FETCH_EVENT_SCHEMA).write.parquet(src)
-        stream = SE.read_fetch_events(spark, src)
-        dedup = SE.streaming_url_seen(stream)
-        out_dir = str(tmp_path / "seen_out")
-        ckpt = str(tmp_path / "ckpt")
-        SE.run_available_now(dedup, out_dir, ckpt)
-        got = spark.read.parquet(out_dir)
-        assert got.count() == 2
-
-    def test_foreach_batch_merge_commits_manifests(self, spark, tmp_path):
-        """Two micro-batches (maxFilesPerTrigger=1 over two input files)
-        → two SnapshotStore manifests, one atomic commit per batch."""
-        from companycatalogcrawlerparser_spark.storage.snapshots import SnapshotStore
-        from companycatalogcrawlerparser_spark.streaming import events as SE
-        import datetime as dt
-
-        src = str(tmp_path / "merge_in")
-        base = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-        def rows(tag, n):
-            return [
-                (base + dt.timedelta(seconds=i), f"http://{tag}.ru/p{i}",
-                 f"{tag}.ru", i, True, 100 + i, 0)
-                for i in range(n)
-            ]
-
-        df1 = spark.createDataFrame(rows("a", 3), SE.FETCH_EVENT_SCHEMA)
-        df1.coalesce(1).write.mode("append").parquet(src)
-        df2 = spark.createDataFrame(rows("b", 4), SE.FETCH_EVENT_SCHEMA)
-        df2.coalesce(1).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(SE.FETCH_EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        store = SnapshotStore(spark, str(tmp_path / "snap"))
-        SE.foreach_batch_merge(stream, store, "fetch_events",
-                               str(tmp_path / "merge_ckpt"))
-        rounds = store.committed_rounds()
-        assert rounds == [0, 1]
-        total = sum(
-            store.read(r, "fetch_events").count() for r in rounds
-        )
-        assert total == 7
-        assert all(
-            store.manifest(r)["counters"]["rows"] > 0 for r in rounds
-        )
-
     def test_host_budget_state_counts_violations_across_batches(
         self, spark, tmp_path
     ):
@@ -984,42 +905,64 @@ class TestStreaming:
         assert last["events"] == 2
         assert last["violations"] == 1  # 600ms gap across the RESTART
 
-    def test_foreach_batch_merge_replay_skips_committed_round(
-        self, spark, tmp_path
+    def test_events_audit_leaves_caller_conf_untouched(
+        self, spark, tmp_path, monkeypatch
     ):
-        """A replayed batch whose manifest already exists is a NO-OP:
-        re-running the overwrite would delete data files the committed
-        manifest points at (a crash mid-rewrite = committed manifest over
-        partial data). First completion wins; table state is unchanged."""
-        from companycatalogcrawlerparser_spark.storage.snapshots import SnapshotStore
-        from companycatalogcrawlerparser_spark.streaming import events as SE
+        """The events_windows audit kind runs its stream in a child
+        session: no ``RuntimeConfig.set``/``unset`` reaches the caller's
+        session while it runs (other rows build frames from thread pools
+        on that session), and its per-host totals still equal the oracle's
+        one-shot lag-gap scan."""
         import datetime as dt
+        import random
 
-        base = dt.datetime(2026, 1, 1, 10, 0, 0)
-        src = str(tmp_path / "replay_in")
+        from pyspark.sql.conf import RuntimeConfig
+
+        from companycatalogcrawlerparser_spark import harness as H
+
+        rng = random.Random(0)
+        base = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+        rows = [
+            (i, rng.randrange(40), base + dt.timedelta(seconds=rng.randrange(3600)))
+            for i in range(800)
+        ]
         spark.createDataFrame(
-            [(base, "http://a.ru/p", "a.ru", 1, True, 100, 0)],
-            SE.FETCH_EVENT_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(src)
+            rows, "event_id long, user_id long, ts timestamp"
+        ).write.parquet(str(tmp_path / "events.parquet"))
 
-        store = SnapshotStore(spark, str(tmp_path / "snap"))
-        # round 0 already committed (the pre-crash completion)
-        pre = spark.createDataFrame(
-            [(base, "http://pre.ru/x", "pre.ru", 9, True, 1, 0)],
-            SE.FETCH_EVENT_SCHEMA,
-        )
-        store.commit(0, {"fetch_events": pre}, counters={"rows": 1})
-        pre_rows = [r["url"] for r in store.read(0, "fetch_events").collect()]
+        caller = spark._jsparkSession.conf()
+        calls = []
+        for name in ("set", "unset"):
+            def record(self, *args, _orig=getattr(RuntimeConfig, name), _name=name):
+                if self._jconf.equals(caller):
+                    calls.append((_name, *args))
+                return _orig(self, *args)
 
-        stream = spark.readStream.schema(SE.FETCH_EVENT_SCHEMA).parquet(src)
-        SE.foreach_batch_merge(
-            stream, store, "fetch_events", str(tmp_path / "replay_ckpt")
-        )
-        # replay (batch_id 0 → round 0) skipped: committed state untouched
-        assert store.committed_rounds() == [0]
-        assert [
-            r["url"] for r in store.read(0, "fetch_events").collect()
-        ] == pre_rows
+            monkeypatch.setattr(RuntimeConfig, name, record)
+        got = {
+            r["host"]: (r["events"], r["violations"], r["last_ts_ms"])
+            for r in H.q_events_audit(spark, str(tmp_path)).collect()
+        }
+        monkeypatch.undo()
+        assert calls == []
+
+        by_host: dict = {}
+        for event_id, user_id, ts in rows:
+            if event_id % 4 == 0:
+                by_host.setdefault(f"h{user_id % H.AUDIT_HOSTS_MOD}", []).append(
+                    int(ts.timestamp() * 1000)
+                )
+        want = {}
+        for host, stamps in by_host.items():
+            stamps.sort()
+            gaps = [b - a for a, b in zip(stamps, stamps[1:])]
+            want[host] = (
+                len(stamps),
+                sum(g < H.AUDIT_DELAY_MS for g in gaps),
+                stamps[-1],
+            )
+        assert sum(v[1] for v in want.values()) > 0  # the gate is exercised
+        assert got == want
 
 
 class TestCuckooFilter:
@@ -1227,32 +1170,6 @@ class TestCuration:
         return int(
             hashlib.md5(f"{key}{salt}".encode()).hexdigest()[:8], 16
         ) % denom
-
-    def test_deterministic_sample_matches_hash(self, spark):
-        from companycatalogcrawlerparser_spark.operators import curation as CU
-
-        df = spark.createDataFrame([(i,) for i in range(500)], "doc_id long")
-        got = {
-            r["doc_id"]
-            for r in CU.deterministic_sample(df, 3000).collect()
-        }
-        want = {i for i in range(500) if self._bucket(i) < 3000}
-        assert got == want
-        # partition-invariance: same selection at any parallelism
-        got1 = {
-            r["doc_id"]
-            for r in CU.deterministic_sample(df.repartition(13), 3000).collect()
-        }
-        assert got1 == want
-        # salt decorrelates
-        salted = {
-            r["doc_id"]
-            for r in CU.deterministic_sample(df, 3000, salt="holdout").collect()
-        }
-        assert salted == {
-            i for i in range(500) if self._bucket(i, "holdout") < 3000
-        }
-        assert salted != want
 
     def test_stratified_sample(self, spark):
         from companycatalogcrawlerparser_spark.operators import curation as CU
@@ -1476,32 +1393,6 @@ class TestExactQuantiles:
         same = spark.createDataFrame([(7,)] * 100, "v long")
         got2 = CU.exact_quantiles(same, "v", [0.33, 0.77]).collect()
         assert all(r["value"] == 7 for r in got2)
-
-    def test_lm_cutoffs_roundtrip(self, spark):
-        from companycatalogcrawlerparser_spark.operators import lm as LM
-
-        ref = spark.createDataFrame(
-            [(0, "a b"), (1, "a b"), (2, "a c")],
-            "doc_id long, text string",
-        )
-        model = LM.train_bigram_lm(ref)
-        scored = LM.lm_logprob(
-            spark.createDataFrame(
-                [(i, t) for i, t in enumerate(
-                    ["a b", "a b", "a z", "z q", ""]
-                )],
-                "doc_id long, text string",
-            ),
-            model,
-        )
-        cuts = {
-            round(r["frac"], 2): r["value"]
-            for r in LM.lm_cutoffs(scored).collect()
-        }
-        # 4 scoreable docs (empty excluded); per-token −logp ascending:
-        # 0.703, 0.703, 1.253, 1.666 → ⌈4/3⌉=2nd and ⌈8/3⌉=3rd
-        assert cuts[0.33] == pytest.approx(0.703457, abs=1e-5)
-        assert cuts[0.67] == pytest.approx(1.252763, abs=1e-5)
 
 
 class TestSpanCorruption:

@@ -115,48 +115,6 @@ class TestJoinStrategies:
         joined = big.join(F.broadcast(dim), "key")
         assert "BroadcastHashJoin" in _plan(joined)
 
-    def test_fetch_join_nonbroadcast_hashes_never_sorts_html(self, spark):
-        """broadcast_frontier=False (frontier beyond broadcast size): the
-        content join must be a SHUFFLED HASH join building from the
-        frontier side — a sort-merge here would sort the html payloads,
-        the measured disk-bound pathology. Results must also equal the
-        broadcast path row-for-row."""
-        from companycatalogcrawlerparser_spark.sources.pages import fetch_join
-
-        pages = spark.createDataFrame(
-            [
-                ("http://a.ru/", b"<html>a</html>", 200, None),
-                ("http://a.ru/c", b"<html>c</html>", 200, None),
-                ("http://b.ru/", b"", 404, None),
-            ],
-            "url string, html binary, status int, redirect_to string",
-        )
-        frontier = spark.createDataFrame(
-            [
-                (1, "http://a.ru/"), (1, "http://a.ru/c"),
-                (2, "http://b.ru/"), (3, "http://gone.ru/"),
-            ],
-            "company_id long, url string",
-        )
-        shj = fetch_join(frontier, pages, broadcast_frontier=False)
-        plan = _plan(shj)
-        assert "ShuffledHashJoin" in plan
-        # sort-merge is tolerable on key-only sides (the anti join of
-        # pruned urls); the pathology is a Sort whose INPUT carries the
-        # html payload — assert no such node exists
-        for block in plan.split("\n\n"):
-            head = block.splitlines()[0] if block.splitlines() else ""
-            if " Sort " in head or head.endswith("Sort") or "SortMergeJoin" in head:
-                assert "html" not in block, block
-
-        def rows(df):
-            return sorted(
-                (r["company_id"], r["page_url"], r["fetch_ok"], r["fetch_error"])
-                for r in df.collect()
-            )
-
-        assert rows(shj) == rows(fetch_join(frontier, pages))
-
     def test_politeness_dim_join_is_broadcast(self, spark):
         from companycatalogcrawlerparser_spark.operators.frontier import schedule
 
@@ -185,7 +143,6 @@ class TestJvmSideOnly:
         df = spark.createDataFrame([("http://www.a.ru/x?b=2&a=1#f",)], ["url"])
         out = df.select(
             C.canonicalize_url(F.col("url")).alias("c"),
-            C.url_hash(C.canonicalize_url(F.col("url"))).alias("h"),
             P.is_contacts_page(F.col("url")).alias("p"),
         )
         plan = _plan(out)

@@ -1,10 +1,16 @@
-"""Every package module is reached from an entry point.
+"""Every package module and public function is reached from a non-test
+module.
 
-Walks the static import graph (``ast``, imports inside functions
+Modules: walks the static import graph (``ast``, imports inside functions
 included) from the query registry (``__spark_entry__.py``), ``bench.py``,
 the ``perfbench/`` benchmark and the package's ``plans/``. A module only
 its own tests import is unreached: delete it with its tests rather than
 maintain it.
+
+Functions: every public top-level function and method of the package
+outside ``refsem/`` (the reference semantics, the tests' oracle) must be
+named by some non-test module other than in its own body or an
+``__all__`` list, or be listed in ``UNREACHED_FUNCTIONS`` with a reason.
 """
 
 from __future__ import annotations
@@ -93,14 +99,8 @@ UNSET_CRAWL_FIELDS = {
     "native_extract": "perfbench wraps extract_tokens_meta, the branch's "
                       "other side",
     "url_seen_filter": "perfbench's url-seen replay reads it",
-    "respect_robots": "robots.txt gating (north rule), a no-op on corpora "
-                      "without robots.txt rows; ROADMAP item 4 decides it",
-    "robots_agent": "the user agent the robots gate matches; decided with "
-                    "respect_robots",
-    "broadcast_frontier": "the shuffled-hash fetch join for frontiers "
-                          "beyond broadcast size; ROADMAP item 4 decides it",
-    "compact_every": "round-table compaction; ROADMAP item 4 decides it",
-    "use_sitemaps": "sitemap contact discovery; ROADMAP item 4 decides it",
+    "robots_agent": "a deployment setting: the user agent the robots gate "
+                    "matches",
 }
 
 
@@ -147,3 +147,109 @@ def test_every_crawl_config_field_is_set_or_listed():
     assert sorted(unset - set(UNSET_CRAWL_FIELDS)) == []
     # the list names only fields that exist and are unset
     assert sorted(set(UNSET_CRAWL_FIELDS) - unset) == []
+
+
+# Non-test modules: the package, the query registry, bench.py, the
+# benchmark and the tools.
+NON_TEST_GLOBS = ("*.py", "perfbench/*.py", "tools/*.py", f"{PKG}/**/*.py")
+
+CATALOG = "catalog plan entry point (paper component 1, the catalog scrape)"
+MAILER = "mailer plan entry point (paper component 3, the mailer batches)"
+WEBGEN = "webgen page builder for test corpora"
+
+# Public functions no non-test module names, each kept for the reason
+# given. Any other such function is code only its own tests run: delete
+# it with them rather than maintain it.
+UNREACHED_FUNCTIONS = {
+    "plans/catalog.py::extract_country_list": CATALOG,
+    "plans/catalog.py::extract_russian_cities": CATALOG,
+    "plans/catalog.py::extract_russian_regions": CATALOG,
+    "plans/catalog.py::listing_urls": CATALOG,
+    "plans/mailer.py::commit_batch": MAILER,
+    "plans/mailer.py::delete_files": MAILER,
+    "plans/mailer.py::next_batch": MAILER,
+    "plans/mailer.py::send_groups": MAILER,
+    "plans/pipeline.py::pages_to_docs": "pipeline plan entry point: crawled "
+        "pages to the documents curate_training_corpus takes",
+    "sources/webgen.py::country_list_page": WEBGEN,
+    "sources/webgen.py::robots_txt": WEBGEN,
+    "sources/webgen.py::russian_cities_page": WEBGEN,
+    "sources/webgen.py::russian_regions_page": WEBGEN,
+    "operators/bpe.py::encode_word_py": "the pure-Python reference twin the "
+        "BPE tests compare the engine's encoder against",
+    "operators/dedup.py::lsh_oversized_buckets": "the audit "
+        "test_winnow_skew_cap_observed_matches_audit checks the in-job LSH "
+        "cap against",
+    "operators/dedup.py::winnow_oversized_prints": "the audit "
+        "test_winnow_skew_cap_observed_matches_audit checks the in-job "
+        "winnowing cap against",
+    "storage/snapshots.py::SnapshotStore.read_shard": "the reader half of "
+        "commit_shards' layout, so that format stays known to one module",
+}
+
+
+def _public_functions() -> dict:
+    """``"<path in package>::<name>"`` → (name, (path, line of its def)),
+    for every public top-level function and public method of a public
+    top-level class, outside ``refsem/``."""
+    out = {}
+    for path in glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, os.path.join(ROOT, PKG)).replace(os.sep, "/")
+        if rel.startswith("refsem/"):
+            continue
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        for node in tree.body:
+            if isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+                members = [(f"{node.name}.{getattr(m, 'name', '')}", m)
+                           for m in node.body]
+            else:
+                members = [(getattr(node, "name", ""), node)]
+            for qual, fn in members:
+                if (isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                        and not fn.name.startswith("_")):
+                    out[f"{rel}::{qual}"] = (fn.name, (os.path.normpath(path), fn.lineno))
+    return out
+
+
+def _name_references() -> dict:
+    """name → the top-level defs (path, line of the def; None outside
+    any) whose bodies name it, over the non-test modules. A name is an
+    identifier, an attribute or a string constant equal to it; the
+    strings of an ``__all__`` list do not count."""
+    refs: dict = {}
+
+    def visit(node, owner, path):
+        for child in ast.iter_child_nodes(node):
+            if (isinstance(child, ast.Assign) and any(
+                    getattr(t, "id", None) == "__all__" for t in child.targets)):
+                continue
+            if owner is None and isinstance(
+                    child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = (path, child.lineno)
+            else:
+                inner = owner
+            if isinstance(child, ast.Name):
+                refs.setdefault(child.id, set()).add(owner)
+            elif isinstance(child, ast.Attribute):
+                refs.setdefault(child.attr, set()).add(owner)
+            elif isinstance(child, ast.Constant) and isinstance(child.value, str):
+                refs.setdefault(child.value, set()).add(owner)
+            # class bodies stay top level: a method is its own owner
+            visit(child, owner if isinstance(child, ast.ClassDef) else inner, path)
+
+    for g in NON_TEST_GLOBS:
+        for path in glob.glob(os.path.join(ROOT, g), recursive=True):
+            path = os.path.normpath(path)
+            visit(ast.parse(open(path, encoding="utf-8").read()), None, path)
+    return refs
+
+
+def test_every_public_function_is_referenced_or_listed():
+    refs = _name_references()
+    unreferenced = sorted(
+        key for key, (name, where) in _public_functions().items()
+        if not refs.get(name, set()) - {where}
+    )
+    assert sorted(set(unreferenced) - set(UNREACHED_FUNCTIONS)) == []
+    # the list names only functions that exist and are unreferenced
+    assert sorted(set(UNREACHED_FUNCTIONS) - set(unreferenced)) == []

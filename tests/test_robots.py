@@ -146,21 +146,3 @@ class TestCrawlGating:
         # Crawl-delay 5s → round-1 not_before stamps step by 5000ms
         r1 = sorted(nb for rnd, u, nb in tr if rnd == 1)
         assert all(nb % 5000 == 0 for nb in r1)
-
-    def test_no_robots_corpus_unaffected(self, spark, tmp_path):
-        """A corpus without robots.txt rows crawls identically with gating
-        on and off (the parity guarantee)."""
-        from companycatalogcrawlerparser_spark.plans.crawl import (
-            CrawlConfig, run_crawl,
-        )
-
-        pages_rows, seeds_rows = webgen.build_corpus_local(10)
-        pages = spark.createDataFrame(pages_rows, schema=webgen.PAGES_SCHEMA)
-        seeds = spark.createDataFrame(seeds_rows, schema=webgen.SEEDS_SCHEMA)
-        r_on = run_crawl(spark, pages, seeds, str(tmp_path / "on"),
-                         CrawlConfig(num_partitions=8, n_buckets=16, respect_robots=True))
-        r_off = run_crawl(spark, pages, seeds, str(tmp_path / "off"),
-                          CrawlConfig(num_partitions=8, n_buckets=16, respect_robots=False))
-        t_on = {(r["round"], r["company_id"], r["url"]) for r in r_on["trace"].collect()}
-        t_off = {(r["round"], r["company_id"], r["url"]) for r in r_off["trace"].collect()}
-        assert t_on == t_off

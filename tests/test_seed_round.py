@@ -72,7 +72,8 @@ class TestPreconditions:
 
     def test_fetch_join_one_row_per_frontier_row(self, spark):
         """With one pages row per url, every frontier row (repeated urls,
-        redirects and misses included) comes back exactly once."""
+        redirects and misses included) comes back exactly once; the
+        frontier is broadcast and no sort carries the html payload."""
         pages = spark.createDataFrame(
             [
                 ("http://a.ru/", None, b"<p>a</p>", None, None, 200, None),
@@ -87,10 +88,19 @@ class TestPreconditions:
              (4, "http://b.ru/"), (5, "http://e.ru/"), (6, "http://x.ru/")],
             "company_id long, url string",
         )
-        for broadcast in (True, False):
-            got = fetch_join(frontier, pages, broadcast_frontier=broadcast)
-            assert sorted(tuple(r) for r in got.select("company_id", "page_url").collect()) \
-                == sorted(tuple(r) for r in frontier.collect())
+        got = fetch_join(frontier, pages)
+        assert sorted(tuple(r) for r in got.select("company_id", "page_url").collect()) \
+            == sorted(tuple(r) for r in frontier.collect())
+        plan = got._sc._jvm.PythonSQLUtils.explainString(
+            got._jdf.queryExecution(), "formatted"
+        )
+        assert "BroadcastHashJoin" in plan
+        # a sort on the key-only anti-join side is harmless; a sort whose
+        # input carries html is the disk-bound pathology
+        for block in plan.split("\n\n"):
+            head = block.splitlines()[0] if block.strip() else ""
+            if head.endswith("Sort") or "SortMergeJoin" in head:
+                assert "html" not in block, block
 
     def test_round1_candidates_unseen_by_round0(self, spark, crawls):
         """Round-1 candidates are scoped per company; round 0 marks its

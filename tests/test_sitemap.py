@@ -172,153 +172,6 @@ class TestSparkSitemap:
         for v in vals:
             assert got[v] == RSM.parse_lastmod(v), repr(v)
 
-    def test_crawl_use_sitemaps_finds_hidden_contact(self, spark, tmp_path):
-        """CrawlConfig.use_sitemaps e2e: a site whose homepage has NO
-        contact link still yields its contact-page email via
-        /sitemap.xml; a mailto>1 homepage keeps the reference's expansion
-        block (its sitemap is ignored); default (off) is unchanged."""
-        import datetime as dt
-
-        from companycatalogcrawlerparser_spark.plans.crawl import (
-            CrawlConfig, run_crawl,
-        )
-        from companycatalogcrawlerparser_spark.sources import webgen
-
-        ts = dt.datetime(2025, 1, 1)
-
-        def page(url, html, status=200):
-            return (url, ts, html.encode(), "", "ru", status, None)
-
-        pages = [
-            # company 1: bare homepage, contact only in the sitemap
-            page("http://sitemaponly.ru",
-                 "<html><body>just text, no links</body></html>"),
-            page("http://sitemaponly.ru/sitemap.xml",
-                 "<urlset><url><loc>http://sitemaponly.ru/contacts.html</loc></url></urlset>"),
-            page("http://sitemaponly.ru/contacts.html",
-                 "<html><body>write boss@sitemaponly.ru</body></html>"),
-            # company 2: mailto>1 homepage → expansion blocked (ref parity)
-            page("http://blockedsite.ru",
-                 '<html><body><a href="mailto:a@blockedsite.ru">a</a>'
-                 '<a href="mailto:b@blockedsite.ru">b</a></body></html>'),
-            page("http://blockedsite.ru/sitemap.xml",
-                 "<urlset><url><loc>http://blockedsite.ru/contact/</loc></url></urlset>"),
-            page("http://blockedsite.ru/contact/",
-                 "<html><body>never@blockedsite.ru</body></html>"),
-        ]
-        seeds = [
-            (1, "http://sitemaponly.ru", False, False, False),
-            (2, "http://blockedsite.ru", False, False, False),
-        ]
-        pages_df = spark.createDataFrame(pages, schema=webgen.PAGES_SCHEMA)
-        seeds_df = spark.createDataFrame(seeds, schema=webgen.SEEDS_SCHEMA)
-
-        base_cfg = dict(num_partitions=4, n_buckets=8)
-        off = run_crawl(
-            spark, pages_df, seeds_df, str(tmp_path / "off"),
-            CrawlConfig(**base_cfg),
-        )
-        off_pairs = {(r["company_id"], r["email"])
-                     for r in off["email_pairs"].collect()}
-        assert (1, "boss@sitemaponly.ru") not in off_pairs  # default unchanged
-
-        on = run_crawl(
-            spark, pages_df, seeds_df, str(tmp_path / "on"),
-            CrawlConfig(use_sitemaps=True, **base_cfg),
-        )
-        on_pairs = {(r["company_id"], r["email"])
-                    for r in on["email_pairs"].collect()}
-        assert (1, "boss@sitemaponly.ru") in on_pairs
-        assert (2, "never@blockedsite.ru") not in on_pairs  # block holds
-        assert (2, "a@blockedsite.ru") in on_pairs  # mailtos still harvested
-
-    def test_robots_sitemap_directive_parse_parity(self, spark):
-        """Sitemap: directive discovery — refsem semantics + Spark twin
-        agree on keys/case/comments/relative-URL rejection."""
-        from companycatalogcrawlerparser_spark.operators import robots as RB
-        from companycatalogcrawlerparser_spark.refsem import robots as RR
-
-        txt = (
-            "User-agent: *\nDisallow: /private\n"
-            "Sitemap: http://d.ru/sm_weird.xml\n"
-            "SITEMAP:https://d.ru/sm2.xml.gz   # trailing comment\n"
-            "# Sitemap: http://d.ru/commented.xml\n"
-            "sitemap : http://d.ru/sm3.xml\n"
-            "sitemapx: http://d.ru/not.xml\n"
-            "Sitemap: /relative/sm.xml\n"
-            "Sitemap: HTTP://d.ru/upper-scheme.xml\n"
-            # r4 advice: whitespace-containing values (a URL never holds
-            # raw whitespace — both twins keep the first token), repeated
-            # directives (engine distinct() ≡ oracle first-occurrence
-            # dedup), and a tab-separated value
-            "Sitemap: http://d.ru/sm4.xml trailing junk words\n"
-            "Sitemap: http://d.ru/sm_weird.xml\n"
-            "Sitemap:\thttp://d.ru/sm5.xml\textra\n"
-            "Sitemap:    \n"
-        )
-        want = [
-            "http://d.ru/sm_weird.xml",
-            "https://d.ru/sm2.xml.gz",
-            "http://d.ru/sm3.xml",
-            "http://d.ru/sm4.xml",
-            "http://d.ru/sm5.xml",
-        ]
-        assert RR.sitemap_urls(txt) == want
-        pages = spark.createDataFrame(
-            [("http://d.ru/robots.txt", bytearray(txt.encode()))],
-            "url string, html binary",
-        )
-        got = sorted(
-            (r["host"], r["sitemap_url"])
-            for r in RB.robots_sitemaps(pages).collect()
-        )
-        assert got == sorted(("d.ru", u) for u in want)
-
-    def test_crawl_discovers_sitemap_via_robots_directive(self, spark, tmp_path):
-        """use_sitemaps e2e: the sitemap lives at a NONSTANDARD path that
-        only the robots.txt Sitemap: directive reveals — the contact
-        email must still be found (the /sitemap.xml guess alone misses
-        it), and the same-host gate keeps foreign declared sitemaps out."""
-        import datetime as dt
-
-        from companycatalogcrawlerparser_spark.plans.crawl import (
-            CrawlConfig, run_crawl,
-        )
-        from companycatalogcrawlerparser_spark.sources import webgen
-
-        ts = dt.datetime(2025, 1, 1)
-
-        def page(url, html, status=200):
-            return (url, ts, html.encode(), "", "ru", status, None)
-
-        pages_df = spark.createDataFrame(
-            [
-                page("http://weirdpath.ru",
-                     "<html><body>no links here</body></html>"),
-                page("http://weirdpath.ru/robots.txt",
-                     "User-agent: *\nSitemap: http://weirdpath.ru/sm/deep.xml\n"),
-                page("http://weirdpath.ru/sm/deep.xml",
-                     "<urlset><url><loc>http://weirdpath.ru/contacts.html"
-                     "</loc></url></urlset>"),
-                page("http://weirdpath.ru/contacts.html",
-                     "<html><body>write chief@weirdpath.ru</body></html>"),
-            ],
-            schema=webgen.PAGES_SCHEMA,
-        )
-        seeds_df = spark.createDataFrame(
-            [(1, "http://weirdpath.ru", False, False, False)],
-            schema=webgen.SEEDS_SCHEMA,
-        )
-        res = run_crawl(
-            spark, pages_df, seeds_df, str(tmp_path / "store"),
-            CrawlConfig(
-                use_sitemaps=True, num_partitions=4, n_buckets=8,
-            ),
-        )
-        pairs = {(r["company_id"], r["email"])
-                 for r in res["email_pairs"].collect()}
-        assert (1, "chief@weirdpath.ru") in pairs
-
     def test_plan_stays_native(self, spark):
         """gzip_support=False: the whole two-round plan is JVM-native."""
         pages, roots = self._fixture_dfs(spark)
