@@ -575,7 +575,7 @@ def q_dedup_groups(spark, sf_dir):
     performance story is BENCH/exactsubstr_xl_r7.json at 1M docs).
 
     r7-late: + kind='lines' — CCNet/RefinedWeb line-level boilerplate
-    dedup (operators.dedup.remove_duplicate_lines, keep_first): the
+    dedup (operators.dedup.remove_duplicate_lines, keep-first): the
     fixture docs are single-line, so the corpus is deterministically
     DECORATED (the PII/gopher idiom) — every third doc gains one of
     four shared boilerplate lines, every seventh a blank line (must

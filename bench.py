@@ -194,42 +194,45 @@ FOLDED_KINDS = {
 }
 
 
+# the heavy queries the headline suite times, in run order
+HEAVY = [
+    "j4_big_join_agg",
+    # r6 registry fold (driver records only the first 50 rows —
+    # tests/test_properties.py::TestDriverRegistryContract):
+    # dedup_exact+simhash_groups -> dedup_groups,
+    # minhash_signature+minhash_lsh_pairs -> minhash,
+    # dup_clusters+host_pagerank -> graph_ops
+    "dedup_groups",
+    "minhash",
+    # minhash_lsh_stream is deliberately NOT here: at sf0.1 its
+    # memory-sink fold carries ~288k pairs (~1.2M pre-distinct rows to
+    # the driver) — a verification surface, not a headline operator.
+    # Its measured-performance story is the XL stream_dedup task
+    # (tools/bench_dedup_xl.py: parquet sink, 250k docs, 8 vs 32c).
+    #
+    # graph_ops: CC clustering runs its star-contraction fixpoint and
+    # the PageRank kind its 3 power rounds while CONSTRUCTING the
+    # frame (eager localCheckpoints) — their cost shows as build time
+    "graph_ops",
+    "corpus_curation",
+    "ann_bruteforce",
+    "ann_lsh",
+    "text_metrics",
+    "events_windows",
+    "f10_email_postfilter",
+    "canonicalize",
+]
+
+
 def run_query_bench(spark, sf_dir: str, per_kind: bool = False) -> dict:
     import __spark_entry__ as entrymod
 
     from pyspark.sql import functions as F
 
-    heavy = [
-        "j4_big_join_agg",
-        # r6 registry fold (driver records only the first 50 rows —
-        # tests/test_properties.py::TestDriverRegistryContract):
-        # dedup_exact+simhash_groups -> dedup_groups,
-        # minhash_signature+minhash_lsh_pairs -> minhash,
-        # dup_clusters+host_pagerank -> graph_ops
-        "dedup_groups",
-        "minhash",
-        # minhash_lsh_stream is deliberately NOT here: at sf0.1 its
-        # memory-sink fold carries ~288k pairs (~1.2M pre-distinct rows to
-        # the driver) — a verification surface, not a headline operator.
-        # Its measured-performance story is the XL stream_dedup task
-        # (tools/bench_dedup_xl.py: parquet sink, 250k docs, 8 vs 32c).
-        #
-        # graph_ops: CC clustering runs its star-contraction fixpoint and
-        # the PageRank kind its 3 power rounds while CONSTRUCTING the
-        # frame (eager localCheckpoints) — their cost shows as build time
-        "graph_ops",
-        "corpus_curation",
-        "ann_bruteforce",
-        "ann_lsh",
-        "text_metrics",
-        "events_windows",
-        "f10_email_postfilter",
-        "canonicalize",
-    ]
     qs = entrymod.queries()
     out = {}
     kinds_out = {}
-    for name in heavy:
+    for name in HEAVY:
         t0 = time.monotonic()
         df = qs[name](spark, sf_dir)
         t_build = time.monotonic() - t0

@@ -25,12 +25,12 @@ from .predicates import (
 )
 
 
-def admit_frontier(df: DataFrame, base_url_col: str = "base_url") -> DataFrame:
+def admit_frontier(df: DataFrame) -> DataFrame:
     """Adds the list column ``admitted`` (``array<struct<seq, v>>``): the
     page's admitted frontier URLs ``v`` over its ``hrefs`` array, each
     with ``seq``, the document position of its first occurrence (the
-    crawl-order key)."""
-    raw_base = F.col(base_url_col)
+    crawl-order key), resolved against the row's ``base_url``."""
+    raw_base = F.col("base_url")
     base = F.when(raw_base.endswith("/"), raw_base).otherwise(
         F.concat(raw_base, F.lit("/"))
     )

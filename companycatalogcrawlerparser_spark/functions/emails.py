@@ -47,16 +47,16 @@ def email_post_filter(email: Column) -> Column:
     )
 
 
-def finalize_emails(df: DataFrame, company_col: str = "company_id", email_col: str = "email") -> DataFrame:
+def finalize_emails(df: DataFrame) -> DataFrame:
     """Full F10 chain over a (company_id, email) DataFrame: distinct pair →
     predicate filter → subject trim → ≤150 length cap. Set-equivalent to
     ``refsem.predicates.finalize_emails`` (DataFrames are unordered; the
     reference's first-occurrence dedup keeps an identical pair anyway)."""
-    e = F.col(email_col)
+    e = F.col("email")
     return (
-        df.dropDuplicates([company_col, email_col])
+        df.dropDuplicates(["company_id", "email"])
         .filter(email_post_filter(e))
-        .withColumn(email_col, trim_email_with_subject(e))
+        .withColumn("email", trim_email_with_subject(e))
         .filter(F.length(e) <= 150)
     )
 

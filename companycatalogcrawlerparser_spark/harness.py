@@ -687,7 +687,7 @@ def _py_topk(kind: str):
     semantics: float64 left-fold dots (exact here: integer-valued
     vectors), HALF_UP 1e-6 rounding, (score desc, neighbor_id)
     tie-break, self excluded. IVF candidacy mirrors
-    ``similarity.cosine_topk_ivf`` at iters=0: pivots = the ANN_CELLS
+    ``similarity.cosine_topk_ivf``: pivots = the ANN_CELLS
     rows with smallest md5(id), cell = argmax cosine (round 1e-6, ties →
     higher index), query probes its ANN_NPROBE best cells."""
     import hashlib as _hl
@@ -1077,8 +1077,8 @@ FROM read_parquet('{p}')"""
 def q_ann_lsh_recall(spark, sf_dir) -> DataFrame:
     """Labeled union: recall@K vs the brute-force truth for BOTH
     approximate paths — kind='lsh' (hyperplane buckets) and kind='ivf'
-    (pivot coarse quantizer, iters=0 so the Python twin reproduces the
-    centroids exactly)."""
+    (the deterministic pivot coarse quantizer, which the Python twin
+    reproduces exactly)."""
     from .operators import similarity as SIM
 
     # NOT coalesced: unlike the sitemap fixtures this row is

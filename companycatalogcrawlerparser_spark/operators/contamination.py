@@ -11,12 +11,9 @@ shingles and the DuckDB twin can reproduce both from one fragment).
 
 Scale shape (the part that matters at 100 TB):
 
-- The benchmark side is reduced to DISTINCT shingles once and BROADCAST —
-  the common case by far: benchmark suites are MBs while the corpus is
-  TBs, so the corpus never shuffles. ``broadcast_bench=False`` keeps a
-  plain shuffle join on the shingle key for the rare huge-benchmark case;
-  shingle keys are near-uniform (high-cardinality substrings), so that
-  join has no skew story.
+- The benchmark side is reduced to DISTINCT shingles once and BROADCAST:
+  benchmark suites are MBs while the corpus is TBs, so the corpus never
+  shuffles.
 - The corpus side is ONE SCAN, ONE explode → (broadcast) LEFT join →
   groupBy(doc_id): ``n_shingles`` is carried through the explode as a
   ``size(shingles(text))`` column so the set size and the shared count
@@ -63,7 +60,6 @@ def contamination_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Per-document benchmark-overlap ratio.
 
@@ -98,11 +94,9 @@ def contamination_scores(
         .alias("n_shingles"),
         F.explode_outer("_sh").alias("shingle"),
     )
-    bench_sh = benchmark_shingles(benchmark, bench_text_col, k).withColumn(
-        "_hit", F.lit(1)
+    bench_sh = F.broadcast(
+        benchmark_shingles(benchmark, bench_text_col, k).withColumn("_hit", F.lit(1))
     )
-    if broadcast_bench:
-        bench_sh = F.broadcast(bench_sh)
     return (
         doc_sh.join(bench_sh, "shingle", "left")
         .groupBy(id_col)

@@ -621,7 +621,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # below this edge count the component labels are computed driver-side
 # (one collect of the DISTINCT edge set + a union-find sweep) instead of
 # the iterative star-contraction — the same size-gated discipline as the
-# redirect closure (sources/pages.py DRIVER_CLOSURE_MAX_ROWS): a near-dup
+# redirect closure (sources/pages.py DRIVER_CLOSURE_MAX_BYTES): a near-dup
 # pair graph is orders smaller than its corpus, each distributed star
 # round costs ~6 shuffle stages, and chain-shaped graphs need O(log² n)
 # rounds of pure stage overhead at this size. 200k edges ≈ 3 MB of long
@@ -997,8 +997,8 @@ def duplicate_lines(
     duplicated line hash: (line_hash, n_docs, n_occ, first_doc,
     first_pos), where (first_doc, first_pos) is the globally first
     occurrence (min (id, pos)) — the one :func:`remove_duplicate_lines`
-    keeps in keep_first mode. Blank lines (empty after trim) never
-    count: every document has them and they carry no content.
+    keeps. Blank lines (empty after trim) never count: every document
+    has them and they carry no content.
 
     Scale shape: two map-side-combinable aggregations — (line_hash, id)
     first (collapsing within-doc repeats so n_docs is a distinct-doc
@@ -1036,21 +1036,16 @@ def duplicate_lines(
 def remove_duplicate_lines(
     df: DataFrame,
     min_docs: int = 2,
-    keep_first: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
-    dup: DataFrame | None = None,
 ) -> DataFrame:
     """Rewrite ``text_col`` with corpus-duplicated lines removed, plus
-    ``n_removed_lines``. keep_first=True keeps the globally first
-    occurrence (min (id, pos)) and removes the rest — CCNet's
-    keep-one-copy discipline; keep_first=False removes every occurrence
-    — RefinedWeb's drop-boilerplate-outright discipline. Blank lines
-    are always kept (structure, not content); NULL text stays NULL
-    (n_removed_lines 0). Unlike the span path, untouched docs keep
-    their text BYTE-IDENTICAL — lines are removed whole, never
-    re-normalized. Pass a precomputed ``dup`` frame (from
-    :func:`duplicate_lines`) to reuse one detection across consumers.
+    ``n_removed_lines``. The globally first occurrence (min (id, pos))
+    is kept and the rest removed — CCNet's keep-one-copy discipline.
+    Blank lines are always kept (structure, not content); NULL text
+    stays NULL (n_removed_lines 0). Unlike the span path, untouched docs
+    keep their text BYTE-IDENTICAL — lines are removed whole, never
+    re-normalized.
 
     Scale shape: the removed-position probe joins line rows to the dup
     frame on line_hash (the only shuffle of line rows; a
@@ -1063,17 +1058,14 @@ def remove_duplicate_lines(
     and probe), the same deliberate trade as duplicate_spans: a
     re-evaluated codegen scan is embarrassingly parallel, a
     count-over-hash-partition window is not."""
-    if dup is None:
-        dup = duplicate_lines(df, min_docs, id_col, text_col)
+    dup = duplicate_lines(df, min_docs, id_col, text_col)
     rows = _line_rows(df, id_col, text_col).filter(~F.col("__blank"))
-    removed = rows.join(dup, rows["__lh"] == dup["line_hash"])
-    if keep_first:
-        removed = removed.filter(
-            ~(
-                (F.col(id_col) == F.col("first_doc"))
-                & (F.col("pos") == F.col("first_pos"))
-            )
+    removed = rows.join(dup, rows["__lh"] == dup["line_hash"]).filter(
+        ~(
+            (F.col(id_col) == F.col("first_doc"))
+            & (F.col("pos") == F.col("first_pos"))
         )
+    )
     per_doc = removed.groupBy(id_col).agg(
         F.collect_set("pos").alias("__rm")
     )

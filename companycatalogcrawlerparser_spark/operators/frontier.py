@@ -27,16 +27,10 @@ PRIO_CONTACT_ANCHOR = 1
 PRIO_CONTACT_HREF = 2
 
 
-def with_host(frontier: DataFrame, url_col: str = "url") -> DataFrame:
-    return frontier.withColumn("host", canonical_host(F.col(url_col)))
-
-
 def schedule(
     frontier: DataFrame,
     politeness: DataFrame | None = None,
     default_delay_ms: int = DEFAULT_DELAY_MS,
-    url_col: str = "url",
-    two_level: bool = True,
 ) -> DataFrame:
     """Adds ``host``, ``host_rank`` (0-based per-host fetch index) and
     ``not_before`` (logical ms offset within the round).
@@ -44,17 +38,15 @@ def schedule(
     ``politeness``: optional (host, delay_ms) table; a ``*`` row sets the
     default. Broadcast-joined (dimension-sized).
 
-    ``two_level`` (default): the per-host rank is computed as
-    intra-group rank + per-group offset, where a group is
-    (host, priority, company_id). The rank window then parallelizes over
-    groups, and the only per-host serial work is the offset cumsum over
-    GROUP-level rows (one per company, not one per URL) — at 100× scale a
-    hot host's frontier no longer lands in a single window task
-    (VERDICT r01 #5). ``two_level=False`` keeps the direct single window
-    (fewer stages; fine when no host dominates). Both produce identical
-    ranks: ordering is (priority, company_id, seq, url) either way.
+    The per-host rank is computed as intra-group rank + per-group offset,
+    where a group is (host, priority, company_id). The rank window then
+    parallelizes over groups, and the only per-host serial work is the
+    offset cumsum over GROUP-level rows (one per company, not one per
+    URL) — at 100× scale a hot host's frontier no longer lands in a
+    single window task (VERDICT r01 #5). The ranks equal a direct
+    per-host window's ordered by (priority, company_id, seq, url).
     """
-    df = with_host(frontier, url_col)
+    df = frontier.withColumn("host", canonical_host(F.col("url")))
 
     delay = F.lit(default_delay_ms)
     if politeness is not None:
@@ -69,42 +61,34 @@ def schedule(
         df = df.join(F.broadcast(dim), "host", "left")
         delay = F.coalesce(F.col("__host_delay"), F.lit(star_delay))
 
-    if two_level:
-        gkeys = ["host", "priority", "company_id"]
-        gw = Window.partitionBy(*gkeys).orderBy("seq", url_col)
-        ranked = df.withColumn("__gr", F.row_number().over(gw) - 1)
-        sizes = df.groupBy(*gkeys).agg(F.count("*").alias("__n"))
-        ow = (
-            Window.partitionBy("host")
-            .orderBy("priority", "company_id")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = sizes.select(
-            *gkeys, F.coalesce(F.sum("__n").over(ow), F.lit(0)).alias("__off")
-        )
-        df = (
-            ranked.join(offsets, gkeys)
-            .withColumn("host_rank", (F.col("__gr") + F.col("__off")).cast("long"))
-            .drop("__gr", "__off")
-        )
-    else:
-        w = Window.partitionBy("host").orderBy("priority", "company_id", "seq", url_col)
-        df = df.withColumn("host_rank", (F.row_number().over(w) - 1).cast("long"))
+    gkeys = ["host", "priority", "company_id"]
+    gw = Window.partitionBy(*gkeys).orderBy("seq", "url")
+    ranked = df.withColumn("__gr", F.row_number().over(gw) - 1)
+    sizes = df.groupBy(*gkeys).agg(F.count("*").alias("__n"))
+    ow = (
+        Window.partitionBy("host")
+        .orderBy("priority", "company_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = sizes.select(
+        *gkeys, F.coalesce(F.sum("__n").over(ow), F.lit(0)).alias("__off")
+    )
+    df = (
+        ranked.join(offsets, gkeys)
+        .withColumn("host_rank", (F.col("__gr") + F.col("__off")).cast("long"))
+        .drop("__gr", "__off")
+    )
 
     df = df.withColumn("not_before", F.col("host_rank") * delay)
     return df.drop("__host_delay") if politeness is not None else df
 
 
-def salted(
-    frontier: DataFrame, num_partitions: int, url_col: str = "url"
-) -> DataFrame:
-    """Post-stamp salted repartition: same host spreads over partitions by
-    its per-host rank, so the fetch+extract stage parallelizes hot hosts
-    while ``not_before`` stamps still serialize them logically."""
-    df = frontier
-    if "host_rank" not in df.columns:
-        df = schedule(df, url_col=url_col)
+def salted(frontier: DataFrame, num_partitions: int) -> DataFrame:
+    """Post-stamp salted repartition of a :func:`schedule`d frontier: same
+    host spreads over partitions by its per-host rank, so the
+    fetch+extract stage parallelizes hot hosts while ``not_before`` stamps
+    still serialize them logically."""
     salt = F.pmod(
         F.xxhash64(F.col("host"), F.col("host_rank")), F.lit(num_partitions)
     )
-    return df.withColumn("host_salt", salt).repartition(num_partitions, "host_salt")
+    return frontier.withColumn("host_salt", salt).repartition(num_partitions, "host_salt")

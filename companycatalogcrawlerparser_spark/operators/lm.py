@@ -158,7 +158,6 @@ def lm_logprob(
     model: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool = True,
     parts: tuple | None = None,
 ) -> DataFrame:
     """Every input doc decorated with ``lm_logp`` (Σ ln p(w|v) over its
@@ -168,10 +167,8 @@ def lm_logprob(
     docs — a convenience column; hash-sensitive consumers use the sum).
 
     The model joins twice (full key (v,w), then context fallback for
-    unseen-bigram terms) — both joins broadcast when
-    ``broadcast_model`` (reference-vocabulary-sized: CCNet models are
-    MBs against TB corpora); pass False to let AQE pick a shuffle join
-    for an unusually large reference.
+    unseen-bigram terms) — both joins broadcast (reference-vocabulary-
+    sized: CCNet models are MBs against TB corpora).
 
     ``parts`` (optional) is ``train_bigram_lm(..., with_parts=True)``'s
     ``(cvw, cv, voc)`` triple: the three model consumers below then
@@ -183,18 +180,17 @@ def lm_logprob(
     model row of a given v carries the same c_v/vocab; the vocab
     constant aggregates cv⋈voc so an empty reference yields NULL
     exactly like ``model.agg(max(vocab))`` does."""
-    bcast = F.broadcast if broadcast_model else (lambda df: df)
     bg = lm_bigrams(docs, id_col, text_col)
     if parts is not None:
         cvw, cv, voc = parts
-        pair = bcast(cvw.select("v", "w", "c_vw"))
-        ctx = bcast(cv.crossJoin(voc).select("v", "c_v", "vocab"))
+        pair = F.broadcast(cvw.select("v", "w", "c_vw"))
+        ctx = F.broadcast(cv.crossJoin(voc).select("v", "c_v", "vocab"))
         voc1 = F.broadcast(
             cv.crossJoin(voc).agg(F.max("vocab").alias("__voc"))
         )
     else:
-        pair = bcast(model.select("v", "w", "c_vw"))
-        ctx = bcast(
+        pair = F.broadcast(model.select("v", "w", "c_vw"))
+        ctx = F.broadcast(
             model.select("v", "c_v", "vocab").groupBy("v").agg(
                 F.first("c_v").alias("c_v"), F.first("vocab").alias("vocab")
             )

@@ -91,7 +91,6 @@ def _path_query(url_col):
 def gate_frontier(
     frontier: DataFrame,
     rules: DataFrame,
-    url_col: str = "url",
     keep_denied: bool = False,
 ) -> DataFrame:
     """Filter frontier rows whose URL the host's robots rules disallow.
@@ -104,8 +103,8 @@ def gate_frontier(
     """
     from ..functions.canon import canonical_host
 
-    df = frontier.withColumn("__rhost", canonical_host(F.col(url_col)))
-    df = df.withColumn("__rpath", _path_query(F.col(url_col)))
+    df = frontier.withColumn("__rhost", canonical_host(F.col("url")))
+    df = df.withColumn("__rpath", _path_query(F.col("url")))
 
     r = rules.filter(F.col("pattern").isNotNull()).select(
         F.col("host").alias("__rhost"),

@@ -281,54 +281,12 @@ def assign_cells(
     return df.withColumn("cell", argmax_cell(F.col(vec_col)))
 
 
-def kmeans_refine(
-    corpus: DataFrame,
-    cents: list,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list:
-    """Optional Lloyd refinement of the pivot centroids: assign (broadcast
-    literal centroids, JVM exprs) → elementwise mean per cell (posexplode
-    → groupBy(cell, pos) avg — map-side partial agg, one shuffle of
-    n_rows×dim scalars per iteration) → rebuild on the driver (centroid
-    count × dim floats). Cells that lose all members keep their pivot.
-
-    NOTE: float mean depends on aggregation order, so refined centroids
-    are not bit-reproducible across engines — the oracle-checked IVF row
-    uses the deterministic pivot quantizer (iters=0); refinement is the
-    production-quality knob (pytest asserts recall, not bytes)."""
-    dim = len(cents[0])
-    for _ in range(max(0, iters)):
-        assigned = assign_cells(corpus, cents, vec_col)
-        means = (
-            assigned.select(
-                "cell", F.posexplode(F.col(vec_col)).alias("pos", "x")
-            )
-            .groupBy("cell", "pos")
-            .agg(F.avg(F.col("x").cast("double")).alias("m"))
-            .collect()
-        )
-        new = [list(c) for c in cents]
-        touched = set()
-        for r in means:
-            new[r["cell"]][r["pos"]] = float(r["m"])
-            touched.add(r["cell"])
-        cents = [
-            new[i] if i in touched else list(cents[i])
-            for i in range(len(cents))
-        ]
-        assert all(len(c) == dim for c in cents)
-    return cents
-
-
 def cosine_topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    iters: int = 0,
     cents: list | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -338,9 +296,9 @@ def cosine_topk_ivf(
     centroid; each query probes its ``nprobe`` closest cells and exact
     cosine re-ranks the candidates. The equi-join on ``cell`` is the
     10^10-scale shape (no cross product; candidate volume =
-    nprobe/n_cells of the corpus per query on balanced cells).
-    ``iters>0`` runs Lloyd refinement (see :func:`kmeans_refine` note on
-    reproducibility). ``kernel`` selects the scale path: "arrow" uses the
+    nprobe/n_cells of the corpus per query on balanced cells). The
+    centroids are ``cents``, or by default the deterministic
+    :func:`ivf_pivots` quantizer. ``kernel`` selects the scale path: "arrow" uses the
     numpy-matmul cell assignment (:func:`assign_cells`) AND per-cell
     matmul candidate scoring with local top-k (:func:`_ivf_topk_arrow`)
     instead of the per-pair interpreted HOF dot — query-side cell
@@ -348,8 +306,6 @@ def cosine_topk_ivf(
     probe order is part of the pinned semantics)."""
     if cents is None:
         cents = ivf_pivots(corpus, n_cells, id_col, vec_col)
-        if iters:
-            cents = kmeans_refine(corpus, cents, iters, id_col, vec_col)
     if kernel == "arrow":
         return _ivf_topk_arrow(
             queries, corpus, cents, k, nprobe, id_col, vec_col

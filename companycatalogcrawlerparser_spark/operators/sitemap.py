@@ -77,14 +77,12 @@ def _gunzip_udf():
     return pandas_udf(lambda col: col.map(one), "string")
 
 
-def _with_xml(docs: DataFrame, cols: list, gzip_support: bool) -> DataFrame:
+def _with_xml(docs: DataFrame, cols: list) -> DataFrame:
     """``__raw`` binary → ``xml`` string, transparently gunzipping rows
-    with the gzip magic when ``gzip_support``. Plain-XML rows stay fully
-    JVM-native (split-union): the Arrow stage exists only on the
-    gz-filtered branch."""
+    with the gzip magic. Plain-XML rows stay fully JVM-native
+    (split-union): the Arrow stage exists only on the gz-filtered
+    branch."""
     raw = F.col("__raw")
-    if not gzip_support:
-        return docs.select(*cols, F.decode(raw, "UTF-8").alias("xml"))
     is_gz = F.coalesce(
         F.substring(raw, 1, 2) == F.lit(GZIP_MAGIC), F.lit(False)
     )
@@ -123,16 +121,12 @@ def _urlset_entries(docs: DataFrame, xml_col: str) -> DataFrame:
     )
 
 
-def sitemap_urls(
-    pages: DataFrame, roots: DataFrame, gzip_support: bool = True
-) -> DataFrame:
+def sitemap_urls(pages: DataFrame, roots: DataFrame) -> DataFrame:
     """(root_url, ord, url, lastmod) for every root sitemap URL —
     ``<sitemapindex>`` roots expand through a second corpus join; missing
     fetches (corpus has no row) drop out, exactly the oracle walk.
-    ``gzip_support`` (default on) transparently decompresses
-    gzip-compressed sitemap files (magic-byte branch, Arrow UDF over
-    protocol-bounded document counts only); pass False for the
-    all-native-plan variant when the corpus is known plain."""
+    gzip-compressed sitemap files decompress transparently (magic-byte
+    branch, Arrow UDF over protocol-bounded document counts only)."""
     corpus = pages.select(
         F.col("url").alias("__fetch_url"), F.col("html").alias("__corpus_raw")
     )
@@ -141,7 +135,6 @@ def sitemap_urls(
         .join(corpus, F.col("root_url") == F.col("__fetch_url"))
         .select("root_url", F.col("__corpus_raw").alias("__raw")),
         ["root_url"],
-        gzip_support,
     )
 
     is_index = F.col("xml").rlike(r"(?i)<sitemapindex\b")
@@ -160,7 +153,6 @@ def sitemap_urls(
         .join(corpus, F.col("nested_url") == F.col("__fetch_url"))
         .select("root_url", "nested_pos", F.col("__corpus_raw").alias("__raw")),
         ["root_url", "nested_pos"],
-        gzip_support,
     )
 
     entries = _urlset_entries(direct.unionByName(nested), "xml")
@@ -281,19 +273,13 @@ def recrawl_candidates(
     )
 
 
-def seeds_from_sitemaps(
-    pages: DataFrame, roots: DataFrame, url_seen=None
-) -> DataFrame:
+def seeds_from_sitemaps(pages: DataFrame, roots: DataFrame) -> DataFrame:
     """Frontier feed: distinct sitemap URLs (first root/ord occurrence
-    wins), optionally anti-joined against a url_seen table — the same
-    admission shape as any frontier source."""
+    wins)."""
     urls = sitemap_urls(pages, roots)
     w = Window.partitionBy("url").orderBy("root_url", "ord")
-    out = (
+    return (
         urls.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("url", "lastmod")
     )
-    if url_seen is not None:
-        out = out.join(url_seen.select("url"), "url", "left_anti")
-    return out

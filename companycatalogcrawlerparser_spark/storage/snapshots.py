@@ -85,36 +85,35 @@ class SnapshotStore:
                 manifest["tables"][name] = entry
         for obs in observations:
             manifest["counters"].update(obs.get)
+        return self._commit_manifest(manifest)
+
+    def _commit_manifest(self, manifest: dict) -> dict:
+        """Writes the round's manifest to a temp file, fsyncs it and
+        renames it into place: the rename is the atomic commit point."""
+        round_id = manifest["round"]
         tmp = os.path.join(self.root, "manifests", f".round-{round_id}.json.tmp")
         final = os.path.join(self.root, "manifests", f"round-{round_id}.json")
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp, final)  # the atomic commit point
+        os.rename(tmp, final)
         return manifest
 
     # -- trainer shard handoff -------------------------------------------------
 
     def commit_shards(
-        self,
-        round_id: int,
-        df: DataFrame,
-        *,
-        shard_col: str = "shard_id",
-        order_col: Optional[str] = None,
-        table: str = "shards",
-        counters: Optional[Dict[str, int]] = None,
+        self, round_id: int, df: DataFrame, *, order_col: Optional[str] = None
     ) -> dict:
         """Write the packed training shards (``pack_shards`` /
         ``global_order_index`` output) as ONE directory per shard —
-        ``data/round=K/<table>/<shard_col>=N/`` — under the same atomic
+        ``data/round=K/shards/shard_id=N/`` — under the same atomic
         manifest-rename commit as a crawl round, so kill/resume semantics
         cover the trainer's final artifact too: a killed write leaves an
         orphan dir the next run ignores (no manifest) and overwrites.
 
         Scale shape: ONE Spark job for any number of shards — hash
-        repartition on ``shard_col`` (each shard's rows land on one task;
+        repartition on ``shard_id`` (each shard's rows land on one task;
         shards are ~budget-token sized by construction, so tasks are
         bounded and skew-free) + ``sortWithinPartitions`` (rows inside
         each shard file are in ``order_col`` order — the trainer streams
@@ -124,48 +123,33 @@ class SnapshotStore:
         """
         from pyspark.sql import functions as F
 
-        data_dir = os.path.join(self.root, "data", f"round={round_id}")
-        path = os.path.join(data_dir, table)
-        sort_cols = [shard_col] + ([order_col] if order_col else [])
+        path = os.path.join(self.root, "data", f"round={round_id}", "shards")
+        sort_cols = ["shard_id"] + ([order_col] if order_col else [])
         (
-            df.repartition(F.col(shard_col))
+            df.repartition(F.col("shard_id"))
             .sortWithinPartitions(*sort_cols)
             .write.mode("overwrite")
-            .partitionBy(shard_col)
+            .partitionBy("shard_id")
             .parquet(path)
         )
-        shard_ids = sorted(
-            int(fn.split("=", 1)[1])
-            for fn in os.listdir(path)
-            if fn.startswith(f"{shard_col}=")
-        )
-        manifest: dict = {
+        n_shards = sum(fn.startswith("shard_id=") for fn in os.listdir(path))
+        return self._commit_manifest({
             "round": round_id,
             "tables": {
-                table: {
+                "shards": {
                     "path": path,
-                    "partitioned_by": shard_col,
-                    "n_shards": len(shard_ids),
+                    "partitioned_by": "shard_id",
+                    "n_shards": n_shards,
                 }
             },
-            "counters": counters or {},
-        }
-        tmp = os.path.join(
-            self.root, "manifests", f".round-{round_id}.json.tmp"
-        )
-        final = os.path.join(self.root, "manifests", f"round-{round_id}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, final)  # the atomic commit point
-        return manifest
+            "counters": {},
+        })
 
-    def shard_ids(self, round_id: int, table: str = "shards") -> list:
+    def shard_ids(self, round_id: int) -> list:
         """Committed shard ids in ascending (= train) order. Listing goes
         through the manifest, so orphan dirs from killed writes are
         invisible until their round commits."""
-        entry = self.manifest(round_id)["tables"][table]
+        entry = self.manifest(round_id)["tables"]["shards"]
         pref = entry["partitioned_by"] + "="
         return sorted(
             int(fn.split("=", 1)[1])
@@ -173,12 +157,10 @@ class SnapshotStore:
             if fn.startswith(pref)
         )
 
-    def read_shard(
-        self, round_id: int, shard_id: int, table: str = "shards"
-    ) -> DataFrame:
+    def read_shard(self, round_id: int, shard_id: int) -> DataFrame:
         """One shard's rows, in written (``order_col``) order when read
         single-file — the trainer's per-shard stream."""
-        entry = self.manifest(round_id)["tables"][table]
+        entry = self.manifest(round_id)["tables"]["shards"]
         return self.spark.read.parquet(
             os.path.join(entry["path"], f"{entry['partitioned_by']}={shard_id}")
         )

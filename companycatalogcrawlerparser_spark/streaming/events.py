@@ -13,12 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-FETCH_EVENT_SCHEMA = (
-    "ts timestamp, url string, host string, company_id long, ok boolean, "
-    "bytes long, emails_found int"
-)
-
-
 def host_budget_state(
     events: DataFrame, delay_ms: int = 1000
 ) -> DataFrame:

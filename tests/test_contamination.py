@@ -112,23 +112,3 @@ class TestContamination:
         r = got[1]
         assert r["n_shingles"] == 0 and r["n_shared"] == 0
         assert r["overlap"] == 0.0 and not r["contaminated"]
-
-    def test_shuffle_join_variant_equal(self, spark):
-        docs, bench = self._frames(spark)
-        a = sorted(
-            map(
-                tuple,
-                CT.contamination_scores(
-                    docs, bench, broadcast_bench=True
-                ).collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                CT.contamination_scores(
-                    docs, bench, broadcast_bench=False
-                ).collect(),
-            )
-        )
-        assert a == b

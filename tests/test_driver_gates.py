@@ -106,16 +106,16 @@ class TestDenseIdsGate:
         df = spark.createDataFrame([(v,) for v in vals], ["email"])
         driver = {
             r["email"]: r["email_id"]
-            for r in M.assign_dense_ids(df, "email", "email_id", offset=7).collect()
+            for r in M.assign_dense_ids(df, "email", "email_id").collect()
         }
         monkeypatch.setattr(M, "IDS_DRIVER_MAX_BYTES", -1)
         dist = {
             r["email"]: r["email_id"]
-            for r in M.assign_dense_ids(df, "email", "email_id", offset=7).collect()
+            for r in M.assign_dense_ids(df, "email", "email_id").collect()
         }
         assert dist == driver
-        # dense, offset-anchored, no gaps
-        assert sorted(driver.values()) == list(range(8, 8 + len(vals)))
+        # dense from 1, no gaps
+        assert sorted(driver.values()) == list(range(1, 1 + len(vals)))
 
     def test_wide_rows_take_distributed_path(self, spark, monkeypatch):
         """The gate counts bytes, not rows: three 2 MiB keys are over it
@@ -126,9 +126,9 @@ class TestDenseIdsGate:
         def ids(out):
             return {r["email"][0]: r["email_id"] for r in out.collect()}
 
-        wide = M.assign_dense_ids(df, "email", "email_id", offset=3)
+        wide = M.assign_dense_ids(df, "email", "email_id")
         assert "LocalTableScan" not in wide._jdf.queryExecution().executedPlan().toString()
         monkeypatch.setattr(M, "IDS_DRIVER_MAX_BYTES", 1 << 30)
-        driver = M.assign_dense_ids(df, "email", "email_id", offset=3)
+        driver = M.assign_dense_ids(df, "email", "email_id")
         assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
-        assert ids(wide) == ids(driver) == {"a": 4, "b": 5, "c": 6}
+        assert ids(wide) == ids(driver) == {"a": 1, "b": 2, "c": 3}

@@ -1,6 +1,6 @@
 """Line-level corpus dedup (operators.dedup.duplicate_lines /
-remove_duplicate_lines — the CCNet (Wenzek et al. 2020) keep-first /
-RefinedWeb (Penedo et al. 2023) drop-boilerplate line-dedup semantics).
+remove_duplicate_lines — the CCNet (Wenzek et al. 2020) keep-first
+line-dedup semantics).
 Oracle here is a brute-force pure-Python line counter + rewriter over
 the same trimmed-line space; the driver row (dedup_groups kind='lines')
 adds the DuckDB SQL twin under the hash signal."""
@@ -34,7 +34,7 @@ def _py_dup_lines(docs, min_docs):
     }
 
 
-def _py_removed(docs, min_docs, keep_first):
+def _py_removed(docs, min_docs):
     dup = _py_dup_lines(docs, min_docs)
     out = {}
     for doc_id, text in docs:
@@ -45,7 +45,7 @@ def _py_removed(docs, min_docs, keep_first):
         for pos, line in enumerate(text.split("\n")):
             key = line.strip()
             hit = key in dup
-            if hit and keep_first and dup[key][2:] == (doc_id, pos):
+            if hit and dup[key][2:] == (doc_id, pos):
                 hit = False
             if hit:
                 removed += 1
@@ -67,31 +67,24 @@ CORPUS = [
 ]
 
 
-def _run(spark, docs, min_docs=2, keep_first=True):
+def _run(spark, docs, min_docs=2):
     df = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in docs], "doc_id long, text string"
     )
     got = {
         r["doc_id"]: (r["text"], r["n_removed_lines"])
-        for r in D.remove_duplicate_lines(
-            df, min_docs=min_docs, keep_first=keep_first
-        ).collect()
+        for r in D.remove_duplicate_lines(df, min_docs=min_docs).collect()
     }
     return got
 
 
 def test_keep_first_matches_python_oracle(spark):
-    got = _run(spark, CORPUS, keep_first=True)
-    assert got == _py_removed(CORPUS, 2, True)
-
-
-def test_remove_all_matches_python_oracle(spark):
-    got = _run(spark, CORPUS, keep_first=False)
-    assert got == _py_removed(CORPUS, 2, False)
+    got = _run(spark, CORPUS)
+    assert got == _py_removed(CORPUS, 2)
 
 
 def test_keep_first_keeps_exactly_one_global_copy(spark):
-    got = _run(spark, CORPUS, keep_first=True)
+    got = _run(spark, CORPUS)
     survivors = [
         (i, pos)
         for i, (t, _) in got.items()
@@ -104,19 +97,19 @@ def test_keep_first_keeps_exactly_one_global_copy(spark):
 
 
 def test_untouched_doc_text_is_byte_identical(spark):
-    got = _run(spark, CORPUS, keep_first=True)
+    got = _run(spark, CORPUS)
     assert got[3] == ("solo doc\nsolo doc\nsolo doc", 0)
 
 
 def test_blank_lines_never_removed_and_never_count(spark):
-    got = _run(spark, CORPUS, keep_first=False)
+    got = _run(spark, CORPUS)
     # doc 1's "   " blank line survives even though doc-blank lines
     # appear in several docs' trimmed space
     assert "   " in got[1][0].split("\n")
 
 
 def test_whole_doc_boilerplate_excises_to_empty(spark):
-    got = _run(spark, CORPUS, keep_first=False)
+    got = _run(spark, CORPUS)
     assert got[5] == ("", 1)
 
 
@@ -126,8 +119,10 @@ def test_null_text_stays_null(spark):
 
 
 def test_min_docs_threshold(spark):
-    # at min_docs=3 the pair line (docs 6,7) no longer triggers
-    got = _run(spark, CORPUS, min_docs=3, keep_first=False)
+    # at min_docs=3 the pair line (docs 6,7) no longer triggers: doc 7
+    # keeps the copy it loses at min_docs=2
+    assert _run(spark, CORPUS)[7] == ("before", 1)
+    got = _run(spark, CORPUS, min_docs=3)
     assert got[6] == ("shared pair line\nafter", 0)
     assert got[7] == ("before\nshared pair line", 0)
 
@@ -163,16 +158,3 @@ def test_dedup_against_prior_snapshot(spark):
     out = D.dedup_against(new, seen)
     assert sorted(r["doc_id"] for r in out.collect()) == [11, 13]
     assert "content_hash" in out.columns  # rolls the seen set forward
-
-
-def test_precomputed_dup_frame_reused(spark):
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in CORPUS],
-        "doc_id long, text string",
-    )
-    dup = D.duplicate_lines(df, min_docs=2)
-    got = {
-        r["doc_id"]: (r["text"], r["n_removed_lines"])
-        for r in D.remove_duplicate_lines(df, dup=dup).collect()
-    }
-    assert got == _py_removed(CORPUS, 2, True)

@@ -112,11 +112,14 @@ class TestBloom:
 
 
 class TestTwoLevelPoliteness:
-    """schedule(two_level=True) must rank identically to the direct
-    per-host window while keeping the per-host serial work at GROUP
-    granularity (VERDICT r01 #5)."""
+    """schedule's two-level rank (intra-group rank + per-group offset)
+    must rank identically to the direct per-host window while keeping the
+    per-host serial work at GROUP granularity (VERDICT r01 #5)."""
 
     def test_ranks_match_single_window(self, spark):
+        from pyspark.sql import Window
+
+        from companycatalogcrawlerparser_spark.functions.canon import canonical_host
         from companycatalogcrawlerparser_spark.operators import frontier as FR
 
         rows = []
@@ -131,11 +134,18 @@ class TestTwoLevelPoliteness:
         )
         a = {
             (r["url"]): (r["host"], r["host_rank"], r["not_before"])
-            for r in FR.schedule(df, two_level=True).collect()
+            for r in FR.schedule(df).collect()
         }
+        # the reference: one direct window per host
+        w = Window.partitionBy("host").orderBy("priority", "company_id", "seq", "url")
+        rank = F.row_number().over(w) - 1
+        direct = df.withColumn("host", canonical_host(F.col("url"))).select(
+            "url", "host", rank.alias("host_rank"),
+            (rank * FR.DEFAULT_DELAY_MS).alias("not_before"),
+        )
         b = {
             (r["url"]): (r["host"], r["host_rank"], r["not_before"])
-            for r in FR.schedule(df, two_level=False).collect()
+            for r in direct.collect()
         }
         assert a == b
         # budget property: per-host gaps of delay_ms
@@ -163,10 +173,10 @@ class TestAssignDenseIds:
         df = spark.createDataFrame([(v,) for v in vals], ["email"])
         got = {
             r["email"]: r["email_id"]
-            for r in assign_dense_ids(df, "email", "email_id", offset=5).collect()
+            for r in assign_dense_ids(df, "email", "email_id").collect()
         }
         expected = {
-            r["email"]: r["rn"] + 5
+            r["email"]: r["rn"]
             for r in df.withColumn(
                 "rn", F.row_number().over(Window.orderBy("email"))
             ).collect()
@@ -175,7 +185,7 @@ class TestAssignDenseIds:
         # stability: recompute → identical ids
         got2 = {
             r["email"]: r["email_id"]
-            for r in assign_dense_ids(df, "email", "email_id", offset=5).collect()
+            for r in assign_dense_ids(df, "email", "email_id").collect()
         }
         assert got2 == got
 
@@ -510,27 +520,6 @@ class TestSimilarity:
         )
         assert a == b
 
-    def test_kmeans_refine_keeps_dim_and_recall(self, spark):
-        """Lloyd refinement returns same-shape centroids and the refined
-        quantizer still finds exact duplicates (production-quality knob;
-        bytes not pinned — see kmeans_refine docstring)."""
-        emb = self._emb(spark, n=60)
-        pivots = SIM.ivf_pivots(emb, 6)
-        refined = SIM.kmeans_refine(emb, pivots, iters=2)
-        assert len(refined) == 6 and all(len(c) == 8 for c in refined)
-        dup = emb.union(
-            spark.createDataFrame(
-                [(1000, emb.filter(F.col("vec_id") == 0).first()["embedding"])],
-                "vec_id long, embedding array<float>",
-            )
-        )
-        q0 = dup.filter(F.col("vec_id") == 0)
-        out = SIM.cosine_topk_ivf(
-            q0, dup, k=3, n_cells=6, nprobe=2, cents=refined
-        )
-        top = sorted(out.collect(), key=lambda r: r["rank"])
-        assert top and top[0]["neighbor_id"] == 1000
-
     def test_cosine_pairs_threshold(self, spark):
         rows = [
             (1, [1.0, 0.0, 0.0, 0.0]),
@@ -800,6 +789,12 @@ class TestTextQuality:
 
 
 class TestStreaming:
+    # the per-fetch event log a production crawl emits
+    FETCH_EVENT_SCHEMA = (
+        "ts timestamp, url string, host string, company_id long, ok boolean, "
+        "bytes long, emails_found int"
+    )
+
     def test_host_budget_state_counts_violations_across_batches(
         self, spark, tmp_path
     ):
@@ -821,16 +816,16 @@ class TestStreaming:
         # batch 1: a.ru at 0 and 400ms (1 violation), b.ru at 0
         spark.createDataFrame(
             [ev("a.ru", 0), ev("a.ru", 400), ev("b.ru", 0)],
-            SE.FETCH_EVENT_SCHEMA,
+            self.FETCH_EVENT_SCHEMA,
         ).coalesce(1).write.mode("append").parquet(src)
         # batch 2: a.ru at 900ms — 500ms after its batch-1 tail: violation
         # only if state crossed the boundary; b.ru at 5000ms (clean)
         spark.createDataFrame(
-            [ev("a.ru", 900), ev("b.ru", 5000)], SE.FETCH_EVENT_SCHEMA
+            [ev("a.ru", 900), ev("b.ru", 5000)], self.FETCH_EVENT_SCHEMA
         ).coalesce(1).write.mode("append").parquet(src)
 
         stream = (
-            spark.readStream.schema(SE.FETCH_EVENT_SCHEMA)
+            spark.readStream.schema(self.FETCH_EVENT_SCHEMA)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
@@ -878,7 +873,7 @@ class TestStreaming:
             )
 
         def drain():
-            stream = spark.readStream.schema(SE.FETCH_EVENT_SCHEMA).parquet(src)
+            stream = spark.readStream.schema(self.FETCH_EVENT_SCHEMA).parquet(src)
             q = (
                 SE.host_budget_state(stream, delay_ms=1000)
                 .writeStream.format("parquet")
@@ -891,12 +886,12 @@ class TestStreaming:
             q.awaitTermination()
 
         spark.createDataFrame(
-            [ev(0)], SE.FETCH_EVENT_SCHEMA
+            [ev(0)], self.FETCH_EVENT_SCHEMA
         ).coalesce(1).write.mode("append").parquet(src)
         drain()  # run 1 ends; state (last_ts=0ms) lives in the checkpoint
 
         spark.createDataFrame(
-            [ev(600)], SE.FETCH_EVENT_SCHEMA
+            [ev(600)], self.FETCH_EVENT_SCHEMA
         ).coalesce(1).write.mode("append").parquet(src)
         drain()  # fresh query, same checkpoint
 

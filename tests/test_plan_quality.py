@@ -101,9 +101,33 @@ class TestRedirectResolution:
     def test_distributed_closure_equals_driver(self, spark, monkeypatch):
         from companycatalogcrawlerparser_spark.sources import pages as PG
 
-        monkeypatch.setattr(PG, "DRIVER_CLOSURE_MAX_ROWS", -1)
+        monkeypatch.setattr(PG, "DRIVER_CLOSURE_MAX_BYTES", -1)
         pages = spark.createDataFrame(self.ROWS, self.SCHEMA)
         self._check(PG.redirect_map(pages).collect())
+
+    def test_wide_rows_take_distributed_path(self, spark, monkeypatch):
+        """The gate counts bytes, not rows: three redirects whose 11 MiB
+        locations sum past it take the distributed path, with the driver
+        path's result."""
+        from companycatalogcrawlerparser_spark.sources import pages as PG
+
+        # urls over 80 chars admit a location of any length
+        rows = [(f"http://w.ru/{c * 90}", 301, f"http://w.ru/{c * (11 << 20)}", None)
+                for c in "abc"]
+        pages = spark.createDataFrame(rows, self.SCHEMA)
+
+        def got(rm):
+            return sorted((r["src_url"][12], r["resolved_url"][12], len(r["resolved_url"]),
+                           r["resolve_error"], r["hops"]) for r in rm.collect())
+
+        wide = PG.redirect_map(pages)
+        assert "LocalTableScan" not in wide._jdf.queryExecution().executedPlan().toString()
+        monkeypatch.setattr(PG, "DRIVER_CLOSURE_MAX_BYTES", 1 << 30)
+        driver = PG.redirect_map(pages)
+        assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
+        assert got(wide) == got(driver) == [
+            (c, c, 12 + (11 << 20), None, 1) for c in "abc"
+        ]
 
 
 class TestJoinStrategies:
@@ -213,14 +237,10 @@ class TestSimilarityPlans:
             "url string, html binary",
         )
         roots = spark.createDataFrame([(u,) for u in H.SITEMAP_ROOTS], ["url"])
-        # gzip_support=False: the whole plan is JVM-native
-        plan = _plan(SM.sitemap_urls(pages, roots, gzip_support=False))
-        for node in ("BatchEvalPython", "ArrowEvalPython", "CartesianProduct",
-                     "BroadcastNestedLoopJoin"):
-            assert node not in plan
-        # default (gzip on): Python allowed ONLY on the gz-magic branch;
-        # still no cartesian anywhere
+        # Python runs ONLY on the gz-magic branch (the Arrow gunzip);
+        # no cartesian anywhere
         plan = _plan(SM.sitemap_urls(pages, roots))
+        assert "BatchEvalPython" not in plan
         for node in ("CartesianProduct", "BroadcastNestedLoopJoin"):
             assert node not in plan
 

@@ -156,6 +156,8 @@ NON_TEST_GLOBS = ("*.py", "perfbench/*.py", "tools/*.py", f"{PKG}/**/*.py")
 CATALOG = "catalog plan entry point (paper component 1, the catalog scrape)"
 MAILER = "mailer plan entry point (paper component 3, the mailer batches)"
 WEBGEN = "webgen page builder for test corpora"
+SHARD_READER = ("the reader half of commit_shards' layout, so that format "
+                "stays known to one module")
 
 # Public functions no non-test module names, each kept for the reason
 # given. Any other such function is code only its own tests run: delete
@@ -183,8 +185,8 @@ UNREACHED_FUNCTIONS = {
     "operators/dedup.py::winnow_oversized_prints": "the audit "
         "test_winnow_skew_cap_observed_matches_audit checks the in-job "
         "winnowing cap against",
-    "storage/snapshots.py::SnapshotStore.read_shard": "the reader half of "
-        "commit_shards' layout, so that format stays known to one module",
+    "storage/snapshots.py::SnapshotStore.read_shard": SHARD_READER,
+    "storage/snapshots.py::SnapshotStore.shard_ids": SHARD_READER,
 }
 
 
@@ -253,3 +255,68 @@ def test_every_public_function_is_referenced_or_listed():
     assert sorted(set(unreferenced) - set(UNREACHED_FUNCTIONS)) == []
     # the list names only functions that exist and are unreferenced
     assert sorted(set(UNREACHED_FUNCTIONS) - set(unreferenced)) == []
+
+
+def _bool_parameters() -> dict:
+    """``"<path in package>::<name>"`` → (name, {parameter: position}) for
+    every public function outside ``refsem/`` (see ``_public_functions``)
+    whose parameters include one with a ``True``/``False`` default. The
+    position counts ``self``/``cls`` out of a method's parameters;
+    keyword-only parameters have position None."""
+    out = {}
+    for key, (name, (path, line)) in _public_functions().items():
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        fn = next(n for n in ast.walk(tree)
+                  if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                  and n.name == name and n.lineno == line)
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        if "." in key.split("::")[1] and positional and positional[0].arg in ("self", "cls"):
+            positional = positional[1:]
+        flags = {}
+        for i, (p, d) in enumerate(zip(positional[len(positional) - len(a.defaults):],
+                                       a.defaults)):
+            if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                flags[p.arg] = len(positional) - len(a.defaults) + i
+        for p, d in zip(a.kwonlyargs, a.kw_defaults):
+            if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                flags[p.arg] = None
+        if flags:
+            out[key] = (name, flags)
+    return out
+
+
+def _passed_parameters(name: str, flags: dict) -> set:
+    """The parameters in ``flags`` that some call of ``name`` (a plain or
+    attribute call) in a non-test module passes, by keyword or by
+    position; a ``**`` splat passes every keyword, a ``*`` splat every
+    position from its own on."""
+    passed = set()
+    for g in NON_TEST_GLOBS:
+        for path in glob.glob(os.path.join(ROOT, g), recursive=True):
+            for node in ast.walk(ast.parse(open(path, encoding="utf-8").read())):
+                if not (isinstance(node, ast.Call) and getattr(
+                        node.func, "id", getattr(node.func, "attr", None)) == name):
+                    continue
+                words = {k.arg for k in node.keywords}
+                star = next((i for i, x in enumerate(node.args)
+                             if isinstance(x, ast.Starred)), None)
+                for param, pos in flags.items():
+                    if (param in words or None in words
+                            or (pos is not None and pos < len(node.args))
+                            or (pos is not None and star is not None and pos >= star)):
+                        passed.add(param)
+    return passed
+
+
+def test_every_bool_parameter_is_passed_or_listed():
+    """A ``True``/``False`` parameter no non-test module passes selects a
+    branch only tests run: delete the branch and the parameter rather
+    than maintain them."""
+    unpassed = sorted(
+        f"{key}({param})"
+        for key, (name, flags) in _bool_parameters().items()
+        if key not in UNREACHED_FUNCTIONS
+        for param in sorted(set(flags) - _passed_parameters(name, flags))
+    )
+    assert unpassed == []

@@ -16,7 +16,7 @@ from companycatalogcrawlerparser_spark.functions import admission as NA
 from companycatalogcrawlerparser_spark.operators import extract as X
 from companycatalogcrawlerparser_spark.plans.crawl import CrawlConfig, run_crawl
 from companycatalogcrawlerparser_spark.sources import webgen
-from companycatalogcrawlerparser_spark.sources.pages import fetch_join
+from companycatalogcrawlerparser_spark.sources.pages import fetch_join, redirect_map
 from companycatalogcrawlerparser_spark.storage.snapshots import SnapshotStore
 
 N_COMPANIES = 20
@@ -88,7 +88,7 @@ class TestPreconditions:
              (4, "http://b.ru/"), (5, "http://e.ru/"), (6, "http://x.ru/")],
             "company_id long, url string",
         )
-        got = fetch_join(frontier, pages)
+        got = fetch_join(frontier, pages, redirect_map(pages))
         assert sorted(tuple(r) for r in got.select("company_id", "page_url").collect()) \
             == sorted(tuple(r) for r in frontier.collect())
         plan = got._sc._jvm.PythonSQLUtils.explainString(

@@ -66,18 +66,21 @@ class TestSparkSitemap:
         want = sorted(RSM.crawl_sitemaps(H.SITEMAP_FIXTURES, H.SITEMAP_ROOTS))
         assert got == want
 
-    def test_seeds_feed_dedup_and_seen(self, spark):
+    def test_seeds_feed_dedup(self, spark):
+        """One row per sitemap url, carrying its first (root, ord)
+        occurrence's lastmod."""
         pages, roots = self._fixture_dfs(spark)
-        seen = spark.createDataFrame(
-            [("http://firm-b.ru/p/1",)], ["url"]
+        got = sorted(
+            (r["url"], r["lastmod"])
+            for r in SM.seeds_from_sitemaps(pages, roots).collect()
         )
-        out = {
-            r["url"]
-            for r in SM.seeds_from_sitemaps(pages, roots, url_seen=seen).collect()
-        }
-        assert "http://firm-b.ru/p/1" not in out
-        assert "http://firm-b.ru/p/2" in out
-        assert "http://firm-a.ru/" in out
+        first = {}
+        for root, ord_, url, lastmod in sorted(
+                RSM.crawl_sitemaps(H.SITEMAP_FIXTURES, H.SITEMAP_ROOTS)):
+            first.setdefault(url, lastmod)
+        assert got == sorted(first.items())
+        assert "http://firm-b.ru/p/1" in first
+        assert "http://firm-a.ru/" in first
 
     def test_recrawl_candidates(self, spark):
         """new = never fetched; stale = lastmod after last fetch; absent
@@ -172,17 +175,8 @@ class TestSparkSitemap:
         for v in vals:
             assert got[v] == RSM.parse_lastmod(v), repr(v)
 
-    def test_plan_stays_native(self, spark):
-        """gzip_support=False: the whole two-round plan is JVM-native."""
-        pages, roots = self._fixture_dfs(spark)
-        plan = (
-            SM.sitemap_urls(pages, roots, gzip_support=False)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
     def test_gzip_sitemaps_parse_and_plain_branch_stays_native(self, spark):
-        """Default gzip_support: .xml.gz roots parse (magic-byte Arrow
+        """.xml.gz roots parse (magic-byte Arrow
         branch), plain docs still flow the native branch — the Python
         stage sits only under the gzip filter."""
         pages, roots = self._fixture_dfs(spark)

@@ -931,7 +931,7 @@ def _task_action(spark, task: str, data_dir: str):
                     "emptied_docs": int(got[3])}
     elif task == "linededup":
         # CCNet/RefinedWeb line dedup (dedup.remove_duplicate_lines,
-        # keep_first) at corpus scale: reshape the 40-token single-line
+        # keep-first) at corpus scale: reshape the 40-token single-line
         # docs into 5 lines of 8 tokens (native slice+concat,
         # pre-materialized — the operator is what's measured), with a
         # hot boilerplate line appended to every 10th doc and a second

@@ -14,21 +14,8 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import HEAVY  # noqa: E402
 from companycatalogcrawlerparser_spark.session import get_spark  # noqa: E402
-
-HEAVY = [
-    "j4_big_join_agg",
-    "dedup_groups",
-    "minhash",
-    "graph_ops",
-    "corpus_curation",
-    "ann_bruteforce",
-    "ann_lsh",
-    "text_metrics",
-    "events_windows",
-    "f10_email_postfilter",
-    "canonicalize",
-]
 
 
 def main():
