@@ -57,13 +57,11 @@ def contamination_scores(
     *,
     k: int = 8,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bench_text_col: str = "text",
 ) -> DataFrame:
     """Per-document benchmark-overlap ratio.
 
-    Returns one row per input doc: ``(id_col, n_shingles, n_shared,
+    Returns one row per input doc: ``(doc_id, n_shingles, n_shared,
     overlap, contaminated)`` where ``overlap = n_shared / n_shingles``
     over DISTINCT char k-shingles of the ``dedup.normalized`` text and
     ``contaminated = overlap >= threshold``. Docs with zero benchmark
@@ -80,14 +78,14 @@ def contamination_scores(
     # DISTINCT bench side matches each doc shingle at most once -> the
     # hit count is |doc ∩ bench|.
     doc_sh = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         # shingles(NULL) is array(NULL) — a one-element set of nothing;
         # map NULL text to a NULL set so it decorates as n_shingles=0
-        F.when(F.col(text_col).isNull(), F.lit(None))
-        .otherwise(shingles(F.col(text_col), k))
+        F.when(F.col("text").isNull(), F.lit(None))
+        .otherwise(shingles(F.col("text"), k))
         .alias("_sh"),
     ).select(
-        id_col,
+        "doc_id",
         F.when(F.col("_sh").isNull(), F.lit(0))
         .otherwise(F.size("_sh"))
         .cast("long")
@@ -99,13 +97,13 @@ def contamination_scores(
     )
     return (
         doc_sh.join(bench_sh, "shingle", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.max("n_shingles").alias("n_shingles"),
             F.count("_hit").cast("long").alias("n_shared"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             "n_shared",
             F.when(

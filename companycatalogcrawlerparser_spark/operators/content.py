@@ -17,9 +17,8 @@ semantics so it hash-verifies against the pure-Python twin
 3. per block, two densities over the TAG-STRIPPED text:
    text length, and anchor-text length (chars that disappear when <a>
    elements are removed before stripping);
-4. keep blocks with text length ≥ ``min_chars`` AND anchor share ≤
-   ``max_link_pct`` % (integer cross-multiplication — no float in the
-   decision);
+4. keep blocks with text length ≥ 25 chars AND anchor share ≤ 35 %
+   (integer cross-multiplication — no float in the decision);
 5. reassemble kept blocks in document order, newline-joined; pages
    with nothing kept decorate as '' (total — never silently dropped).
 
@@ -48,6 +47,9 @@ BLOCK_TAGS = (
 )
 _BLOCK_SPLIT = rf"(?i)</?(?:{BLOCK_TAGS})\b[^>]*>"
 _WS = r"[ \t\n\r\f]+"
+# the keep thresholds, the defaults of refsem.content.main_content
+_MIN_CHARS = 25
+_MAX_LINK_PCT = 35
 
 
 def _sanitized(html) -> Column:
@@ -112,21 +114,16 @@ def to_markdown(html) -> Column:
     return F.regexp_replace(h, r"^[ \t\n\r\f]+|[ \t\n\r\f]+$", "")
 
 
-def main_content(
-    pages: DataFrame,
-    url_col: str = "page_url",
-    html_col: str = "html",
-    min_chars: int = 25,
-    max_link_pct: int = 35,
-) -> DataFrame:
-    """(url, main_text, n_blocks, n_kept) per input page. ``n_blocks``
-    counts every split segment (empties included — the segmentation
-    itself is part of the pinned contract); ``n_kept`` the survivors.
+def main_content(pages: DataFrame) -> DataFrame:
+    """(page_url, main_text, n_blocks, n_kept) per input (page_url, html)
+    page. ``n_blocks`` counts every split segment (empties included — the
+    segmentation itself is part of the pinned contract); ``n_kept`` the
+    survivors.
     """
     blocks = pages.select(
-        F.col(url_col),
+        F.col("page_url"),
         F.posexplode(
-            F.split(_sanitized(F.col(html_col)), _BLOCK_SPLIT, -1)
+            F.split(_sanitized(F.col("html")), _BLOCK_SPLIT, -1)
         ).alias("__pos", "__blk"),
     )
     txt = _text_of(F.col("__blk"))
@@ -138,7 +135,7 @@ def main_content(
         F.col("__blk"), r"(?is)<a\b[^>]*>.*?</a>", " "
     )
     scored = blocks.select(
-        url_col,
+        "page_url",
         "__pos",
         txt.alias("__txt"),
         F.greatest(
@@ -146,13 +143,13 @@ def main_content(
         ).alias("__alen"),
     ).withColumn(
         "__keep",
-        (F.length("__txt") >= min_chars)
+        (F.length("__txt") >= _MIN_CHARS)
         & (
             F.col("__alen") * 100
-            <= F.lit(int(max_link_pct)) * F.length("__txt")
+            <= F.lit(_MAX_LINK_PCT) * F.length("__txt")
         ),
     )
-    per_page = scored.groupBy(url_col).agg(
+    per_page = scored.groupBy("page_url").agg(
         F.count(F.lit(1)).alias("n_blocks"),
         F.sum(F.col("__keep").cast("long")).alias("n_kept"),
         F.concat_ws(
@@ -170,8 +167,8 @@ def main_content(
             ),
         ).alias("main_text"),
     )
-    return pages.select(url_col).join(per_page, url_col, "left").select(
-        url_col,
+    return pages.select("page_url").join(per_page, "page_url", "left").select(
+        "page_url",
         F.coalesce("main_text", F.lit("")).alias("main_text"),
         F.coalesce("n_blocks", F.lit(0)).alias("n_blocks"),
         F.coalesce("n_kept", F.lit(0)).alias("n_kept"),

@@ -68,7 +68,6 @@ def stratified_sample(
     df: DataFrame,
     rates: dict[str, int],
     strata_col: str,
-    key_col: str = "doc_id",
     salt: str = "",
     denom: int = 10000,
     default_keep: int = 0,
@@ -83,7 +82,7 @@ def stratified_sample(
     return (
         df.join(F.broadcast(rdf), strata_col, "left")
         .filter(
-            sample_bucket(F.col(key_col), salt, denom)
+            sample_bucket(F.col("doc_id"), salt, denom)
             < F.coalesce(F.col("__keep"), F.lit(default_keep))
         )
         .drop("__keep")
@@ -169,7 +168,6 @@ def cap_per_domain(
     df: DataFrame,
     domain_col: str,
     cap: int,
-    key_col: str = "doc_id",
     salt: str = "",
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -213,7 +211,7 @@ def cap_per_domain(
     what the rank-everything single-branch alternative does. Callers
     holding the input in memory/disk cache pay nothing extra.
 
-    Requires ``key_col`` globally unique (md5 ties would make ranks
+    Requires ``doc_id`` globally unique (md5 ties would make ranks
     arbitrary). NULL domains never match the broadcast join and so pass
     through uncapped — treat NULL as "no domain", pre-coalesce if NULL
     should be a real group.
@@ -230,7 +228,7 @@ def cap_per_domain(
         "domain_rank", F.lit(None).cast("long")
     )
     hot = df.join(F.broadcast(over), domain_col, "left_semi").withColumn(
-        "__ok", shuffle_order_key(F.col(key_col), salt)
+        "__ok", shuffle_order_key(F.col("doc_id"), salt)
     )
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # same AQE hazard as pack_shards: __pid must be frozen as data
@@ -342,19 +340,20 @@ def exact_quantiles(
 def upsample_epochs(
     df: DataFrame,
     factor: float,
-    key_col: str = "doc_id",
     salt: str = "",
 ) -> DataFrame:
     """Fractional source upsampling for training-mix recipes (the
     LLaMA-style "this source for 2.3 epochs"): every row is replicated
     ``⌊factor⌋`` times, plus one more for the deterministic
-    ``frac(factor)`` share chosen by the md5 gate on (key, salt) — so
+    ``frac(factor)`` share chosen by the md5 gate on (doc_id, salt) — so
     the EXPECTED corpus weight is exactly ``factor`` and the realized
-    copy set is a pure function of (key, salt): partition-invariant
+    copy set is a pure function of (doc_id, salt): partition-invariant
     and identical on every cluster. Adds ``epoch`` (0-based copy
-    index); compose the order key over (key, epoch) — e.g.
-    ``shuffle_order_key(F.concat_ws("|", key, epoch))`` — so copies
-    scatter through the training stream instead of clustering.
+    index); compose the order key over (doc_id, epoch) — e.g.
+    ``shuffle_order_key(F.concat_ws("|", doc_id, epoch))`` — so copies
+    scatter through the training stream instead of clustering
+    (:func:`global_order_index` keys on ``doc_id`` alone, so the copies
+    would tie there).
 
     Plan shape: one gate expression + one explode of a
     ``sequence(0, copies-1)`` literal — no join, no shuffle; rows with
@@ -373,7 +372,7 @@ def upsample_epochs(
     whole = int(math.floor(factor))
     gate = int(round((float(factor) - whole) * 10_000))
     copies = F.lit(whole) + F.when(
-        sample_bucket(F.col(key_col), salt) < gate, F.lit(1)
+        sample_bucket(F.col("doc_id"), salt) < gate, F.lit(1)
     ).otherwise(F.lit(0))
     return (
         df.withColumn("__copies", copies)
@@ -505,7 +504,6 @@ def shuffle_order_key(key: Column, salt: str = "") -> Column:
 
 def global_order_index(
     df: DataFrame,
-    key_col: str = "doc_id",
     salt: str = "",
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -521,11 +519,11 @@ def global_order_index(
     IS :func:`pack_shards` with one token per row and a budget of 1: the
     running count of rows BEFORE a row, div 1, is exactly its 0-based
     global index, and the distributed prefix sum already computes that
-    without ever materializing a global window. Requires ``key_col``
+    without ever materializing a global window. Requires ``doc_id``
     values unique (md5 of a unique key is collision-free in practice;
     ties would make positions arbitrary within the tie)."""
     keyed = df.withColumn(
-        "order_key", shuffle_order_key(F.col(key_col), salt)
+        "order_key", shuffle_order_key(F.col("doc_id"), salt)
     ).withColumn("__one", F.lit(1).cast("long"))
     return (
         pack_shards(
@@ -610,7 +608,6 @@ def split_sequences(
 
 def concat_packed_sequences(
     df: DataFrame,
-    shard_col: str = "shard_id",
     order_col: str = "train_pos",
     token_col: str = "n_tok",
     text_col: str = "text",
@@ -619,7 +616,7 @@ def concat_packed_sequences(
     texts concatenated in ``order_col`` order and the doc-boundary
     START OFFSETS in token coordinates — what an attention mask needs to
     stop cross-document attention inside a packed context window.
-    Returns (shard, ``n_docs``, ``n_tokens``, ``boundaries``
+    Returns (``shard_id``, ``n_docs``, ``n_tokens``, ``boundaries``
     array<long>, ``text``). Run it on :func:`pack_shards` (or
     :func:`split_sequences` → pack_shards) output, where each shard's
     member set is budget-bounded.
@@ -657,11 +654,11 @@ def concat_packed_sequences(
         ),
     )
     return (
-        df.groupBy(shard_col)
+        df.groupBy("shard_id")
         .agg(xs.alias("__xs"))
         .withColumn("__f", fold)
         .select(
-            shard_col,
+            "shard_id",
             F.size("__xs").cast("long").alias("n_docs"),
             F.col("__f")["tot"].alias("n_tokens"),
             F.col("__f")["offs"].alias("boundaries"),

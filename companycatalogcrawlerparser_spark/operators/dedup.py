@@ -177,8 +177,7 @@ def _lsh_banded(
 
 
 def minhash_lsh_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 5, num_hashes: int = 12, bands: int = 4,
+    df: DataFrame, k: int = 5, num_hashes: int = 12, bands: int = 4,
     max_bucket: int | None = 256,
     observation=None,
     sig: DataFrame | None = None,
@@ -213,7 +212,7 @@ def minhash_lsh_pairs(
     # NB under AQE a lazy localCheckpoint materializes upstream stages when
     # the first action touches it — fine here, the result is always used.
     banded = _lsh_banded(
-        df, id_col, text_col, k, num_hashes, bands, sig=sig
+        df, "doc_id", "text", k, num_hashes, bands, sig=sig
     ).localCheckpoint(eager=False)
     # bucket-size gate as a WINDOW count: one shuffle on (band,key) over
     # the checkpointed rows, no extra join
@@ -239,11 +238,9 @@ def minhash_lsh_pairs(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
     return pairs
@@ -302,9 +299,7 @@ def ngram_jaccard_pairs(
 
 
 def jaccard_verify(
-    df: DataFrame, pairs: DataFrame,
-    id_col: str = "doc_id", text_col: str = "text", k: int = 5,
-    threshold: float = 0.0,
+    df: DataFrame, pairs: DataFrame, k: int = 5, threshold: float = 0.0,
 ) -> DataFrame:
     """Exact shingle-Jaccard for a CANDIDATE pair set — the verification
     stage the LSH/winnow/simhash generators feed at 10^10-doc scale,
@@ -329,33 +324,31 @@ def jaccard_verify(
         .distinct()
     )
     docs = df.join(
-        cand_ids, F.col(id_col) == F.col("__id"), "left_semi"
+        cand_ids, F.col("doc_id") == F.col("__id"), "left_semi"
     )
     ex = docs.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), k)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles(F.col("text"), k)).alias("shingle")
     )
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = ex.alias("a"), ex.alias("b")
     shared = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .join(pairs.select("id_a", "id_b").distinct(), ["id_a", "id_b"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
     return (
         shared.join(
-            sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"),
+            sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"),
             "id_a",
         )
         .join(
-            sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"),
+            sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"),
             "id_b",
         )
         .withColumn(
@@ -426,8 +419,7 @@ def winnow_prints(
 
 
 def winnow_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 8, window: int = 4, min_shared: int = 3,
+    df: DataFrame, k: int = 8, window: int = 4, min_shared: int = 3,
     max_bucket: int | None = 256,
     observation=None,
 ) -> DataFrame:
@@ -454,7 +446,7 @@ def winnow_pairs(
     metric wired (r5 verdict: at 1M docs the cap dropped 51,607
     print-rows and that number should ride the producing job, not a
     second scan)."""
-    ex = winnow_prints(df, id_col, text_col, k, window)
+    ex = winnow_prints(df, k=k, window=window)
     if max_bucket is not None:
         bw = Window.partitionBy("fp")
         ex = ex.withColumn("__n", F.count("*").over(bw))
@@ -472,12 +464,9 @@ def winnow_pairs(
         a.join(
             b,
             (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -732,24 +721,22 @@ def connected_components(
     return members.unionByName(roots).distinct()
 
 
-def dedup_clusters(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """(id, cluster_id, is_rep) over ALL docs: docs in the pair graph get
     their component's min id, untouched docs are their own singleton
     cluster; ``is_rep`` marks the one kept representative per cluster.
     Survivor selection for the composed pipeline is then
     ``filter(is_rep)`` — cluster-correct where the per-pair anti-join
     over-drops chains (see module note above)."""
-    cc = connected_components(pairs).withColumnRenamed("node", id_col)
+    cc = connected_components(pairs).withColumnRenamed("node", "doc_id")
     return (
-        df.select(id_col)
-        .join(cc, id_col, "left")
+        df.select("doc_id")
+        .join(cc, "doc_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
+            F.col("doc_id"),
+            F.coalesce("component", F.col("doc_id")).alias("cluster_id"),
         )
-        .withColumn("is_rep", F.col(id_col) == F.col("cluster_id"))
+        .withColumn("is_rep", F.col("doc_id") == F.col("cluster_id"))
     )
 
 
@@ -874,11 +861,9 @@ def remove_duplicate_spans(
     df: DataFrame,
     n: int = 50,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     spans: DataFrame | None = None,
 ) -> DataFrame:
-    """Rewrite ``text_col`` with every :func:`duplicate_spans` span cut
+    """Rewrite ``text`` with every :func:`duplicate_spans` span cut
     out (tokens outside spans re-joined with single spaces), plus
     ``n_removed_tokens``. The output text is the NORMALIZED form even
     for untouched docs — removal is defined in normalized-token space,
@@ -900,13 +885,13 @@ def remove_duplicate_spans(
     first (``.select(F.xxhash64("text").alias("h")).agg(F.sum("h"))``),
     which keeps the HOF in a Project and the agg over a column ref."""
     if spans is None:
-        spans = duplicate_spans(df, n, min_count, id_col, text_col)
-    per_doc = spans.groupBy(id_col).agg(
+        spans = duplicate_spans(df, n, min_count)
+    per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
     toks = df.withColumn(
-        "__toks", F.split(normalized(F.col(text_col)), " ")
-    ).join(per_doc, id_col, "left")
+        "__toks", F.split(normalized(F.col("text")), " ")
+    ).join(per_doc, "doc_id", "left")
     kept = F.when(F.col("__spans").isNull(), F.col("__toks")).otherwise(
         F.filter(
             "__toks",
@@ -916,15 +901,15 @@ def remove_duplicate_spans(
             ),
         )
     )
-    out_cols = [c for c in df.columns if c != text_col]
+    out_cols = [c for c in df.columns if c != "text"]
     return (
         toks.withColumn("__kept", kept)
         .select(
             *out_cols,
             F.when(
-                F.col(text_col).isNull(), F.lit(None).cast("string")
-            ).otherwise(F.concat_ws(" ", "__kept")).alias(text_col),
-            F.when(F.col(text_col).isNull(), F.lit(0).cast("long"))
+                F.col("text").isNull(), F.lit(None).cast("string")
+            ).otherwise(F.concat_ws(" ", "__kept")).alias("text"),
+            F.when(F.col("text").isNull(), F.lit(0).cast("long"))
             .otherwise(
                 (F.size("__toks") - F.size("__kept")).cast("long")
             )

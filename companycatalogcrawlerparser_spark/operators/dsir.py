@@ -74,8 +74,6 @@ def dsir_log_ratios(
     n: int = 2,
     num_buckets: int = 10_000,
     alpha: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     target_features: Optional[DataFrame] = None,
     raw_features: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -102,7 +100,7 @@ def dsir_log_ratios(
         feats = (
             pre
             if pre is not None
-            else dsir_features(d, n, num_buckets, id_col, text_col)
+            else dsir_features(d, n, num_buckets)
         )
         return feats.groupBy("bucket").agg(F.count(F.lit(1)).alias(name))
 
@@ -149,8 +147,6 @@ def dsir_scores(
     ratios: DataFrame,
     n: int = 2,
     num_buckets: int = 10_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     features: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Every input doc decorated with its importance score: the sum of
@@ -167,52 +163,43 @@ def dsir_scores(
     feats = (
         features
         if features is not None
-        else dsir_features(docs, n, num_buckets, id_col, text_col)
+        else dsir_features(docs, n, num_buckets)
     )
     per_doc = (
         feats.join(
             F.broadcast(ratios.select("bucket", "log_ratio")), "bucket"
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("log_ratio").alias("__s"),
             F.count(F.lit(1)).alias("__nf"),
         )
     )
-    return docs.join(per_doc, id_col, "left").select(
+    return docs.join(per_doc, "doc_id", "left").select(
         *docs.columns,
         F.coalesce("__s", F.lit(0.0)).alias("dsir_score"),
         F.coalesce("__nf", F.lit(0)).alias("n_features"),
     )
 
 
-def dsir_select(
-    scored: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    salt: str = "",
-    gumbel: bool = True,
-) -> DataFrame:
-    """Top-``k`` of the scored frame. With ``gumbel=True`` (the paper's
-    sampling): rank by ``dsir_score + Gumbel(id)`` where the Gumbel
-    noise is −log(−log(u)) with u the doc's md5 gate bucket mapped to
-    (0, 1) — the standard Gumbel-top-k construction, which draws k docs
-    without replacement with probability ∝ exp(score), here made a pure
-    deterministic function of (id, salt). With ``gumbel=False``: plain
-    argmax-k (the paper's "top-k" ablation). Ties break on the id, so
-    the selected SET is unique and partition-invariant either way.
+def dsir_select(scored: DataFrame, k: int, salt: str = "") -> DataFrame:
+    """Top-``k`` of the scored frame by the paper's sampling: rank by
+    ``dsir_score + Gumbel(doc_id)`` where the Gumbel noise is
+    −log(−log(u)) with u the doc's md5 gate bucket mapped to (0, 1) —
+    the standard Gumbel-top-k construction, which draws k docs without
+    replacement with probability ∝ exp(score), here made a pure
+    deterministic function of (doc_id, salt). Ties break on the id, so
+    the selected SET is unique and partition-invariant.
 
     Plan shape: orderBy+limit compiles to TakeOrdered — per-partition
     top-k then a k-row merge at the driver; the corpus never globally
     sorts."""
-    key = F.col("dsir_score").cast("double")
-    if gumbel:
-        u = (
-            sample_bucket(F.col(id_col), salt).cast("double") + F.lit(0.5)
-        ) / F.lit(float(_GATE_DENOM))
-        key = key + (-F.log(-F.log(u)))
+    u = (
+        sample_bucket(F.col("doc_id"), salt).cast("double") + F.lit(0.5)
+    ) / F.lit(float(_GATE_DENOM))
+    key = F.col("dsir_score").cast("double") + (-F.log(-F.log(u)))
     return (
         scored.withColumn("select_key", key)
-        .orderBy(F.desc("select_key"), F.col(id_col))
+        .orderBy(F.desc("select_key"), F.col("doc_id"))
         .limit(k)
     )

@@ -95,8 +95,6 @@ def lm_bigrams(
 
 def train_bigram_lm(
     ref: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     with_parts: bool = False,
 ) -> DataFrame:
     """The model as ONE DataFrame: (v, w, c_vw, c_v, vocab) — bigram
@@ -115,7 +113,7 @@ def train_bigram_lm(
     scoring call. Values are identical by construction: cv is keyed
     uniquely by v and covers every v in cvw, so the inner join never
     drops or duplicates a bigram row."""
-    bg = lm_bigrams(ref, id_col, text_col)
+    bg = lm_bigrams(ref)
     # ONE reference scan (r8; was three): c_v = Σ_w c_vw and vocab =
     # |distinct w of the bigram keys| are both derivable from the bigram
     # count table itself, so the context totals and the vocab constant
@@ -156,8 +154,6 @@ def _logp(c_vw, c_v, vocab) -> Column:
 def lm_logprob(
     docs: DataFrame,
     model: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     parts: tuple | None = None,
 ) -> DataFrame:
     """Every input doc decorated with ``lm_logp`` (Σ ln p(w|v) over its
@@ -180,7 +176,7 @@ def lm_logprob(
     model row of a given v carries the same c_v/vocab; the vocab
     constant aggregates cv⋈voc so an empty reference yields NULL
     exactly like ``model.agg(max(vocab))`` does."""
-    bg = lm_bigrams(docs, id_col, text_col)
+    bg = lm_bigrams(docs)
     if parts is not None:
         cvw, cv, voc = parts
         pair = F.broadcast(cvw.select("v", "w", "c_vw"))
@@ -203,7 +199,7 @@ def lm_logprob(
         .join(ctx, "v", "left")
         .crossJoin(voc1)
         .select(
-            id_col,
+            "doc_id",
             _logp(
                 F.coalesce(F.col("c_vw"), F.lit(0)).cast("double"),
                 F.coalesce(F.col("c_v"), F.lit(0)).cast("double"),
@@ -211,10 +207,10 @@ def lm_logprob(
             ).alias("__lp"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.sum("__lp").alias("__s"), F.count(F.lit(1)).alias("__n")
     )
-    return docs.join(per_doc, id_col, "left").select(
+    return docs.join(per_doc, "doc_id", "left").select(
         *docs.columns,
         F.round(F.coalesce("__s", F.lit(0.0)), 6).alias("lm_logp"),
         F.coalesce("__n", F.lit(0)).alias("n_lm_terms"),

@@ -8,8 +8,6 @@ at 100 TB scan scale.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -362,12 +360,12 @@ GOPHER_THRESHOLDS = {
 }
 
 
-def gopher_gate(metric_cols: dict, thresholds: Optional[dict] = None) -> Column:
-    """Boolean pass/fail over already-computed metric columns. Missing
-    metrics are skipped, so callers gate on any subset."""
-    th = thresholds or GOPHER_THRESHOLDS
+def gopher_gate(metric_cols: dict) -> Column:
+    """Boolean pass/fail of :data:`GOPHER_THRESHOLDS` over already-computed
+    metric columns. Missing metrics are skipped, so callers gate on any
+    subset."""
     out = F.lit(True)
-    for name, (lo, hi) in th.items():
+    for name, (lo, hi) in GOPHER_THRESHOLDS.items():
         if name not in metric_cols:
             continue
         c = metric_cols[name]

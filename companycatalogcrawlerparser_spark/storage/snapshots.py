@@ -102,21 +102,20 @@ class SnapshotStore:
 
     # -- trainer shard handoff -------------------------------------------------
 
-    def commit_shards(
-        self, round_id: int, df: DataFrame, *, order_col: Optional[str] = None
-    ) -> dict:
-        """Write the packed training shards (``pack_shards`` /
-        ``global_order_index`` output) as ONE directory per shard —
-        ``data/round=K/shards/shard_id=N/`` — under the same atomic
-        manifest-rename commit as a crawl round, so kill/resume semantics
-        cover the trainer's final artifact too: a killed write leaves an
-        orphan dir the next run ignores (no manifest) and overwrites.
+    def commit_shards(self, round_id: int, df: DataFrame) -> dict:
+        """Write the packed training shards (``global_order_index`` then
+        ``pack_shards`` output: ``shard_id`` and ``train_pos`` columns) as
+        ONE directory per shard — ``data/round=K/shards/shard_id=N/`` —
+        under the same atomic manifest-rename commit as a crawl round, so
+        kill/resume semantics cover the trainer's final artifact too: a
+        killed write leaves an orphan dir the next run ignores (no
+        manifest) and overwrites.
 
         Scale shape: ONE Spark job for any number of shards — hash
         repartition on ``shard_id`` (each shard's rows land on one task;
         shards are ~budget-token sized by construction, so tasks are
         bounded and skew-free) + ``sortWithinPartitions`` (rows inside
-        each shard file are in ``order_col`` order — the trainer streams
+        each shard file are in ``train_pos`` order — the trainer streams
         a shard without sorting) + dynamic ``partitionBy`` (one file per
         shard per task — and each shard lives in exactly one task, so one
         file per shard). Never a per-shard driver loop of write jobs.
@@ -124,10 +123,9 @@ class SnapshotStore:
         from pyspark.sql import functions as F
 
         path = os.path.join(self.root, "data", f"round={round_id}", "shards")
-        sort_cols = ["shard_id"] + ([order_col] if order_col else [])
         (
             df.repartition(F.col("shard_id"))
-            .sortWithinPartitions(*sort_cols)
+            .sortWithinPartitions("shard_id", "train_pos")
             .write.mode("overwrite")
             .partitionBy("shard_id")
             .parquet(path)
@@ -158,7 +156,7 @@ class SnapshotStore:
         )
 
     def read_shard(self, round_id: int, shard_id: int) -> DataFrame:
-        """One shard's rows, in written (``order_col``) order when read
+        """One shard's rows, in written (``train_pos``) order when read
         single-file — the trainer's per-shard stream."""
         entry = self.manifest(round_id)["tables"]["shards"]
         return self.spark.read.parquet(

@@ -135,15 +135,13 @@ class TestDsir:
         docs = _mk(spark, RAW)
         ratios = DS.dsir_log_ratios(_mk(spark, TARGET), docs, num_buckets=B)
         scored = DS.dsir_scores(docs, ratios, num_buckets=B)
-        plain = DS.dsir_select(scored, 2, gumbel=False)
-        # scores: 10 ≈ 0.61, featureless 14/15 = 0.0 (tie → lower id),
-        # 12 ≈ −0.49 — plain argmax-2 is {10, 14}
-        assert {r["doc_id"] for r in plain.collect()} == {10, 14}
+        # Gumbel-top-k: the top 3 of score + Gumbel(id), ties to the
+        # lower id
         exp_scores = _py_scores(RAW, TARGET, RAW)
         want = sorted(
             ((exp_scores[i][0] + _py_gumbel(i), -i), i) for i, _ in RAW
         )[-3:]
-        got = DS.dsir_select(scored, 3, gumbel=True)
+        got = DS.dsir_select(scored, 3)
         assert {r["doc_id"] for r in got.collect()} == {i for _, i in want}
 
     def test_partition_invariance(self, spark):

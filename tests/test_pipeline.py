@@ -1,15 +1,17 @@
 """curate_training_corpus: the composed curation chain as a product
 surface — stage semantics, end-to-end determinism across partitionings,
-and the optional atomic shard artifact."""
+and the configuration its non-test caller runs."""
 
 import hashlib
+import math
+import re
+from collections import Counter
 
 from companycatalogcrawlerparser_spark.plans.pipeline import (
     CurationConfig,
     curate_training_corpus,
     pages_to_docs,
 )
-from companycatalogcrawlerparser_spark.storage.snapshots import SnapshotStore
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the crawler "
@@ -24,6 +26,38 @@ def _words(seed: str, n: int = 20) -> str:
     return " ".join(
         hashlib.md5(f"{seed}-{k}".encode()).hexdigest()[:8] for k in range(n)
     )
+
+
+def _py_dsir_scores(raw, target, num_buckets=10_000, alpha=0.5):
+    """doc_id → DSIR score of each ``raw`` (doc_id, text) row toward
+    ``target``: hashed word bigrams (md5 of the normalized bigram, first
+    15 hex digits, mod ``num_buckets``), Laplace-smoothed log ratio of
+    the target and raw bucket distributions, summed per doc."""
+
+    def feats(text):
+        toks = re.sub(r"\s+", " ", text.strip().lower()).split(" ")
+        return [
+            int(hashlib.md5(" ".join(toks[i:i + 2]).encode())
+                .hexdigest()[:15], 16) % num_buckets
+            for i in range(len(toks) - 1)
+        ]
+
+    tc = Counter(b for _, t in target for b in feats(t))
+    rc = Counter(b for _, t in raw for b in feats(t))
+    tt, rt = sum(tc.values()), sum(rc.values())
+
+    def log_ratio(b):
+        return (math.log((tc[b] + alpha) / (tt + alpha * num_buckets))
+                - math.log((rc[b] + alpha) / (rt + alpha * num_buckets)))
+
+    return {i: sum(log_ratio(b) for b in feats(t)) for i, t in raw}
+
+
+def _py_gumbel(doc_id):
+    """The Gumbel noise dsir_select adds: −log(−log(u)), u the doc's md5
+    gate bucket (first 8 hex digits mod 10,000) mapped into (0, 1)."""
+    g = int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) % 10000
+    return -math.log(-math.log((g + 0.5) / 10000.0))
 
 
 def _corpus(spark):
@@ -91,44 +125,6 @@ class TestCuratePipeline:
             map(tuple, b.select(cols).collect())
         )
 
-    def test_shard_artifact(self, spark, tmp_path):
-        store = SnapshotStore(spark, str(tmp_path / "store"))
-        packed = curate_training_corpus(
-            _corpus(spark), _bench(spark), CFG, store=store, round_id=7
-        )
-        n = packed.count()
-        assert store.last_round() == 7
-        sids = store.shard_ids(7)
-        total = 0
-        seen_pos = []
-        for sid in sids:
-            rows = store.read_shard(7, sid).collect()
-            total += len(rows)
-            seen_pos.extend(r["train_pos"] for r in rows)
-        assert total == n
-        # shard-sequential read is the global training order
-        assert seen_pos == sorted(seen_pos)
-
-    def test_gopher_stage(self, spark):
-        import dataclasses
-
-        docs = _corpus(spark).unionByName(
-            spark.createDataFrame(
-                [(400, "spam ham " * 40)], "doc_id long, text string"
-            )
-        )
-        # fixture docs are short, so gate only on the repetition rule
-        cfg = dataclasses.replace(
-            CFG, gopher=True,
-            gopher_thresholds={"dup5gram_frac": (None, 0.15)},
-        )
-        kept = {r["doc_id"] for r in
-                curate_training_corpus(docs, None, cfg).collect()}
-        assert 400 not in kept and 0 in kept and 100 in kept
-        kept_off = {r["doc_id"] for r in
-                    curate_training_corpus(docs, None, CFG).collect()}
-        assert 400 in kept_off
-
     def test_exactsubstr_stage(self, spark):
         import dataclasses
 
@@ -169,160 +165,88 @@ class TestCuratePipeline:
                     .collect()}
         assert "footer" in rows_off[500]["text"]
 
-    def test_domain_cap_stage(self, spark):
-        import dataclasses
-
-        rows = [
-            (i, f"document {i} {_words(str(i))}",
-             "mega.example" if i % 2 == 0 else f"tail{i % 5}.example")
-            for i in range(60)
-        ]
-        docs = spark.createDataFrame(
-            rows, "doc_id long, text string, domain string"
-        )
-        cfg = dataclasses.replace(
-            CFG, domain_col="domain", domain_cap=10
-        )
-        out = curate_training_corpus(docs, None, cfg)
-        got = out.collect()
-        # helper rank column is internal; domain itself is carried
-        assert "domain_rank" not in out.columns
-        from collections import Counter
-
-        per = Counter(r["domain"] for r in got)
-        assert per["mega.example"] == 10  # 30 clean docs, capped
-        assert all(
-            per[f"tail{k}.example"] == 6 for k in range(5)
-        )  # under cap: untouched
-        # the capped survivor set is the md5-permutation prefix
-        import hashlib
-
-        mega = sorted(
-            (i for i, _, d in rows if d == "mega.example"),
-            key=lambda i: hashlib.md5(str(i).encode()).hexdigest(),
-        )[:10]
-        assert {r["doc_id"] for r in got if r["domain"] == "mega.example"
-                } == set(mega)
-        # cap off → everything survives
-        assert curate_training_corpus(docs, None, CFG).count() == 60
-
     def test_dsir_stage(self, spark):
-        import dataclasses
-
-        docs = _corpus(spark)
-        # target = the texts of docs 3 and 7 — those two docs (their
-        # bigram distributions) must dominate the importance ranking
-        target = spark.createDataFrame(
-            [(0, f"document 3 {_words('3')}"),
-             (1, f"document 7 {_words('7')}")],
-            "doc_id long, text string",
-        )
-        cfg = dataclasses.replace(
-            CFG, dsir_k=5, dsir_buckets=256, dsir_gumbel=False
-        )
-        out = curate_training_corpus(
-            docs, None, cfg, dsir_target=target
-        )
-        got = {r["doc_id"]: r for r in out.collect()}
-        assert len(got) == 5
-        assert 3 in got and 7 in got
-        assert "dsir_score" in out.columns
-        assert min(got[3]["dsir_score"], got[7]["dsir_score"]) > max(
-            r["dsir_score"] for i, r in got.items() if i not in (3, 7)
-        )
-        # stage off → no dsir column, nothing dropped by it
-        off = curate_training_corpus(docs, None, CFG)
-        assert "dsir_score" not in off.columns
-
-    def test_lm_ppl_gate_stage(self, spark):
         import dataclasses
 
         import pytest
 
         docs = _corpus(spark)
-        # reference = the texts of docs 0-9: those docs score head-ish
-        # (their bigrams are IN the model); the md5-word docs beyond
-        # share no bigrams and land in the tail
-        ref = docs.filter("doc_id < 10").select("doc_id", "text")
-        # measured per-token −logp under this ref: docs 0-9 = 4.594
-        # (their bigrams ARE the model), md5-word docs 10-39 = 5.252,
-        # BASE/pii/bench docs ≈ 5.36 — cutoffs sit mid-gap
-        cfg = dataclasses.replace(
-            CFG, lm_head_max=4.9, lm_tail_min=5.3, lm_keep=("head",)
+        # target = the texts of docs 3 and 7 — those two docs (their
+        # bigram distributions) must dominate the importance ranking
+        target_rows = [(0, f"document 3 {_words('3')}"),
+                       (1, f"document 7 {_words('7')}")]
+        target = spark.createDataFrame(
+            target_rows, "doc_id long, text string"
         )
-        out = curate_training_corpus(docs, None, cfg, lm_ref=ref)
-        kept = {r["doc_id"] for r in out.select("doc_id").collect()}
-        assert kept == set(range(10))
-        # middle band = the out-of-model md5 docs; tail stays dropped
-        cfg2 = dataclasses.replace(cfg, lm_keep=("head", "middle"))
-        kept2 = {
-            r["doc_id"]
-            for r in curate_training_corpus(docs, None, cfg2, lm_ref=ref)
-            .select("doc_id").collect()
-        }
-        assert kept2 == set(range(40))
-        # helper columns don't leak into the packed frame
-        assert not {"lm_logp", "n_lm_terms", "ppl", "__pb"} & set(
-            out.columns
+        cfg = dataclasses.replace(CFG, dsir_k=5)
+        out = curate_training_corpus(
+            docs, None, cfg, dsir_target=target
         )
-        # per-language map (CCNet proper): 'en' covers the whole
-        # fixture → same result as the scalar cutoffs
-        cfg3 = dataclasses.replace(
-            CFG, lm_cutoffs_by_lang={"en": (4.9, 5.3)}, lm_keep=("head",)
-        )
-        kept3 = {
-            r["doc_id"]
-            for r in curate_training_corpus(docs, None, cfg3, lm_ref=ref)
-            .select("doc_id").collect()
-        }
-        assert kept3 == set(range(10))
-        # a map that names NO present language and no scalar fallback →
-        # every doc buckets 'middle' (kept by the default lm_keep)
-        cfg4 = dataclasses.replace(
-            CFG, lm_cutoffs_by_lang={"ru": (1.0, 2.0)}
-        )
-        n4 = curate_training_corpus(docs, None, cfg4, lm_ref=ref).count()
-        assert n4 == curate_training_corpus(docs, None, CFG).count()
-        # cutoffs are mandatory when the stage is enabled
-        with pytest.raises(ValueError, match="lm_head_max"):
-            curate_training_corpus(docs, None, CFG, lm_ref=ref)
-        # stage off → nothing gated
+        got = {r["doc_id"]: r for r in out.collect()}
+        assert "dsir_score" in out.columns
+        # stage off → no dsir column, nothing dropped by it; its rows
+        # are the (redacted) survivor set the stage scores and selects
         off = curate_training_corpus(docs, None, CFG)
-        n_off = off.count()
-        assert n_off > len(kept)
+        assert "dsir_score" not in off.columns
+        raw = [(r["doc_id"], r["text"]) for r in off.collect()]
+        exp = _py_dsir_scores(raw, target_rows)
+        # Gumbel-top-k: the 5 largest score + Gumbel(doc_id), ties to
+        # the lower id
+        want = {i for _, i in sorted(
+            ((exp[i] + _py_gumbel(i), -i), i) for i, _ in raw
+        )[-5:]}
+        assert set(got) == want
+        assert 3 in got and 7 in got
+        for i, r in got.items():
+            assert r["dsir_score"] == pytest.approx(exp[i], abs=1e-9), i
 
-    def test_upsample_stage(self, spark):
+    def test_surface_configuration(self, spark):
+        """The one configuration a non-test caller runs: exact-substring
+        span removal plus DSIR resampling toward a target, under a
+        two-language sampling table."""
         import dataclasses
 
-        docs = _corpus(spark)
-        cfg = dataclasses.replace(CFG, upsample_factor=2.0)
-        out = curate_training_corpus(docs, None, cfg)
-        base = curate_training_corpus(docs, None, CFG)
-        n0 = base.count()
-        rows = out.collect()
-        assert len(rows) == 2 * n0
-        # every kept doc appears with epochs {0, 1}, and train_pos is a
-        # dense 0..2n-1 permutation (the copies got distinct positions)
-        eps: dict = {}
-        for r in rows:
-            eps.setdefault(r["doc_id"], []).append(r["epoch"])
-        assert all(sorted(v) == [0, 1] for v in eps.values())
-        assert sorted(r["train_pos"] for r in rows) == list(
-            range(2 * n0)
-        )
-        # copies scatter: at least one doc's two copies are not
-        # adjacent in the stream
-        gaps = [
-            abs(a - b)
-            for a, b in (
-                tuple(
-                    r["train_pos"] for r in rows if r["doc_id"] == d
-                )
-                for d in list(eps)[:10]
+        boiler = "standard footer legal notice applies here"
+        cyr = str.maketrans("0123456789abcdef", "абвгдежзиклмнопр")
+        ru = {600 + k: _words(f"ru{k}").translate(cyr) for k in range(3)}
+        docs = _corpus(spark).unionByName(
+            spark.createDataFrame(
+                [(500, f"{boiler} {_words('a')}"),
+                 (501, f"{boiler} {_words('b')}"),
+                 *ru.items()],
+                "doc_id long, text string",
             )
-        ]
-        assert max(gaps) > 1
-        assert "__mixkey" not in out.columns
+        )
+        # target: doc 3, doc 500's non-boilerplate words and Russian
+        # doc 600 — the three rank first
+        target = spark.createDataFrame(
+            [(0, f"document 3 {_words('3')}"), (1, _words("a")),
+             (2, ru[600])],
+            "doc_id long, text string",
+        )
+        cfg = dataclasses.replace(
+            CFG, exactsubstr=True, exactsubstr_window=4, dsir_k=6,
+            sample_rates={"en": 10000, "ru": 10000},
+        )
+        out = curate_training_corpus(
+            docs, _bench(spark), cfg, dsir_target=target
+        )
+        rows = {r["doc_id"]: r for r in out.collect()}
+        # every one of the dsir_k resampled docs survives sampling
+        assert len(rows) == 6
+        assert {3, 500, 600} <= set(rows)
+        assert rows[600]["lang"] == "ru" and rows[3]["lang"] == "en"
+        assert "dsir_score" in out.columns
+        # the shared boilerplate run is excised, and n_tok counts what
+        # is left
+        assert "footer" not in rows[500]["text"]
+        assert rows[500]["n_tok"] == 20
+        # train_pos is a 0..n-1 permutation; shard ids contiguous from 0
+        assert sorted(r["train_pos"] for r in rows.values()) == list(
+            range(6)
+        )
+        sids = {r["shard_id"] for r in rows.values()}
+        assert sids == set(range(max(sids) + 1))
 
     def test_html_to_shards_end_to_end(self, spark):
         """The full product story in one chain: crawled html pages →
@@ -355,15 +279,3 @@ class TestCuratePipeline:
             range(len(out))
         )
         assert all(r["n_tok"] > 0 and r["shard_id"] >= 0 for r in out)
-
-    def test_observations_wired(self, spark):
-        from pyspark.sql import Observation
-
-        obs = {"minhash": Observation(), "winnow": Observation()}
-        packed = curate_training_corpus(
-            _corpus(spark), None, CFG, observations=obs
-        )
-        packed.count()
-        # metrics ride the producing jobs — both observable, no cap hit
-        assert int(obs["minhash"].get["skipped_rows"] or 0) == 0
-        assert int(obs["winnow"].get["skipped_rows"] or 0) == 0

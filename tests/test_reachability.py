@@ -11,6 +11,13 @@ Functions: every public top-level function and method of the package
 outside ``refsem/`` (the reference semantics, the tests' oracle) must be
 named by some non-test module other than in its own body or an
 ``__all__`` list, or be listed in ``UNREACHED_FUNCTIONS`` with a reason.
+A local variable, parameter or loop target of the same name is not a
+reference. A ``True``/``False`` parameter of such a function must be
+passed by some non-test call.
+
+Configs: every field of ``CrawlConfig`` and ``CurationConfig`` must be
+set away from its default by some non-test module, or be listed with a
+reason.
 """
 
 from __future__ import annotations
@@ -88,9 +95,9 @@ def test_every_package_module_is_reached():
     assert unreached == []
 
 
-# CrawlConfig fields that no non-test caller sets away from their default,
-# each kept for the reason given. Any other such field is a knob nothing
-# turns: delete it rather than maintain it.
+# Config dataclass fields that no non-test caller sets away from their
+# default, each kept for the reason given. Any other such field is a knob
+# nothing turns: delete it rather than maintain it.
 UNSET_CRAWL_FIELDS = {
     "max_depth": "the reference's crawl depth (seed round + contact "
                  "round); tests stop at a round boundary with it",
@@ -102,17 +109,22 @@ UNSET_CRAWL_FIELDS = {
     "robots_agent": "a deployment setting: the user agent the robots gate "
                     "matches",
 }
+PIPELINE_FIXTURE = "tests/test_pipeline.py's 45-doc fixture sets it"
+UNSET_CURATION_FIELDS = {
+    "quality_min": PIPELINE_FIXTURE,
+    "jaccard_threshold": PIPELINE_FIXTURE,
+    "shard_budget_tokens": PIPELINE_FIXTURE,
+}
 
 
-def _crawl_fields_set_by_callers() -> set:
-    """CrawlConfig fields a non-test module sets to a value other than the
-    field's default: keyword arguments of ``CrawlConfig(...)`` calls and
-    attribute assignments (a non-literal value counts as set)."""
+def _unset_config_fields(cls) -> set:
+    """Fields of the dataclass ``cls`` that no non-test module sets to a
+    value other than the field's default: keyword arguments of
+    ``cls(...)`` calls and attribute assignments (a non-literal value
+    counts as set)."""
     import dataclasses
 
-    from companycatalogcrawlerparser_spark.plans.crawl import CrawlConfig
-
-    defaults = {f.name: f.default for f in dataclasses.fields(CrawlConfig)}
+    defaults = {f.name: f.default for f in dataclasses.fields(cls)}
     paths = [p for g in ("*.py", "perfbench/*.py", "tools/*.py",
                          f"{PKG}/**/*.py")
              for p in glob.glob(os.path.join(ROOT, g), recursive=True)]
@@ -121,7 +133,7 @@ def _crawl_fields_set_by_callers() -> set:
         tree = ast.parse(open(path, encoding="utf-8").read())
         for node in ast.walk(tree):
             if isinstance(node, ast.Call) and getattr(
-                    node.func, "id", getattr(node.func, "attr", None)) == "CrawlConfig":
+                    node.func, "id", getattr(node.func, "attr", None)) == cls.__name__:
                 pairs = [(k.arg, k.value) for k in node.keywords]
             elif isinstance(node, ast.Assign):
                 pairs = [(t.attr, node.value) for t in node.targets
@@ -134,19 +146,24 @@ def _crawl_fields_set_by_callers() -> set:
                 if isinstance(value, ast.Constant) and value.value == defaults[name]:
                     continue
                 out.add(name)
-    return out
+    return set(defaults) - out
 
 
 def test_every_crawl_config_field_is_set_or_listed():
-    import dataclasses
-
     from companycatalogcrawlerparser_spark.plans.crawl import CrawlConfig
 
-    fields = {f.name for f in dataclasses.fields(CrawlConfig)}
-    unset = fields - _crawl_fields_set_by_callers()
+    unset = _unset_config_fields(CrawlConfig)
     assert sorted(unset - set(UNSET_CRAWL_FIELDS)) == []
     # the list names only fields that exist and are unset
     assert sorted(set(UNSET_CRAWL_FIELDS) - unset) == []
+
+
+def test_every_curation_config_field_is_set_or_listed():
+    from companycatalogcrawlerparser_spark.plans.pipeline import CurationConfig
+
+    unset = _unset_config_fields(CurationConfig)
+    assert sorted(unset - set(UNSET_CURATION_FIELDS)) == []
+    assert sorted(set(UNSET_CURATION_FIELDS) - unset) == []
 
 
 # Non-test modules: the package, the query registry, bench.py, the
@@ -213,36 +230,54 @@ def _public_functions() -> dict:
     return out
 
 
+def _bound_names(fn) -> set:
+    """Names the function ``fn`` binds itself: its parameters (and those
+    of the functions and lambdas inside it) and every assignment, loop,
+    ``with`` or comprehension target in its body."""
+    out = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.arg):
+            out.add(node.arg)
+        elif isinstance(node, ast.Name) and isinstance(node.ctx, (ast.Store, ast.Del)):
+            out.add(node.id)
+    return out
+
+
 def _name_references() -> dict:
     """name → the top-level defs (path, line of the def; None outside
     any) whose bodies name it, over the non-test modules. A name is an
-    identifier, an attribute or a string constant equal to it; the
-    strings of an ``__all__`` list do not count."""
+    identifier the enclosing def does not bind itself, an attribute or a
+    string constant equal to it; the strings of an ``__all__`` list do
+    not count."""
     refs: dict = {}
 
-    def visit(node, owner, path):
+    def visit(node, owner, bound, path):
         for child in ast.iter_child_nodes(node):
             if (isinstance(child, ast.Assign) and any(
                     getattr(t, "id", None) == "__all__" for t in child.targets)):
                 continue
             if owner is None and isinstance(
                     child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                inner = (path, child.lineno)
+                inner, inner_bound = (path, child.lineno), _bound_names(child)
             else:
-                inner = owner
+                inner, inner_bound = owner, bound
             if isinstance(child, ast.Name):
-                refs.setdefault(child.id, set()).add(owner)
+                if child.id not in bound:
+                    refs.setdefault(child.id, set()).add(owner)
             elif isinstance(child, ast.Attribute):
                 refs.setdefault(child.attr, set()).add(owner)
             elif isinstance(child, ast.Constant) and isinstance(child.value, str):
                 refs.setdefault(child.value, set()).add(owner)
             # class bodies stay top level: a method is its own owner
-            visit(child, owner if isinstance(child, ast.ClassDef) else inner, path)
+            if isinstance(child, ast.ClassDef):
+                visit(child, owner, bound, path)
+            else:
+                visit(child, inner, inner_bound, path)
 
     for g in NON_TEST_GLOBS:
         for path in glob.glob(os.path.join(ROOT, g), recursive=True):
             path = os.path.normpath(path)
-            visit(ast.parse(open(path, encoding="utf-8").read()), None, path)
+            visit(ast.parse(open(path, encoding="utf-8").read()), None, set(), path)
     return refs
 
 

@@ -44,7 +44,7 @@ class TestCommitShards:
         rows = packed.collect()
         exp_shard = _py_reference(rows)
         store = SnapshotStore(spark, str(tmp_path / "store"))
-        man = store.commit_shards(1, packed, order_col="train_pos")
+        man = store.commit_shards(1, packed)
 
         sids = store.shard_ids(1)
         assert sids == sorted(sids)
@@ -89,7 +89,7 @@ class TestCommitShards:
         root = str(tmp_path / "store")
         store = SnapshotStore(spark, root)
         packed = _packed(spark)
-        store.commit_shards(1, packed, order_col="train_pos")
+        store.commit_shards(1, packed)
         expected = sorted(
             map(tuple, store.read(1, "shards").drop("shard_id").collect())
         )
@@ -104,7 +104,7 @@ class TestCommitShards:
         assert 2 not in store.committed_rounds()
 
         # resume: the rerun overwrites the orphan and commits atomically
-        store.commit_shards(2, packed, order_col="train_pos")
+        store.commit_shards(2, packed)
         assert store.last_round() == 2
         got = sorted(
             map(tuple, store.read(2, "shards").drop("shard_id").collect())

@@ -232,7 +232,7 @@ def _task_action(spark, task: str, data_dir: str):
             # the verified pair graph, one representative per component —
             # per-pair "drop id_b" over-drops transitive chains, so both
             # counts are reported and the delta IS the measured over-drop
-            clusters = D.dedup_clusters(docs, verified, id_col="doc_id")
+            clusters = D.dedup_clusters(docs, verified)
             n_surv = int(
                 clusters.agg(
                     F.sum(F.col("is_rep").cast("long"))
@@ -308,7 +308,7 @@ def _task_action(spark, task: str, data_dir: str):
                 gated, cands, threshold=0.5
             ).persist()
             checks["verified_pairs"] = verified.count()
-            clusters = D.dedup_clusters(gated, verified, id_col="doc_id")
+            clusters = D.dedup_clusters(gated, verified)
             survivors = gated.join(
                 clusters.filter(F.col("is_rep")).select("doc_id"), "doc_id"
             ).persist()
@@ -415,7 +415,7 @@ def _task_action(spark, task: str, data_dir: str):
             store_root = tempfile.mkdtemp(prefix="pipeline_shards_")
             store = SnapshotStore(spark, store_root)
             # shards carry the full redacted text — the real artifact
-            man = store.commit_shards(1, packed, order_col="train_pos")
+            man = store.commit_shards(1, packed)
             checks["written_shards"] = man["tables"]["shards"]["n_shards"]
             packed.unpersist()
             _sh.rmtree(store_root, ignore_errors=True)
