@@ -1104,7 +1104,7 @@ def q_text_metrics(spark, sf_dir):
     # tokens) rows is the documented trade the operator defaults avoid;
     # here the frame is bench-fixture-sized.
     dfeats = DSR.dsir_features(
-        d.select("doc_id", "text"), n=2, num_buckets=512
+        d.select("doc_id", "text"), num_buckets=512
     ).persist()
     ratios = DSR.dsir_log_ratios(
         target, d, num_buckets=512,

@@ -13,7 +13,7 @@ Spark-first decomposition (Sennrich et al. 2016, arXiv:1508.07909):
    this is a single shuffle of (word, partial_count) pairs — the same
    shape as exact dedup.
 2. :func:`learn_bpe` — greedy merge learning over the frequency-
-   truncated vocabulary. The vocab table (top ``max_vocab_rows`` words)
+   truncated vocabulary. The vocab table (top ``MAX_VOCAB_ROWS`` words)
    is MBs where the corpus is TBs, so this is a deliberate size-gated
    driver loop (the repo's bloom-gate/redirect-closure idiom), with
    incremental pair-count maintenance so cost is (affected words per
@@ -53,28 +53,32 @@ def _split_ws(text) -> Column:
     return F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, freq) over the corpus — one explode + one
     map-side-combinable groupBy; the corpus shuffles (word, count)
     partials only, never text."""
     return (
-        docs.select(F.explode(_split_ws(F.col(text_col))).alias("word"))
+        docs.select(F.explode(_split_ws(F.col("text"))).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
 
 
+# learn_bpe's vocabulary cap: the most frequent words that vote on merge
+# choice; tests lower it to check the cap
+MAX_VOCAB_ROWS = 1_000_000
+
+
 def learn_bpe(
     wc: DataFrame,
     num_merges: int = 200,
     min_freq: int = 2,
-    max_vocab_rows: int = 1_000_000,
 ) -> list:
     """Learn ``num_merges`` merges from a (word, freq) frame; returns
     [(left, right, pair_freq_at_merge_time), ...] in merge order.
 
-    The vocab is truncated to the ``max_vocab_rows`` most frequent words
+    The vocab is truncated to the ``MAX_VOCAB_ROWS`` most frequent words
     (ties → lexicographically smaller word) via TakeOrdered — the
     size gate that makes the driver loop legitimate. Rare words beyond
     the cap still ENCODE fine (greedy merge application needs no
@@ -89,7 +93,7 @@ def learn_bpe(
 
     rows = (
         wc.orderBy(F.col("freq").desc(), F.col("word"))
-        .limit(int(max_vocab_rows))
+        .limit(int(MAX_VOCAB_ROWS))
         .collect()
     )
     # word-id indirection: syms mutate per merge, freq is fixed
@@ -173,9 +177,7 @@ def encode_word_py(word: str, ranks: dict) -> list:
     return s
 
 
-def encode_words(
-    words: DataFrame, merges: list, word_col: str = "word"
-) -> DataFrame:
+def encode_words(words: DataFrame, merges: list) -> DataFrame:
     """Adds ``bpe_tokens`` (array<string>) and ``n_sub`` to a frame of
     DISTINCT words — the tokenize-once table :func:`encode_corpus` joins
     occurrences against. Merge ranks ride in the UDF closure (num_merges
@@ -216,30 +218,25 @@ def encode_words(
 
         return col.map(one)
 
-    return words.withColumn("bpe_tokens", enc(F.col(word_col))).withColumn(
+    return words.withColumn("bpe_tokens", enc(F.col("word"))).withColumn(
         "n_sub", F.size("bpe_tokens")
     )
 
 
-def encode_corpus(
-    docs: DataFrame,
-    merges: list,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """One row per input doc: (id, n_bpe_tokens, bpe_fp) where bpe_fp =
+def encode_corpus(docs: DataFrame, merges: list) -> DataFrame:
+    """One row per input doc: (doc_id, n_bpe_tokens, bpe_fp) where bpe_fp =
     md5 of the space-joined subword stream in document order. Blank/NULL
     docs decorate as n=0 / md5('') — total over the corpus (the
     contamination_scores contract), never silently dropped.
 
-    Scale shape: the corpus explodes to (id, pos, word) once; the
+    Scale shape: the corpus explodes to (doc_id, pos, word) once; the
     tokenize-once table is distinct-word-sized and joins on uniform word
     keys; per-doc reassembly is a groupBy with a doc-length-bounded
     collect_list sorted by position (array_sort over struct(pos, …) —
     deterministic regardless of arrival order)."""
     occ = docs.select(
-        F.col(id_col),
-        F.posexplode(_split_ws(F.col(text_col))).alias("pos", "word"),
+        F.col("doc_id"),
+        F.posexplode(_split_ws(F.col("text"))).alias("pos", "word"),
     ).filter(F.col("word") != "")
     table = encode_words(occ.select("word").distinct(), merges).select(
         "word",
@@ -248,7 +245,7 @@ def encode_corpus(
     )
     per_doc = (
         occ.join(table, "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("n_sub").cast("long").alias("n_bpe_tokens"),
             F.md5(
@@ -265,10 +262,10 @@ def encode_corpus(
         )
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe_tokens"),
             F.coalesce("bpe_fp", F.md5(F.lit(""))).alias("bpe_fp"),
         )

@@ -36,16 +36,14 @@ from pyspark.sql import functions as F
 from .dedup import shingles
 
 
-def benchmark_shingles(
-    benchmark: DataFrame, text_col: str = "text", k: int = 8
-) -> DataFrame:
+def benchmark_shingles(benchmark: DataFrame, k: int = 8) -> DataFrame:
     """DISTINCT char k-shingles of the benchmark corpus (one ``shingle``
     column) — the tiny side of the contamination join. Deterministic
     (md5-free: raw substrings), so the DuckDB twin regenerates it
     exactly."""
     return (
         benchmark.select(
-            F.explode(shingles(F.col(text_col), k)).alias("shingle")
+            F.explode(shingles(F.col("text"), k)).alias("shingle")
         )
         .distinct()
     )
@@ -56,15 +54,13 @@ def contamination_scores(
     benchmark: DataFrame,
     *,
     k: int = 8,
-    threshold: float = 0.5,
-    bench_text_col: str = "text",
 ) -> DataFrame:
     """Per-document benchmark-overlap ratio.
 
     Returns one row per input doc: ``(doc_id, n_shingles, n_shared,
     overlap, contaminated)`` where ``overlap = n_shared / n_shingles``
     over DISTINCT char k-shingles of the ``dedup.normalized`` text and
-    ``contaminated = overlap >= threshold``. Docs with zero benchmark
+    ``contaminated = overlap >= 0.5``. Docs with zero benchmark
     overlap are kept (overlap 0.0) so the output is a total decoration of
     the corpus — a decontamination pass is then a single
     ``.filter(~contaminated)``. Totality includes NULL-text docs: the
@@ -93,7 +89,7 @@ def contamination_scores(
         F.explode_outer("_sh").alias("shingle"),
     )
     bench_sh = F.broadcast(
-        benchmark_shingles(benchmark, bench_text_col, k).withColumn("_hit", F.lit(1))
+        benchmark_shingles(benchmark, k).withColumn("_hit", F.lit(1))
     )
     return (
         doc_sh.join(bench_sh, "shingle", "left")
@@ -115,5 +111,5 @@ def contamination_scores(
             .otherwise(F.lit(0.0))
             .alias("overlap"),
         )
-        .withColumn("contaminated", F.col("overlap") >= F.lit(threshold))
+        .withColumn("contaminated", F.col("overlap") >= F.lit(0.5))
     )

@@ -50,10 +50,10 @@ __all__ = [
 ]
 
 
-def sample_bucket(key: Column, salt: str = "", denom: int = 10000) -> Column:
-    """Deterministic bucket in [0, denom) from md5 of the row key —
+def sample_bucket(key: Column, salt: str = "") -> Column:
+    """Deterministic bucket in [0, 10000) from md5 of the row key —
     DuckDB twin: ``CAST('0x' || substr(md5(CAST(k AS VARCHAR) || salt),
-    1, 8) AS BIGINT) % denom``. ``salt`` decorrelates independent
+    1, 8) AS BIGINT) % 10000``. ``salt`` decorrelates independent
     sampling decisions over the same keys (e.g. eval holdout vs train
     subsample)."""
     h = F.conv(
@@ -61,28 +61,27 @@ def sample_bucket(key: Column, salt: str = "", denom: int = 10000) -> Column:
         16,
         10,
     ).cast("long")
-    return F.pmod(h, F.lit(denom))
+    return F.pmod(h, F.lit(10000))
 
 
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, int],
     strata_col: str,
-    salt: str = "",
-    denom: int = 10000,
     default_keep: int = 0,
 ) -> DataFrame:
-    """Per-stratum deterministic sampling: keep a row iff its bucket <
-    the stratum's rate (``rates[stratum]/denom``); strata absent from
-    ``rates`` fall back to ``default_keep``. The rate table rides a
-    broadcast join (strata counts are language/quality-bucket sized), so
-    the plan stays one scan + one codegen filter at any corpus size."""
+    """Per-stratum deterministic sampling: keep a row iff its
+    :func:`sample_bucket` < the stratum's rate (``rates[stratum]/10000``);
+    strata absent from ``rates`` fall back to ``default_keep``. The rate
+    table rides a broadcast join (strata counts are language/quality-
+    bucket sized), so the plan stays one scan + one codegen filter at any
+    corpus size."""
     spark = df.sparkSession
     rdf = local_frame(spark, list(rates.items()), f"{strata_col} string, __keep int")
     return (
         df.join(F.broadcast(rdf), strata_col, "left")
         .filter(
-            sample_bucket(F.col("doc_id"), salt, denom)
+            sample_bucket(F.col("doc_id"))
             < F.coalesce(F.col("__keep"), F.lit(default_keep))
         )
         .drop("__keep")
@@ -337,17 +336,13 @@ def exact_quantiles(
     )
 
 
-def upsample_epochs(
-    df: DataFrame,
-    factor: float,
-    salt: str = "",
-) -> DataFrame:
+def upsample_epochs(df: DataFrame, factor: float) -> DataFrame:
     """Fractional source upsampling for training-mix recipes (the
     LLaMA-style "this source for 2.3 epochs"): every row is replicated
     ``⌊factor⌋`` times, plus one more for the deterministic
-    ``frac(factor)`` share chosen by the md5 gate on (doc_id, salt) — so
+    ``frac(factor)`` share chosen by the md5 gate on doc_id — so
     the EXPECTED corpus weight is exactly ``factor`` and the realized
-    copy set is a pure function of (doc_id, salt): partition-invariant
+    copy set is a pure function of doc_id: partition-invariant
     and identical on every cluster. Adds ``epoch`` (0-based copy
     index); compose the order key over (doc_id, epoch) — e.g.
     ``shuffle_order_key(F.concat_ws("|", doc_id, epoch))`` — so copies
@@ -372,7 +367,7 @@ def upsample_epochs(
     whole = int(math.floor(factor))
     gate = int(round((float(factor) - whole) * 10_000))
     copies = F.lit(whole) + F.when(
-        sample_bucket(F.col("doc_id"), salt) < gate, F.lit(1)
+        sample_bucket(F.col("doc_id")) < gate, F.lit(1)
     ).otherwise(F.lit(0))
     return (
         df.withColumn("__copies", copies)
@@ -386,49 +381,41 @@ def upsample_epochs(
     )
 
 
-def span_corruption(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span: int = 3,
-    density: float = 0.15,
-    salt: str = "",
-) -> DataFrame:
+# T5's span-corruption shape: 3-token blocks, 15% of them masked
+SPAN, DENSITY = 3, 0.15
+
+
+def span_corruption(docs: DataFrame, salt: str = "") -> DataFrame:
     """T5-style span-corruption pairs (Raffel et al. 2020 §3.1.4,
     denoising objective), deterministic and relational: the token
-    stream is tiled into ``span``-length blocks, each block is chosen
-    with probability ``density`` by the md5 gate on (id, block, salt),
+    stream is tiled into ``SPAN``-length blocks, each block is chosen
+    with probability ``DENSITY`` by the md5 gate on (doc_id, block, salt),
     and the k-th chosen block (document order) becomes sentinel
     ``<extra_id_k>`` — replaced by the sentinel in ``input_text``,
     emitted as ``sentinel + tokens`` in ``target_text``. Expected
-    masked-token fraction = density, like the paper's; the pinned
+    masked-token fraction = DENSITY, like the paper's; the pinned
     simplification vs T5 proper is stride-ALIGNED spans (blocks never
     overlap by construction, so no sequential greedy scan — the whole
     objective is one explode + one per-doc window + one ordered
     reassembly, the same plan family as encode_corpus). Docs with no
     chosen block pass through with target '' — total decoration.
 
-    The corruption is a pure function of (id, block, salt):
+    The corruption is a pure function of (doc_id, block, salt):
     partition-invariant, reproducible across clusters, re-rollable per
     epoch via ``salt``.
     """
-    if span < 1:
-        # ADVICE r7: span=0 otherwise surfaces as an opaque div-by-zero
-        # inside the executed `__pos div 0` expression
-        raise ValueError("span must be >= 1")
-    if not (0.0 <= float(density) <= 1.0):
-        raise ValueError("density must be in [0, 1]")
-    gate = int(round(float(density) * 10_000))  # sample_bucket denom
-    toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    span = SPAN
+    gate = int(round(DENSITY * 10_000))  # sample_bucket denom
+    toks = F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+")
     occ = (
-        docs.select(F.col(id_col), toks.alias("__t"))
-        .select(id_col, F.posexplode("__t").alias("__pos", "__tok"))
+        docs.select(F.col("doc_id"), toks.alias("__t"))
+        .select("doc_id", F.posexplode("__t").alias("__pos", "__tok"))
         .filter(F.col("__tok") != "")
-        .withColumn("__blk", F.expr(f"__pos div {int(span)}"))
+        .withColumn("__blk", F.expr(f"__pos div {span}"))
         .withColumn(
             "__hit",
             sample_bucket(
-                F.concat_ws("|", F.col(id_col), F.col("__blk")), salt
+                F.concat_ws("|", F.col("doc_id"), F.col("__blk")), salt
             )
             < gate,
         )
@@ -438,12 +425,12 @@ def span_corruption(
     heads = occ.filter(
         F.col("__hit") & (F.col("__pos") % span == 0)
     ).select(
-        id_col, "__blk",
+        "doc_id", "__blk",
         F.row_number()
-        .over(Window.partitionBy(id_col).orderBy("__blk"))
+        .over(Window.partitionBy("doc_id").orderBy("__blk"))
         .alias("__k"),
     )
-    j = occ.join(heads, [id_col, "__blk"], "left")
+    j = occ.join(heads, ["doc_id", "__blk"], "left")
     sentinel = F.concat(
         F.lit("<extra_id_"), (F.col("__k") - 1).cast("string"), F.lit(">")
     )
@@ -459,7 +446,7 @@ def span_corruption(
             F.concat(sentinel, F.lit(" "), F.col("__tok")),
         ).otherwise(F.col("__tok")),
     )
-    per_doc = j.groupBy(id_col).agg(
+    per_doc = j.groupBy("doc_id").agg(
         *[
             F.concat_ws(
                 " ",
@@ -485,8 +472,8 @@ def span_corruption(
         ],
         F.sum(F.col("__hit").cast("long")).alias("n_masked_tokens"),
     )
-    return docs.select(id_col).join(per_doc, id_col, "left").select(
-        id_col,
+    return docs.select("doc_id").join(per_doc, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("input_text", F.lit("")).alias("input_text"),
         F.coalesce("target_text", F.lit("")).alias("target_text"),
         F.coalesce("n_masked_tokens", F.lit(0)).alias("n_masked_tokens"),
@@ -538,24 +525,22 @@ def global_order_index(
     )
 
 
-def split_sequences(
-    df: DataFrame,
-    seq_len: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_tail_min: int = 1,
-) -> DataFrame:
+# split_sequences keeps a final partial chunk of at least this many
+# tokens (1 = always; seq_len = full chunks only); tests raise it
+SPLIT_KEEP_TAIL_MIN = 1
+
+
+def split_sequences(df: DataFrame, seq_len: int) -> DataFrame:
     """One row per fixed-length TRAINING SEQUENCE: the doc's whitespace
     tokens (``textquality.token_count``'s definition — split of the
     trimmed text on runs of whitespace) cut into consecutive
     ``seq_len``-token chunks, the trainer's context-window shaping step
     between packing and consumption. The final partial chunk is kept
-    when it has at least ``keep_tail_min`` tokens (1 = always; pass
-    ``seq_len`` for full-chunks-only). Returns (id, ``seq_idx``,
-    ``seq_start``, ``n_seq_tokens``, ``seq_text``) with seq_start in
-    token coordinates. NULL/blank docs yield no rows — a chunker's
+    when it has at least ``SPLIT_KEEP_TAIL_MIN`` tokens. Returns
+    (``doc_id``, ``seq_idx``, ``seq_start``, ``n_seq_tokens``,
+    ``seq_text``) with seq_start in token coordinates. NULL/blank docs yield no rows — a chunker's
     output IS the sequence stream; callers needing total decoration
-    left-join back on the id.
+    left-join back on doc_id.
 
     Scale shape: one scan, a posexplode of ceil(n/seq_len) start
     offsets per doc, slice+concat as plain codegen column expressions
@@ -566,11 +551,12 @@ def split_sequences(
     Reference analogue: none (engine-new training-data scope)."""
     if seq_len < 1:
         raise ValueError("seq_len must be at least 1")
+    keep_tail_min = SPLIT_KEEP_TAIL_MIN
     if not 1 <= keep_tail_min <= seq_len:
-        raise ValueError("keep_tail_min must be in [1, seq_len]")
-    t = F.trim(F.col(text_col))
+        raise ValueError("SPLIT_KEEP_TAIL_MIN must be in [1, seq_len]")
+    t = F.trim(F.col("text"))
     toks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(
             t.isNull() | (t == ""),
             F.expr("array()").cast("array<string>"),
@@ -592,12 +578,12 @@ def split_sequences(
     )
     return (
         toks.select(
-            F.col(id_col),
+            F.col("doc_id"),
             "__toks",
             F.posexplode(starts).alias("__x", "seq_idx"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("seq_idx").cast("long").alias("seq_idx"),
             (F.col("seq_idx").cast("long") * seq_len).alias("seq_start"),
             F.size(chunk).cast("long").alias("n_seq_tokens"),
@@ -607,10 +593,7 @@ def split_sequences(
 
 
 def concat_packed_sequences(
-    df: DataFrame,
-    order_col: str = "train_pos",
-    token_col: str = "n_tok",
-    text_col: str = "text",
+    df: DataFrame, order_col: str = "train_pos"
 ) -> DataFrame:
     """Trainer-side SEQUENCE PACKING: one row per shard with the member
     texts concatenated in ``order_col`` order and the doc-boundary
@@ -624,17 +607,16 @@ def concat_packed_sequences(
     Scale shape: ONE groupBy(shard) with a sort_array'd collect_list —
     per-group volume is bounded by the pack budget (a context window),
     never by corpus size — then a single-pass ``aggregate`` fold
-    computing offsets and the concat together. Requires ``token_col``
-    to be the caller's token count for ``text_col`` (split_sequences
-    and the quality gate both provide it); boundaries are cumulative
-    sums of those counts, so they are exact under any whitespace-token
-    definition the caller used."""
+    computing offsets and the concat together. Requires ``n_tok`` to be
+    the caller's token count for ``text`` (the quality gate provides
+    it); boundaries are cumulative sums of those counts, so they are
+    exact under any whitespace-token definition the caller used."""
     xs = F.sort_array(
         F.collect_list(
             F.struct(
                 F.col(order_col).alias("k"),
-                F.col(token_col).cast("long").alias("n"),
-                F.col(text_col).alias("t"),
+                F.col("n_tok").cast("long").alias("n"),
+                F.col("text").alias("t"),
             )
         )
     )

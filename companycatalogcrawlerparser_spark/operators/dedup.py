@@ -3,6 +3,8 @@
 All variants are pure native-column plans (no Python in the hot path) and
 deterministic: hashes derive from md5 of the content (not Spark's
 hash/xxhash64) so the DuckDB oracle can reproduce them bit-for-bit.
+Every operator reads a document frame's fixed ``doc_id`` and ``text``
+columns.
 
 - exact:      content-hash groupBy (keep min id)
 - minhash:    char-shingle → k min-hashes → banded LSH → candidate pairs
@@ -42,10 +44,10 @@ def bind_once(expr, fn) -> "F.Column":
     return F.transform(F.array(expr), fn)[0]
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact near-identity dedup: md5 over normalized text, keep min id."""
-    d = df.withColumn("content_hash", F.md5(normalized(F.col(text_col))))
-    w = Window.partitionBy("content_hash").orderBy(id_col)
+    d = df.withColumn("content_hash", F.md5(normalized(F.col("text"))))
+    w = Window.partitionBy("content_hash").orderBy("doc_id")
     return (
         d.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -92,12 +94,9 @@ def minhash_b(i: int) -> int:
     return int(hashlib.md5(f"mh_b{i}".encode()).hexdigest()[:15], 16) % MINHASH_P
 
 
-def minhash_signature(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 5, num_hashes: int = 12,
-) -> DataFrame:
-    """(id, mh_0..mh_{n-1}): per-seed min over a universal-hash family
-    applied to ONE base hash per shingle.
+def minhash_signature(df: DataFrame, num_hashes: int = 12) -> DataFrame:
+    """(doc_id, mh_0..mh_{n-1}): per-seed min over a universal-hash family
+    applied to ONE base hash per char 5-shingle.
 
     Hash scheme (r5 — was min(md5(shingle||'#i')) per seed, i.e. 12 md5
     evaluations per shingle, the dominant cost of the whole operator at
@@ -129,12 +128,12 @@ def minhash_signature(
         )
 
     ex = df.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), k)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles(F.col("text"))).alias("shingle")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(F.col("shingle")).alias("__m"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         base(F.col("__m"), 1).alias("ha"),
         base(F.col("__m"), 9).alias("hb"),
     )
@@ -148,14 +147,13 @@ def minhash_signature(
         ).alias(f"mh_{i}")
         for i in range(num_hashes)
     ]
-    return ex.groupBy(id_col).agg(*aggs)
+    return ex.groupBy("doc_id").agg(*aggs)
 
 
 def _lsh_banded(
-    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int, bands: int,
-    sig: DataFrame | None = None,
+    df: DataFrame, num_hashes: int, bands: int, sig: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, band, key) rows — one per (doc, band). Pass a precomputed
+    """(doc_id, band, key) rows — one per (doc, band). Pass a precomputed
     ``sig`` (a :func:`minhash_signature` frame with ≥ ``num_hashes``
     columns) to reuse one shingle explode across consumers — per-seed
     hashes are independent of ``num_hashes``, so the first n columns of
@@ -163,7 +161,7 @@ def _lsh_banded(
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     if sig is None:
-        sig = minhash_signature(df, id_col, text_col, k, num_hashes)
+        sig = minhash_signature(df, num_hashes)
 
     band_cols = []
     for b in range(bands):
@@ -172,13 +170,18 @@ def _lsh_banded(
             F.struct(F.lit(b).alias("band"), F.concat_ws("|", *parts).alias("key"))
         )
     return sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        F.col("doc_id"), F.explode(F.array(*band_cols)).alias("bk")
+    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
+# The skew cap of the minhash and winnowing candidate generators: an LSH
+# band bucket or a winnow print shared by more docs is excluded from pair
+# generation (see minhash_lsh_pairs); tests lower it to force the cap
+MAX_BUCKET = 256
 
 
 def minhash_lsh_pairs(
-    df: DataFrame, k: int = 5, num_hashes: int = 12, bands: int = 4,
-    max_bucket: int | None = 256,
+    df: DataFrame, num_hashes: int = 12, bands: int = 4,
     observation=None,
     sig: DataFrame | None = None,
 ) -> DataFrame:
@@ -187,49 +190,42 @@ def minhash_lsh_pairs(
     Skew guard: a band bucket shared by D docs emits D·(D-1)/2 pairs inside
     ONE join task, so a single hot bucket of near-identical docs goes
     quadratic (the round-1 bench's dominant cost). Buckets larger than
-    ``max_bucket`` are excluded from pair generation — they are de-facto
+    ``MAX_BUCKET`` are excluded from pair generation — they are de-facto
     exact-dup clusters that :func:`exact_dedup` should collapse first. The
     cap is part of the operator contract (the DuckDB oracle twin applies
     the same predicate) and the skipped volume stays observable via
-    :func:`lsh_oversized_buckets` — nothing is silently dropped.
-
-    Callers that need the exhaustive (round-1) behavior pass
-    ``max_bucket=None`` — the cap is opt-out, not hidden: pair recall in
-    hot buckets is traded for bounded task size, and any consumer of the
-    capped default should surface :func:`lsh_oversized_buckets` next to
-    its results (ADVICE r02 — truncation must be visible at call sites).
+    :func:`lsh_oversized_buckets` — nothing is silently dropped: pair
+    recall in hot buckets is traded for bounded task size (ADVICE r02 —
+    truncation must be visible at call sites).
 
     Pass a ``pyspark.sql.Observation`` as ``observation`` to get the
     skipped volume IN the same job that computes the pairs (no second
     scan): after any action on the result, ``observation.get`` carries
     ``skipped_rows`` (doc-band memberships excluded by the cap) and
-    ``max_bucket_seen`` — so the 256-default can never silently cost
-    recall at a call site that wires the metric.
+    ``max_bucket_seen`` — so the cap can never silently cost recall at
+    a call site that wires the metric.
     """
     # checkpoint the banded signatures: three consumers below (window count
     # + both sides of the self-join) would otherwise recompute the shingle
     # explode+aggregate; the checkpointed rows are tiny (id, band, key).
     # NB under AQE a lazy localCheckpoint materializes upstream stages when
     # the first action touches it — fine here, the result is always used.
-    banded = _lsh_banded(
-        df, "doc_id", "text", k, num_hashes, bands, sig=sig
-    ).localCheckpoint(eager=False)
+    banded = _lsh_banded(df, num_hashes, bands, sig=sig).localCheckpoint(
+        eager=False
+    )
     # bucket-size gate as a WINDOW count: one shuffle on (band,key) over
     # the checkpointed rows, no extra join
-    if max_bucket is None:
-        capped = banded
-    else:
-        bw = Window.partitionBy("band", "key")
-        marked = banded.withColumn("__n", F.count("*").over(bw))
-        if observation is not None:
-            marked = marked.observe(
-                observation,
-                F.sum(
-                    F.when(F.col("__n") > max_bucket, 1).otherwise(0)
-                ).alias("skipped_rows"),
-                F.max("__n").alias("max_bucket_seen"),
-            )
-        capped = marked.filter(F.col("__n") <= max_bucket).drop("__n")
+    bw = Window.partitionBy("band", "key")
+    marked = banded.withColumn("__n", F.count("*").over(bw))
+    if observation is not None:
+        marked = marked.observe(
+            observation,
+            F.sum(
+                F.when(F.col("__n") > MAX_BUCKET, 1).otherwise(0)
+            ).alias("skipped_rows"),
+            F.max("__n").alias("max_bucket_seen"),
+        )
+    capped = marked.filter(F.col("__n") <= MAX_BUCKET).drop("__n")
 
     a = capped.alias("a")
     b = capped.alias("b")
@@ -247,47 +243,43 @@ def minhash_lsh_pairs(
 
 
 def lsh_oversized_buckets(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 5, num_hashes: int = 12, bands: int = 4, max_bucket: int = 256,
+    df: DataFrame, num_hashes: int = 12, bands: int = 4,
 ) -> DataFrame:
     """(band, key, n_docs) of buckets :func:`minhash_lsh_pairs` skipped —
     the audit surface for the skew cap (no silent truncation)."""
-    banded = _lsh_banded(df, id_col, text_col, k, num_hashes, bands)
+    banded = _lsh_banded(df, num_hashes, bands)
     return (
         banded.groupBy("band", "key")
         .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
+        .filter(F.col("n_docs") > MAX_BUCKET)
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 5, threshold: float = 0.8,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Exact shingle-Jaccard ≥ threshold pairs via shingle equi-join
     (id_a < id_b, sizes via per-doc distinct counts). Intended for
     verification of LSH candidates or modest corpora; at 10^10 docs run it
     AFTER :func:`minhash_lsh_pairs` pruning (join on the candidate set)."""
     ex = df.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), k)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles(F.col("text"))).alias("shingle")
     )
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = ex.alias("a")
     b = ex.alias("b")
     shared = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .agg(F.count("*").alias("inter"))
     )
     out = (
-        shared.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+        shared.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
         .withColumn(
             "jaccard",
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
@@ -299,7 +291,7 @@ def ngram_jaccard_pairs(
 
 
 def jaccard_verify(
-    df: DataFrame, pairs: DataFrame, k: int = 5, threshold: float = 0.0,
+    df: DataFrame, pairs: DataFrame, threshold: float = 0.0,
 ) -> DataFrame:
     """Exact shingle-Jaccard for a CANDIDATE pair set — the verification
     stage the LSH/winnow/simhash generators feed at 10^10-doc scale,
@@ -327,7 +319,7 @@ def jaccard_verify(
         cand_ids, F.col("doc_id") == F.col("__id"), "left_semi"
     )
     ex = docs.select(
-        F.col("doc_id"), F.explode(shingles(F.col("text"), k)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles(F.col("text"))).alias("shingle")
     )
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -360,12 +352,10 @@ def jaccard_verify(
     )
 
 
-def winnow_prints(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 8, window: int = 4,
-) -> DataFrame:
-    """(id, fp) rows — the EXPLODED winnowing fingerprint set, value-equal
-    to ``explode(textquality.winnow_fingerprints(...))`` (property-tested)
+def winnow_prints(df: DataFrame) -> DataFrame:
+    """(doc_id, fp) rows — the EXPLODED winnowing fingerprint set (8-gram
+    hashes, windows of 4), value-equal to
+    ``explode(textquality.winnow_fingerprints(text, 8, 4))`` (property-tested)
     but built for scale: the per-row array formulation evaluates its md5
     per k-gram inside an interpreted HOF lambda (~1300 core-seconds for
     200k docs, the dominant winnow_pairs cost), while this shape explodes
@@ -374,15 +364,16 @@ def winnow_prints(
     sort-shuffle on (doc, position)) — measured ~5× on the r5 XL bench.
     ``textquality.winnow_fingerprints`` stays as the per-row array API
     (metrics rows want a column, not an exploded table)."""
+    k, window = 8, 4
     t = F.col("__t")
     # n_grams is a pure function of the text length (the idx sequence
     # size), so the last-window-start bound rides the explode as a
     # precomputed column — no count() window pass over the gram rows
     base = df.select(
-        F.col(id_col),
-        normalized(F.col(text_col)).alias("__t"),
+        F.col("doc_id"),
+        normalized(F.col("text")).alias("__t"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         t,
         F.greatest(
             F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
@@ -391,7 +382,7 @@ def winnow_prints(
         ).alias("__last_start"),
     )
     ex = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__last_start"),
         F.explode(
             F.sequence(
@@ -400,12 +391,12 @@ def winnow_prints(
         ).alias("i"),
         t,
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__last_start"),
         F.col("i"),
         F.substring(F.md5(t.substr(F.col("i"), F.lit(k))), 1, 8).alias("g"),
     )
-    frame = Window.partitionBy(id_col).orderBy("i").rowsBetween(0, window - 1)
+    frame = Window.partitionBy("doc_id").orderBy("i").rowsBetween(0, window - 1)
     return (
         ex.withColumn("__min", F.min("g").over(frame))
         # only window START positions exist in the array formulation:
@@ -413,15 +404,13 @@ def winnow_prints(
         # tail positions equals the array slice-clamp min, so the filter
         # alone reproduces the spec exactly
         .filter(F.col("i") <= F.col("__last_start"))
-        .select(F.col(id_col), F.col("__min").alias("fp"))
+        .select(F.col("doc_id"), F.col("__min").alias("fp"))
         .distinct()
     )
 
 
 def winnow_pairs(
-    df: DataFrame, k: int = 8, window: int = 4, min_shared: int = 3,
-    max_bucket: int | None = 256,
-    observation=None,
+    df: DataFrame, min_shared: int = 3, observation=None,
 ) -> DataFrame:
     """Winnowing-based near-dup candidates: docs sharing ≥ ``min_shared``
     winnow fingerprints (``textquality.winnow_fingerprints`` — each
@@ -433,7 +422,7 @@ def winnow_pairs(
     zeroing a whole band.
 
     Scale shape mirrors :func:`minhash_lsh_pairs`: explode prints →
-    bucket by print (skew cap ``max_bucket`` — a print shared by D docs
+    bucket by print (skew cap ``MAX_BUCKET`` — a print shared by D docs
     is a de-facto exact-dup cluster) → pair counts via groupBy. Returns
     (id_a, id_b, n_shared), id_a < id_b, candidates only — verify with
     :func:`ngram_jaccard_pairs` on the candidate set.
@@ -446,19 +435,18 @@ def winnow_pairs(
     metric wired (r5 verdict: at 1M docs the cap dropped 51,607
     print-rows and that number should ride the producing job, not a
     second scan)."""
-    ex = winnow_prints(df, k=k, window=window)
-    if max_bucket is not None:
-        bw = Window.partitionBy("fp")
-        ex = ex.withColumn("__n", F.count("*").over(bw))
-        if observation is not None:
-            ex = ex.observe(
-                observation,
-                F.sum(
-                    F.when(F.col("__n") > max_bucket, 1).otherwise(0)
-                ).alias("skipped_rows"),
-                F.max("__n").alias("max_bucket_seen"),
-            )
-        ex = ex.filter(F.col("__n") <= max_bucket).drop("__n")
+    ex = winnow_prints(df)
+    bw = Window.partitionBy("fp")
+    ex = ex.withColumn("__n", F.count("*").over(bw))
+    if observation is not None:
+        ex = ex.observe(
+            observation,
+            F.sum(
+                F.when(F.col("__n") > MAX_BUCKET, 1).otherwise(0)
+            ).alias("skipped_rows"),
+            F.max("__n").alias("max_bucket_seen"),
+        )
+    ex = ex.filter(F.col("__n") <= MAX_BUCKET).drop("__n")
     a, b = ex.alias("a"), ex.alias("b")
     return (
         a.join(
@@ -472,19 +460,16 @@ def winnow_pairs(
     )
 
 
-def winnow_oversized_prints(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 8, window: int = 4, max_bucket: int = 256,
-) -> DataFrame:
+def winnow_oversized_prints(df: DataFrame) -> DataFrame:
     """(fp, n_docs) of fingerprint buckets :func:`winnow_pairs` skips
-    under ``max_bucket`` — the standalone audit surface (a second scan;
+    under ``MAX_BUCKET`` — the standalone audit surface (a second scan;
     prefer wiring an ``Observation`` into :func:`winnow_pairs` so the
     metric rides the producing job)."""
-    ex = winnow_prints(df, id_col, text_col, k, window)
+    ex = winnow_prints(df)
     return (
         ex.groupBy("fp")
         .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
+        .filter(F.col("n_docs") > MAX_BUCKET)
     )
 
 
@@ -525,25 +510,6 @@ def simhash16(text) -> "F.Column":
 
     zero = F.struct(*[F.lit(0).alias(f"s{j}") for j in range(16)])
     return F.aggregate(hashes, zero, step, finish)
-
-
-def simhash_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Docs sharing an identical 16-bit simhash (near-dup buckets).
-
-    Returns ``(simhash, n_docs, min_id)`` — a BOUNDED row per bucket. The
-    previous ``collect_list(ids)`` form put an entire bucket's membership
-    into one aggregation buffer, which is unbounded for a mega-cluster of
-    identical docs; consumers that need the membership join the per-doc
-    ``(doc_id, simhash16(text))`` table against these group rows instead."""
-    d = df.select(F.col(id_col), simhash16(F.col(text_col)).alias("simhash"))
-    return (
-        d.groupBy("simhash")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min(id_col).alias("min_id"),
-        )
-        .filter(F.col("n_docs") >= 2)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -618,6 +584,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # provably-convergent distributed fixpoint runs unchanged (the 10^10
 # design). Both paths produce identical (node, min-reachable-id) labels.
 CC_DRIVER_MAX_EDGES = 200_000
+# safety rail of the distributed fixpoint (see connected_components)
+CC_MAX_ITERS = 20
 
 
 def _cc_driver(rows) -> dict:
@@ -649,16 +617,14 @@ def _cc_driver(rows) -> dict:
     return {n: find(n) for n in parent}
 
 
-def connected_components(
-    pairs: DataFrame, max_iters: int = 20
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(node, component) for every node in ``pairs`` (id_a/id_b columns);
     component = the minimum node id reachable through the pair graph.
 
     Alternating large-star/small-star with a localCheckpoint per round
     (iterative self-joins otherwise stack an exponentially deepening
     lineage — the same discipline as the crawl's frontier loop) and a
-    deterministic fixed-point test. ``max_iters`` is a safety rail only:
+    deterministic fixed-point test. ``CC_MAX_ITERS`` is a safety rail only:
     the algorithm provably converges in O(log^2 n) rounds and near-dup
     graphs converge in 2-3.
 
@@ -700,7 +666,7 @@ def connected_components(
         return (r["n"], r["su"], r["sv"])
 
     sig = _sig(edges)
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         nxt = _small_star(_large_star(edges)).localCheckpoint(eager=True)
         nsig = _sig(nxt)
         # equal counts + one-sided emptiness ⇒ set equality (both sides
@@ -711,7 +677,7 @@ def connected_components(
         if same:
             break
     else:
-        raise RuntimeError(f"connected_components: no fixed point in {max_iters} iters")
+        raise RuntimeError(f"connected_components: no fixed point in {CC_MAX_ITERS} iters")
     # fixed point is a star forest: every edge is (member, root); roots
     # label themselves
     members = edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
@@ -740,8 +706,8 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def _window_hashes(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
-    """(id, pos, __wh): a 60-bit md5-derived hash of every ``n``-token
+def _window_hashes(df: DataFrame, n: int) -> DataFrame:
+    """(doc_id, pos, __wh): a 60-bit md5-derived hash of every ``n``-token
     window of the normalized text, ``pos`` the 0-based token index of the
     window start. Docs shorter than ``n`` tokens yield no rows. One scan,
     no shuffle; row volume is O(total tokens) — the same scale shape as
@@ -753,8 +719,8 @@ def _window_hashes(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFra
     whole projection to interpreted evaluation (measured 19.4 s vs
     3.0 s for 26M windows at local[32]; bit-identical output)."""
     toks = df.select(
-        F.col(id_col),
-        F.split(normalized(F.col(text_col)), " ").alias("__toks"),
+        F.col("doc_id"),
+        F.split(normalized(F.col("text")), " ").alias("__toks"),
     )
     starts = F.when(
         F.size("__toks") >= n,
@@ -762,12 +728,12 @@ def _window_hashes(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFra
     ).otherwise(F.expr("array()").cast("array<int>"))
     return (
         toks.select(
-            F.col(id_col),
+            F.col("doc_id"),
             "__toks",
             F.posexplode(starts).alias("__i", "pos"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "pos",
             F.conv(
                 F.substring(
@@ -792,14 +758,12 @@ def duplicate_spans(
     df: DataFrame,
     n: int = 50,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact-substring duplicate spans (the remove-from-middle dedup of
     Lee et al. 2021, arXiv:2107.06499, re-expressed relationally): find
     every maximal token span whose ``n``-token windows ALL occur at least
     ``min_count`` times in the corpus (within-doc repeats count, as in
-    the paper). Returns (id, span_start, span_end) in 0-based
+    the paper). Returns (doc_id, span_start, span_end) in 0-based
     NORMALIZED-token coordinates, end exclusive.
 
     The paper builds a corpus-wide suffix array — inherently sequential
@@ -829,15 +793,15 @@ def duplicate_spans(
     training-data scope)."""
     if n < 2:
         raise ValueError("window must be at least 2 tokens")
-    pos = _window_hashes(df, n, id_col, text_col)
+    pos = _window_hashes(df, n)
     dup = (
         pos.groupBy("__wh")
         .agg(F.count(F.lit(1)).alias("__c"))
         .filter(F.col("__c") >= min_count)
         .select("__wh")
     )
-    marked = pos.join(dup, "__wh").select(id_col, "pos")
-    w = Window.partitionBy(id_col).orderBy("pos")
+    marked = pos.join(dup, "__wh").select("doc_id", "pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     isl = marked.withColumn(
         "__new",
         F.when(
@@ -851,10 +815,10 @@ def duplicate_spans(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    return isl.groupBy(id_col, "__g").agg(
+    return isl.groupBy("doc_id", "__g").agg(
         F.min("pos").alias("span_start"),
         (F.max("pos") + F.lit(n)).cast("long").alias("span_end"),
-    ).select(id_col, F.col("span_start").cast("long"), "span_end")
+    ).select("doc_id", F.col("span_start").cast("long"), "span_end")
 
 
 def remove_duplicate_spans(
@@ -918,15 +882,9 @@ def remove_duplicate_spans(
     )
 
 
-def dedup_against(
-    df: DataFrame,
-    seen: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seen_hash_col: str = "content_hash",
-) -> DataFrame:
+def dedup_against(df: DataFrame, seen: DataFrame) -> DataFrame:
     """Incremental (cross-snapshot) exact dedup: keep only docs whose
-    normalized-content md5 is NOT in ``seen`` — the each-new-crawl-
+    normalized-content md5 is NOT in ``seen``'s ``content_hash`` — the each-new-crawl-
     against-all-prior-crawls discipline. Within the new batch itself,
     :func:`exact_dedup` semantics apply (min id per new hash), so the
     output is both internally and historically unique. Returns the
@@ -943,23 +901,23 @@ def dedup_against(
     anti-join (operators/urlseen.py), which adds the bloom fast path
     for the small-seen regime; content dedup rolls TBs of hashes, so
     the join is the honest default here."""
-    fresh = exact_dedup(df, id_col=id_col, text_col=text_col)
-    prior = seen.select(F.col(seen_hash_col).alias("content_hash")).distinct()
+    fresh = exact_dedup(df)
+    prior = seen.select("content_hash").distinct()
     return fresh.join(prior, "content_hash", "left_anti")
 
 
-def _line_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, pos, __lh, __blank): one row per newline-delimited line of
-    ``text_col``, ``pos`` the 0-based line index, ``__lh`` a 60-bit
+def _line_rows(df: DataFrame) -> DataFrame:
+    """(doc_id, pos, __lh, __blank): one row per newline-delimited line of
+    ``text``, ``pos`` the 0-based line index, ``__lh`` a 60-bit
     md5-derived hash of the TRIMMED line, ``__blank`` true for lines
     that are empty after trimming. NULL text yields no rows. One scan,
     no shuffle; row volume is O(total lines) — far below the token
     explodes of :func:`_window_hashes` / winnowing."""
     return df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "__line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "__line"),
     ).select(
-        id_col,
+        "doc_id",
         "pos",
         F.conv(F.substring(F.md5(F.trim("__line")), 1, 15), 16, 10)
         .cast("long")
@@ -968,36 +926,37 @@ def _line_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def duplicate_lines(
-    df: DataFrame,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+# a line counts as boilerplate once it occurs in this many distinct docs
+# (see duplicate_lines); tests raise it to check the threshold
+LINE_MIN_DOCS = 2
+
+
+def duplicate_lines(df: DataFrame) -> DataFrame:
     """Corpus-wide duplicated lines — the boilerplate detector of the
     CCNet (Wenzek et al. 2020, arXiv:1911.00359) / RefinedWeb (Penedo
     et al. 2023) line-dedup stage: lines whose trimmed content occurs
-    in at least ``min_docs`` DISTINCT documents ("subscribe to our
+    in at least ``LINE_MIN_DOCS`` DISTINCT documents ("subscribe to our
     newsletter", cookie banners, nav menus). Returns one row per
     duplicated line hash: (line_hash, n_docs, n_occ, first_doc,
     first_pos), where (first_doc, first_pos) is the globally first
-    occurrence (min (id, pos)) — the one :func:`remove_duplicate_lines`
+    occurrence (min (doc_id, pos)) — the one :func:`remove_duplicate_lines`
     keeps. Blank lines (empty after trim) never count: every document
     has them and they carry no content.
 
-    Scale shape: two map-side-combinable aggregations — (line_hash, id)
+    Scale shape: two map-side-combinable aggregations — (line_hash, doc_id)
     first (collapsing within-doc repeats so n_docs is a distinct-doc
     count without ``countDistinct``'s expand), then line_hash. No
     windows, no joins; a boilerplate line present in millions of docs
     is ONE group whose partial aggregates combine map-side, so skew
     costs nothing. Within-doc repetition is deliberately not a trigger
-    (that is gopher_metrics' dup_line_frac); min_docs counts documents.
+    (that is gopher_metrics' dup_line_frac); LINE_MIN_DOCS counts
+    documents.
     Reference analogue: none (engine-new training-data scope, same
     family as duplicate_spans)."""
     per_doc = (
-        _line_rows(df, id_col, text_col)
+        _line_rows(df)
         .filter(~F.col("__blank"))
-        .groupBy("__lh", id_col)
+        .groupBy("__lh", "doc_id")
         .agg(F.count(F.lit(1)).alias("__c"), F.min("pos").alias("__minpos"))
     )
     return (
@@ -1005,27 +964,22 @@ def duplicate_lines(
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("__c").alias("n_occ"),
-            F.min(F.struct(F.col(id_col), F.col("__minpos"))).alias("__f"),
+            F.min(F.struct(F.col("doc_id"), F.col("__minpos"))).alias("__f"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= LINE_MIN_DOCS)
         .select(
             F.col("__lh").alias("line_hash"),
             "n_docs",
             "n_occ",
-            F.col("__f")[id_col].alias("first_doc"),
+            F.col("__f")["doc_id"].alias("first_doc"),
             F.col("__f")["__minpos"].alias("first_pos"),
         )
     )
 
 
-def remove_duplicate_lines(
-    df: DataFrame,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Rewrite ``text_col`` with corpus-duplicated lines removed, plus
-    ``n_removed_lines``. The globally first occurrence (min (id, pos))
+def remove_duplicate_lines(df: DataFrame) -> DataFrame:
+    """Rewrite ``text`` with corpus-duplicated lines removed, plus
+    ``n_removed_lines``. The globally first occurrence (min (doc_id, pos))
     is kept and the rest removed — CCNet's keep-one-copy discipline.
     Blank lines are always kept (structure, not content); NULL text
     stays NULL (n_removed_lines 0). Unlike the span path, untouched docs
@@ -1043,29 +997,29 @@ def remove_duplicate_lines(
     and probe), the same deliberate trade as duplicate_spans: a
     re-evaluated codegen scan is embarrassingly parallel, a
     count-over-hash-partition window is not."""
-    dup = duplicate_lines(df, min_docs, id_col, text_col)
-    rows = _line_rows(df, id_col, text_col).filter(~F.col("__blank"))
+    dup = duplicate_lines(df)
+    rows = _line_rows(df).filter(~F.col("__blank"))
     removed = rows.join(dup, rows["__lh"] == dup["line_hash"]).filter(
         ~(
-            (F.col(id_col) == F.col("first_doc"))
+            (F.col("doc_id") == F.col("first_doc"))
             & (F.col("pos") == F.col("first_pos"))
         )
     )
-    per_doc = removed.groupBy(id_col).agg(
+    per_doc = removed.groupBy("doc_id").agg(
         F.collect_set("pos").alias("__rm")
     )
-    out_cols = [c for c in df.columns if c != text_col]
-    joined = df.join(per_doc, id_col, "left")
+    out_cols = [c for c in df.columns if c != "text"]
+    joined = df.join(per_doc, "doc_id", "left")
     kept = F.filter(
-        F.split(F.col(text_col), "\n"),
+        F.split(F.col("text"), "\n"),
         lambda line, i: F.col("__rm").isNull()
         | ~F.exists("__rm", lambda p: p == i),
     )
     return joined.select(
         *out_cols,
-        F.when(F.col(text_col).isNull(), F.lit(None).cast("string"))
+        F.when(F.col("text").isNull(), F.lit(None).cast("string"))
         .otherwise(F.concat_ws("\n", kept))
-        .alias(text_col),
+        .alias("text"),
         F.coalesce(F.size("__rm"), F.lit(0)).cast("long")
         .alias("n_removed_lines"),
     )

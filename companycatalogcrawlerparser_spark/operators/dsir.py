@@ -1,12 +1,12 @@
 """DSIR-style data selection via importance resampling (Xie et al.,
 NeurIPS 2023, arXiv:2302.03169): pick raw-corpus documents whose hashed
 n-gram feature distribution looks like a small TARGET corpus, by scoring
-each doc with the log importance ratio of two bag-of-hashed-n-grams
-models and Gumbel-top-k sampling on the scores.
+each doc with the log importance ratio of two bag-of-hashed-bigram
+models. Selecting on the scores is the caller's step.
 
 Spark-first shape, in scale order:
 
-1. features — one row per word-n-gram occurrence, hashed into
+1. features — one row per word-bigram occurrence, hashed into
    ``num_buckets`` (reuses the dedup family's exploded codegen window
    hashing — O(total tokens) rows, no shuffle);
 2. the two bucket distributions — ONE map-side-combinable groupBy each
@@ -15,12 +15,7 @@ Spark-first shape, in scale order:
    ``broadcast()`` into the scoring join so the corpus never shuffles on
    the feature axis;
 4. per-doc score — explode + broadcast-join + one groupBy(id) sum (the
-   only corpus-sized shuffle, keyed by the id the caller already owns);
-5. selection — deterministic Gumbel-top-k: the Gumbel noise is derived
-   from the same md5 gate as `curation.stratified_sample`, so the
-   "resample" is a pure function of (id, salt) — partition-invariant,
-   reproducible across clusters, and still a faithful
-   sample-without-replacement ∝ importance weight.
+   only corpus-sized shuffle, keyed by the id the caller already owns).
 
 The raw distribution may be estimated from a sample of the corpus (pass
 ``raw``); DSIR's quality depends on the target/raw RATIO, not on raw
@@ -37,43 +32,34 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .curation import sample_bucket
 from .dedup import _window_hashes
 
 __all__ = [
     "dsir_features",
     "dsir_log_ratios",
     "dsir_scores",
-    "dsir_select",
 ]
 
-_GATE_DENOM = 10_000
+# Laplace smoothing of the two bucket distributions
+_ALPHA = 0.5
 
 
-def dsir_features(
-    df: DataFrame,
-    n: int = 2,
-    num_buckets: int = 10_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, bucket): one row per word-``n``-gram OCCURRENCE of the
+def dsir_features(df: DataFrame, num_buckets: int = 10_000) -> DataFrame:
+    """(doc_id, bucket): one row per word-bigram OCCURRENCE of the
     normalized text (bag semantics — repeats count, as in the paper's
-    unigram/bigram models). Bucket = 60-bit md5 window hash mod
-    ``num_buckets`` — the md5 idiom keeps assignment engine-portable.
-    Docs shorter than ``n`` tokens contribute no rows."""
-    wh = _window_hashes(df, n, id_col, text_col)
+    bigram model). Bucket = 60-bit md5 window hash mod ``num_buckets`` —
+    the md5 idiom keeps assignment engine-portable. Docs shorter than
+    two tokens contribute no rows."""
+    wh = _window_hashes(df, 2)
     return wh.select(
-        id_col, F.pmod(F.col("__wh"), F.lit(num_buckets)).alias("bucket")
+        "doc_id", F.pmod(F.col("__wh"), F.lit(num_buckets)).alias("bucket")
     )
 
 
 def dsir_log_ratios(
     target: DataFrame,
     raw: DataFrame,
-    n: int = 2,
     num_buckets: int = 10_000,
-    alpha: float = 0.5,
     target_features: Optional[DataFrame] = None,
     raw_features: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -82,14 +68,14 @@ def dsir_log_ratios(
 
         log((t_b + α) / (T + α·B)) − log((r_b + α) / (R + α·B))
 
-    where t/r are per-bucket n-gram counts of the target/raw corpora and
+    with α = 0.5, where t/r are per-bucket bigram counts of the target/raw corpora and
     T/R their totals. Buckets unseen in either corpus get the smoothed
     default (NOT zero — a doc full of never-target-seen features should
     score below one full of common ones). Output is ``num_buckets`` rows
     — broadcast it into the scoring join (dsir_scores does).
 
     ``target_features`` / ``raw_features`` (r8): precomputed
-    :func:`dsir_features` frames to reuse one n-gram explode across the
+    :func:`dsir_features` frames to reuse one bigram explode across the
     ratio counts and a subsequent :func:`dsir_scores` pass — a caller
     whose target is a SLICE of raw can derive both from one persisted
     feature frame (the default recomputes: materializing O(total tokens)
@@ -100,7 +86,7 @@ def dsir_log_ratios(
         feats = (
             pre
             if pre is not None
-            else dsir_features(d, n, num_buckets)
+            else dsir_features(d, num_buckets)
         )
         return feats.groupBy("bucket").agg(F.count(F.lit(1)).alias(name))
 
@@ -130,7 +116,7 @@ def dsir_log_ratios(
         F.sum("t").cast("double").alias("__tt"),
         F.sum("r").cast("double").alias("__rt"),
     )
-    b = float(num_buckets)
+    b, alpha = float(num_buckets), _ALPHA
     return joined.crossJoin(F.broadcast(tot)).select(
         "bucket",
         "t",
@@ -145,12 +131,11 @@ def dsir_log_ratios(
 def dsir_scores(
     docs: DataFrame,
     ratios: DataFrame,
-    n: int = 2,
     num_buckets: int = 10_000,
     features: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Every input doc decorated with its importance score: the sum of
-    ``log_ratio`` over the doc's n-gram occurrences (the log of the
+    ``log_ratio`` over the doc's bigram occurrences (the log of the
     doc's importance weight under the two bag-of-n-grams models), plus
     ``n_features``. Total decoration: featureless docs (short/NULL
     text) keep a row with score 0.0 — a downstream selector sees them
@@ -163,7 +148,7 @@ def dsir_scores(
     feats = (
         features
         if features is not None
-        else dsir_features(docs, n, num_buckets)
+        else dsir_features(docs, num_buckets)
     )
     per_doc = (
         feats.join(
@@ -181,25 +166,3 @@ def dsir_scores(
         F.coalesce("__nf", F.lit(0)).alias("n_features"),
     )
 
-
-def dsir_select(scored: DataFrame, k: int, salt: str = "") -> DataFrame:
-    """Top-``k`` of the scored frame by the paper's sampling: rank by
-    ``dsir_score + Gumbel(doc_id)`` where the Gumbel noise is
-    −log(−log(u)) with u the doc's md5 gate bucket mapped to (0, 1) —
-    the standard Gumbel-top-k construction, which draws k docs without
-    replacement with probability ∝ exp(score), here made a pure
-    deterministic function of (doc_id, salt). Ties break on the id, so
-    the selected SET is unique and partition-invariant.
-
-    Plan shape: orderBy+limit compiles to TakeOrdered — per-partition
-    top-k then a k-row merge at the driver; the corpus never globally
-    sorts."""
-    u = (
-        sample_bucket(F.col("doc_id"), salt).cast("double") + F.lit(0.5)
-    ) / F.lit(float(_GATE_DENOM))
-    key = F.col("dsir_score").cast("double") + (-F.log(-F.log(u)))
-    return (
-        scored.withColumn("select_key", key)
-        .orderBy(F.desc("select_key"), F.col("doc_id"))
-        .limit(k)
-    )

@@ -15,14 +15,14 @@ Scale notes (the reason this is NOT MLlib/GraphFrames):
   iterative self-joins otherwise stack an exponentially deepening
   lineage (same discipline as :func:`dedup.connected_components` and the
   crawl's frontier loop);
-- arithmetic is FIXED-POINT INTEGER (rank scaled by ``scale``, damping
+- arithmetic is FIXED-POINT INTEGER (rank scaled by ``SCALE``, damping
   applied as ``(rank * d_num) div (d_den * outdeg)``): sums of longs are
   associative/commutative, so the result is bit-identical regardless of
   partitioning, core count, or aggregation order — float PageRank
   differs in the last ulp between any two plans, which would make
   cross-engine and cross-run hash verification impossible. The quantum
-  (1/scale) bounds the error per edge per round; rank_q fits int64 up to
-  in-neighbour mass ~9e12 * scale, far beyond any web graph's max
+  (1/SCALE) bounds the error per edge per round; rank_q fits int64 up to
+  in-neighbour mass ~9e12 * SCALE, far beyond any web graph's max
   in-degree share.
 
 Semantics: the un-normalized "citation rank" recurrence
@@ -46,29 +46,27 @@ __all__ = ["pagerank"]
 # rows ≈ 12 MB collected — control-aggregate-sized.
 PR_DRIVER_MAX_EDGES = 500_000
 
+# fixed-point scale of rank_q, and the damping d = 85/100
+SCALE = 10**6
+DAMPING_NUM, DAMPING_DEN = 85, 100
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 10**6,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """(node, rank_q) for every node appearing in ``edges``.
 
-    ``rank_q`` is the fixed-point rank scaled by ``scale`` (divide by
-    ``scale`` for the conventional value; iteration 0 starts every node
-    at 1.0 = ``scale``). ``iters`` is intentionally explicit and small:
+def pagerank(edges: DataFrame, iters: int) -> DataFrame:
+    """(node, rank_q) for every node appearing in ``edges`` (``src``,
+    ``dst``).
+
+    ``rank_q`` is the fixed-point rank scaled by ``SCALE`` (divide by
+    ``SCALE`` for the conventional value; iteration 0 starts every node
+    at 1.0 = ``SCALE``). ``iters`` is intentionally explicit and small:
     crawl-quality weighting uses a handful of power rounds, and an
     unrolled-SQL oracle can mirror any fixed ``iters`` exactly.
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
+    scale, damping_num, damping_den = SCALE, DAMPING_NUM, DAMPING_DEN
     ed = edges.select(
-        F.col(src).cast("long").alias("u"),
-        F.col(dst).cast("long").alias("v"),
+        F.col("src").cast("long").alias("u"),
+        F.col("dst").cast("long").alias("v"),
     ).distinct()
     # out-degree is attached to the edge rows ONCE (r8): the iteration
     # below then needs a single join per round instead of rank+outdeg —

@@ -31,11 +31,6 @@ Scale shape, in corpus order:
    the only corpus-sized shuffle, keyed by the caller's own id. Docs
    with no tokens decorate with logp 0 / n 0 (total, the
    contamination_scores contract).
-4. :func:`ppl_bucket` — CCNet's head/middle/tail label from fixed
-   per-token log-prob thresholds (theirs come from the reference-corpus
-   score distribution; pass them in — computing quantiles in-job would
-   make the label depend on the batch, which CCNet explicitly avoids by
-   freezing cutoffs per language).
 
 Model semantics: p(w|v) = (c(v,w) + 1) / (c(v) + V + 1) where c(v,w)
 counts bigram occurrences in the reference, c(v) = Σ_w c(v,w), and V =
@@ -55,7 +50,6 @@ __all__ = [
     "lm_bigrams",
     "train_bigram_lm",
     "lm_logprob",
-    "ppl_bucket",
 ]
 
 BOS = "<s>"
@@ -68,23 +62,21 @@ def _toks(text) -> Column:
     return F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
 
 
-def lm_bigrams(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, v, w): one row per token occurrence, v = previous token
+def lm_bigrams(docs: DataFrame) -> DataFrame:
+    """(doc_id, v, w): one row per token occurrence, v = previous token
     (``<s>`` for the first). The token array rides through the
     Generate only within this projection (row size is O(doc tokens),
     the established _window_hashes trade — fine for web-page-sized
     docs; a book-length corpus would pre-chunk with
     curation.split_sequences)."""
     return (
-        docs.select(F.col(id_col), _toks(F.col(text_col)).alias("__t"))
+        docs.select(F.col("doc_id"), _toks(F.col("text")).alias("__t"))
         .select(
-            id_col, "__t", F.posexplode("__t").alias("__i", "w")
+            "doc_id", "__t", F.posexplode("__t").alias("__i", "w")
         )
         .filter(F.col("w") != "")
         .select(
-            id_col,
+            "doc_id",
             F.when(F.col("__i") == 0, F.lit(BOS))
             .otherwise(F.element_at("__t", F.col("__i")))
             .alias("v"),
@@ -220,18 +212,3 @@ def lm_logprob(
         ).alias("ppl"),
     )
 
-
-def ppl_bucket(
-    lm_logp, n_lm_terms, head_max: float, tail_min: float
-) -> Column:
-    """CCNet head/middle/tail label from FIXED perplexity cutoffs
-    (per-token negative log prob −logp/n; lower = more reference-like):
-    'head' when ≤ head_max, 'tail' when > tail_min, else 'middle';
-    empty docs → 'tail' (CCNet discards them)."""
-    nl = -F.col(lm_logp) / F.col(n_lm_terms)
-    return (
-        F.when(F.col(n_lm_terms) == 0, F.lit("tail"))
-        .when(nl <= F.lit(float(head_max)), F.lit("head"))
-        .when(nl > F.lit(float(tail_min)), F.lit("tail"))
-        .otherwise(F.lit("middle"))
-    )

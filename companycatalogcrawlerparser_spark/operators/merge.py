@@ -123,19 +123,17 @@ def assign_dense_ids(df: DataFrame, order_col: str, id_col: str) -> DataFrame:
     return out
 
 
-def high_water_mark(
-    state: DataFrame, name_col: str, name: str, id_col: str = "last_id"
-) -> int:
+def high_water_mark(state: DataFrame, name_col: str, name: str) -> int:
     """K7/S5 — mailer resume watermark read
     (``ConsoleAppMailer/DbAccess.fs:47-60``)."""
-    row = state.filter(F.col(name_col) == name).select(F.max(id_col).alias("m")).first()
+    row = state.filter(F.col(name_col) == name).select(F.max("last_id").alias("m")).first()
     return int(row["m"]) if row and row["m"] is not None else 0
 
 
 def set_high_water_mark(
-    state: DataFrame, spark, name_col: str, name: str, value: int, id_col: str = "last_id"
+    state: DataFrame, spark, name_col: str, name: str, value: int
 ) -> DataFrame:
     """K7 — upsert the (file, last_id) row (``ConsoleAppMailer/DbAccess.fs:25-45``)."""
-    new = local_frame(spark, [(name, value)], f"{name_col} string, {id_col} long")
+    new = local_frame(spark, [(name, value)], f"{name_col} string, last_id long")
     kept = state.filter(F.col(name_col) != name)
     return kept.unionByName(new)

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Similarity search over the ``embedding`` column (``array<float>``) of
+frames keyed by ``vec_id``.
 
 - brute-force cosine top-k: the correctness baseline. Dot products via
   ``F.zip_with`` + ``F.aggregate`` — JVM-side, codegen'd, no Python.
@@ -45,8 +46,6 @@ def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """For each query row: top-k corpus neighbours by cosine (excluding
     self), scored in double, rounded 1e-6, tie-broken by neighbour id.
@@ -55,12 +54,12 @@ def cosine_topk_bruteforce(
     # re-run the interpreted HOF norm fold per PAIR (k×n times for the
     # corpus side) instead of once per vector
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("__qn"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
+        _norm(F.col("embedding")).alias("__qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("__cn"),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"),
+        _norm(F.col("embedding")).alias("__cn"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -118,25 +117,23 @@ def cosine_topk_lsh(
     k: int = 5,
     num_planes: int = 8,
     dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN: bucket by hyperplane signature, exact cosine within the bucket.
     Recall < 1 by design; the bench compares its throughput and recall
     against the brute-force baseline."""
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = len(corpus.select("embedding").first()[0])
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("__cn"),
-        lsh_signature(F.col(vec_col), num_planes, dim).alias("sig"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        _norm(F.col("embedding")).alias("__cn"),
+        lsh_signature(F.col("embedding"), num_planes, dim).alias("sig"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("__qn"),
-        lsh_signature(F.col(vec_col), num_planes, dim).alias("sig"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        _norm(F.col("embedding")).alias("__qn"),
+        lsh_signature(F.col("embedding"), num_planes, dim).alias("sig"),
     )
     scored = (
         c.join(F.broadcast(q), "sig")
@@ -164,19 +161,14 @@ def cosine_topk_lsh(
 # IVF (inverted-file) ANN — coarse quantizer + nprobe cell search
 
 
-def ivf_pivots(
-    corpus: DataFrame,
-    n_cells: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list:
+def ivf_pivots(corpus: DataFrame, n_cells: int) -> list:
     """Deterministic coarse-quantizer pivots: the ``n_cells`` corpus
     vectors with the smallest ``md5(id)`` — an order-free uniform sample
     any engine reproduces exactly (no RNG state, no float averaging).
     ``orderBy + limit`` compiles to TakeOrdered: no global sort
     materializes, and only n_cells×dim floats reach the driver."""
     rows = (
-        corpus.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
+        corpus.select(F.col("vec_id").alias("i"), F.col("embedding").alias("v"))
         .orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
         .limit(n_cells)
         .collect()
@@ -288,8 +280,6 @@ def cosine_topk_ivf(
     n_cells: int = 16,
     nprobe: int = 4,
     cents: list | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     kernel: str = "expr",
 ) -> DataFrame:
     """IVF ANN: corpus rows live in inverted lists keyed by nearest
@@ -305,16 +295,14 @@ def cosine_topk_ivf(
     probing stays expression-based either way (queries are few, and the
     probe order is part of the pinned semantics)."""
     if cents is None:
-        cents = ivf_pivots(corpus, n_cells, id_col, vec_col)
+        cents = ivf_pivots(corpus, n_cells)
     if kernel == "arrow":
-        return _ivf_topk_arrow(
-            queries, corpus, cents, k, nprobe, id_col, vec_col
-        )
+        return _ivf_topk_arrow(queries, corpus, cents, k, nprobe)
     c = assign_cells(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            _norm(F.col(vec_col)).alias("__cn"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
+            _norm(F.col("embedding")).alias("__cn"),
         ),
         cents,
         "c_vec",
@@ -327,8 +315,8 @@ def cosine_topk_ivf(
     )
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-            _norm(F.col(vec_col)).alias("__qn"),
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
+            _norm(F.col("embedding")).alias("__qn"),
         )
         .withColumn("cell", F.explode(F.transform(probes, lambda p: p["i"])))
     )
@@ -361,15 +349,15 @@ def cosine_topk_ivf(
 _ARROW_IVF_MAX_QUERIES = 2048
 
 
-def _ivf_out_schema(queries: DataFrame, corpus: DataFrame, id_col: str):
+def _ivf_out_schema(queries: DataFrame, corpus: DataFrame):
     """applyInPandas/mapInPandas output schema with the id field types
     DERIVED from the inputs (r5 advice: a hardcoded ``long`` broke or
     miscast string vec_ids that the expr kernel handles fine)."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     return StructType([
-        StructField("query_id", queries.schema[id_col].dataType),
-        StructField("neighbor_id", corpus.schema[id_col].dataType),
+        StructField("query_id", queries.schema["vec_id"].dataType),
+        StructField("neighbor_id", corpus.schema["vec_id"].dataType),
         StructField("score", DoubleType()),
     ])
 
@@ -416,8 +404,6 @@ def _ivf_topk_arrow(
     cents: list,
     k: int,
     nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """FUSED Arrow IVF scoring path (r6): ONE ``mapInPandas`` pass over
     the corpus that assigns each batch's cells AND scores the batch's
@@ -457,14 +443,12 @@ def _ivf_topk_arrow(
     spark = corpus.sparkSession
     n_q = queries.count()
     if n_q > _ARROW_IVF_MAX_QUERIES:
-        return _ivf_topk_arrow_cogroup(
-            queries, corpus, cents, k, nprobe, id_col, vec_col
-        )
+        return _ivf_topk_arrow_cogroup(queries, corpus, cents, k, nprobe)
     qrows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).collect() if n_q else []
 
-    out_schema = _ivf_out_schema(queries, corpus, id_col)
+    out_schema = _ivf_out_schema(queries, corpus)
     if not qrows:
         return (
             local_frame(corpus.sparkSession, [], out_schema)
@@ -568,7 +552,7 @@ def _ivf_topk_arrow(
             )
 
     local = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     ).mapInPandas(fused, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id")
@@ -586,8 +570,6 @@ def _ivf_topk_arrow_cogroup(
     cents: list,
     k: int,
     nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Cell-cogroup Arrow IVF variant — the r5 shape, kept as the
     fallback when the query set exceeds ``_ARROW_IVF_MAX_QUERIES`` (too
@@ -602,8 +584,8 @@ def _ivf_topk_arrow_cogroup(
 
     c = assign_cells(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
         ),
         cents,
         "c_vec",
@@ -616,7 +598,7 @@ def _ivf_topk_arrow_cogroup(
     )
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         )
         .withColumn("cell", F.explode(F.transform(probes, lambda p: p["i"])))
     )
@@ -653,7 +635,7 @@ def _ivf_topk_arrow_cogroup(
     local = (
         c.groupBy("cell")
         .cogroup(q.groupBy("cell"))
-        .applyInPandas(score, _ivf_out_schema(queries, corpus, id_col))
+        .applyInPandas(score, _ivf_out_schema(queries, corpus))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id")
@@ -665,30 +647,30 @@ def _ivf_topk_arrow_cogroup(
     )
 
 
-def planes_for_corpus(n_rows: int, target_bucket: int = 128) -> int:
+def planes_for_corpus(n_rows: int) -> int:
     """Plane count such that the EXPECTED bucket population n/2^planes stays
-    under ``target_bucket`` (uniform-bucket approximation) — more planes for
-    bigger corpora, floor of 6 so small inputs keep meaningful recall."""
+    under 128 (uniform-bucket approximation) — more planes for bigger
+    corpora, floor of 6 so small inputs keep meaningful recall."""
     import math
 
-    if n_rows <= target_bucket:
+    if n_rows <= 128:
         return 6
-    return max(6, math.ceil(math.log2(n_rows / target_bucket)))
+    return max(6, math.ceil(math.log2(n_rows / 128)))
 
 
-def _signatures(df: DataFrame, id_col: str, vec_col: str, num_planes, dim):
+def _signatures(df: DataFrame, num_planes, dim):
     if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+        dim = len(df.select("embedding").first()[0])
     if num_planes is None:
         num_planes = planes_for_corpus(df.count())
     return df.select(
-        F.col(id_col), F.col(vec_col),
-        lsh_signature(F.col(vec_col), num_planes, dim).alias("sig"),
+        F.col("vec_id"), F.col("embedding"),
+        lsh_signature(F.col("embedding"), num_planes, dim).alias("sig"),
     )
 
 
 def cosine_pairs(
-    df: DataFrame, threshold: float, id_col: str = "vec_id", vec_col: str = "embedding",
+    df: DataFrame, threshold: float,
     num_planes: int | None = 6, dim: int | None = None,
     max_bucket: int | None = 1024,
     observation=None,
@@ -712,7 +694,7 @@ def cosine_pairs(
     ``dedup.minhash_lsh_pairs``; the separate audit query stays for
     callers without the metric wired (r5 verdict: capped volume should
     ride the producing job, not a second scan)."""
-    sig = _signatures(df, id_col, vec_col, num_planes, dim)
+    sig = _signatures(df, num_planes, dim)
     if max_bucket is not None:
         bw = Window.partitionBy("sig")
         sig = sig.withColumn("__n", F.count("*").over(bw))
@@ -727,40 +709,41 @@ def cosine_pairs(
         sig = sig.filter(F.col("__n") <= max_bucket).drop("__n")
     # norm once per row (a bucket of D rows would otherwise re-fold each
     # vector's norm D-1 times inside the pair join)
-    sig = sig.withColumn("__n2", _norm(F.col(vec_col)))
+    sig = sig.withColumn("__n2", _norm(F.col("embedding")))
     a, b = sig.alias("a"), sig.alias("b")
     return (
         a.join(
             b,
             (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .withColumn(
             "score",
             F.round(
-                _dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+                _dot(F.col("a.embedding"), F.col("b.embedding"))
                 / (F.col("a.__n2") * F.col("b.__n2")),
                 6,
             ),
         )
         .filter(F.col("score") >= threshold)
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             "score",
         )
     )
+
+
+# SemDeDup's cell-size cap: cells above it are excluded from pair
+# generation (see semantic_dedup); tests lower it to force the cap
+SEMDUP_MAX_CELL = 4096
 
 
 def semantic_dedup(
     corpus: DataFrame,
     n_cells: int = 12,
     threshold: float = 0.94,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cell: int = 4096,
     observation=None,
-    kernel: str = "expr",
     cents: list | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) re-expressed
@@ -772,14 +755,14 @@ def semantic_dedup(
     (lowest cent_cos: the paper's keep-the-outlier rule, preserving
     diversity), ties to the lower id.
 
-    Returns one row per corpus vector: (id, cell, cent_cos, component,
-    keep) — component = the dup group's min reachable id (own id for
-    singletons), keep = the survivor flag; ``.filter('keep')`` IS the
-    semantically deduplicated corpus.
+    Returns one row per corpus vector: (vec_id, cell, cent_cos,
+    component, keep) — component = the dup group's min reachable id (own
+    id for singletons), keep = the survivor flag; ``.filter('keep')`` IS
+    the semantically deduplicated corpus.
 
     Scale shape: pair generation is confined to cells (the paper's own
     device — n_cells scales with the corpus so cell population stays
-    bounded); cells above ``max_cell`` are excluded from pair
+    bounded); cells above ``SEMDUP_MAX_CELL`` are excluded from pair
     generation with the skipped volume observable IN the producing job
     (``observation``: skipped_rows / max_cell_seen — the
     minhash/cosine cap contract; an over-cap cell is an
@@ -789,77 +772,21 @@ def semantic_dedup(
     itself touches one cell-key join and one component join. The
     eager localCheckpoint pins the interpreted HOF cell scoring,
     which otherwise re-evaluates once per consumer (pair join probe,
-    pair join build, final labeling).
-
-    ``kernel`` selects the scoring implementation, NOT the semantics:
-    "expr" (the hash-verified driver path) folds per-cell cosine
-    expressions and self-joins within cells; "arrow" — the scale path
-    when n_cells·dim per-row expression work or the within-cell pair
-    count dominates — assigns cells with one sequential-order numpy
-    matmul per Arrow batch and emits dup pairs from a per-cell blocked
-    gram matrix inside ``applyInPandas``. Both kernels share
-    :func:`_np_seqdot`-style ascending-index accumulation + HALF-UP
-    1e-6 rounding, so scores (and therefore cells, pairs, components,
-    survivors) are bit-identical — pinned row-for-row by
-    tests/test_operators.py::TestSimilarity."""
+    pair join build, final labeling)."""
     from .dedup import connected_components
 
-    if kernel not in ("expr", "arrow"):
-        raise ValueError(f"unknown semantic_dedup kernel {kernel!r}")
+    max_cell = SEMDUP_MAX_CELL
     if cents is None:
         # callers sharing the quantizer with an IVF path pass the pivots
         # in (one TakeOrdered+collect instead of one per consumer)
-        cents = ivf_pivots(corpus, n_cells, id_col, vec_col)
-    if kernel == "expr":
-        m = F.array_max(_cell_scores(F.col(vec_col), cents))
-        assigned = corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            m["i"].alias("cell"),
-            m["s"].alias("cent_cos"),
-        ).localCheckpoint(eager=True)
-    else:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        globals().setdefault("pd", pd)
-        cents_local = [list(map(float, c)) for c in cents]
-
-        @pandas_udf("struct<cell:int, cent_cos:double>")
-        def cell_and_score(vecs: pd.Series) -> pd.DataFrame:
-            import numpy as np
-
-            C = np.asarray(cents_local, dtype=np.float64)
-            cn = _np_seqnorm(C)
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            vn = _np_seqnorm(M)
-            scores = _np_round6(
-                _np_seqdot(M, C) / (vn[:, None] * cn[None, :])
-            )
-            # ties to the higher index, like struct-max over (s, i)
-            rev = scores[:, ::-1]
-            idx = scores.shape[1] - 1 - rev.argmax(axis=1)
-            return pd.DataFrame({
-                "cell": idx.astype("int32"),
-                "cent_cos": scores[np.arange(len(idx)), idx],
-            })
-
-        assigned = (
-            corpus.select(
-                F.col(id_col),
-                F.col(vec_col),
-                cell_and_score(F.col(vec_col)).alias("__cs"),
-            )
-            # expand from ONE aliased struct so the Arrow UDF runs once
-            # per row, not once per extracted field
-            .select(
-                F.col(id_col),
-                F.col(vec_col),
-                F.col("__cs.cell").alias("cell"),
-                F.col("__cs.cent_cos").alias("cent_cos"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        cents = ivf_pivots(corpus, n_cells)
+    m = F.array_max(_cell_scores(F.col("embedding"), cents))
+    assigned = corpus.select(
+        F.col("vec_id"),
+        F.col("embedding"),
+        m["i"].alias("cell"),
+        m["s"].alias("cent_cos"),
+    ).localCheckpoint(eager=True)
     # cell-size gate via groupBy + broadcast join (r8; was a count
     # window partitioned by cell): the window buffered each cell's rows
     # in ONE task — and the over-cap mega-cell this gate exists to
@@ -877,119 +804,63 @@ def semantic_dedup(
             F.max("__n").alias("max_cell_seen"),
         )
     inpair = sized.filter(F.col("__n") <= max_cell).drop("__n")
-    if kernel == "expr":
-        inpair = inpair.withColumn("__n2", _norm(F.col(vec_col)))
-        if observation is not None:
-            # fire the observed metrics in exactly ONE job: the frame
-            # below is self-joined, and a CollectMetrics node that
-            # appears on both sides of a join breaks Observation.get
-            # when the consuming action is an RDD-path localCheckpoint
-            # (measured: count() tolerates the duplication,
-            # connected_components' eager checkpoint does not — the JVM
-            # get asserts). The checkpoint also evaluates the cell-count
-            # window once instead of once per join side.
-            inpair = inpair.localCheckpoint(eager=True)
-        a, b = inpair.alias("a"), inpair.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.cell") == F.col("b.cell"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .withColumn(
-                "score",
-                F.round(
-                    _dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-                    / (F.col("a.__n2") * F.col("b.__n2")),
-                    6,
-                ),
-            )
-            .filter(F.col("score") >= threshold)
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
+    inpair = inpair.withColumn("__n2", _norm(F.col("embedding")))
+    if observation is not None:
+        # fire the observed metrics in exactly ONE job: the frame
+        # below is self-joined, and a CollectMetrics node that
+        # appears on both sides of a join breaks Observation.get
+        # when the consuming action is an RDD-path localCheckpoint
+        # (measured: count() tolerates the duplication,
+        # connected_components' eager checkpoint does not — the JVM
+        # get asserts). The checkpoint also evaluates the cell-count
+        # window once instead of once per join side.
+        inpair = inpair.localCheckpoint(eager=True)
+    a, b = inpair.alias("a"), inpair.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.cell") == F.col("b.cell"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-    else:
-        from pyspark.sql.types import StructField, StructType
-
-        if observation is not None:
-            # same guard as the expr branch: even a SINGLE CollectMetrics
-            # node breaks Observation.get when its first consuming action
-            # is connected_components' RDD-path localCheckpoint (measured
-            # here too) — fire the metrics with a DataFrame-path action
-            # first
-            inpair = inpair.localCheckpoint(eager=True)
-        id_type = corpus.schema[id_col].dataType
-        pair_schema = StructType([
-            StructField("id_a", id_type), StructField("id_b", id_type)
-        ])
-        thr = float(threshold)
-
-        def _emit_cell_pairs(pdf):
-            import numpy as np
-            import pandas as pd
-
-            n = len(pdf)
-            if n < 2:
-                return pd.DataFrame({"id_a": [], "id_b": []})
-            # ascending-id order so block row index < column index IS
-            # the expr join's id_a < id_b condition
-            pdf = pdf.sort_values(id_col, kind="mergesort")
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            nrm = _np_seqnorm(M)
-            out_a, out_b = [], []
-            # blocked gram: a max_cell-sized cell's full matrix would be
-            # max_cell² float64; 1024-row blocks bound peak memory at
-            # 1024·max_cell·8 bytes while keeping numpy vectorization
-            for i0 in range(0, n, 1024):
-                blk = slice(i0, min(i0 + 1024, n))
-                s = _np_round6(
-                    _np_seqdot(M[blk], M)
-                    / (nrm[blk, None] * nrm[None, :])
-                )
-                ii, jj = np.nonzero(s >= thr)
-                gi = ii + i0
-                keep = gi < jj  # upper triangle only
-                out_a.append(ids[gi[keep]])
-                out_b.append(ids[jj[keep]])
-            return pd.DataFrame({
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-            })
-
-        pairs = inpair.groupBy("cell").applyInPandas(
-            _emit_cell_pairs, pair_schema
+        .withColumn(
+            "score",
+            F.round(
+                _dot(F.col("a.embedding"), F.col("b.embedding"))
+                / (F.col("a.__n2") * F.col("b.__n2")),
+                6,
+            ),
         )
-    cc = connected_components(pairs).withColumnRenamed("node", id_col)
+        .filter(F.col("score") >= threshold)
+        .select(
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+        )
+    )
+    cc = connected_components(pairs).withColumnRenamed("node", "vec_id")
     labeled = (
-        assigned.select(id_col, "cell", "cent_cos")
-        .join(cc, id_col, "left")
-        .withColumn("component", F.coalesce("component", F.col(id_col)))
+        assigned.select("vec_id", "cell", "cent_cos")
+        .join(cc, "vec_id", "left")
+        .withColumn("component", F.coalesce("component", F.col("vec_id")))
     )
     surv = labeled.groupBy("component").agg(
-        F.min(F.struct("cent_cos", id_col)).alias("__s")
+        F.min(F.struct("cent_cos", "vec_id")).alias("__s")
     )
     return labeled.join(surv, "component").select(
-        id_col,
+        "vec_id",
         "cell",
         "cent_cos",
         "component",
-        (F.col("__s")[id_col] == F.col(id_col)).alias("keep"),
+        (F.col("__s")["vec_id"] == F.col("vec_id")).alias("keep"),
     )
 
 
 def cosine_oversized_buckets(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    num_planes: int | None = 6, dim: int | None = None,
+    df: DataFrame, num_planes: int | None = 6, dim: int | None = None,
     max_bucket: int | None = 1024,
 ) -> DataFrame:
     """(sig, n_rows) of buckets :func:`cosine_pairs` skipped under its
     ``max_bucket`` cap — the no-silent-truncation audit surface."""
-    sig = _signatures(df, id_col, vec_col, num_planes, dim)
+    sig = _signatures(df, num_planes, dim)
     return (
         sig.groupBy("sig")
         .agg(F.count("*").alias("n_rows"))

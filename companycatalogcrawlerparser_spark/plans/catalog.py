@@ -33,8 +33,11 @@ PAGENUM_SCHEMA = "page_url string, page_count int"
 
 LAYOUTS = ("bizly", "spravker", "jsprav")
 
+# the city code the category walks stamp on their links (Moscow's)
+CITY_CODE = "77"
 
-def extract_categories(pages: DataFrame, layout: str, city_code: str = "77") -> DataFrame:
+
+def extract_categories(pages: DataFrame, layout: str) -> DataFrame:
     """H1/H2/H3 per layout. ``pages``: (url, html binary). The reference's
     nested show_all/subcats fetches (HtmlParsing.fs:68,103) are modeled as
     second-round fetches in the driver plan, not inside the UDF — pass the
@@ -56,9 +59,9 @@ def extract_categories(pages: DataFrame, layout: str, city_code: str = "77") -> 
                 if layout == "bizly":
                     recs = H.get_div_row(doc)
                 elif layout == "jsprav":
-                    recs = H.get_nov_category_links(doc, "", city_code, fetch=None)
+                    recs = H.get_nov_category_links(doc, "", CITY_CODE, fetch=None)
                 else:
-                    recs = H.get_category_links(doc, "", city_code, fetch=None)
+                    recs = H.get_category_links(doc, "", CITY_CODE, fetch=None)
                 for rid, name, parent, href, cc in recs:
                     rows.append((url, rid, name, parent, href, cc))
             yield pd.DataFrame(
@@ -107,7 +110,7 @@ def extract_companies(pages: DataFrame, layout: str) -> DataFrame:
 NESTED_URL_SCHEMA = "url string, nested_url string"
 
 
-def _nested_url_collector(layout: str, base_url: str, city_code: str):
+def _nested_url_collector(layout: str, base_url: str):
     """Run the refsem walk with a fetch callback that RECORDS the nested
     URLs and returns None (the walk treats None as fetch-failure and
     continues) — exactly the URLs HtmlParsing.fs:68/103 would load."""
@@ -121,16 +124,16 @@ def _nested_url_collector(layout: str, base_url: str, city_code: str):
             return None
 
         if layout == "jsprav":
-            H.get_nov_category_links(doc, base_url, city_code, fetch=fetch)
+            H.get_nov_category_links(doc, base_url, CITY_CODE, fetch=fetch)
         elif layout == "spravker":
-            H.get_category_links(doc, base_url, city_code, fetch=fetch)
+            H.get_category_links(doc, base_url, CITY_CODE, fetch=fetch)
         return urls
 
     return collect
 
 
 def nested_category_urls(
-    pages: DataFrame, layout: str, base_url: str = "", city_code: str = "77"
+    pages: DataFrame, layout: str, base_url: str = ""
 ) -> DataFrame:
     """Round A of the nested-fetch protocol: (url, nested_url) pairs —
     the show_all / subcats pages each category page wants loaded."""
@@ -139,7 +142,7 @@ def nested_category_urls(
     def run(batches):
         from ..refsem import htmlparse as H
 
-        collect = _nested_url_collector(layout, base_url, city_code)
+        collect = _nested_url_collector(layout, base_url)
         for b in batches:
             rows = []
             for url, html in zip(b["url"], b["html"]):
@@ -158,7 +161,6 @@ def extract_categories_nested(
     corpus: DataFrame,
     layout: str,
     base_url: str = "",
-    city_code: str = "77",
 ) -> DataFrame:
     """H2/H3 WITH the reference's nested page loads (HtmlParsing.fs:68,103)
     as a set-oriented two-round plan: round A lists each page's nested
@@ -170,7 +172,7 @@ def extract_categories_nested(
     while-loop of the reference becomes two bulk fetch rounds."""
     import pandas as pd
 
-    nested = nested_category_urls(pages, layout, base_url, city_code)
+    nested = nested_category_urls(pages, layout, base_url)
     subs = (
         nested.join(
             corpus.select(F.col("url").alias("nested_url"), F.col("html").alias("sub_html")),
@@ -209,9 +211,9 @@ def extract_categories_nested(
 
                 doc = H.parse_html(bytes(html).decode("utf-8", errors="replace"))
                 if layout == "jsprav":
-                    recs = H.get_nov_category_links(doc, base_url, city_code, fetch=fetch)
+                    recs = H.get_nov_category_links(doc, base_url, CITY_CODE, fetch=fetch)
                 elif layout == "spravker":
-                    recs = H.get_category_links(doc, base_url, city_code, fetch=fetch)
+                    recs = H.get_category_links(doc, base_url, CITY_CODE, fetch=fetch)
                 else:
                     recs = H.get_div_row(doc)
                 for rid, name, parent, href, cc in recs:
@@ -224,7 +226,7 @@ def extract_categories_nested(
     return enriched.mapInPandas(run, schema=CATEGORY_SCHEMA)
 
 
-def extract_page_counts(pages: DataFrame, tag: str = "div") -> DataFrame:
+def extract_page_counts(pages: DataFrame) -> DataFrame:
     """A4/H8 — pagination max per listing page 1."""
     import pandas as pd
 
@@ -237,7 +239,7 @@ def extract_page_counts(pages: DataFrame, tag: str = "div") -> DataFrame:
                 if html is None:
                     continue
                 doc = H.parse_html(bytes(html).decode("utf-8", errors="replace"))
-                rows.append((url, H.get_page_number(doc, tag)))
+                rows.append((url, H.get_page_number(doc, "div")))
             yield pd.DataFrame(rows, columns=["page_url", "page_count"])
 
     return pages.select("url", "html").mapInPandas(run, schema=PAGENUM_SCHEMA)
@@ -364,8 +366,6 @@ def synthesize_city_seeds(
     cities: DataFrame,
     city_dim: DataFrame,
     pages: DataFrame,
-    static_seeds: DataFrame | None = None,
-    table_code: str = "6",
 ) -> DataFrame:
     """U2/J6 — seed-URL synthesis from the H7 city scrape
     (``Program.fs:345-409``): slice the ``Code='6'`` table's rows
@@ -382,7 +382,7 @@ def synthesize_city_seeds(
 
     from ..functions.canon import translit_cyrillic_to_latin, translit_mappable
 
-    filtered = cities.filter(F.col("code") == table_code)
+    filtered = cities.filter(F.col("code") == "6")
     # skip(1) |> take(n-2) over the FILTERED sequence in document order:
     # rank rows within each source page, drop the first and the last
     # (header/footer artifacts of the sheet export). The window partitions
@@ -415,7 +415,7 @@ def synthesize_city_seeds(
     reachable = joined.join(
         pages.select(F.col("url")), "url", "left_semi"
     ).select("url", "city_code")
-    if static_seeds is None:
-        spark = cities.sparkSession
-        static_seeds = local_frame(spark, CITY_SEEDS_STATIC, "url string, city_code string")
+    static_seeds = local_frame(
+        cities.sparkSession, CITY_SEEDS_STATIC, "url string, city_code string"
+    )
     return static_seeds.unionByName(reachable)

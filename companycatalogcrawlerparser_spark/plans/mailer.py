@@ -17,7 +17,7 @@ from ..functions.emails import mailer_fixups
 from ..operators.merge import high_water_mark, set_high_water_mark
 
 
-def load_templates(spark, root_dir: str, pattern: str = "*.msg") -> DataFrame:
+def load_templates(spark, root_dir: str) -> DataFrame:
     """S7 — recursive ``*.msg`` template enumeration
     (``DataStructure/Library.fs:49-55`` ``getAllFilesFromDir`` /
     ``allFiles``; consumed per-file by ``ConsoleAppMailer/Program.fs:52-55``).
@@ -28,7 +28,7 @@ def load_templates(spark, root_dir: str, pattern: str = "*.msg") -> DataFrame:
     the reference's per-template watermark key (K7 joins on it)."""
     df = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
+        .option("pathGlobFilter", "*.msg")
         .option("recursiveFileLookup", "true")
         .load(root_dir)
     )

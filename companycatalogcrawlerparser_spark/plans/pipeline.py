@@ -6,26 +6,22 @@ contamination / pii / dsir / curation); this module is the chain a
 quality gate → near-dup survivors (minhash ∪ winnow candidates →
 exact-Jaccard verify → connected-component clustering, one
 representative kept) → benchmark decontamination (when a benchmark is
-given) → exact-substring span removal (Lee et al. 2021; when
-``CurationConfig.exactsubstr`` is set) → PII redaction → DSIR importance
-resampling toward a target corpus (Xie et al. 2023; when a target and
-``CurationConfig.dsir_k`` are given) → deterministic stratified sampling
-→ training shuffle + global order index → token-budget shard packing.
-The trainer artifact is the caller's write:
-``SnapshotStore.commit_shards`` takes the returned frame as it is.
+given) → PII redaction → deterministic stratified sampling → training
+shuffle + global order index → token-budget shard packing. Writing the
+returned frame out is the caller's step.
 
 Reference analogue: none — the reference (CrawlerParser/Program.fs)
 ends at extraction+storage; this is the engine-new training-data scope
-from the brief, composed. The XL measurement of this exact chain at 1M
-docs / two core counts is ``tools/bench_dedup_xl.py --tasks
-pipeline_full`` → ``BENCH/pipeline_xl_r7.json``.
+from the brief, composed. ``BENCH/pipeline_xl_r7.json`` records this
+chain at 1M docs on a 32-core host, measured by a runner that is no
+longer in the tree (see ``BENCH/BASELINE.md``).
 
 Scale properties are inherited, not re-argued: every stage is
 bucketed/broadcast/prefix-summed (see each operator's docstring), the
 only driver-side values are scalar counters, and every stage's output is
 a deterministic pure function of the input rows — so the whole chain is
 reproducible across clusters, partitionings, and core counts
-(bit-stability is checked per stage in the XL bench).
+(``tests/test_pipeline.py`` checks it across partitionings).
 
 Determinism requires (same preconditions as the constituent operators):
 ``doc_id`` globally unique and non-null; the ``n_tok`` derived here is
@@ -43,7 +39,6 @@ from pyspark.sql import functions as F
 from ..operators import contamination as CT
 from ..operators import curation as CUR
 from ..operators import dedup as D
-from ..operators import dsir as DSIR
 from ..operators import pii as PII
 from ..operators import textquality as TQ
 
@@ -78,20 +73,13 @@ def pages_to_docs(pages: DataFrame) -> DataFrame:
 
 @dataclass
 class CurationConfig:
-    """Knobs for :func:`curate_training_corpus` — defaults mirror the XL
-    bench so the measured chain IS the default chain."""
+    """Knobs for :func:`curate_training_corpus`; the defaults are the
+    chain ``BENCH/pipeline_xl_r7.json`` measured."""
 
     # stage 1 — quality gate
     quality_min: float = 0.25
     # stage 2 — near-dup dedup
     jaccard_threshold: float = 0.5
-    # stage 3b — exact-substring span removal (Lee et al. 2021;
-    # off by default so the measured XL chain stays the default chain)
-    exactsubstr: bool = False
-    exactsubstr_window: int = 50
-    # stage 4c — DSIR importance resampling (enabled by passing
-    # dsir_target to curate_training_corpus AND setting dsir_k)
-    dsir_k: Optional[int] = None
     # stage 5 — deterministic stratified sampling (md5 gate, /10000)
     sample_rates: dict = field(default_factory=lambda: {"en": 8000})
     default_keep: int = 500
@@ -103,8 +91,6 @@ def curate_training_corpus(
     docs: DataFrame,
     benchmark: Optional[DataFrame] = None,
     config: Optional[CurationConfig] = None,
-    *,
-    dsir_target: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Run the full curation chain over ``docs`` (``doc_id``, ``text``).
     Returns the packed training frame — one row per kept doc with
@@ -116,14 +102,9 @@ def curate_training_corpus(
     materialization points the constituent operators require —
     ``jaccard_verify``'s localCheckpoint of the candidate pairs and
     ``pack_shards``'s partition-id freeze (×2: order index + packing).
-    Each enabled multi-consumer stage (ExactSubstr, DSIR) adds one more
-    eager pin of the survivor frame — those stages read their input in
-    3-4 plan branches, and without the pin every branch re-derives the
-    whole upstream dedup chain (measured on the 250k-doc
-    pipeline_surface XL task — see BENCH/BASELINE.md). Everything else
-    stays lazy until the caller acts. The pins are localCheckpoints:
-    non-replicated, so on a preemptible fleet prefer a reliable
-    checkpoint dir (the pack_shards caveat applies here too).
+    Everything else stays lazy until the caller acts. The pins are
+    localCheckpoints: non-replicated, so on a preemptible fleet prefer a
+    reliable checkpoint dir (the pack_shards caveat applies here too).
     """
     cfg = config or CurationConfig()
 
@@ -156,52 +137,8 @@ def curate_training_corpus(
             scores.filter(~F.col("contaminated")).select("doc_id"), "doc_id"
         )
 
-    # 3b. exact-substring span removal: cross-doc duplicated RUNS that
-    # survive document-level near-dup dedup (boilerplate, quoted
-    # passages, templates) are excised from every occurrence
-    # (operators.dedup.remove_duplicate_spans). Placed after
-    # decontamination so the benchmark-overlap decision sees the
-    # ORIGINAL text (conservative — excision could otherwise remove the
-    # very overlap being flagged), and before PII redaction so the
-    # redactor sees the final text. Token counts are recomputed — pack
-    # budgets must see post-removal lengths; the text column becomes the
-    # operator's normalized token form.
-    if cfg.exactsubstr:
-        # pin before span removal: duplicate_spans + mark-back +
-        # excision read the input in FOUR plan branches; at 250k docs
-        # the unpinned lineage re-ran the quality gate + dedup joins
-        # per branch (measured: the pipeline_surface XL task ran 7×
-        # pipeline_full's per-doc cost before this checkpoint)
-        survivors = survivors.localCheckpoint(eager=True)
-        survivors = D.remove_duplicate_spans(
-            survivors, n=cfg.exactsubstr_window
-        ).drop("n_removed_tokens")
-        # a doc whose text was ENTIRELY duplicated elsewhere excises to
-        # empty (the operator keeps it — total decoration); the pipeline
-        # drops it here, an empty context contributes nothing to training
-        survivors = survivors.withColumn(
-            "n_tok", TQ.token_count(F.col("text"))
-        ).filter(F.col("n_tok") > 0)
-
     # 4. PII redaction (in place on the text column)
     survivors = survivors.withColumn("text", PII.redact_pii(F.col("text")))
-
-    # 4c. DSIR importance resampling (Xie et al. 2023): keep the dsir_k
-    # docs whose hashed-n-gram distribution is most like
-    # ``dsir_target``, by deterministic Gumbel-top-k on the log
-    # importance ratio. The raw model is the CURRENT survivor set (the
-    # corpus actually being selected from); runs before stratified
-    # sampling so language caps apply to the resampled mix. The kept
-    # frame carries dsir_score through to the shards.
-    if dsir_target is not None and cfg.dsir_k is not None:
-        # pin before resampling: the survivor frame feeds the raw
-        # model, the scoring pass AND the select — three consumers
-        survivors = survivors.localCheckpoint(eager=True)
-        ratios = DSIR.dsir_log_ratios(dsir_target, survivors)
-        scored = DSIR.dsir_scores(survivors, ratios)
-        survivors = DSIR.dsir_select(scored, cfg.dsir_k).drop(
-            "select_key", "n_features"
-        )
 
     # 5. deterministic stratified sampling by language
     kept = CUR.stratified_sample(

@@ -327,13 +327,12 @@ def read_warc_ranged(
 
 
 def read_warc(
-    spark: SparkSession, path: str, glob: str = "*.warc*",
-    partitions: Optional[int] = None,
+    spark: SparkSession, path: str, partitions: Optional[int] = None,
 ) -> DataFrame:
-    """Pages DataFrame from every WARC file under ``path``."""
+    """Pages DataFrame from every WARC file (``*.warc*``) under ``path``."""
     import pandas as pd  # noqa: F401  (mapInPandas contract)
 
-    files = warc_files(spark, path, glob, partitions)
+    files = warc_files(spark, path, partitions=partitions)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -363,8 +362,9 @@ def read_warc(
 # --------------------------------------------------------------------------
 # CDX-indexed access — record-level parallelism inside .warc.gz segments
 
-def read_cdx(spark: SparkSession, path: str, glob: str = "*.cdx*") -> DataFrame:
-    """Parse CDXJ index files (the Common-Crawl index layout: per line
+def read_cdx(spark: SparkSession, path: str) -> DataFrame:
+    """Parse the CDXJ index files (``*.cdx*``) under ``path`` (the
+    Common-Crawl index layout: per line
     ``urlkey timestamp {json}`` with ``url`` / ``filename`` / ``offset``
     / ``length`` / ``status`` fields — offsets point at the start of one
     record's own gzip member inside the ``.warc.gz`` segment). Native
@@ -372,7 +372,7 @@ def read_cdx(spark: SparkSession, path: str, glob: str = "*.cdx*") -> DataFrame:
     json/offset/length drop out (never fatal)."""
     lines = (
         spark.read.format("text")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.cdx*")
         .option("recursiveFileLookup", "true")
         .load(path)
     )

@@ -245,12 +245,12 @@ def page_row(p: dict, with_text: bool = True) -> dict:
     }
 
 
-def build_corpus_local(n_companies: int, filler_kb: int = 0):
+def build_corpus_local(n_companies: int):
     """Small-scale corpus for pytest: (pages_rows, seeds_rows)."""
     pages, seeds = [], []
     seen = set()
     for i in range(n_companies):
-        ps, seed = generate_company_pages(i, filler_kb)
+        ps, seed = generate_company_pages(i)
         for p in ps:
             if p["url"] not in seen:
                 seen.add(p["url"])
@@ -382,11 +382,13 @@ _REGIONS_STYLE = (
 )
 
 
-def statdata_cities_page(n_tables: int = 6, cities_per_table: int = 5) -> str:
-    """H7 ``getCities`` fixture — statdata.ru-style sheet export: several
-    fixed-style tables (code = table ordinal); height:21px rows; city name
-    in the THIRD td, some prefixed ``г.``. The last table (code=n_tables)
-    carries real city names so the Code='6' slice is meaningful."""
+def statdata_cities_page() -> str:
+    """H7 ``getCities`` fixture — statdata.ru-style sheet export: six
+    fixed-style tables (code = table ordinal) of five cities each;
+    height:21px rows; city name in the THIRD td, some prefixed ``г.``.
+    The last table (code=6) carries real city names so the Code='6'
+    slice is meaningful."""
+    n_tables, cities_per_table = 6, 5
     real = ["Header", "Екатеринбург", "г.Казань", "Омск", "Пермь"]
     tables = []
     for t in range(1, n_tables + 1):

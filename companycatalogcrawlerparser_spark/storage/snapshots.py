@@ -85,12 +85,9 @@ class SnapshotStore:
                 manifest["tables"][name] = entry
         for obs in observations:
             manifest["counters"].update(obs.get)
-        return self._commit_manifest(manifest)
 
-    def _commit_manifest(self, manifest: dict) -> dict:
-        """Writes the round's manifest to a temp file, fsyncs it and
-        renames it into place: the rename is the atomic commit point."""
-        round_id = manifest["round"]
+        # the manifest goes to a temp file, is fsynced and renamed into
+        # place: the rename is the atomic commit point
         tmp = os.path.join(self.root, "manifests", f".round-{round_id}.json.tmp")
         final = os.path.join(self.root, "manifests", f"round-{round_id}.json")
         with open(tmp, "w") as f:
@@ -99,69 +96,6 @@ class SnapshotStore:
             os.fsync(f.fileno())
         os.rename(tmp, final)
         return manifest
-
-    # -- trainer shard handoff -------------------------------------------------
-
-    def commit_shards(self, round_id: int, df: DataFrame) -> dict:
-        """Write the packed training shards (``global_order_index`` then
-        ``pack_shards`` output: ``shard_id`` and ``train_pos`` columns) as
-        ONE directory per shard — ``data/round=K/shards/shard_id=N/`` —
-        under the same atomic manifest-rename commit as a crawl round, so
-        kill/resume semantics cover the trainer's final artifact too: a
-        killed write leaves an orphan dir the next run ignores (no
-        manifest) and overwrites.
-
-        Scale shape: ONE Spark job for any number of shards — hash
-        repartition on ``shard_id`` (each shard's rows land on one task;
-        shards are ~budget-token sized by construction, so tasks are
-        bounded and skew-free) + ``sortWithinPartitions`` (rows inside
-        each shard file are in ``train_pos`` order — the trainer streams
-        a shard without sorting) + dynamic ``partitionBy`` (one file per
-        shard per task — and each shard lives in exactly one task, so one
-        file per shard). Never a per-shard driver loop of write jobs.
-        """
-        from pyspark.sql import functions as F
-
-        path = os.path.join(self.root, "data", f"round={round_id}", "shards")
-        (
-            df.repartition(F.col("shard_id"))
-            .sortWithinPartitions("shard_id", "train_pos")
-            .write.mode("overwrite")
-            .partitionBy("shard_id")
-            .parquet(path)
-        )
-        n_shards = sum(fn.startswith("shard_id=") for fn in os.listdir(path))
-        return self._commit_manifest({
-            "round": round_id,
-            "tables": {
-                "shards": {
-                    "path": path,
-                    "partitioned_by": "shard_id",
-                    "n_shards": n_shards,
-                }
-            },
-            "counters": {},
-        })
-
-    def shard_ids(self, round_id: int) -> list:
-        """Committed shard ids in ascending (= train) order. Listing goes
-        through the manifest, so orphan dirs from killed writes are
-        invisible until their round commits."""
-        entry = self.manifest(round_id)["tables"]["shards"]
-        pref = entry["partitioned_by"] + "="
-        return sorted(
-            int(fn.split("=", 1)[1])
-            for fn in os.listdir(entry["path"])
-            if fn.startswith(pref)
-        )
-
-    def read_shard(self, round_id: int, shard_id: int) -> DataFrame:
-        """One shard's rows, in written (``train_pos``) order when read
-        single-file — the trainer's per-shard stream."""
-        entry = self.manifest(round_id)["tables"]["shards"]
-        return self.spark.read.parquet(
-            os.path.join(entry["path"], f"{entry['partitioned_by']}={shard_id}")
-        )
 
     # -- restore ---------------------------------------------------------------
 

@@ -64,10 +64,9 @@ def _base(md5_col, start: int):
 
 
 def banded_keys_rowwise(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 5, num_hashes: int = 8, bands: int = 4,
+    df: DataFrame, num_hashes: int = 8, bands: int = 4,
 ) -> DataFrame:
-    """(id, band, key) LSH band rows as a streaming-safe per-row plan.
+    """(doc_id, band, key) LSH band rows as a streaming-safe per-row plan.
 
     Same values as batch ``dedup._lsh_banded`` but WITHOUT the
     explode→groupBy aggregation (streaming append mode forbids it):
@@ -88,7 +87,7 @@ def banded_keys_rowwise(
     rows_per_band = num_hashes // bands
 
     hs = F.transform(
-        shingles(F.col(text_col), k),
+        shingles(F.col("text")),
         lambda s: bind_once(
             F.md5(s),
             lambda m: F.struct(
@@ -121,7 +120,7 @@ def banded_keys_rowwise(
     # null-text doc therefore herds into the per-band '' bucket, exactly
     # like batch; callers who don't want that filter upstream.
     banded = df.withColumn("__sig", bind_once(hs, sig)).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(
                 *[
@@ -141,14 +140,12 @@ def banded_keys_rowwise(
         ).alias("bk"),
     )
     return banded.select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
 
 
-def streaming_lsh_pairs(
-    banded: DataFrame, id_col: str = "doc_id", max_bucket: int = 256
-) -> DataFrame:
-    """Online candidate pairs from a stream of (id, band, key) rows.
+def streaming_lsh_pairs(banded: DataFrame, max_bucket: int = 256) -> DataFrame:
+    """Online candidate pairs from a stream of (doc_id, band, key) rows.
 
     Custom STATEFUL operator (``applyInPandasWithState``): per (band,
     key) bucket the state is (admitted ids, skipped count). Each
@@ -179,7 +176,7 @@ def streaming_lsh_pairs(
         # sorting, or "ascending within batch" would only hold per chunk
         incoming: list[int] = []
         for pdf in pdf_iter:
-            incoming.extend(int(v) for v in pdf[id_col])
+            incoming.extend(int(v) for v in pdf["doc_id"])
         for nid in sorted(incoming):
             if len(ids) < max_bucket:
                 out_a.extend(ids)

@@ -42,13 +42,12 @@ class TestLearn:
         merges = B.learn_bpe(B.word_counts(docs), num_merges=1)
         assert merges[0][:2] == ("a", "b")
 
-    def test_vocab_cap_gates_merge_votes(self, spark):
+    def test_vocab_cap_gates_merge_votes(self, spark, monkeypatch):
         # cap=1 keeps only the most frequent word ('xy' x3); the 'zq'
         # pair (freq 2, above min_freq) must NOT be learned
+        monkeypatch.setattr(B, "MAX_VOCAB_ROWS", 1)
         docs = _docs(spark, ["xy xy xy zq zq"])
-        merges = B.learn_bpe(
-            B.word_counts(docs), num_merges=10, max_vocab_rows=1
-        )
+        merges = B.learn_bpe(B.word_counts(docs), num_merges=10)
         assert merges == [("x", "y", 3)]
 
 

@@ -42,9 +42,7 @@ class TestContamination:
         docs, bench = self._frames(spark)
         got = {
             r["doc_id"]: r
-            for r in CT.contamination_scores(
-                docs, bench, k=8, threshold=0.5
-            ).collect()
+            for r in CT.contamination_scores(docs, bench, k=8).collect()
         }
         bench_sh = set().union(*(_py_shingles(t) for _, t in BENCH))
         for doc_id, text in DOCS:

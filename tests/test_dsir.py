@@ -1,6 +1,6 @@
 """DSIR importance resampling (operators.dsir) vs a brute-force Python
 reference: hashed bigram features, Laplace-smoothed log ratios, per-doc
-scores, deterministic Gumbel-top-k selection."""
+scores."""
 
 import hashlib
 import math
@@ -56,14 +56,6 @@ def _py_scores(docs, target, raw):
         i: (sum(lr[b] for b in _py_features(t)), len(_py_features(t)))
         for i, t in docs
     }
-
-
-def _py_gumbel(doc_id, salt=""):
-    g = int(
-        hashlib.md5(f"{doc_id}{salt}".encode()).hexdigest()[:8], 16
-    ) % 10000
-    u = (g + 0.5) / 10000.0
-    return -math.log(-math.log(u))
 
 
 def _mk(spark, rows):
@@ -131,31 +123,16 @@ class TestDsir:
         # the two target-like docs beat the two spammy ones
         assert min(s[10], s[12]) > max(s[11], s[13])
 
-    def test_select_topk_and_gumbel(self, spark):
-        docs = _mk(spark, RAW)
-        ratios = DS.dsir_log_ratios(_mk(spark, TARGET), docs, num_buckets=B)
-        scored = DS.dsir_scores(docs, ratios, num_buckets=B)
-        # Gumbel-top-k: the top 3 of score + Gumbel(id), ties to the
-        # lower id
-        exp_scores = _py_scores(RAW, TARGET, RAW)
-        want = sorted(
-            ((exp_scores[i][0] + _py_gumbel(i), -i), i) for i, _ in RAW
-        )[-3:]
-        got = DS.dsir_select(scored, 3)
-        assert {r["doc_id"] for r in got.collect()} == {i for _, i in want}
-
     def test_partition_invariance(self, spark):
         docs = _mk(spark, RAW)
         ratios = DS.dsir_log_ratios(_mk(spark, TARGET), docs, num_buckets=B)
-        a = DS.dsir_select(
-            DS.dsir_scores(docs, ratios, num_buckets=B), 3
-        )
-        b = DS.dsir_select(
-            DS.dsir_scores(docs.repartition(7), ratios, num_buckets=B), 3
-        )
-        assert {r["doc_id"] for r in a.collect()} == {
-            r["doc_id"] for r in b.collect()
-        }
+
+        def scores(d):
+            # float sums may differ in the last ulp across partitionings
+            return {(r["doc_id"], round(r["dsir_score"], 9), r["n_features"])
+                    for r in DS.dsir_scores(d, ratios, num_buckets=B).collect()}
+
+        assert scores(docs) == scores(docs.repartition(7))
 
     def test_ratio_plan_is_broadcast(self, spark):
         docs = _mk(spark, RAW)

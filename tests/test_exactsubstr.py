@@ -197,7 +197,5 @@ class TestDuplicateSpans:
         # the driver-row twin can't silently drift
         w = "alpha bravo charlie delta"
         expect = int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
-        got = D._window_hashes(
-            _mk(spark, [(1, w)]), 4, "doc_id", "text"
-        ).collect()
+        got = D._window_hashes(_mk(spark, [(1, w)]), 4).collect()
         assert [(r["pos"], r["__wh"]) for r in got] == [(0, expect)]

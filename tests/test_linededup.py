@@ -67,13 +67,13 @@ CORPUS = [
 ]
 
 
-def _run(spark, docs, min_docs=2):
+def _run(spark, docs):
     df = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in docs], "doc_id long, text string"
     )
     got = {
         r["doc_id"]: (r["text"], r["n_removed_lines"])
-        for r in D.remove_duplicate_lines(df, min_docs=min_docs).collect()
+        for r in D.remove_duplicate_lines(df).collect()
     }
     return got
 
@@ -118,11 +118,12 @@ def test_null_text_stays_null(spark):
     assert got[4] == (None, 0)
 
 
-def test_min_docs_threshold(spark):
+def test_min_docs_threshold(spark, monkeypatch):
     # at min_docs=3 the pair line (docs 6,7) no longer triggers: doc 7
     # keeps the copy it loses at min_docs=2
     assert _run(spark, CORPUS)[7] == ("before", 1)
-    got = _run(spark, CORPUS, min_docs=3)
+    monkeypatch.setattr(D, "LINE_MIN_DOCS", 3)
+    got = _run(spark, CORPUS)
     assert got[6] == ("shared pair line\nafter", 0)
     assert got[7] == ("before\nshared pair line", 0)
 
@@ -134,7 +135,7 @@ def test_duplicate_lines_stats(spark):
     )
     rows = {
         (r["n_docs"], r["n_occ"], r["first_doc"], r["first_pos"])
-        for r in D.duplicate_lines(df, min_docs=2).collect()
+        for r in D.duplicate_lines(df).collect()
     }
     # newsletter line: 4 docs, 4 occurrences, first = (0, 1);
     # shared pair line: 2 docs, 2 occ, first = (6, 0)

@@ -108,20 +108,3 @@ class TestScore:
         assert "SortMergeJoin [v" not in plan
         assert "CartesianProduct" not in plan
 
-
-class TestBucket:
-    def test_ccnet_head_middle_tail(self, spark, model):
-        scored = LM.lm_logprob(
-            _docs(spark, ["a b", "a z", "z q", ""]), model
-        )
-        # per-token -logp: doc0 ≈ 0.703, doc1 ≈ 1.253, doc2 ≈ 1.386
-        out = {
-            r["doc_id"]: r["bucket"]
-            for r in scored.select(
-                "doc_id",
-                LM.ppl_bucket(
-                    "lm_logp", "n_lm_terms", head_max=0.8, tail_min=1.3
-                ).alias("bucket"),
-            ).collect()
-        }
-        assert out == {0: "head", 1: "middle", 2: "tail", 3: "tail"}

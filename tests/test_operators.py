@@ -238,17 +238,17 @@ class TestDedup:
         normals = self.DOCS[:4]  # ids 1..4 overlap clones' ids — shift them
         normals = [(10_000 + i, t) for i, t in normals]
         df = spark.createDataFrame(clones + normals, ["doc_id", "text"])
-        pairs = D.minhash_lsh_pairs(df, num_hashes=8, bands=4, max_bucket=256)
+        pairs = D.minhash_lsh_pairs(df, num_hashes=8, bands=4)
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         # no pair of two clones (hot bucket excluded)
         assert not any(a < 1000 and b < 1000 for a, b in got)
         # near-dup pairs among normal docs still found
         assert (10_001, 10_002) in got
-        over = D.lsh_oversized_buckets(df, num_hashes=8, bands=4, max_bucket=256)
+        over = D.lsh_oversized_buckets(df, num_hashes=8, bands=4)
         rows = over.collect()
         assert rows and all(r["n_docs"] == 1000 for r in rows)
 
-    def test_lsh_skew_cap_observed_in_same_job(self, spark):
+    def test_lsh_skew_cap_observed_in_same_job(self, spark, monkeypatch):
         """The skipped volume is observable AT the call site, in the same
         job as the pairs (Observation metric) — the 256-default can't
         silently cost recall; no second scan needed."""
@@ -258,8 +258,9 @@ class TestDedup:
         normals = [(10_000 + i, t) for i, t in self.DOCS[:4]]
         df = spark.createDataFrame(clones + normals, ["doc_id", "text"])
         obs = Observation("lsh_skew")
+        monkeypatch.setattr(D, "MAX_BUCKET", 64)
         pairs = D.minhash_lsh_pairs(
-            df, num_hashes=8, bands=4, max_bucket=64, observation=obs
+            df, num_hashes=8, bands=4, observation=obs
         )
         pairs.count()  # any action completes the metric
         got = obs.get
@@ -267,7 +268,7 @@ class TestDedup:
         assert got["skipped_rows"] == 1200
         assert got["max_bucket_seen"] == 300
 
-    def test_winnow_skew_cap_observed_matches_audit(self, spark):
+    def test_winnow_skew_cap_observed_matches_audit(self, spark, monkeypatch):
         """r5 verdict #2: winnow_pairs carries the same in-job
         Observation contract as minhash, and the observed skip volume
         equals what the standalone winnow_oversized_prints audit
@@ -278,11 +279,12 @@ class TestDedup:
         normals = [(10_000 + i, t) for i, t in self.DOCS[:4]]
         df = spark.createDataFrame(clones + normals, ["doc_id", "text"])
         obs = Observation("winnow_skew")
-        pairs = D.winnow_pairs(df, max_bucket=16, observation=obs)
+        monkeypatch.setattr(D, "MAX_BUCKET", 16)
+        pairs = D.winnow_pairs(df, observation=obs)
         pairs.count()
         got = obs.get
         audit = (
-            D.winnow_oversized_prints(df, max_bucket=16)
+            D.winnow_oversized_prints(df)
             .agg(F.coalesce(F.sum("n_docs"), F.lit(0)).alias("s"),
                  F.coalesce(F.max("n_docs"), F.lit(0)).alias("m"))
             .first()
@@ -379,12 +381,13 @@ class TestDedup:
         verified = D.jaccard_verify(df, cand, threshold=0.5).collect()
         assert {(r["id_a"], r["id_b"]) for r in verified} == {(1, 2)}
 
-    def test_winnow_pairs_hot_print_capped(self, spark):
+    def test_winnow_pairs_hot_print_capped(self, spark, monkeypatch):
         """A print shared by 500 docs is a de-facto exact-dup cluster:
         the cap must keep it out of pair generation."""
         clones = [(i, "identical clone text for winnowing") for i in range(500)]
         df = spark.createDataFrame(clones, ["doc_id", "text"])
-        assert D.winnow_pairs(df, max_bucket=64, min_shared=1).count() == 0
+        monkeypatch.setattr(D, "MAX_BUCKET", 64)
+        assert D.winnow_pairs(df, min_shared=1).count() == 0
 
     def test_simhash_plan_hashes_each_token_once(self, spark):
         """The md5 hoist (VERDICT r01 #9): exactly one md5 call in the
@@ -689,13 +692,14 @@ class TestSimilarity:
                 want["vec_id"]
             }
 
-    def test_semantic_dedup_max_cell_cap_observable(self, spark):
+    def test_semantic_dedup_max_cell_cap_observable(self, spark, monkeypatch):
         from pyspark.sql import Observation
 
+        monkeypatch.setattr(SIM, "SEMDUP_MAX_CELL", 3)
         obs = Observation("semdup_cap")
         out = SIM.semantic_dedup(
             self._semdup_corpus(spark), n_cells=1, threshold=0.98,
-            max_cell=3, observation=obs,
+            observation=obs,
         ).collect()
         # the single 6-row cell is over-cap: no pairs generated, every
         # vector its own singleton survivor — and the skipped volume is
@@ -703,47 +707,6 @@ class TestSimilarity:
         assert all(r["keep"] and r["component"] == r["vec_id"] for r in out)
         assert obs.get["skipped_rows"] == 6
         assert obs.get["max_cell_seen"] == 6
-        # the arrow kernel honors the same cap with the same in-job
-        # observability
-        obs2 = Observation("semdup_cap_arrow")
-        out2 = SIM.semantic_dedup(
-            self._semdup_corpus(spark), n_cells=1, threshold=0.98,
-            max_cell=3, observation=obs2, kernel="arrow",
-        ).collect()
-        assert all(r["keep"] and r["component"] == r["vec_id"] for r in out2)
-        assert obs2.get["skipped_rows"] == 6
-
-    def test_semantic_dedup_arrow_kernel_bit_equal(self, spark):
-        """kernel='arrow' (matmul assignment + per-cell blocked-gram
-        pair emission) is BIT-identical to the hash-verified expr
-        kernel — same sequential-fold accumulation order and HALF-UP
-        rounding (_np_seqdot/_np_seqnorm/_np_round6), so every cell,
-        cent_cos, component label, and keep flag agrees row-for-row."""
-        rng = np.random.default_rng(7)
-        base = [[float(x) for x in rng.normal(size=8)] for _ in range(90)]
-        rows = [(i, v) for i, v in enumerate(base)]
-        # every 6th vector gets a near-duplicate (one nudged coordinate)
-        rows += [
-            (1000 + i, [v[0] + 0.01] + v[1:])
-            for i, v in enumerate(base)
-            if i % 6 == 0
-        ]
-        emb = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        )
-
-        def norm(df):
-            return sorted(tuple(r) for r in df.collect())
-
-        e = norm(SIM.semantic_dedup(emb, n_cells=10, threshold=0.9))
-        a = norm(
-            SIM.semantic_dedup(
-                emb, n_cells=10, threshold=0.9, kernel="arrow"
-            )
-        )
-        assert e == a
-        # the fixture actually exercises grouping: some non-survivors
-        assert sum(1 for r in e if not r[4]) >= 10
 
 
 class TestTextQuality:
@@ -1546,9 +1509,7 @@ class TestSplitSequences:
         got = sorted(
             (r["doc_id"], r["seq_idx"], r["seq_start"],
              r["n_seq_tokens"], r["seq_text"])
-            for r in CU.split_sequences(
-                df, seq_len, keep_tail_min=keep_tail_min
-            ).collect()
+            for r in CU.split_sequences(df, seq_len).collect()
         )
         assert got == self._py(rows, seq_len, keep_tail_min)
         return got
@@ -1566,13 +1527,16 @@ class TestSplitSequences:
         assert (1, 2, 6, 1, "g") in got      # tail kept by default
         assert not any(r[0] in (4, 5) for r in got)
 
-    def test_tail_dropped_below_min(self, spark):
+    def test_tail_dropped_below_min(self, spark, monkeypatch):
+        from companycatalogcrawlerparser_spark.operators import curation as CU
+
+        monkeypatch.setattr(CU, "SPLIT_KEEP_TAIL_MIN", 3)
         rows = [(1, "a b c d e f g"), (2, "a b")]
         got = self._check(spark, rows, seq_len=3, keep_tail_min=3)
         # only full chunks survive; doc 2 (2 tokens < 3) vanishes
         assert {(r[0], r[1]) for r in got} == {(1, 0), (1, 1)}
 
-    def test_validation(self, spark):
+    def test_validation(self, spark, monkeypatch):
         from companycatalogcrawlerparser_spark.operators import curation as CU
 
         import pytest as _pt
@@ -1580,8 +1544,9 @@ class TestSplitSequences:
         df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
         with _pt.raises(ValueError):
             CU.split_sequences(df, 0)
+        monkeypatch.setattr(CU, "SPLIT_KEEP_TAIL_MIN", 4)
         with _pt.raises(ValueError):
-            CU.split_sequences(df, 3, keep_tail_min=4)
+            CU.split_sequences(df, 3)
 
     def test_composes_with_pack_shards(self, spark):
         from companycatalogcrawlerparser_spark.operators import curation as CU
@@ -1660,8 +1625,9 @@ class TestConcatPackedSequences:
         )
         packed = CU.pack_shards(seqs, "n_seq_tokens", 8, order_col="seq_key")
         ctx = CU.concat_packed_sequences(
-            packed, order_col="seq_key", token_col="n_seq_tokens",
-            text_col="seq_text",
+            packed.withColumnRenamed("n_seq_tokens", "n_tok")
+            .withColumnRenamed("seq_text", "text"),
+            order_col="seq_key",
         )
         rows = ctx.collect()
         # total token conservation and boundary consistency per shard

@@ -12,8 +12,14 @@ outside ``refsem/`` (the reference semantics, the tests' oracle) must be
 named by some non-test module other than in its own body or an
 ``__all__`` list, or be listed in ``UNREACHED_FUNCTIONS`` with a reason.
 A local variable, parameter or loop target of the same name is not a
-reference. A ``True``/``False`` parameter of such a function must be
-passed by some non-test call.
+reference.
+
+Parameters: every defaulted parameter of such a function must be passed
+by some non-test call, or be listed in ``UNPASSED_PARAMETERS`` with a
+reason. A call counts only when its callee resolves to the function's
+module — through ``from M import f``, an ``import M as X`` alias, or the
+module itself; a method call counts in the modules that import its
+class. A same-named function elsewhere passes nothing.
 
 Configs: every field of ``CrawlConfig`` and ``CurationConfig`` must be
 set away from its default by some non-test module, or be listed with a
@@ -23,6 +29,7 @@ reason.
 from __future__ import annotations
 
 import ast
+import functools
 import glob
 import os
 
@@ -37,6 +44,12 @@ def _module_name(path: str) -> str:
     return rel[: -len(".__init__")] if rel.endswith(".__init__") else rel
 
 
+@functools.lru_cache(maxsize=None)
+def _tree(path: str) -> ast.Module:
+    """The parsed module at ``path``, parsed once per test session."""
+    return ast.parse(open(path, encoding="utf-8").read())
+
+
 def _module_file(name: str) -> str | None:
     base = os.path.join(ROOT, *name.split("."))
     for path in (base + ".py", os.path.join(base, "__init__.py")):
@@ -45,22 +58,25 @@ def _module_file(name: str) -> str | None:
     return None
 
 
+def _from_module(path: str, node: ast.ImportFrom) -> str:
+    """The absolute module name of ``from ... import`` in ``path``."""
+    if not node.level:
+        return node.module
+    parts = _module_name(path).split(".")
+    is_pkg = path.endswith("__init__.py")
+    base = parts[: len(parts) - node.level + (1 if is_pkg else 0)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
 def _imports(path: str) -> set:
     """Module names ``path`` imports, with their parent packages."""
-    name = _module_name(path)
-    is_pkg = path.endswith("__init__.py")
     here = os.path.dirname(path)
     out = set()
-    for node in ast.walk(ast.parse(open(path, encoding="utf-8").read())):
+    for node in ast.walk(_tree(path)):
         if isinstance(node, ast.Import):
             targets = [a.name for a in node.names]
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                parts = name.split(".")
-                base = parts[: len(parts) - node.level + (1 if is_pkg else 0)]
-                mod = ".".join(base + ([node.module] if node.module else []))
-            else:
-                mod = node.module
+            mod = _from_module(path, node)
             targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
         else:
             continue
@@ -113,8 +129,23 @@ PIPELINE_FIXTURE = "tests/test_pipeline.py's 45-doc fixture sets it"
 UNSET_CURATION_FIELDS = {
     "quality_min": PIPELINE_FIXTURE,
     "jaccard_threshold": PIPELINE_FIXTURE,
+    "sample_rates": PIPELINE_FIXTURE,
+    "default_keep": PIPELINE_FIXTURE,
     "shard_budget_tokens": PIPELINE_FIXTURE,
 }
+
+
+# Non-test modules: the package, the query registry, bench.py, the
+# benchmark and the tools. A script in tools/ counts as a caller only
+# while it runs on the project's measurement host (4 cores, 15 GiB; see
+# ROADMAP.md): a tool that cannot run there is retired, not kept alive
+# as a caller.
+NON_TEST_GLOBS = ("*.py", "perfbench/*.py", "tools/*.py", f"{PKG}/**/*.py")
+
+
+def _non_test_paths() -> list:
+    return [os.path.normpath(p) for g in NON_TEST_GLOBS
+            for p in glob.glob(os.path.join(ROOT, g), recursive=True)]
 
 
 def _unset_config_fields(cls) -> set:
@@ -125,13 +156,9 @@ def _unset_config_fields(cls) -> set:
     import dataclasses
 
     defaults = {f.name: f.default for f in dataclasses.fields(cls)}
-    paths = [p for g in ("*.py", "perfbench/*.py", "tools/*.py",
-                         f"{PKG}/**/*.py")
-             for p in glob.glob(os.path.join(ROOT, g), recursive=True)]
     out = set()
-    for path in paths:
-        tree = ast.parse(open(path, encoding="utf-8").read())
-        for node in ast.walk(tree):
+    for path in _non_test_paths():
+        for node in ast.walk(_tree(path)):
             if isinstance(node, ast.Call) and getattr(
                     node.func, "id", getattr(node.func, "attr", None)) == cls.__name__:
                 pairs = [(k.arg, k.value) for k in node.keywords]
@@ -166,15 +193,11 @@ def test_every_curation_config_field_is_set_or_listed():
     assert sorted(set(UNSET_CURATION_FIELDS) - unset) == []
 
 
-# Non-test modules: the package, the query registry, bench.py, the
-# benchmark and the tools.
-NON_TEST_GLOBS = ("*.py", "perfbench/*.py", "tools/*.py", f"{PKG}/**/*.py")
-
 CATALOG = "catalog plan entry point (paper component 1, the catalog scrape)"
 MAILER = "mailer plan entry point (paper component 3, the mailer batches)"
 WEBGEN = "webgen page builder for test corpora"
-SHARD_READER = ("the reader half of commit_shards' layout, so that format "
-                "stays known to one module")
+CAP_AUDIT = ("the audit the skew-cap tests check the in-job {} cap "
+             "against")
 
 # Public functions no non-test module names, each kept for the reason
 # given. Any other such function is code only its own tests run: delete
@@ -190,20 +213,22 @@ UNREACHED_FUNCTIONS = {
     "plans/mailer.py::send_groups": MAILER,
     "plans/pipeline.py::pages_to_docs": "pipeline plan entry point: crawled "
         "pages to the documents curate_training_corpus takes",
+    "plans/pipeline.py::curate_training_corpus": "pipeline plan entry "
+        "point: the composed curation chain",
     "sources/webgen.py::country_list_page": WEBGEN,
     "sources/webgen.py::robots_txt": WEBGEN,
     "sources/webgen.py::russian_cities_page": WEBGEN,
     "sources/webgen.py::russian_regions_page": WEBGEN,
     "operators/bpe.py::encode_word_py": "the pure-Python reference twin the "
         "BPE tests compare the engine's encoder against",
-    "operators/dedup.py::lsh_oversized_buckets": "the audit "
-        "test_winnow_skew_cap_observed_matches_audit checks the in-job LSH "
-        "cap against",
-    "operators/dedup.py::winnow_oversized_prints": "the audit "
-        "test_winnow_skew_cap_observed_matches_audit checks the in-job "
-        "winnowing cap against",
-    "storage/snapshots.py::SnapshotStore.read_shard": SHARD_READER,
-    "storage/snapshots.py::SnapshotStore.shard_ids": SHARD_READER,
+    "operators/dedup.py::lsh_oversized_buckets": CAP_AUDIT.format("LSH"),
+    "operators/dedup.py::winnow_oversized_prints": CAP_AUDIT.format(
+        "winnowing"),
+    "operators/similarity.py::cosine_oversized_buckets": CAP_AUDIT.format(
+        "cosine"),
+    "operators/textquality.py::winnow_fingerprints": "the per-row array "
+        "reference twin test_winnow_prints_exploded_equals_array_form checks "
+        "dedup.winnow_prints against",
 }
 
 
@@ -213,11 +238,11 @@ def _public_functions() -> dict:
     top-level class, outside ``refsem/``."""
     out = {}
     for path in glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True):
+        path = os.path.normpath(path)
         rel = os.path.relpath(path, os.path.join(ROOT, PKG)).replace(os.sep, "/")
         if rel.startswith("refsem/"):
             continue
-        tree = ast.parse(open(path, encoding="utf-8").read())
-        for node in tree.body:
+        for node in _tree(path).body:
             if isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
                 members = [(f"{node.name}.{getattr(m, 'name', '')}", m)
                            for m in node.body]
@@ -274,10 +299,8 @@ def _name_references() -> dict:
             else:
                 visit(child, inner, inner_bound, path)
 
-    for g in NON_TEST_GLOBS:
-        for path in glob.glob(os.path.join(ROOT, g), recursive=True):
-            path = os.path.normpath(path)
-            visit(ast.parse(open(path, encoding="utf-8").read()), None, set(), path)
+    for path in _non_test_paths():
+        visit(_tree(path), None, set(), path)
     return refs
 
 
@@ -292,66 +315,143 @@ def test_every_public_function_is_referenced_or_listed():
     assert sorted(set(UNREACHED_FUNCTIONS) - set(unreferenced)) == []
 
 
-def _bool_parameters() -> dict:
-    """``"<path in package>::<name>"`` → (name, {parameter: position}) for
-    every public function outside ``refsem/`` (see ``_public_functions``)
-    whose parameters include one with a ``True``/``False`` default. The
+TEST_HOOK = ("the hook tests use to vary the permutation (salt) or the "
+             "partitioning (num_partitions) the result must not depend on")
+OBSERVATION = ("the skew cap's only in-job report of the volume it skipped; "
+               "the cap tests read it")
+
+# Defaulted parameters of public functions that no non-test call passes,
+# each kept for the reason given. Any other such parameter is a knob only
+# tests turn: delete it (for a fixed value, or a module constant tests
+# monkeypatch) rather than maintain it.
+UNPASSED_PARAMETERS = {
+    "operators/curation.py::cap_per_domain(num_partitions)": TEST_HOOK,
+    "operators/curation.py::cap_per_domain(salt)": TEST_HOOK,
+    "operators/curation.py::exact_quantiles(num_partitions)": TEST_HOOK,
+    "operators/curation.py::global_order_index(num_partitions)": TEST_HOOK,
+    "operators/curation.py::global_order_index(salt)": TEST_HOOK,
+    "operators/curation.py::span_corruption(salt)": TEST_HOOK,
+    "operators/dedup.py::minhash_lsh_pairs(observation)": OBSERVATION,
+    "operators/dedup.py::winnow_pairs(observation)": OBSERVATION,
+    "operators/similarity.py::cosine_pairs(observation)": OBSERVATION,
+    "operators/similarity.py::semantic_dedup(observation)": OBSERVATION,
+}
+
+
+@functools.lru_cache(maxsize=None)
+def _module_bindings(path: str) -> dict:
+    """Names ``path`` binds by import (anywhere in the module) → the
+    dotted name they stand for: ``import a.b`` binds ``a``, ``import a.b
+    as X`` binds ``X`` to ``a.b``, ``from M import n as X`` binds ``X``
+    to ``M.n``."""
+    out = {}
+    for node in ast.walk(_tree(path)):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                head = a.name.split(".")[0]
+                out[a.asname or head] = a.name if a.asname else head
+        elif isinstance(node, ast.ImportFrom):
+            mod = _from_module(path, node)
+            for a in node.names:
+                out[a.asname or a.name] = f"{mod}.{a.name}"
+    return out
+
+
+def _callee(node: ast.Call, path: str) -> str | None:
+    """The dotted name the callee of a call in ``path`` resolves to: a
+    plain name or the head of an attribute chain through the module's
+    imports, else the module's own top level. A call on anything else
+    (``obj.m(...)``) resolves to ``"*.m"``."""
+    parts, f = [], node.func
+    while isinstance(f, ast.Attribute):
+        parts.insert(0, f.attr)
+        f = f.value
+    if not isinstance(f, ast.Name):
+        return f"*.{parts[-1]}" if parts else None
+    head = _module_bindings(path).get(f.id)
+    if head is None:
+        if parts:
+            return f"*.{parts[-1]}"
+        head = f"{_module_name(path)}.{f.id}"
+    return ".".join([head] + parts)
+
+
+@functools.lru_cache(maxsize=None)
+def _calls() -> dict:
+    """dotted callee (see ``_callee``) → [(path, call)] over the non-test
+    modules."""
+    out: dict = {}
+    for path in _non_test_paths():
+        for node in ast.walk(_tree(path)):
+            if isinstance(node, ast.Call):
+                callee = _callee(node, path)
+                if callee:
+                    out.setdefault(callee, []).append((path, node))
+    return out
+
+
+def _defaulted_parameters() -> dict:
+    """``"<path in package>::<name>"`` → (callee, {parameter: position},
+    class) for every public function outside ``refsem/`` (see
+    ``_public_functions``) with a defaulted parameter. ``callee`` is the
+    function's dotted name, or ``"*.<name>"`` for a method, whose
+    ``class`` is the dotted name of its class (None for a function). The
     position counts ``self``/``cls`` out of a method's parameters;
     keyword-only parameters have position None."""
     out = {}
     for key, (name, (path, line)) in _public_functions().items():
-        tree = ast.parse(open(path, encoding="utf-8").read())
-        fn = next(n for n in ast.walk(tree)
+        fn = next(n for n in ast.walk(_tree(path))
                   if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
                   and n.name == name and n.lineno == line)
         a = fn.args
         positional = a.posonlyargs + a.args
-        if "." in key.split("::")[1] and positional and positional[0].arg in ("self", "cls"):
+        qual = key.split("::")[1]
+        if "." in qual and positional and positional[0].arg in ("self", "cls"):
             positional = positional[1:]
-        flags = {}
-        for i, (p, d) in enumerate(zip(positional[len(positional) - len(a.defaults):],
-                                       a.defaults)):
-            if isinstance(d, ast.Constant) and isinstance(d.value, bool):
-                flags[p.arg] = len(positional) - len(a.defaults) + i
-        for p, d in zip(a.kwonlyargs, a.kw_defaults):
-            if isinstance(d, ast.Constant) and isinstance(d.value, bool):
-                flags[p.arg] = None
-        if flags:
-            out[key] = (name, flags)
+        first = len(positional) - len(a.defaults)
+        params = {p.arg: first + i for i, p in enumerate(positional[first:])}
+        params.update({p.arg: None for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                       if d is not None})
+        if not params:
+            continue
+        module = _module_name(path)
+        if "." in qual:
+            cls = f"{module}.{qual.split('.')[0]}"
+            out[key] = (f"*.{name}", params, cls)
+        else:
+            out[key] = (f"{module}.{name}", params, None)
     return out
 
 
-def _passed_parameters(name: str, flags: dict) -> set:
-    """The parameters in ``flags`` that some call of ``name`` (a plain or
-    attribute call) in a non-test module passes, by keyword or by
-    position; a ``**`` splat passes every keyword, a ``*`` splat every
-    position from its own on."""
+def _passed_parameters(callee: str, params: dict, cls: str | None) -> set:
+    """The parameters in ``params`` that some non-test call of ``callee``
+    passes, by keyword or by position; a ``**`` splat passes every
+    keyword, a ``*`` splat every position from its own on. A method's
+    call counts only in a module that imports its class ``cls``, or in
+    the class's own module."""
     passed = set()
-    for g in NON_TEST_GLOBS:
-        for path in glob.glob(os.path.join(ROOT, g), recursive=True):
-            for node in ast.walk(ast.parse(open(path, encoding="utf-8").read())):
-                if not (isinstance(node, ast.Call) and getattr(
-                        node.func, "id", getattr(node.func, "attr", None)) == name):
-                    continue
-                words = {k.arg for k in node.keywords}
-                star = next((i for i, x in enumerate(node.args)
-                             if isinstance(x, ast.Starred)), None)
-                for param, pos in flags.items():
-                    if (param in words or None in words
-                            or (pos is not None and pos < len(node.args))
-                            or (pos is not None and star is not None and pos >= star)):
-                        passed.add(param)
+    for path, node in _calls().get(callee, []):
+        if cls and not (cls.startswith(_module_name(path) + ".")
+                        or cls in _module_bindings(path).values()):
+            continue
+        words = {k.arg for k in node.keywords}
+        star = next((i for i, x in enumerate(node.args)
+                     if isinstance(x, ast.Starred)), None)
+        for param, pos in params.items():
+            if (param in words or None in words
+                    or (pos is not None and pos < len(node.args))
+                    or (pos is not None and star is not None and pos >= star)):
+                passed.add(param)
     return passed
 
 
-def test_every_bool_parameter_is_passed_or_listed():
-    """A ``True``/``False`` parameter no non-test module passes selects a
-    branch only tests run: delete the branch and the parameter rather
-    than maintain them."""
+def test_every_defaulted_parameter_is_passed_or_listed():
     unpassed = sorted(
         f"{key}({param})"
-        for key, (name, flags) in _bool_parameters().items()
+        for key, (callee, params, cls) in _defaulted_parameters().items()
         if key not in UNREACHED_FUNCTIONS
-        for param in sorted(set(flags) - _passed_parameters(name, flags))
+        for param in set(params) - _passed_parameters(callee, params, cls)
     )
-    assert unpassed == []
+    assert sorted(set(unpassed) - set(UNPASSED_PARAMETERS)) == []
+    # the list names only parameters that exist and are unpassed
+    assert sorted(set(UNPASSED_PARAMETERS) - set(unpassed)) == []

@@ -41,7 +41,7 @@ DOC_ROWS = [
 def test_rowwise_banded_equals_batch(spark):
     df = _docs(spark, DOC_ROWS)
     row = banded_keys_rowwise(df, num_hashes=8, bands=4)
-    batch = D._lsh_banded(df, "doc_id", "text", 5, 8, 4)
+    batch = D._lsh_banded(df, 8, 4)
     assert sorted(map(tuple, row.collect())) == sorted(
         map(tuple, batch.collect())
     )
@@ -98,12 +98,10 @@ def test_cross_batch_state_pairs(spark, tmp_path):
     batches = [DOC_ROWS[0:2], DOC_ROWS[2:4], DOC_ROWS[4:7]]
     got = _run_stream(spark, tmp_path, batches, max_bucket=256)
 
-    # uncapped online == uncapped batch (buckets here are far below cap)
+    # online == batch (buckets here are far below either cap)
     want = {
         (r.id_a, r.id_b)
-        for r in D.minhash_lsh_pairs(
-            _docs(spark, DOC_ROWS), max_bucket=None
-        ).collect()
+        for r in D.minhash_lsh_pairs(_docs(spark, DOC_ROWS)).collect()
     }
     assert got == want
     assert (1, 4) in got and (1, 6) in got and (4, 6) in got  # span batches

@@ -249,9 +249,7 @@ class TestCdxIndexedRead:
         )
         want = sorted(
             (r["url"], r["warc_ts"], bytes(r["html"]))
-            for r in read_warc(
-                spark, str(tmp_path), glob="*.warc.gz"
-            ).collect()
+            for r in read_warc(spark, str(tmp_path)).collect()
         )
         assert got == want and len(got) == 2
 
