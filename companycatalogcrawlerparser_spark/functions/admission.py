@@ -4,8 +4,8 @@ expression (``Crawler.fs:135-187``; SURVEY.md §2.2 F8).
 The reference runs the chain over one page's href list, so it runs here
 over the page's ``hrefs`` array: every stage is a ``filter`` or
 ``transform`` on the list, and the two ``Seq.distinct`` passes are
-:func:`~..operators.extract.first_occurrences` on it. Nothing crosses a
-row — no aggregation, no shuffle, no Python.
+``DEDUP`` steps of :func:`~..operators.extract.with_lists`. Nothing
+crosses a row — no aggregation, no shuffle, no Python.
 """
 
 from __future__ import annotations
@@ -13,8 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.extract import first_occurrences, indexed
-from .canon import host_token
+from ..operators.extract import DEDUP, PAGE_BASE, PAGE_HOST, indexed, with_lists
 from .predicates import (
     count_substring,
     is_contacts_page,
@@ -26,14 +25,17 @@ from .predicates import (
 
 
 def admit_frontier(df: DataFrame) -> DataFrame:
-    """Adds the list column ``admitted`` (``array<struct<seq, v>>``): the
-    page's admitted frontier URLs ``v`` over its ``hrefs`` array, each
-    with ``seq``, the document position of its first occurrence (the
+    """Adds the list column ``admitted`` (:func:`admitted_list`) to the
+    token rows ``df``."""
+    return with_lists(df, {"admitted": admitted_list()})
+
+
+def admitted_list() -> list:
+    """The page's admitted frontier URLs as list steps
+    (``array<struct<seq, v>>``): the URLs ``v`` over its ``hrefs`` array,
+    each with ``seq``, the document position of its first occurrence (the
     crawl-order key), resolved against the row's ``base_url``."""
-    raw_base = F.col("base_url")
-    base = F.when(raw_base.endswith("/"), raw_base).otherwise(
-        F.concat(raw_base, F.lit("/"))
-    )
+    base = F.col(PAGE_BASE)
 
     def raw_ok(x):
         contacts = is_contacts_page(x)
@@ -61,14 +63,6 @@ def admit_frontier(df: DataFrame) -> DataFrame:
             )
         )
 
-    # Seq.distinct #1 — first occurrence of each raw href within the page
-    df = first_occurrences(
-        df.withColumn(
-            "admitted", F.filter(indexed("hrefs"), lambda e: raw_ok(e["v"]))
-        ),
-        "admitted",
-    )
-
     def resolved(x):
         """relative→absolute (inline twin of convertUrl, Crawler.fs:171-180)"""
         return (
@@ -83,7 +77,7 @@ def admit_frontier(df: DataFrame) -> DataFrame:
             .otherwise(x)
         )
 
-    host = host_token(base)
+    host = F.col(PAGE_HOST)
     https_base_len = F.length(F.replace(base, F.lit("http://"), F.lit("https://")))
 
     def slashes(u):
@@ -104,13 +98,21 @@ def admit_frontier(df: DataFrame) -> DataFrame:
     def with_v(e, v):
         return F.struct(e["seq"].alias("seq"), v.alias("v"))
 
-    same_host = F.filter(
-        F.transform("admitted", lambda e: with_v(e, resolved(e["v"]))),
-        lambda e: (host == "") | (F.instr(e["v"], host) > 0),  # .NET ''.Contains = true
-    )
-    urls = F.filter(
-        F.transform(same_host, lambda e: with_v(e, slashes(e["v"]))),
-        lambda e: url_ok(e["v"]),
-    )
-    # Seq.distinct #2 — first occurrence of each admitted URL within the page
-    return first_occurrences(df.withColumn("admitted", urls), "admitted")
+    def admitted(lst):
+        same_host = F.filter(
+            F.transform(lst, lambda e: with_v(e, resolved(e["v"]))),
+            lambda e: (host == "") | (F.instr(e["v"], host) > 0),  # .NET ''.Contains = true
+        )
+        return F.filter(
+            F.transform(same_host, lambda e: with_v(e, slashes(e["v"]))),
+            lambda e: url_ok(e["v"]),
+        )
+
+    # Seq.distinct #1 on the raw hrefs, #2 on the admitted URLs — each the
+    # first occurrence within the page
+    return [
+        F.filter(indexed("hrefs"), lambda e: raw_ok(e["v"])),
+        DEDUP,
+        admitted,
+        DEDUP,
+    ]

@@ -14,10 +14,11 @@ and make the checkpoint compact.
 
 Every reference dedup here is scoped to one page (``Seq.distinct`` over
 one page's matches), so each is an array expression on the page's token
-row (:func:`first_occurrences`) — no aggregation, no shuffle. The lists
-are ``array<struct<seq, v>>`` columns; the exploded forms
-(:func:`mailto_emails`, :func:`regex_emails`,
-:func:`contact_anchor_links`) ``inline`` them once.
+row — no aggregation, no shuffle. The lists are ``array<struct<seq, v>>``
+columns, described as steps (:func:`mailto_list`,
+:func:`page_email_list`, :func:`contact_anchor_list`) and built together
+by :func:`with_lists`; the exploded forms (:func:`mailto_emails`,
+:func:`regex_emails`, :func:`contact_anchor_links`) ``inline`` them once.
 """
 
 from __future__ import annotations
@@ -193,30 +194,83 @@ def indexed(arr, value=lambda x: x) -> Column:
     )
 
 
-def first_occurrences(df: DataFrame, name: str) -> DataFrame:
-    """F# ``Seq.distinct`` on the ``array<struct<seq, v>>`` column
-    ``name``: keeps the first element of each ``v``, in array order (so
-    ``seq`` is the first occurrence's position).
+# The extractor's token arrays: the page lists are built from them, and
+# :func:`with_lists` drops them once the lists exist.
+TOKEN_ARRAYS = ("hrefs", "anchor_names", "anchor_urls", "emails")
 
-    The ``v`` values are bound in their own projection and read back as
-    ``values[i]``: referenced twice, the array is not inlined into the
-    lambda by CollapseProject, which would rebuild it for every element
-    (``x.v`` alone would be one reference, and ``name.v`` counts as cheap
-    and is inlined at any count)."""
-    vals = F.col("__vals")
-    kept = F.filter(
+# Page values that list steps read inside their lambdas, bound once per
+# row by :func:`with_lists` (a lambda would recompute them per element):
+# the row's ``base_url`` with a trailing slash, and its host token.
+PAGE_BASE = "__base"
+PAGE_HOST = "__host"
+
+# A list's steps: its raw ``array<struct<seq, v>>`` Column over the token
+# row, then ``DEDUP`` passes and Column → Column functions in order.
+DEDUP = "dedup"
+
+
+def with_lists(tokens: DataFrame, lists: dict) -> DataFrame:
+    """Adds the list columns ``lists`` ({name: steps}) to ``tokens`` in
+    one projection per dependency level, and drops :data:`TOKEN_ARRAYS`.
+
+    The first level binds :data:`PAGE_BASE` and :data:`PAGE_HOST`; the
+    next builds every raw list and applies the functions up to its first
+    ``DEDUP``. Each ``DEDUP`` is F# ``Seq.distinct`` on the list (the
+    first element of each ``v``, in array order, so ``seq`` is the first
+    occurrence's position) and takes two levels: the ``v`` values are
+    bound in their own projection, then read back as ``values[i]``
+    together with the functions up to the next ``DEDUP``. Referenced
+    twice, the bound array is not inlined into the per-element lambda by
+    CollapseProject, which would rebuild it for every element (``x.v``
+    alone would be one reference, and ``name.v`` counts as cheap and is
+    inlined at any count); the same rule keeps each level's lists from
+    being inlined into the next."""
+    keep = [c for c in tokens.columns if c not in TOKEN_ARRAYS and c not in lists]
+    carry = keep + [PAGE_BASE, PAGE_HOST]
+    raw_base = F.col("base_url")
+    base = F.when(raw_base.endswith("/"), raw_base).otherwise(
+        F.concat(raw_base, F.lit("/"))
+    )
+    df = tokens.select(
+        *tokens.columns, base.alias(PAGE_BASE), host_token(base).alias(PAGE_HOST)
+    )
+    pending = {name: list(steps[1:]) for name, steps in lists.items()}
+    level = {name: steps[0] for name, steps in lists.items()}
+    while True:
+        for name, steps in pending.items():
+            while steps and steps[0] is not DEDUP:
+                level[name] = steps.pop(0)(level[name])
+        dedup = [name for name, steps in pending.items() if steps]
+        df = df.select(
+            *(carry if dedup else keep), *[c.alias(name) for name, c in level.items()]
+        )
+        if not dedup:
+            return df
+        df = df.select(
+            *carry,
+            *lists,
+            *[F.transform(n, lambda x: x["v"]).alias(f"__{n}_v") for n in dedup],
+        )
+        level = {name: F.col(name) for name in lists}
+        for name in dedup:
+            pending[name].pop(0)
+            level[name] = _first_occurrences(name)
+
+
+def _first_occurrences(name: str) -> Column:
+    """The elements of the list column ``name`` whose ``v`` is the first
+    of its value, read through the bound values ``__<name>_v``."""
+    vals = F.col(f"__{name}_v")
+    return F.filter(
         name, lambda x, i: F.array_position(vals, F.element_at(vals, i + 1)) == i + 1
     )
-    return df.withColumn("__vals", F.transform(name, lambda x: x["v"])).select(
-        *[kept.alias(c) if c == name else F.col(c) for c in df.columns]
-    )
 
 
-def with_mailto(tokens: DataFrame) -> DataFrame:
-    """X11 — ``searchMailToResults`` (Crawler.fs:125-133) as the list
-    column ``mailto``: href values that start with ``mailto:``
-    (case-insensitive), lowercased, prefix removed with Replace-all
-    semantics, distinct per page."""
+def mailto_list() -> list:
+    """X11 — ``searchMailToResults`` (Crawler.fs:125-133) as list steps:
+    href values that start with ``mailto:`` (case-insensitive),
+    lowercased, prefix removed with Replace-all semantics, distinct per
+    page."""
     hits = F.filter(
         indexed("hrefs", F.lower), lambda x: x["v"].startswith("mailto:")
     )
@@ -227,69 +281,69 @@ def with_mailto(tokens: DataFrame) -> DataFrame:
             F.replace(x["v"], F.lit("mailto:"), F.lit("")).alias("v"),
         ),
     )
-    return first_occurrences(tokens.withColumn("mailto", emails), "mailto")
+    return [emails, DEDUP]
 
 
-def with_page_emails(tokens: DataFrame) -> DataFrame:
-    """Plain-text email matches as the list column ``page_emails``:
-    per-page distinct, ``Mail.ru`` suffix dropped case-sensitively AFTER
-    distinct (quirk Q10, Crawler.fs:334-337)."""
-    df = first_occurrences(
-        tokens.withColumn("page_emails", indexed("emails")), "page_emails"
-    )
-    return df.withColumn(
-        "page_emails",
-        F.filter("page_emails", lambda x: ~x["v"].endswith("Mail.ru")),
-    )
+def page_email_list() -> list:
+    """Plain-text email matches as list steps: per-page distinct,
+    ``Mail.ru`` suffix dropped case-sensitively AFTER distinct (quirk
+    Q10, Crawler.fs:334-337)."""
+    return [
+        indexed("emails"),
+        DEDUP,
+        lambda lst: F.filter(lst, lambda x: ~x["v"].endswith("Mail.ru")),
+    ]
 
 
-def with_contact_anchors(tokens: DataFrame) -> DataFrame:
+def contact_anchor_list() -> list:
     """H10 ∘ C2 — ``FindLinksRegExp`` + contact-name filter
-    (Crawler.fs:51-63, 346-353) as the list column ``contact_anchors``:
-    converted same-host urls in document order of the first occurrence of
-    each (name, url) pair."""
-    base_raw = F.col("base_url")
-    base = F.when(base_raw.endswith("/"), base_raw).otherwise(
-        F.concat(base_raw, F.lit("/"))
-    )
-    host = host_token(base)
-    pairs = F.filter(
-        indexed(
-            F.arrays_zip(
-                F.col("anchor_names").alias("name"),
-                F.col("anchor_urls").alias("href"),
-            ),
-            lambda p: F.struct(
-                p["name"].alias("name"),
-                convert_url(p["href"], base).alias("url"),
-            ),
-        ),
-        lambda x: ((host == "") | (F.instr(x["v"]["url"], host) > 0))
-        & not_social_network(x["v"]["url"])
-        & is_not_image_script_css_ext(x["v"]["url"]),
-    )
-    # Seq.distinct on the (name, url) PAIR, then the name filter
-    df = first_occurrences(
-        tokens.withColumn("contact_anchors", pairs), "contact_anchors"
-    )
+    (Crawler.fs:51-63, 346-353) as list steps: converted same-host urls in
+    document order of the first occurrence of each (name, url) pair."""
+    base = F.col(PAGE_BASE)
+    host = F.col(PAGE_HOST)
 
-    def named(x):
-        low_name = F.lower(x["v"]["name"])
+    def named(name):
+        low_name = F.lower(name)
         hit = None
         for w in CONTACT_ANCHOR_WORDS:
             cond = low_name.contains(w)
             hit = cond if hit is None else (hit | cond)
         return hit
 
-    return df.withColumn(
-        "contact_anchors",
+    # the name and url filters read only the pair, so they commute with
+    # Seq.distinct on the (name, url) PAIR; the cheap name filter runs
+    # first, so only contact-named anchors are converted and matched
+    named_pairs = F.filter(
+        indexed(
+            F.arrays_zip(
+                F.col("anchor_names").alias("name"),
+                F.col("anchor_urls").alias("href"),
+            )
+        ),
+        lambda x: named(x["v"]["name"]),
+    )
+    pairs = F.filter(
         F.transform(
-            F.filter("contact_anchors", named),
+            named_pairs,
             lambda x: F.struct(
-                x["seq"].alias("seq"), x["v"]["url"].alias("v")
+                x["seq"].alias("seq"),
+                F.struct(
+                    x["v"]["name"].alias("name"),
+                    convert_url(x["v"]["href"], base).alias("url"),
+                ).alias("v"),
             ),
         ),
+        lambda x: ((host == "") | (F.instr(x["v"]["url"], host) > 0))
+        & not_social_network(x["v"]["url"])
+        & is_not_image_script_css_ext(x["v"]["url"]),
     )
+    return [
+        pairs,
+        DEDUP,
+        lambda lst: F.transform(
+            lst, lambda x: F.struct(x["seq"].alias("seq"), x["v"]["url"].alias("v"))
+        ),
+    ]
 
 
 def inline_list(df: DataFrame, name: str, value_alias: str) -> DataFrame:
@@ -307,15 +361,21 @@ def inline_list(df: DataFrame, name: str, value_alias: str) -> DataFrame:
 
 
 def mailto_emails(tokens: DataFrame) -> DataFrame:
-    """:func:`with_mailto`, one row per email."""
-    return inline_list(with_mailto(tokens), "mailto", "email")
+    """:func:`mailto_list`, one row per email."""
+    return inline_list(with_lists(tokens, {"mailto": mailto_list()}), "mailto", "email")
 
 
 def regex_emails(tokens: DataFrame) -> DataFrame:
-    """:func:`with_page_emails`, one row per email."""
-    return inline_list(with_page_emails(tokens), "page_emails", "email")
+    """:func:`page_email_list`, one row per email."""
+    return inline_list(
+        with_lists(tokens, {"page_emails": page_email_list()}), "page_emails", "email"
+    )
 
 
 def contact_anchor_links(tokens: DataFrame) -> DataFrame:
-    """:func:`with_contact_anchors`, one row per link."""
-    return inline_list(with_contact_anchors(tokens), "contact_anchors", "url")
+    """:func:`contact_anchor_list`, one row per link."""
+    return inline_list(
+        with_lists(tokens, {"contact_anchors": contact_anchor_list()}),
+        "contact_anchors",
+        "url",
+    )

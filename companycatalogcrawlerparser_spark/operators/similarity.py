@@ -647,22 +647,9 @@ def _ivf_topk_arrow_cogroup(
     )
 
 
-def planes_for_corpus(n_rows: int) -> int:
-    """Plane count such that the EXPECTED bucket population n/2^planes stays
-    under 128 (uniform-bucket approximation) — more planes for bigger
-    corpora, floor of 6 so small inputs keep meaningful recall."""
-    import math
-
-    if n_rows <= 128:
-        return 6
-    return max(6, math.ceil(math.log2(n_rows / 128)))
-
-
-def _signatures(df: DataFrame, num_planes, dim):
+def _signatures(df: DataFrame, num_planes: int, dim):
     if dim is None:
         dim = len(df.select("embedding").first()[0])
-    if num_planes is None:
-        num_planes = planes_for_corpus(df.count())
     return df.select(
         F.col("vec_id"), F.col("embedding"),
         lsh_signature(F.col("embedding"), num_planes, dim).alias("sig"),
@@ -671,8 +658,8 @@ def _signatures(df: DataFrame, num_planes, dim):
 
 def cosine_pairs(
     df: DataFrame, threshold: float,
-    num_planes: int | None = 6, dim: int | None = None,
-    max_bucket: int | None = 1024,
+    num_planes: int = 6, dim: int | None = None,
+    max_bucket: int = 1024,
     observation=None,
 ) -> DataFrame:
     """Embedding near-dup pairs: LSH bucket → exact cosine ≥ threshold.
@@ -682,11 +669,9 @@ def cosine_pairs(
     bucket (all-identical embeddings, or fixed planes on a corpus ≫ the
     bucket count) goes quadratic. Buckets larger than ``max_bucket`` are
     excluded from pair generation — they are de-facto exact-dup clusters
-    that ``dedup.exact_dedup`` should collapse first. Pass
-    ``max_bucket=None`` for the exhaustive (unguarded) behavior, and
-    ``num_planes=None`` to auto-scale the plane count to the corpus size
-    (:func:`planes_for_corpus`). The skipped volume stays observable via
-    :func:`cosine_oversized_buckets` — nothing is silently dropped.
+    that ``dedup.exact_dedup`` should collapse first. The skipped volume
+    stays observable via :func:`cosine_oversized_buckets` — nothing is
+    silently dropped.
 
     Pass a ``pyspark.sql.Observation`` as ``observation`` to get the
     capped volume IN the same job (``skipped_rows`` bucket-memberships
@@ -695,18 +680,17 @@ def cosine_pairs(
     callers without the metric wired (r5 verdict: capped volume should
     ride the producing job, not a second scan)."""
     sig = _signatures(df, num_planes, dim)
-    if max_bucket is not None:
-        bw = Window.partitionBy("sig")
-        sig = sig.withColumn("__n", F.count("*").over(bw))
-        if observation is not None:
-            sig = sig.observe(
-                observation,
-                F.sum(
-                    F.when(F.col("__n") > max_bucket, 1).otherwise(0)
-                ).alias("skipped_rows"),
-                F.max("__n").alias("max_bucket_seen"),
-            )
-        sig = sig.filter(F.col("__n") <= max_bucket).drop("__n")
+    bw = Window.partitionBy("sig")
+    sig = sig.withColumn("__n", F.count("*").over(bw))
+    if observation is not None:
+        sig = sig.observe(
+            observation,
+            F.sum(
+                F.when(F.col("__n") > max_bucket, 1).otherwise(0)
+            ).alias("skipped_rows"),
+            F.max("__n").alias("max_bucket_seen"),
+        )
+    sig = sig.filter(F.col("__n") <= max_bucket).drop("__n")
     # norm once per row (a bucket of D rows would otherwise re-fold each
     # vector's norm D-1 times inside the pair join)
     sig = sig.withColumn("__n2", _norm(F.col("embedding")))
@@ -855,8 +839,8 @@ def semantic_dedup(
 
 
 def cosine_oversized_buckets(
-    df: DataFrame, num_planes: int | None = 6, dim: int | None = None,
-    max_bucket: int | None = 1024,
+    df: DataFrame, num_planes: int = 6, dim: int | None = None,
+    max_bucket: int = 1024,
 ) -> DataFrame:
     """(sig, n_rows) of buckets :func:`cosine_pairs` skipped under its
     ``max_bucket`` cap — the no-silent-truncation audit surface."""
@@ -864,5 +848,5 @@ def cosine_oversized_buckets(
     return (
         sig.groupBy("sig")
         .agg(F.count("*").alias("n_rows"))
-        .filter(F.col("n_rows") > (max_bucket if max_bucket is not None else 2**63 - 1))
+        .filter(F.col("n_rows") > max_bucket)
     )

@@ -22,13 +22,17 @@ round without refetching (C7).
 
 Scale shape per round: the fetch join streams the corpus past the
 broadcast frontier; the JVM-native extractor turns each fetched page into
-one row of token arrays, checkpointed once. Everything after it that the
-reference scopes to one page (its ``Seq.distinct`` passes, and in round 0
-the whole per-company branch, since round 0 fetches one page per company)
-is a per-row array projection or explode of that row — no shuffle. The
-windows are the seed selection's site_url dedup, the host politeness
-stamps and round 1's (company, url) dedup. No collect() except tiny
-control counts; the manifest counters are observed on the commit writes.
+one row of token arrays, checkpointed once. Everything the reference
+scopes to one page (its ``Seq.distinct`` passes, and in round 0 the whole
+per-company branch, since round 0 fetches one page per company) is a
+per-row array projection or explode of that row — no shuffle. Round 0
+builds its page lists (mailto, emails, contact anchors, contact hrefs)
+inside that one checkpoint, in place of the token arrays, so its commit
+writes only project and explode them. The windows are the seed
+selection's site_url dedup, the host politeness stamps and round 1's
+(company, url) dedup. No collect() except tiny control counts; the
+manifest counters (and each round's max ``host_rank``) are observed on
+the commit writes.
 """
 
 from __future__ import annotations
@@ -75,16 +79,19 @@ class CrawlConfig:
     #   without robots.txt rows)
     native_extract: bool = True  # JVM regex extraction (no Arrow/Python
     #   transfer of html); False = Arrow UDTF sharing the refsem regexes.
-    #   Both are oracle-verified; native is ~2x crawl throughput
+    #   Both are oracle-verified; native measured ~2x crawl throughput on
+    #   the 32-core host (not re-measured at 4 cores)
 
 
 def _round_counters() -> dict:
     """The manifest counters of a round, per committed table: observed on
-    the commit writes (``DataFrame.observe``), so they cost no job."""
+    the commit writes (``DataFrame.observe``), so they cost no job.
+    ``max_host_rank`` is the round's longest per-host politeness queue."""
     return {
         "trace": [
             F.count(F.when(F.col("action") == "fetched", 1)).alias("pages_fetched"),
             F.count(F.when(F.col("action") == "error", 1)).alias("fetch_errors"),
+            F.max("host_rank").alias("max_host_rank"),
         ],
         "frontier_next": [F.count(F.lit(1)).alias("urls_enqueued")],
         "bag": [F.count(F.lit(1)).alias("emails_bagged")],
@@ -209,22 +216,33 @@ def run_crawl(
             sched = FR.salted(sched, cfg.num_partitions)
 
             # the fetch join stays LAZY: html streams from the corpus scan
-            # straight through ONE Arrow pass that emits fetch metadata +
+            # straight through ONE extract pass that emits fetch metadata +
             # per-page token arrays; only that metadata-sized frame is
             # checkpointed (html never hits the block manager — materializing
             # 30 KB × frontier of html was the dominant core-count-independent
             # cost at bench scale)
             fetched = fetch_join(sched, pages, rmap=rmap)
-            # EAGER: the broadcast-join plan has no upstream shuffle stages, so
-            # a lazy checkpoint would defer the scan+extract to the first
-            # consumer — and CONCURRENT consumers (the commit's parallel
-            # table writes) would then race to compute the same
-            # unmaterialized RDD, duplicating the extract. Materialize once,
-            # here.
             extract = (
                 X.extract_tokens_native if cfg.native_extract else X.extract_tokens_meta
             )
-            tokens = extract(fetched).localCheckpoint(eager=True)
+            # EAGER, in both rounds (round 0's inside _seed_round, with its
+            # lists): the broadcast-join plan has no upstream shuffle
+            # stages, so a lazy checkpoint would defer the scan+extract to
+            # the first consumer — and CONCURRENT consumers (the commit's
+            # parallel table writes) would then race to compute the same
+            # unmaterialized RDD, duplicating the extract.
+            if round_id == 0:
+                tokens, result = _seed_round(extract(fetched))
+            else:
+                tokens = extract(fetched).localCheckpoint(eager=True)
+                # IsNullOrWhiteSpace gate on the fetched body (Crawler.fs:326)
+                ok_tokens = tokens.filter(F.col("fetch_ok") & F.col("has_html"))
+                bag = X.regex_emails(ok_tokens).select("company_id", "email")
+                result = {
+                    "bag": bag,
+                    "flags": local_frame(spark, [], FLAGS_SCHEMA),
+                    "frontier_next": local_frame(spark, [], FRONTIER_SCHEMA),
+                }
 
             trace = tokens.select(
                 F.lit(round_id).alias("round"),
@@ -240,18 +258,6 @@ def run_crawl(
                 "not_before",
                 "fetch_error",
             )
-
-            if round_id == 0:
-                result = _seed_round(tokens)
-            else:
-                # IsNullOrWhiteSpace gate on the fetched body (Crawler.fs:326)
-                ok_tokens = tokens.filter(F.col("fetch_ok") & F.col("has_html"))
-                bag = X.regex_emails(ok_tokens).select("company_id", "email")
-                result = {
-                    "bag": bag,
-                    "flags": local_frame(spark, [], FLAGS_SCHEMA),
-                    "frontier_next": local_frame(spark, [], FRONTIER_SCHEMA),
-                }
 
             # url_seen delta: everything this round actually attempted
             if round_id == 0:
@@ -325,30 +331,18 @@ def _tune_input_splits(spark, pages: DataFrame):
     return restore
 
 
-def _seed_round(tokens: DataFrame) -> dict:
-    """Per-company branch logic of round 0 (``Crawler.fs:326-379``).
+def _seed_round(extracted: DataFrame) -> tuple:
+    """Per-company branch logic of round 0 (``Crawler.fs:326-379``):
+    returns the checkpointed token rows and the round's ``bag``, ``flags``
+    and ``frontier_next``.
 
-    Round 0 fetches one page per company: its ``tokens`` hold one row per
+    Round 0 fetches one page per company: its token rows hold one row per
     company (seeds are keyed on ``company_id``), so every per-company
-    count is the size of one row's list, and ``flags``, ``bag`` and
-    ``frontier_next`` are projections and explodes of the checkpointed
-    token rows."""
-    lists = admission_mod.admit_frontier(
-        X.with_contact_anchors(X.with_page_emails(X.with_mailto(tokens)))
-    )
-    rows = lists.select(
-        "company_id",
-        "base_url",
-        # error / empty-html pages → (true, true, false); their lists are
-        # empty (the IsNullOrWhiteSpace gate lives in has_html)
-        (~F.col("fetch_ok") | ~F.col("has_html")).alias("bad"),
-        "mailto",
-        "page_emails",
-        "contact_anchors",
-        F.filter("admitted", lambda e: is_contacts_page(e["v"])).alias(
-            "contact_hrefs"
-        ),
-    )
+    count is the size of one row's list. The lists are built once, in the
+    round's one checkpoint, which holds them in place of the token arrays
+    (:func:`_seed_lists`); ``flags``, ``bag`` and ``frontier_next`` are
+    projections and explodes of it."""
+    rows = _seed_lists(extracted).localCheckpoint(eager=True)
     n_mailto = F.size("mailto")
     has_anchor = F.size("contact_anchors") > 0
 
@@ -393,7 +387,28 @@ def _seed_round(tokens: DataFrame) -> dict:
     frontier_next = rows.select("company_id", "base_url", F.inline(links)).select(
         "company_id", "url", "priority", "seq", "base_url"
     )
-    return {"bag": bag, "flags": flags, "frontier_next": frontier_next}
+    return rows, {"bag": bag, "flags": flags, "frontier_next": frontier_next}
+
+
+def _seed_lists(extracted: DataFrame) -> DataFrame:
+    """Round 0's token rows with their lists in place of the token arrays:
+    ``mailto``, ``page_emails``, ``contact_anchors``, ``contact_hrefs``
+    (the admitted URLs that name a contact page) and ``bad``."""
+    contact_hrefs = admission_mod.admitted_list() + [
+        lambda lst: F.filter(lst, lambda e: is_contacts_page(e["v"]))
+    ]
+    lists = X.with_lists(
+        extracted,
+        {
+            "mailto": X.mailto_list(),
+            "page_emails": X.page_email_list(),
+            "contact_anchors": X.contact_anchor_list(),
+            "contact_hrefs": contact_hrefs,
+        },
+    )
+    # error / empty-html pages → (true, true, false); their lists are
+    # empty (the IsNullOrWhiteSpace gate lives in has_html)
+    return lists.withColumn("bad", ~F.col("fetch_ok") | ~F.col("has_html"))
 
 
 def finalize(spark: SparkSession, store: SnapshotStore) -> dict:

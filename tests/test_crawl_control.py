@@ -20,7 +20,8 @@ from companycatalogcrawlerparser_spark.storage.snapshots import SnapshotStore
 
 N_COMPANIES = 20
 # Spark jobs of one two-round crawl of the fixture corpus at local[8],
-# finalize included: 49 measured.
+# finalize included: 49 measured, also with round 0's lists built inside
+# its tokens checkpoint (no job of their own).
 MAX_CRAWL_JOBS = 50
 
 
@@ -89,6 +90,7 @@ class TestManifest:
                 "fetch_errors": trace.filter(F.col("action") == "error").count(),
                 "urls_enqueued": store.read(r, "frontier_next").count(),
                 "emails_bagged": store.read(r, "bag").count(),
+                "max_host_rank": trace.agg(F.max("host_rank")).first()[0],
             }
             assert store.manifest(r)["counters"] == want, f"round {r}"
         # the fixture exercises every counter

@@ -553,12 +553,6 @@ class TestSimilarity:
         audit = SIM.cosine_oversized_buckets(df, dim=4, max_bucket=256).collect()
         assert len(audit) == 1 and audit[0]["n_rows"] == n
 
-    def test_cosine_pairs_planes_scale_with_corpus(self):
-        assert SIM.planes_for_corpus(100) == 6
-        assert SIM.planes_for_corpus(128 * 64) == 6
-        assert SIM.planes_for_corpus(10**6) == 13
-        assert SIM.planes_for_corpus(10**10) > 20
-
     def test_cosine_skew_cap_observed_matches_audit(self, spark):
         """r5 verdict #2: cosine_pairs carries the same in-job
         Observation contract as minhash/winnow — observed skip volume

@@ -5,8 +5,9 @@ every page-scoped ``Seq.distinct`` is an array expression on that row.
 That equals the reference only while each round's tokens hold one row per
 (company, page) and round 0's hold one row per company; these tests pin
 those preconditions, the plans' shape (no shuffle after the tokens
-checkpoint, the dedup's value array built once per row), and the crawl's
-outputs across partitionings.
+checkpoint, the lists built once, in that checkpoint, and the dedup's
+value array built once per row), and the crawl's outputs across
+partitionings.
 """
 
 import pytest
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 
 from companycatalogcrawlerparser_spark.functions import admission as NA
 from companycatalogcrawlerparser_spark.operators import extract as X
+from companycatalogcrawlerparser_spark.plans import crawl as C
 from companycatalogcrawlerparser_spark.plans.crawl import CrawlConfig, run_crawl
 from companycatalogcrawlerparser_spark.sources import webgen
 from companycatalogcrawlerparser_spark.sources.pages import fetch_join, redirect_map
@@ -31,6 +33,21 @@ def _checksum(df) -> tuple:
         F.count(F.lit(1)).alias("rows"), F.sum(F.pmod(h, F.lit(_HASH_MOD))).alias("h")
     ).first()
     return int(r["rows"]), int(r["h"] or 0)
+
+
+def _lambda_bodies(plan: str) -> list:
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    out = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth, end = 0, start
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        out.append(plan[start:end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -133,27 +150,36 @@ class TestPlans:
             plan = committed[0][name]._jdf.queryExecution().executedPlan().toString()
             assert "ExistingRDD" in plan, name  # reads the tokens checkpoint
             assert "Exchange" not in plan, (name, plan)
+            # the lists are built once, in the checkpoint: no dedup after it
+            assert "array_position(" not in plan, (name, plan)
 
     def test_dedup_values_built_once_per_row(self, spark):
-        """first_occurrences reads its bound value array; the optimizer
-        does not rebuild it inside the per-element lambda."""
+        """Every dedup reads its bound value array, and every list reads
+        the row's bound base URL and host token; the optimizer does not
+        rebuild them inside the per-element lambdas."""
         tokens = spark.createDataFrame(
-            [(1, "http://a.ru/", "http://a.ru", ["mailto:x@a.ru", "/contacts"],
-              ["contacts"], ["/contacts"], ["x@a.ru"])],
-            "company_id long, page_url string, base_url string, hrefs array<string>, "
-            "anchor_names array<string>, anchor_urls array<string>, emails array<string>",
+            [(1, "http://a.ru/", "http://a.ru", True, True,
+              ["mailto:x@a.ru", "/contacts"], ["contacts"], ["/contacts"], ["x@a.ru"])],
+            "company_id long, page_url string, base_url string, fetch_ok boolean, "
+            "has_html boolean, hrefs array<string>, anchor_names array<string>, "
+            "anchor_urls array<string>, emails array<string>",
         )
         frames = {
             "mailto": X.mailto_emails(tokens),
             "regex": X.regex_emails(tokens),
             "anchors": X.contact_anchor_links(tokens),
             "admission": X.inline_list(NA.admit_frontier(tokens), "admitted", "url"),
+            "seed_lists": C._seed_lists(tokens),
         }
         for name, df in frames.items():
             plan = df._jdf.queryExecution().optimizedPlan().toString()
             assert "array_position(" in plan, name
             assert "array_position(transform" not in plan, (name, plan)
+            for body in _lambda_bodies(plan):  # host_token's url regex
+                assert "regexp_extract(" not in body, (name, body)
             assert df.count() == 1, name
+        # the seed lists keep no token array
+        assert not set(X.TOKEN_ARRAYS) & set(frames["seed_lists"].columns)
 
 
 class TestPartitioning:
