@@ -19,7 +19,7 @@ Layers
                  email post-filters). JVM-side, codegen-friendly.
 - ``sources``    the synthetic deterministic web generator and the pages-
                  table fetch join ("the corpus is the web").
-- ``operators``  url-seen anti-join w/ per-partition bloom, priority
+- ``operators``  url-seen anti-join w/ per-bucket bloom, priority
                  frontier + politeness scheduling, dedup family (exact,
                  minhash-LSH, simhash, n-gram jaccard, embedding cosine),
                  similarity search, text quality, training-corpus

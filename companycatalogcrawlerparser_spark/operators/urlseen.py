@@ -1,4 +1,4 @@
-"""Distributed URL-seen set (J2): per-partition bloom filters over
+"""Distributed URL-seen set (J2): per-bucket bloom filters over
 canonicalized+hashed URLs + an exact anti-join (north_rule).
 
 Replaces the reference's ``ConcurrentHashSet`` visited sets
@@ -9,36 +9,35 @@ verification joins on the real ``(scope, canonical_url)`` columns, never the
 hash alone — at 10^10 URLs 64-bit birthday collisions are expected, and a
 hash-only anti-join would silently drop never-visited URLs.
 
-Architecture (SURVEY.md §4 strategy 2):
-- the EXACT anti-join against the persisted ``url_seen`` table is the
-  correctness anchor — the bloom layer only prunes work;
-- blooms are built per hash-bucket (``pmod(seen_key, n_buckets)``) INSIDE
-  ``applyInPandas`` — seen keys never leave the executors; the build output
-  is a tiny ``(bucket, m_bits, bloom)`` DataFrame persisted beside the
-  snapshot so a restart reuses it;
-- probing is distributed by default: candidates cogroup with the bloom
-  table on bucket, each task probing its bucket's filter. When the total
-  bloom payload fits under ``driver_gate_bytes`` (local mode / small runs)
-  the filters are collected once and broadcast instead, skipping the
-  probe-side shuffle — an explicit size-gated fast path, not the design;
-- bloom-negatives are *definitely new* and skip the exact probe entirely —
-  at 10^10 URLs the anti-join input shrinks to the tiny positive slice.
+Architecture (SURVEY.md §4 strategy 2): the exact anti-join against the
+persisted ``url_seen`` table is the correctness anchor; the bloom only
+prunes work. It is register-blocked (Putze, Sanders and Singler, "Cache-,
+Hash- and Space-Efficient Bloom Filters", 2007): a key lives in bucket
+``pmod(seen_key, n_buckets)`` and all ``BLOOM_K`` of its bits fall in one
+64-bit word of that bucket's filter, picked by one hash of the key, the
+bits by 6-bit slices of a second. Build and probe are JVM Column
+expressions (no Python worker, no key on the driver): the build is one
+``bit_or`` aggregate grouped by ``(bucket, word)``, persisted beside the
+snapshot; the probe is an equi-join to those rows and ``bits & mask =
+mask``, broadcast or shuffled as Spark's threshold decides. Bloom-negatives
+are *definitely new* and skip the exact probe.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, Optional, Tuple
+from typing import Optional
 
-import numpy as np
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 BLOOM_K = 7
-BLOOM_BITS_PER_KEY = 12  # ~0.3% false-positive rate at k=7
+BLOOM_BITS_PER_KEY = 12  # ~1% false positives at k=7 in 64-bit blocks
+BLOOM_MIN_WORDS = 256    # a bucket's filter has at least 16,384 bits
 
-BLOOM_TABLE_SCHEMA = "bucket long, m_bits long, bloom binary, kind string"
+# the bloom table: one row per non-empty filter word; a bucket's row at
+# SIZE_WORD holds its word count, which the probe needs to pick a word
+BLOOM_COLUMNS = [("bucket", "long"), ("word", "long"), ("bits", "long")]
+SIZE_WORD = -1
 
 EXACT_KEYS = ["scope", "canonical_url"]
 
@@ -48,323 +47,116 @@ def seen_key(scope_col, canonical_url_col):
     return F.xxhash64(scope_col, canonical_url_col)
 
 
-def _bloom_positions(keys: np.ndarray, m_bits: int) -> np.ndarray:
-    """(n, BLOOM_K) bit positions via double hashing of the 64-bit key.
-    Deterministic, endian-free, pure numpy."""
-    h1 = keys.astype(np.uint64)
-    # splitmix64-style second hash
-    z = (h1 + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    h2 = (z ^ (z >> np.uint64(27))) | np.uint64(1)
-    i = np.arange(BLOOM_K, dtype=np.uint64)
-    pos = (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m_bits)
-    return pos
+def is_bloom_table(schema_json: Optional[dict]) -> bool:
+    """Whether a recorded table schema (``StructType.jsonValue()``) is the
+    current bloom layout; older layouts are rebuilt, not read."""
+    fields = (schema_json or {}).get("fields", [])
+    return [(f["name"], f["type"]) for f in fields] == BLOOM_COLUMNS
 
 
-def _bloom_build(keys: np.ndarray, m_bits: int) -> bytes:
-    bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
-    if len(keys):
-        pos = _bloom_positions(keys, m_bits)
-        np.bitwise_or.at(bits, (pos // 8).ravel(), (1 << (pos % 8)).astype(np.uint8).ravel())
-    return bits.tobytes()
-
-
-def _bloom_probe(keys: np.ndarray, bloom: bytes, m_bits: int) -> np.ndarray:
-    """Boolean array: True = maybe-seen (must verify), False = definitely new."""
-    if len(keys) == 0:
-        return np.zeros(0, dtype=bool)
-    bits = np.frombuffer(bloom, dtype=np.uint8)
-    pos = _bloom_positions(keys, m_bits)
-    byte = bits[(pos // 8)]
-    hit = (byte & (1 << (pos % 8)).astype(np.uint8)) != 0
-    return hit.all(axis=1)
-
-
-# --------------------------------------------------------------------------
-# Cuckoo filter (north_star names "bloom/cuckoo"): 4-slot buckets of 16-bit
-# fingerprints, fully deterministic (no RNG — the kick victim cycles with
-# the kick counter), pure numpy. vs bloom: supports deletion (fingerprints
-# are locatable) and ~same space at 3% FP; probe checks exactly two buckets.
-
-CUCKOO_SLOTS = 4
-CUCKOO_MAX_KICKS = 500
-
-
-def _cuckoo_fp(keys: np.ndarray) -> np.ndarray:
-    """16-bit nonzero fingerprints from the 64-bit key (splitmix-mixed)."""
-    z = (keys.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)) & np.uint64(
-        0xFFFFFFFFFFFFFFFF
-    )
-    fp = ((z >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
-    fp[fp == 0] = 1  # 0 marks an empty slot
-    return fp
-
-
-def _cuckoo_alt(index: np.ndarray, fp: np.ndarray, n_buckets: int) -> np.ndarray:
-    """Partial-key alternate bucket: i2 = i1 XOR hash(fp)  (mod 2^k)."""
-    h = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    return (index.astype(np.uint64) ^ h) % np.uint64(n_buckets)
-
-
-def _cuckoo_build(keys: np.ndarray, n_slots_buckets: int) -> bytes:
-    """Build a cuckoo table with ``n_slots_buckets`` buckets (power of two)
-    of CUCKOO_SLOTS uint16 fingerprints; returns the raw table bytes.
-    Raises if an insert exceeds MAX_KICKS (caller sizes ~1.3× load)."""
-    nb = n_slots_buckets
-    table = np.zeros((nb, CUCKOO_SLOTS), dtype=np.uint16)
-    fps = _cuckoo_fp(keys)
-    idx1 = (keys.astype(np.uint64) % np.uint64(nb)).astype(np.int64)
-    for fp, i1 in zip(fps, idx1):
-        fp = np.uint16(fp)
-        i = int(i1)
-        i2 = int(_cuckoo_alt(np.array([i], dtype=np.uint64), np.array([fp]), nb)[0])
-        placed = False
-        for b in (i, i2):
-            row = table[b]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                placed = True
-                break
-        if placed:
-            continue
-        # deterministic kicking: victim slot cycles with the kick counter
-        cur, cfp = i, fp
-        for kicks in range(CUCKOO_MAX_KICKS):
-            slot = kicks % CUCKOO_SLOTS
-            cfp, table[cur][slot] = table[cur][slot], cfp
-            cur = int(
-                _cuckoo_alt(np.array([cur], dtype=np.uint64), np.array([cfp]), nb)[0]
-            )
-            row = table[cur]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = cfp
-                break
-        else:
-            raise RuntimeError("cuckoo filter overflow — size the table up")
-    return table.tobytes()
-
-
-def _cuckoo_probe(keys: np.ndarray, table_bytes: bytes, n_slots_buckets: int) -> np.ndarray:
-    """True = maybe-seen; checks the two candidate buckets per key."""
-    if len(keys) == 0:
-        return np.zeros(0, dtype=bool)
-    nb = n_slots_buckets
-    table = np.frombuffer(table_bytes, dtype=np.uint16).reshape(nb, CUCKOO_SLOTS)
-    fps = _cuckoo_fp(keys)
-    i1 = (keys.astype(np.uint64) % np.uint64(nb)).astype(np.int64)
-    i2 = _cuckoo_alt(i1.astype(np.uint64), fps, nb).astype(np.int64)
-    hit1 = (table[i1] == fps[:, None]).any(axis=1)
-    hit2 = (table[i2] == fps[:, None]).any(axis=1)
-    return hit1 | hit2
-
-
-def _cuckoo_size_for(n: int) -> int:
-    """Power-of-two bucket count at ≤~80% load (insertions stay kick-safe)."""
-    need = max(16, int(n / (CUCKOO_SLOTS * 0.8)) + 1)
-    p = 1
-    while p < need:
-        p <<= 1
-    return p
+def _mask(key: Column) -> Column:
+    """The key's ``BLOOM_K`` bits in its word: bit indices are 6-bit
+    slices of a second hash (shifts and masks stay exact under ANSI)."""
+    h = F.xxhash64(key, F.lit(BLOOM_K))
+    mask = F.lit(0).cast("long")
+    for i in range(BLOOM_K):
+        bit = F.shiftrightunsigned(h, 6 * i).bitwiseAND(63).cast("int")
+        mask = mask.bitwiseOR(F.call_function("shiftleft", F.lit(1).cast("long"), bit))
+    return mask
 
 
 class UrlSeen:
-    """Handle over the url_seen table + its bucket filters (bloom by
-    default, cuckoo via ``filter_kind="cuckoo"`` — deletable fingerprints,
-    two-bucket probes; both share the same exact-anti-join anchor).
+    """Handle over the url_seen table + its per-bucket bloom filters.
 
-    The table itself lives in the snapshot store (parquet); this class only
-    defines the plan fragments.
+    The tables live in the snapshot store (parquet); this class only
+    defines the plan fragments, which take their session from their input
+    frames (``spark`` is not used).
     """
 
-    def __init__(
-        self,
-        spark,
-        n_buckets: int = 64,
-        driver_gate_bytes: int = 256 << 20,
-        filter_kind: str = "bloom",
-    ):
-        if filter_kind not in ("bloom", "cuckoo"):
-            raise ValueError("filter_kind must be 'bloom' or 'cuckoo'")
-        if n_buckets & (n_buckets - 1):
-            # power of two keeps numpy's uint64 modulo consistent with
-            # Spark's pmod on signed keys (2^64 % n == 0)
-            raise ValueError("n_buckets must be a power of two")
-        self.spark = spark
+    def __init__(self, spark, n_buckets: int = 64, filter_kind: str = "bloom"):
+        if filter_kind != "bloom":
+            raise ValueError("filter_kind must be 'bloom'")
         self.n_buckets = n_buckets
-        self.driver_gate_bytes = driver_gate_bytes
-        self.filter_kind = filter_kind
-        self._blooms: Optional[Dict[int, Tuple[bytes, int]]] = None  # broadcast path
-        self._blooms_df: Optional[DataFrame] = None                  # cogroup path
+        self._blooms: Optional[DataFrame] = None
+
+    def _bucket(self, key: Column) -> Column:
+        return F.pmod(key, F.lit(self.n_buckets)).cast("long")
 
     # -- bloom lifecycle ---------------------------------------------------
 
     def bloom_table(self, seen: DataFrame) -> DataFrame:
-        """Fully distributed per-bucket bloom build: keys are grouped by
-        ``pmod(seen_key, n_buckets)`` and each bucket's filter is built
-        inside ``applyInPandas`` — the keys never reach the driver; only the
-        finished filter bytes (KB-scale per bucket) do, and only behind the
-        size gate. Per-bucket ``m_bits`` sizes to the bucket's actual load
-        (skewed buckets simply get a bigger, still-KB-scale filter)."""
-        import pandas as pd
-
-        bits_per_key = BLOOM_BITS_PER_KEY
-        kind = self.filter_kind
-
-        def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            keys = pdf["seen_key"].to_numpy(dtype=np.int64)
-            if kind == "cuckoo":
-                m = _cuckoo_size_for(len(keys))
-                data = _cuckoo_build(keys, m)
-            else:
-                m = max(1 << 14, int(len(keys)) * bits_per_key)
-                data = _bloom_build(keys, m)
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["bucket"].iloc[0])],
-                    "m_bits": [m],
-                    "bloom": [data],
-                    "kind": [kind],
-                }
-            )
-
-        keyed = seen.select(
-            F.pmod(F.col("seen_key"), F.lit(self.n_buckets)).cast("long").alias("bucket"),
-            "seen_key",
+        """``seen(seen_key)`` → the bloom rows (``BLOOM_COLUMNS``).
+        A bucket of ``n`` keys gets ``max(BLOOM_MIN_WORDS, ceil(12n/64))``
+        words; the count window and the ``(bucket, word)`` aggregate share
+        one shuffle on ``bucket``."""
+        key = F.col("seen_key")
+        n = F.count(F.lit(1)).over(Window.partitionBy("bucket"))
+        words = F.greatest(
+            F.lit(BLOOM_MIN_WORDS).cast("long"), F.ceil(n * BLOOM_BITS_PER_KEY / 64)
         )
-        return keyed.groupBy("bucket").applyInPandas(build, BLOOM_TABLE_SCHEMA)
+        keyed = seen.select(
+            self._bucket(key).alias("bucket"),
+            F.xxhash64(key).alias("h"),
+            _mask(key).alias("mask"),
+        ).withColumn("m", words)
+        entries = F.array(
+            F.struct(F.pmod("h", "m").alias("word"), F.col("mask").alias("bits")),
+            F.struct(F.lit(SIZE_WORD).cast("long").alias("word"), F.col("m").alias("bits")),
+        )
+        return (
+            keyed.select("bucket", F.inline(entries))
+            .groupBy("bucket", "word")
+            .agg(F.bit_or("bits").alias("bits"))
+        )
 
     def set_blooms(self, blooms: DataFrame) -> None:
         """Install a bloom table (fresh from :meth:`bloom_table` or re-read
-        from a snapshot). Collects to a broadcast dict only when the total
-        filter payload fits under ``driver_gate_bytes``; otherwise keeps the
-        DataFrame and probes via cogroup (fully distributed)."""
-        prev_df = getattr(self, "_blooms_df", None)
-        blooms = blooms.persist()
-        total = blooms.agg(F.sum(F.length("bloom")).alias("b")).first()["b"] or 0
-        if prev_df is not None and prev_df is not blooms:
-            # release the previous round's pinned filter blocks (ADVICE r02:
-            # repeated set_blooms calls must not accumulate cached blooms)
-            prev_df.unpersist()
-        if total <= self.driver_gate_bytes:
-            rows = blooms.collect()
-            self._blooms = {
-                int(r["bucket"]): (
-                    bytes(r["bloom"]),
-                    int(r["m_bits"]),
-                    (r["kind"] if "kind" in blooms.columns else "bloom"),
-                )
-                for r in rows
-            }
-            self._blooms_df = None
-            blooms.unpersist()
-        else:
-            self._blooms_df = blooms
-            self._blooms = None
+        from a snapshot). Lazy: the probe joins to it, so this runs no job."""
+        self._blooms = blooms
 
     def build_blooms(self, seen: DataFrame) -> None:
-        """Build + install blooms for ``seen`` (distributed build always)."""
+        """Build + install blooms for ``seen``."""
         self.set_blooms(self.bloom_table(seen))
 
     # -- probing -----------------------------------------------------------
 
     def _probe(self, candidates: DataFrame) -> DataFrame:
-        """candidates(…, seen_key) → same rows + boolean ``maybe_seen``."""
-        import pandas as pd
-
-        probed_schema = T.StructType(
-            list(candidates.schema.fields)
-            + [T.StructField("maybe_seen", T.BooleanType())]
+        """candidates(…, seen_key) → same rows + boolean ``maybe_seen``.
+        One join finds the bucket's word count, one the key's word; a key
+        in an empty bucket or an empty word is definitely new."""
+        key = F.col("seen_key")
+        rows = self._blooms.toDF("__bucket", "__word", "__bits")
+        sizes = rows.filter(F.col("__word") == SIZE_WORD).select(
+            "__bucket", F.col("__bits").alias("__m")
         )
-
-        if self._blooms is not None:
-            blooms = self.spark.sparkContext.broadcast(
-                (self._blooms, self.n_buckets)
-            )
-
-            def probe(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-                bl, n_buckets = blooms.value
-                for b in batches:
-                    keys = b["seen_key"].to_numpy(dtype=np.int64)
-                    buckets = (keys.astype(np.uint64) % np.uint64(n_buckets)).astype(np.int64)
-                    maybe = np.zeros(len(b), dtype=bool)
-                    for bucket in np.unique(buckets):
-                        entry = bl.get(int(bucket))
-                        mask = buckets == bucket
-                        if entry is None:
-                            continue  # empty bucket → all definitely new
-                        data, m, kind = entry
-                        if kind == "cuckoo":
-                            maybe[mask] = _cuckoo_probe(
-                                keys[mask].astype(np.uint64), data, m
-                            )
-                        else:
-                            maybe[mask] = _bloom_probe(
-                                keys[mask].astype(np.uint64), data, m
-                            )
-                    out = b.copy()
-                    out["maybe_seen"] = maybe
-                    yield out
-
-            return candidates.mapInPandas(probe, schema=probed_schema)
-
-        # distributed probe: shuffle candidates to their bucket's bloom task
-        cand_b = candidates.withColumn(
-            "__bucket", F.pmod(F.col("seen_key"), F.lit(self.n_buckets)).cast("long")
+        words = rows.filter(F.col("__word") != SIZE_WORD)
+        mask = _mask(key)
+        probed = (
+            candidates.withColumn("__bucket", self._bucket(key))
+            .join(sizes, "__bucket", "left")
+            .withColumn("__word", F.pmod(F.xxhash64(key), F.col("__m")))
+            .join(words, ["__bucket", "__word"], "left")
         )
-
-        def probe_cogroup(cand_pdf: "pd.DataFrame", bloom_pdf: "pd.DataFrame") -> "pd.DataFrame":
-            out = cand_pdf.drop(columns=["__bucket"])
-            if len(out) == 0:
-                out = out.copy()
-                out["maybe_seen"] = np.zeros(0, dtype=bool)
-                return out
-            if len(bloom_pdf) == 0:
-                maybe = np.zeros(len(out), dtype=bool)
-            else:
-                data = bytes(bloom_pdf["bloom"].iloc[0])
-                m = int(bloom_pdf["m_bits"].iloc[0])
-                kind = (
-                    bloom_pdf["kind"].iloc[0]
-                    if "kind" in bloom_pdf.columns
-                    else "bloom"
-                )
-                probe_fn = _cuckoo_probe if kind == "cuckoo" else _bloom_probe
-                maybe = probe_fn(
-                    out["seen_key"].to_numpy(dtype=np.int64).astype(np.uint64),
-                    data,
-                    m,
-                )
-            out = out.copy()
-            out["maybe_seen"] = maybe
-            return out
-
-        return (
-            cand_b.groupBy("__bucket")
-            .cogroup(self._blooms_df.groupBy("bucket"))
-            .applyInPandas(probe_cogroup, probed_schema)
-        )
+        maybe = F.coalesce(F.col("__bits").bitwiseAND(mask) == mask, F.lit(False))
+        return probed.select(*candidates.columns, maybe.alias("maybe_seen"))
 
     # -- the anti-join -----------------------------------------------------
 
     def filter_unseen(self, candidates: DataFrame, seen: DataFrame) -> DataFrame:
         """candidates(…, seen_key, scope, canonical_url) → rows NOT in ``seen``.
 
-        Bloom-prefilter (when installed) splits candidates into definite-new
-        (pass through, no shuffle) and maybe-seen (exact left_anti join).
-        The exact join keys on the REAL columns ``(scope, canonical_url)``
-        — ``seen_key`` is only the bloom/bucket key, so a 64-bit collision
-        costs one wasted exact probe, never a dropped URL.
-        """
+        The bloom (when installed) splits candidates into definite-new and
+        maybe-seen; only the latter meet the exact left_anti join, which
+        keys on the REAL columns ``(scope, canonical_url)``: a 64-bit
+        ``seen_key`` collision costs one wasted exact probe, never a URL."""
         missing = [c for c in EXACT_KEYS if c not in candidates.columns]
         if missing:
             raise ValueError(
                 f"candidates must carry {EXACT_KEYS} for the exact anti-join; "
                 f"missing {missing} (seen_key alone is collision-unsafe)"
             )
-        seen_sel = seen.select(*EXACT_KEYS).distinct()
-        if self._blooms is None and self._blooms_df is None:
+        seen_sel = seen.select(*EXACT_KEYS)
+        if self._blooms is None:
             return candidates.join(seen_sel, EXACT_KEYS, "left_anti")
 
         probed = self._probe(candidates)

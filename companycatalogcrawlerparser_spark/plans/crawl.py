@@ -55,7 +55,7 @@ from ..functions.predicates import (
 from ..operators import extract as X
 from ..operators import frontier as FR
 from ..operators import robots as RB
-from ..operators.urlseen import UrlSeen, seen_key
+from ..operators.urlseen import UrlSeen, is_bloom_table, seen_key
 from ..session import local_frame
 from ..sources.pages import fetch_join, redirect_map
 from ..storage.snapshots import SnapshotStore
@@ -72,8 +72,8 @@ class CrawlConfig:
     take_limit: int = 100000    # Program.fs:535
     delay_ms: int = 1000        # smallest reference Thread.Sleep
     num_partitions: int = 32
-    n_buckets: int = 64         # url_seen filter buckets (power of two)
-    url_seen_filter: str = "bloom"  # or "cuckoo" (deletable fingerprints)
+    n_buckets: int = 64         # url_seen bloom filter buckets
+    url_seen_filter: str = "bloom"  # the only filter kind
     robots_agent: str = "ccc-spark"  # the user agent robots.txt groups
     #   are matched against (gating is always on; a no-op on corpora
     #   without robots.txt rows)
@@ -175,10 +175,11 @@ def run_crawl(
             else:
                 frontier = store.read(round_id - 1, "frontier_next")
                 seen = store.read(round_id - 1, "url_seen")
-                # reuse the blooms committed with the previous snapshot —
-                # built distributed (applyInPandas per bucket); rebuild only
-                # if restoring from an older store without a blooms table
-                if store.has_table(round_id - 1, "blooms"):
+                # reuse the blooms committed with the previous snapshot;
+                # rebuild them from url_seen if the store has none or
+                # recorded an older layout
+                blooms = store.manifest(round_id - 1)["tables"].get("blooms", {})
+                if is_bloom_table(blooms.get("schema")):
                     useen.set_blooms(store.read(round_id - 1, "blooms"))
                 else:
                     useen.build_blooms(seen)
@@ -187,15 +188,20 @@ def run_crawl(
                     .withColumn("scope", F.col("company_id").cast("string"))
                     .withColumn("seen_key", seen_key(F.col("scope"), F.col("canonical_url")))
                 )
-                # within-round first-occurrence dedup (the sequential seen.Add)
-                w = Window.partitionBy("company_id", "url").orderBy("priority", "seq")
-                cand = (
-                    cand.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
                 frontier = useen.filter_unseen(cand, seen).drop(
                     "seen_key", "scope", "canonical_url"
+                )
+                # within-round first-occurrence dedup (the sequential
+                # seen.Add). Rows of one (company_id, url) share their
+                # scoped key, so the filter keeps or drops them together
+                # and may run first: the filter's branches then meet
+                # below the dedup's one shuffle instead of each
+                # shuffling.
+                w = Window.partitionBy("company_id", "url").orderBy("priority", "seq")
+                frontier = (
+                    frontier.withColumn("__rn", F.row_number().over(w))
+                    .filter(F.col("__rn") == 1)
+                    .drop("__rn")
                 )
                 # extractor gate: non-empty ∧ F2 (Crawler.fs:241)
                 frontier = frontier.filter(
@@ -285,8 +291,8 @@ def run_crawl(
                 "url_seen": url_seen,
             }
             if round_id + 1 < cfg.max_depth:
-                # persist next round's blooms with the snapshot (distributed
-                # applyInPandas build — seen keys never reach the driver)
+                # persist next round's blooms with the snapshot (one JVM
+                # aggregate — seen keys never reach the driver)
                 tables["blooms"] = useen.bloom_table(url_seen)
             store.commit(round_id, tables, observed=_round_counters())
 

@@ -67,6 +67,11 @@ def get_spark(
         # batch stays ~tens of MB
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.sql.session.timeZone", "UTC")
+        # with this on, every Column and function call captures its Python
+        # call site and sends it to the JVM (about six py4j round trips
+        # each), which is most of the cost of building the crawl's plans;
+        # errors lose only the Python line of their DataFrame context
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", _driver_memory())
         # regex extraction allocates transient String copies of each page;
         # ParallelGC handles that allocation profile at least as well as G1

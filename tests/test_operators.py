@@ -9,31 +9,36 @@ from companycatalogcrawlerparser_spark.operators import dedup as D
 from companycatalogcrawlerparser_spark.operators import linkgraph as LG
 from companycatalogcrawlerparser_spark.operators import similarity as SIM
 from companycatalogcrawlerparser_spark.operators import textquality as TQ
-from companycatalogcrawlerparser_spark.operators.urlseen import (
-    UrlSeen,
-    _bloom_build,
-    _bloom_probe,
-    seen_key,
-)
+from companycatalogcrawlerparser_spark.operators.urlseen import SIZE_WORD, UrlSeen, seen_key
 
 
 class TestBloom:
-    def test_no_false_negatives(self):
-        rng = np.random.default_rng(42)
-        keys = rng.integers(-(2**62), 2**62, 5000, dtype=np.int64)
-        m_bits = len(keys) * 12
-        bloom = _bloom_build(keys, m_bits)
-        hits = _bloom_probe(keys.astype(np.uint64), bloom, m_bits)
-        assert hits.all(), "bloom must never miss an inserted key"
+    @staticmethod
+    def _keys(spark, lo, hi):
+        return spark.range(lo, hi).select(
+            F.xxhash64(F.col("id"), F.lit("k")).alias("seen_key")
+        )
 
-    def test_low_false_positive_rate(self):
-        rng = np.random.default_rng(7)
-        keys = rng.integers(-(2**62), 2**62, 5000, dtype=np.int64)
-        other = rng.integers(-(2**62), 2**62, 5000, dtype=np.int64)
-        other = np.setdiff1d(other, keys)
-        m_bits = len(keys) * 12
-        bloom = _bloom_build(keys, m_bits)
-        fp = _bloom_probe(other.astype(np.uint64), bloom, m_bits).mean()
+    @staticmethod
+    def _bloom(spark, keys):
+        """One bucket of 5,000 keys: 938 words at 12 bits per key, so the
+        256-word floor does not bind."""
+        us = UrlSeen(spark, n_buckets=1)
+        us.set_blooms(us.bloom_table(keys))
+        sizes = us._blooms.filter(F.col("word") == SIZE_WORD).collect()
+        assert [r["bits"] for r in sizes] == [938]
+        return us
+
+    def test_no_false_negatives(self, spark):
+        keys = self._keys(spark, 0, 5000)
+        us = self._bloom(spark, keys)
+        missed = us._probe(keys).filter(~F.col("maybe_seen")).count()
+        assert missed == 0, "bloom must never miss an inserted key"
+
+    def test_low_false_positive_rate(self, spark):
+        us = self._bloom(spark, self._keys(spark, 0, 5000))
+        other = self._keys(spark, 5000, 10000)
+        fp = us._probe(other).agg(F.avg(F.col("maybe_seen").cast("double"))).first()[0]
         assert fp < 0.02, f"false-positive rate too high: {fp}"
 
     @staticmethod
@@ -67,14 +72,22 @@ class TestBloom:
         assert bloomed == expected, "bloom path must equal exact anti-join"
 
     def test_filter_unseen_distributed_probe(self, spark):
-        """driver_gate_bytes=0 forces the cogroup (cluster-scale) probe path;
-        result must equal the exact anti-join."""
+        """With broadcasts off, the probe joins shuffle (the cluster-scale
+        plan); the result must equal the exact anti-join."""
         seen, cand, expected = self._seen_cand(spark)
-        us = UrlSeen(spark, n_buckets=16, driver_gate_bytes=0)
+        us = UrlSeen(spark, n_buckets=16)
         us.build_blooms(seen)
-        assert us._blooms is None and us._blooms_df is not None
-        got = {r["url"] for r in us.filter_unseen(cand, seen).collect()}
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            unseen = us.filter_unseen(cand, seen)
+            got = {r["url"] for r in unseen.collect()}
+            plan = unseen._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set(key, prev)
         assert got == expected
+        assert "BroadcastHashJoin" not in plan
 
     def test_filter_unseen_requires_exact_columns(self, spark):
         """seen_key alone is collision-unsafe — the API must refuse it."""
@@ -86,12 +99,18 @@ class TestBloom:
     def test_bloom_build_plan_has_no_driver_collect(self, spark):
         """The build must never funnel seen keys through the driver: no
         collect_list aggregation anywhere in the bloom-table plan
-        (VERDICT r01 'What's wrong #1')."""
-        seen, _, _ = self._seen_cand(spark)
+        (VERDICT r01 'What's wrong #1'). Build and probe run in the JVM:
+        no Python operator in either plan."""
+        seen, cand, _ = self._seen_cand(spark)
         us = UrlSeen(spark, n_buckets=16)
-        plan = us.bloom_table(seen)._jdf.queryExecution().executedPlan().toString()
-        assert "collect_list" not in plan
-        assert "FlatMapGroupsInPandas" in plan or "ArrowEvalPython" in plan
+        build = us.bloom_table(seen)._jdf.queryExecution().executedPlan().toString()
+        assert "collect_list" not in build
+        us.build_blooms(seen)
+        probe = us.filter_unseen(cand, seen)._jdf.queryExecution().executedPlan().toString()
+        python_ops = ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython",
+                      "BatchEvalPython")
+        for plan in (build, probe):
+            assert not [op for op in python_ops if op in plan]
 
     def test_exact_join_survives_seen_key_collision(self, spark):
         """Two distinct (scope, canonical_url) pairs forced onto the SAME
@@ -915,44 +934,6 @@ class TestStreaming:
             )
         assert sum(v[1] for v in want.values()) > 0  # the gate is exercised
         assert got == want
-
-
-class TestCuckooFilter:
-    """url_seen's cuckoo variant (north_star: 'bloom/cuckoo filters')."""
-
-    def test_no_false_negatives_and_low_fp(self):
-        from companycatalogcrawlerparser_spark.operators.urlseen import (
-            _cuckoo_build, _cuckoo_probe, _cuckoo_size_for,
-        )
-
-        rng = np.random.default_rng(3)
-        keys = np.unique(rng.integers(-(2**62), 2**62, 5000, dtype=np.int64))
-        nb = _cuckoo_size_for(len(keys))
-        table = _cuckoo_build(keys, nb)
-        assert _cuckoo_probe(keys.astype(np.uint64), table, nb).all()
-        other = np.setdiff1d(
-            rng.integers(-(2**62), 2**62, 5000, dtype=np.int64), keys
-        )
-        fp = _cuckoo_probe(other.astype(np.uint64), table, nb).mean()
-        assert fp < 0.05, f"cuckoo fp too high: {fp}"
-
-    def test_filter_unseen_cuckoo_paths_exact(self, spark):
-        seen, cand, expected = TestBloom._seen_cand(spark)
-        us = UrlSeen(spark, n_buckets=16, filter_kind="cuckoo")
-        us.build_blooms(seen)
-        assert {r["url"] for r in us.filter_unseen(cand, seen).collect()} == expected
-        # distributed (cogroup) probe path
-        us2 = UrlSeen(spark, n_buckets=16, filter_kind="cuckoo", driver_gate_bytes=0)
-        us2.build_blooms(seen)
-        assert {r["url"] for r in us2.filter_unseen(cand, seen).collect()} == expected
-
-    def test_legacy_bloom_table_without_kind_column(self, spark):
-        """Snapshots committed before the kind column existed must load."""
-        seen, cand, expected = TestBloom._seen_cand(spark)
-        us = UrlSeen(spark, n_buckets=16)
-        legacy = us.bloom_table(seen).drop("kind")
-        us.set_blooms(legacy)
-        assert {r["url"] for r in us.filter_unseen(cand, seen).collect()} == expected
 
 
 class TestConnectedComponents:

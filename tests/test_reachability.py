@@ -121,7 +121,8 @@ UNSET_CRAWL_FIELDS = {
                 "audit reads it",
     "native_extract": "perfbench wraps extract_tokens_meta, the branch's "
                       "other side",
-    "url_seen_filter": "perfbench's url-seen replay reads it",
+    "url_seen_filter": "perfbench's url-seen replay passes it to UrlSeen, "
+                       "which accepts only \"bloom\"",
     "robots_agent": "a deployment setting: the user agent the robots gate "
                     "matches",
 }
