@@ -131,11 +131,11 @@ def run_crawl_bench(
         # distributed (untimed) twin of tests/test_crawl_equality.py::
         # test_politeness_budget, runnable at XL scale: per (round, host)
         # the dequeue ranks must be dense 0..n-1 and every not_before
-        # stamp exactly rank×delay — checked per FULL host (the salted
-        # fan-out must not fragment a host's politeness sequence), no
-        # driver collect. Also reports the skew head (top host's share
-        # of fetched pages) so the record shows what distribution the
-        # run survived.
+        # stamp exactly rank×delay — checked per FULL host (however the
+        # fetch spreads a host's pages over tasks, its politeness
+        # sequence must stay whole), no driver collect. Also reports the
+        # skew head (top host's share of fetched pages) so the record
+        # shows what distribution the run survived.
         delay = cfg.delay_ms
         viol = (
             trace.groupBy("round", "host")

@@ -29,10 +29,11 @@ per-row array projection or explode of that row — no shuffle. Round 0
 builds its page lists (mailto, emails, contact anchors, contact hrefs)
 inside that one checkpoint, in place of the token arrays, so its commit
 writes only project and explode them. The windows are the seed
-selection's site_url dedup, the host politeness stamps and round 1's
-(company, url) dedup. No collect() except tiny control counts; the
-manifest counters (and each round's max ``host_rank``) are observed on
-the commit writes.
+selection's site_url dedup, the host politeness stamps (one row_number
+per host) and round 1's (company, url) dedup; the stamped frontier goes
+straight into the fetch join's broadcast, unrepartitioned. No collect()
+except tiny control counts; the manifest counters (and each round's max
+``host_rank``) are observed on the commit writes.
 """
 
 from __future__ import annotations
@@ -71,7 +72,8 @@ class CrawlConfig:
     max_depth: int = 2          # seed round + contact round (reference depth)
     take_limit: int = 100000    # Program.fs:535
     delay_ms: int = 1000        # smallest reference Thread.Sleep
-    num_partitions: int = 32
+    num_partitions: int = 32    # read only by the benchmark's frontier
+    #   replay (salted); the crawl does not repartition its frontier
     n_buckets: int = 64         # url_seen bloom filter buckets
     url_seen_filter: str = "bloom"  # the only filter kind
     robots_agent: str = "ccc-spark"  # the user agent robots.txt groups
@@ -212,14 +214,14 @@ def run_crawl(
             if robots_rules_df is not None:
                 frontier = RB.gate_frontier(frontier, robots_rules_df)
 
-            # politeness stamps over full host, then salted spread (W2/C2/C3);
-            # per-host Crawl-delay rows override the default budget
+            # politeness stamps over the full host (W2/C2/C3); per-host
+            # Crawl-delay rows override the default budget. No repartition
+            # follows: the fetch join broadcasts the stamped frontier.
             sched = FR.schedule(
                 frontier,
                 politeness=robots_politeness,
                 default_delay_ms=cfg.delay_ms,
             )
-            sched = FR.salted(sched, cfg.num_partitions)
 
             # the fetch join stays LAZY: html streams from the corpus scan
             # straight through ONE extract pass that emits fetch metadata +

@@ -21,10 +21,10 @@ from perfbench.workloads import checksum_exprs
 
 N_COMPANIES = 20
 # Spark jobs of one two-round crawl of the fixture corpus at local[8],
-# finalize included: 47 measured with the url-seen bloom built and probed
-# in the JVM (the probe's joins run inside round 1's fetch query; installing
-# the blooms runs no job).
-MAX_CRAWL_JOBS = 48
+# finalize included: 40 measured with one politeness window per host and
+# no repartition of the stamped frontier (the url-seen probe's joins run
+# inside round 1's fetch query; installing the blooms runs no job).
+MAX_CRAWL_JOBS = 41
 
 
 def _cfg(**kw):

@@ -130,15 +130,26 @@ class TestBloom:
         assert us.filter_unseen(cand, seen).count() == 1
 
 
-class TestTwoLevelPoliteness:
-    """schedule's two-level rank (intra-group rank + per-group offset)
-    must rank identically to the direct per-host window while keeping the
-    per-host serial work at GROUP granularity (VERDICT r01 #5)."""
+class TestPolitenessSchedule:
+    """schedule ranks each host's rows by (priority, company_id, seq, url)
+    and stamps ``not_before = rank × the host's delay``; the expected ranks
+    are computed in plain Python."""
 
-    def test_ranks_match_single_window(self, spark):
-        from pyspark.sql import Window
+    SCHEMA = "company_id long, url string, priority int, seq int, base_url string"
 
-        from companycatalogcrawlerparser_spark.functions.canon import canonical_host
+    @staticmethod
+    def _expected_ranks(rows) -> dict:
+        """{url: (host, rank)}: per host, sorted by (priority, company_id,
+        seq, url), the rank is the index."""
+        by_host = {}
+        for cid, url, prio, seq, _ in rows:
+            host = url.split("/")[2]
+            by_host.setdefault(host, []).append((prio, cid, seq, url))
+        return {url: (host, k)
+                for host, keys in by_host.items()
+                for k, (_, _, _, url) in enumerate(sorted(keys))}
+
+    def _check(self, spark, politeness, delays, default):
         from companycatalogcrawlerparser_spark.operators import frontier as FR
 
         rows = []
@@ -148,33 +159,32 @@ class TestTwoLevelPoliteness:
             for seq in range(5):
                 prio = (cid + seq) % 3
                 rows.append((cid, f"http://{host}/p{cid}-{seq}", prio, seq, f"http://{host}"))
-        df = spark.createDataFrame(
-            rows, "company_id long, url string, priority int, seq int, base_url string"
-        )
-        a = {
-            (r["url"]): (r["host"], r["host_rank"], r["not_before"])
-            for r in FR.schedule(df).collect()
+        df = spark.createDataFrame(rows, self.SCHEMA)
+        got = {
+            r["url"]: (r["host"], r["host_rank"], r["not_before"])
+            for r in FR.schedule(df, politeness=politeness).collect()
         }
-        # the reference: one direct window per host
-        w = Window.partitionBy("host").orderBy("priority", "company_id", "seq", "url")
-        rank = F.row_number().over(w) - 1
-        direct = df.withColumn("host", canonical_host(F.col("url"))).select(
-            "url", "host", rank.alias("host_rank"),
-            (rank * FR.DEFAULT_DELAY_MS).alias("not_before"),
-        )
-        b = {
-            (r["url"]): (r["host"], r["host_rank"], r["not_before"])
-            for r in direct.collect()
+        assert got == {
+            url: (host, k, k * delays.get(host, default))
+            for url, (host, k) in self._expected_ranks(rows).items()
         }
-        assert a == b
-        # budget property: per-host gaps of delay_ms
+        # budget property: per-host ranks dense 0..n-1
         by_host = {}
-        for host, rank, nb in a.values():
-            by_host.setdefault(host, []).append((rank, nb))
-        for host, v in by_host.items():
-            v.sort()
-            assert [r for r, _ in v] == list(range(len(v)))
-            assert all(nb == r * FR.DEFAULT_DELAY_MS for r, nb in v)
+        for host, rank, _ in got.values():
+            by_host.setdefault(host, []).append(rank)
+        for host, ranks in by_host.items():
+            assert sorted(ranks) == list(range(len(ranks))), host
+
+    def test_ranks_order_each_host_by_priority_company_seq_url(self, spark):
+        from companycatalogcrawlerparser_spark.operators import frontier as FR
+
+        self._check(spark, None, {}, FR.DEFAULT_DELAY_MS)
+
+    def test_not_before_uses_the_host_delay(self, spark):
+        politeness = spark.createDataFrame(
+            [("hot.ru", 2500), ("*", 700)], "host string, delay_ms int"
+        )
+        self._check(spark, politeness, {"hot.ru": 2500}, 700)
 
 
 class TestAssignDenseIds:

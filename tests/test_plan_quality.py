@@ -151,6 +151,21 @@ class TestJoinStrategies:
         plan = _plan(schedule(frontier, politeness))
         assert "BroadcastHashJoin" in plan
 
+    def test_schedule_is_one_window(self, spark):
+        """Without a politeness frame the ranks are one per-host window:
+        no group sizes to aggregate and no offsets to join back."""
+        import re
+
+        from companycatalogcrawlerparser_spark.operators.frontier import schedule
+
+        frontier = spark.createDataFrame(
+            [(1, "http://a.ru/x", 0, 0)], ["company_id", "url", "priority", "seq"]
+        )
+        plan = schedule(frontier)._jdf.queryExecution().optimizedPlan().toString()
+        nodes = [m.group(1) for m in re.finditer(r"^[\s:+\-]*(\w+)", plan, re.M)]
+        assert nodes.count("Window") == 1, plan
+        assert "Aggregate" not in nodes and "Join" not in nodes, plan
+
 
 class TestJvmSideOnly:
     def test_admission_chain_has_no_python(self, spark):
