@@ -813,32 +813,21 @@ def q_corpus_curation(spark, sf_dir):
     )
     from companycatalogcrawlerparser_spark import harness as _H
 
-    # the six frames whose CONSTRUCTION runs eager Spark jobs (the
-    # prefix-sum builders' range-sample + __pid-freeze checkpoints, the
-    # BPE word-count collect) are built from concurrent driver threads —
+    # the three frames whose CONSTRUCTION runs eager Spark jobs (the
+    # two pack_shards partition-id checkpoints, the BPE word-count
+    # collect) are built from concurrent driver threads —
     # independent jobs whose materialization latency overlaps (as
-    # SnapshotStore.commit writes a round's tables; measured: the
-    # sequential builds were ~4.3 s of the row's build wall, ≈ the sum
-    # of six ~0.5-0.9 s materializations). Everything else stays lazy.
+    # SnapshotStore.commit writes a round's tables). Everything else,
+    # the order index, the domain cap and the quantiles included, stays
+    # lazy.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=6) as __ex:
+    with ThreadPoolExecutor(max_workers=3) as __ex:
         __f_pack = __ex.submit(CU.pack_shards, toks, "n_tok", 2000)
-        __f_order = __ex.submit(
-            CU.global_order_index, d.select("doc_id")
-        )
-        __f_cap = __ex.submit(
-            CU.cap_per_domain,
-            d.select("doc_id").withColumn("domain", dom), "domain", 20,
-        )
         __f_ctx = __ex.submit(
             lambda: CU.concat_packed_sequences(
                 CU.pack_shards(d500, "n_tok", 2000), order_col="doc_id"
             ).persist()
-        )
-        __f_quant = __ex.submit(
-            CU.exact_quantiles,
-            toks.select("n_tok"), "n_tok", [0.25, 0.5, 0.75, 0.9],
         )
         __f_bpe = __ex.submit(_H.q_bpe_rows, spark)
     pack = __f_pack.result().select(
@@ -849,9 +838,9 @@ def q_corpus_curation(spark, sf_dir):
     )
     # kind='order' (r6-late): deterministic training shuffle — train_pos
     # is the row's 0-based global position in md5(doc_id) order, computed
-    # by the pack_shards prefix sum (one token per row, budget 1), never
-    # a single-partition row_number window; the twin IS that naive window
-    order = __f_order.result().select(
+    # by a range sort and Spark's distributed sequence id, never a
+    # single-partition row_number window; the twin IS that naive window
+    order = CU.global_order_index(d.select("doc_id")).select(
         F.lit("order").alias("kind"),
         "doc_id",
         F.lit(None).cast("string").alias("grp"),
@@ -864,7 +853,9 @@ def q_corpus_curation(spark, sf_dir):
     # md5-permutation ranks for over-cap domains (val = rank) and the
     # untouched NULL-rank passthrough for under-cap ones. The twin is
     # the naive one-task-per-domain window the operator exists to avoid.
-    capd = __f_cap.result().select(
+    capd = CU.cap_per_domain(
+        d.select("doc_id").withColumn("domain", dom), "domain", 20
+    ).select(
         F.lit("cap").alias("kind"),
         "doc_id",
         F.col("domain").alias("grp"),
@@ -957,8 +948,10 @@ def q_corpus_curation(spark, sf_dir):
     # over the integer token counts at four fracs;
     # doc_id = the 1-based rank k, val = the value AT that rank —
     # integer-exact end to end, vs the naive global row_number twin the
-    # prefix-sum construction exists to avoid
-    quant = __f_quant.result().select(
+    # distributed sequence id exists to avoid
+    quant = CU.exact_quantiles(
+        toks.select("n_tok"), "n_tok", [0.25, 0.5, 0.75, 0.9]
+    ).select(
         F.lit("quant").alias("kind"),
         F.col("k").alias("doc_id"),
         F.format_string("%.2f", F.col("frac")).alias("grp"),

@@ -17,15 +17,20 @@ Scale notes:
 - sampling is one codegen'd filter — no shuffle, full pushdown of any
   surrounding predicates; stratified rates apply via a broadcast join
   (strata counts are small: languages, quality buckets);
-- ``pack_shards`` needs a GLOBAL running token total, which naively is a
-  single-partition window (the classic WindowExec "no partition defined"
-  scale-killer). It is implemented as a distributed prefix sum instead:
+- a global position in key order (``global_order_index``'s
+  ``train_pos``, ``exact_quantiles``' ranks, ``cap_per_domain``'s
+  within-domain ranks) naively is a single-partition window (the
+  classic WindowExec "no partition defined" scale-killer). Each comes
+  from :func:`..session.global_index` instead: one range shuffle and
+  Spark's distributed sequence id;
+- ``pack_shards`` needs a GLOBAL running token total, a weighted sum a
+  row index cannot give. It is a distributed prefix sum:
   range-repartition by the order key, per-partition cumulative sums
   (window PARTITIONED by partition id — parallel), then a tiny
-  per-partition-totals frame (one row per partition) carries the running
-  offsets through a broadcast join back. The only single-partition
-  window runs over that totals frame — #partitions rows, bounded by
-  cluster size, never by data size.
+  per-partition-totals frame (one row per partition) carries the
+  running offsets through a broadcast join back. The only
+  single-partition window runs over that totals frame — #partitions
+  rows, bounded by cluster size, never by data size.
 """
 
 from __future__ import annotations
@@ -33,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import global_index, local_frame
 
 __all__ = [
     "sample_bucket",
@@ -93,7 +98,6 @@ def pack_shards(
     token_col: str,
     budget: int,
     order_col: str = "doc_id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign each row a ``shard_id`` so that consecutive rows (in
     ``order_col`` order) fill ~``budget`` tokens per shard: shard_id =
@@ -102,7 +106,8 @@ def pack_shards(
     // budget``. A document longer than ``budget`` still lands in exactly
     one shard (packing never splits rows).
 
-    Distributed prefix sum (see module docstring): requires
+    Distributed prefix sum (see module docstring) over
+    ``spark.sql.shuffle.partitions`` range partitions: requires
     ``token_col`` >= 0 and non-null, ``order_col`` globally unique.
 
     Cluster-resilience caveat: the eager ``localCheckpoint`` below (which
@@ -118,10 +123,9 @@ def pack_shards(
     """
     if budget <= 0:
         raise ValueError("budget must be positive")
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # range partitioner assigns ascending key ranges to ascending
     # partition ids, so partition id IS the macro sort order
-    d = df.repartitionByRange(n, F.col(order_col)).withColumn(
+    d = df.repartitionByRange(F.col(order_col)).withColumn(
         "__pid", F.spark_partition_id()
     )
     # __pid is a READ-side value: under AQE every consumer stage of the
@@ -168,7 +172,6 @@ def cap_per_domain(
     domain_col: str,
     cap: int,
     salt: str = "",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Domain rebalancing: keep at most ``cap`` rows per ``domain_col``
     group, selecting the survivors deterministically (smallest
@@ -191,16 +194,12 @@ def cap_per_domain(
        shuffle) pick the over-cap domain set, which rides a BROADCAST
        semi/anti join: the under-cap bulk of the corpus is never
        shuffled at all;
-    2. only over-cap rows are ranked, via the :func:`pack_shards`
-       prefix-sum construction generalized per domain:
-       ``repartitionByRange(domain, order_key)`` spreads a hot domain
-       contiguously ACROSS partitions (ascending partition id ==
-       ascending order_key within the domain), per-(partition, domain)
-       local running counts parallelize, and the cross-partition offsets
-       come from a totals frame of ≤ #partitions rows per over-cap
-       domain, windowed PARTITIONED BY domain — never a single global
-       task. The offsets frame (#over-cap-domains × #partitions tiny
-       rows) is broadcast back.
+    2. only over-cap rows are ranked: :func:`..session.global_index`
+       over ``(domain, order_key)`` range-partitions them, so a hot
+       domain spreads contiguously ACROSS partitions, and numbers them
+       globally; ``domain_rank`` is a row's index minus its domain's
+       first index, plus one. The first indexes (one row per over-cap
+       domain) come from an aggregate and are broadcast back.
 
     Scan trade-off, stated honestly: the under/over split reads the
     input relation in two plan branches (plus the counts pass), so an
@@ -229,47 +228,18 @@ def cap_per_domain(
     hot = df.join(F.broadcast(over), domain_col, "left_semi").withColumn(
         "__ok", shuffle_order_key(F.col("doc_id"), salt)
     )
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # same AQE hazard as pack_shards: __pid must be frozen as data
-    # before the cumsum/totals branches fan out (see pack_shards)
-    r = (
-        hot.repartitionByRange(n, F.col(domain_col), F.col("__ok"))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_in = (
-        Window.partitionBy("__pid", domain_col)
-        .orderBy("__ok")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = r.withColumn("__c", F.count(F.lit(1)).over(w_in))
-    totals = cum.groupBy("__pid", domain_col).agg(F.max("__c").alias("__t"))
-    w_off = (
-        Window.partitionBy(domain_col)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        "__pid",
-        domain_col,
-        F.coalesce(F.sum("__t").over(w_off), F.lit(0)).alias("__off"),
-    )
+    ranked = global_index(hot, [domain_col, "__ok"], "__i")
+    first = ranked.groupBy(domain_col).agg(F.min("__i").alias("__first"))
     kept = (
-        cum.join(F.broadcast(offs), ["__pid", domain_col])
-        .withColumn("domain_rank", (F.col("__off") + F.col("__c")))
+        ranked.join(F.broadcast(first), domain_col)
+        .withColumn("domain_rank", F.col("__i") - F.col("__first") + 1)
         .filter(F.col("domain_rank") <= cap)
-        .drop("__pid", "__ok", "__c", "__off")
     )
     cols = df.columns + ["domain_rank"]
     return under.select(*cols).unionByName(kept.select(*cols))
 
 
-def exact_quantiles(
-    df: DataFrame,
-    value_col: str,
-    fracs: list,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def exact_quantiles(df: DataFrame, value_col: str, fracs: list) -> DataFrame:
     """EXACT distributed quantiles — (frac, k, value) where ``value``
     is the element at 1-based global ascending rank
     k = clamp(⌈frac·n⌉, 1, n). The curation use: deriving the frozen
@@ -279,59 +249,27 @@ def exact_quantiles(
     merge is partition-order-sensitive and the whole point of a frozen
     cutoff is that every cluster derives the SAME number.
 
-    Plan shape (the pack_shards prefix-sum construction, generalized to
-    ranks): one range shuffle on the value, per-partition ranks via an
-    in-partition window, per-partition counts (#partitions rows) prefix-
-    summed through the single tiny global window, offsets broadcast
-    back, then a broadcast semi-probe of the len(fracs) target ranks.
-    No global sort materializes and no single task sees more than its
-    partition. Ties are safe by construction: equal values occupy a
-    contiguous rank block (the range partitioner never splits equal
-    keys), so the value at rank k is well-defined however the window
-    breaks the tie. Requires non-null ``value_col``; output is
-    partition-count-invariant.
+    Plan shape: :func:`..session.global_index` over the value (one range
+    shuffle and Spark's distributed sequence id), then a broadcast probe
+    of the len(fracs) target ranks, with n from a count aggregate. No
+    single task sees more than its range partition. Ties are safe:
+    equal values occupy a contiguous rank block, so the value at rank k
+    is well-defined however the tie is ordered. Requires non-null
+    ``value_col``; output is partition-count-invariant.
     """
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    d = (
-        df.select(F.col(value_col).alias("__v"))
-        .repartitionByRange(n_part, F.col("__v"))
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    # freeze __pid as data — same AQE read-side divergence as
-    # pack_shards (see the note there)
-    d = d.localCheckpoint(eager=True)
-    w_in = (
-        Window.partitionBy("__pid")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = d.withColumn("__r", F.count(F.lit(1)).over(w_in))
-    counts = ranked.groupBy("__pid").agg(F.max("__r").alias("__t"))
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__t").over(w_off), F.lit(0)).alias("__off"),
-    )
+    ranked = global_index(df.select(F.col(value_col).alias("__v")), ["__v"], "__i")
+    n = F.col("__n")
     ks = (
-        local_frame(spark, [(float(f),) for f in fracs], "frac double")
-        .crossJoin(F.broadcast(counts.agg(F.sum("__t").alias("__n"))))
+        local_frame(df.sparkSession, [(float(f),) for f in fracs], "frac double")
+        .crossJoin(F.broadcast(df.agg(F.count(F.lit(1)).alias("__n"))))
         .select(
             "frac",
-            F.least(
-                F.greatest(
-                    F.ceil(F.col("frac") * F.col("__n")), F.lit(1)
-                ),
-                F.col("__n"),
-            ).cast("long").alias("k"),
+            F.least(F.greatest(F.ceil(F.col("frac") * n), F.lit(1)), n)
+            .cast("long")
+            .alias("k"),
         )
     )
-    g = ranked.join(F.broadcast(offs), "__pid").withColumn(
-        "__gr", F.col("__off") + F.col("__r")
-    )
-    return g.join(F.broadcast(ks), g["__gr"] == ks["k"]).select(
+    return ranked.join(F.broadcast(ks), ranked["__i"] + 1 == ks["k"]).select(
         "frac", "k", F.col("__v").alias("value")
     )
 
@@ -489,11 +427,7 @@ def shuffle_order_key(key: Column, salt: str = "") -> Column:
     return F.md5(F.concat(key.cast("string"), F.lit(salt)))
 
 
-def global_order_index(
-    df: DataFrame,
-    salt: str = "",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def global_order_index(df: DataFrame, salt: str = "") -> DataFrame:
     """Deterministic corpus shuffle for training order: adds
     ``order_key`` (the md5 permutation key) and ``train_pos`` — the row's
     0-based GLOBAL position in that shuffled order.
@@ -502,27 +436,12 @@ def global_order_index(
     seek ("resume from sample 41,000,000"), split ranges across data
     loaders, and interleave sources. The naive plan is
     ``row_number() OVER (ORDER BY order_key)`` — a single-partition
-    window, the same scale-killer :func:`pack_shards` avoids — so this
-    IS :func:`pack_shards` with one token per row and a budget of 1: the
-    running count of rows BEFORE a row, div 1, is exactly its 0-based
-    global index, and the distributed prefix sum already computes that
-    without ever materializing a global window. Requires ``doc_id``
-    values unique (md5 of a unique key is collision-free in practice;
-    ties would make positions arbitrary within the tie)."""
-    keyed = df.withColumn(
-        "order_key", shuffle_order_key(F.col("doc_id"), salt)
-    ).withColumn("__one", F.lit(1).cast("long"))
-    return (
-        pack_shards(
-            keyed,
-            "__one",
-            1,
-            order_col="order_key",
-            num_partitions=num_partitions,
-        )
-        .withColumnRenamed("shard_id", "train_pos")
-        .drop("__one")
-    )
+    window; ``train_pos`` is :func:`..session.global_index` over
+    ``order_key`` instead. Requires ``doc_id`` values unique (md5 of a
+    unique key is collision-free in practice; ties would make positions
+    arbitrary within the tie)."""
+    keyed = df.withColumn("order_key", shuffle_order_key(F.col("doc_id"), salt))
+    return global_index(keyed, ["order_key"], "train_pos")
 
 
 # split_sequences keeps a final partial chunk of at least this many

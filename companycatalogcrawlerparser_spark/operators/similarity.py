@@ -345,7 +345,8 @@ def cosine_topk_ivf(
 # The fused Arrow IVF kernel broadcasts the query set (ids, vectors,
 # probe-cell sets) into every corpus task; above this many queries the
 # per-batch score matrix (n_queries × arrow-batch-rows float64) stops
-# being comfortably task-sized and the cell-cogroup variant takes over.
+# being comfortably task-sized and the expr kernel's equi-join on cell
+# takes over.
 _ARROW_IVF_MAX_QUERIES = 2048
 
 
@@ -419,8 +420,7 @@ def _ivf_topk_arrow(
     partitions×n_queries×k candidate rows reach the window.
 
     The query side is driver-resident by construction (gated by
-    ``_ARROW_IVF_MAX_QUERIES``; past it the cell-cogroup variant takes
-    over): one column-pruned count() gates, one collect() fetches id +
+    ``_ARROW_IVF_MAX_QUERIES``; past it the expr kernel takes over): one column-pruned count() gates, one collect() fetches id +
     vector, and the probe cells are computed ON THE DRIVER with
     :func:`_np_seqdot` / :func:`_np_round6` — bit-identical to the expr
     kernel's ``_cell_scores`` (sequential-fold adds, HALF-UP rounding,
@@ -443,7 +443,7 @@ def _ivf_topk_arrow(
     spark = corpus.sparkSession
     n_q = queries.count()
     if n_q > _ARROW_IVF_MAX_QUERIES:
-        return _ivf_topk_arrow_cogroup(queries, corpus, cents, k, nprobe)
+        return cosine_topk_ivf(queries, corpus, k=k, nprobe=nprobe, cents=cents)
     qrows = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).collect() if n_q else []
@@ -554,89 +554,6 @@ def _ivf_topk_arrow(
     local = corpus.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     ).mapInPandas(fused, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
-def _ivf_topk_arrow_cogroup(
-    queries: DataFrame,
-    corpus: DataFrame,
-    cents: list,
-    k: int,
-    nprobe: int,
-) -> DataFrame:
-    """Cell-cogroup Arrow IVF variant — the r5 shape, kept as the
-    fallback when the query set exceeds ``_ARROW_IVF_MAX_QUERIES`` (too
-    big to broadcast into every corpus task): corpus cells assigned by
-    the numpy-matmul kernel, then candidates scored PER CELL with one
-    matmul and cut to a LOCAL top-k before the global window — any
-    global top-k member is by definition in its own cell's top-k (same
-    (score desc, neighbor asc) tie-break locally and globally). Costs
-    two Arrow round-trips of the corpus plus one corpus shuffle; prefer
-    the fused path whenever queries fit the broadcast gate."""
-    import pandas as pd  # noqa: F401
-
-    c = assign_cells(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_vec"),
-        ),
-        cents,
-        "c_vec",
-        kernel="arrow",
-    )
-    probes = F.slice(
-        F.sort_array(_cell_scores(F.col("q_vec"), cents), asc=False),
-        1,
-        nprobe,
-    )
-    q = (
-        queries.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
-        )
-        .withColumn("cell", F.explode(F.transform(probes, lambda p: p["i"])))
-    )
-
-    def score(key, cdf: "pd.DataFrame", qdf: "pd.DataFrame"):
-        import numpy as np
-        import pandas as pd
-
-        if cdf.empty or qdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "score": []}
-            )
-        C = np.stack([np.asarray(v, np.float64) for v in cdf["c_vec"]])
-        cn = np.sqrt((C * C).sum(axis=1))
-        Q = np.stack([np.asarray(v, np.float64) for v in qdf["q_vec"]])
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        S = np.round(Q @ C.T / (qn[:, None] * cn[None, :]), 6)
-        nid = cdf["neighbor_id"].to_numpy()
-        out_q, out_n, out_s = [], [], []
-        for qi, qid in enumerate(qdf["query_id"]):
-            mask = nid != qid
-            s = S[qi][mask]
-            cand = nid[mask]
-            # local top-k by (score desc, neighbor asc): lexsort's last
-            # key is primary
-            order = np.lexsort((cand, -s))[:k]
-            out_q.extend([qid] * len(order))
-            out_n.extend(cand[order])
-            out_s.extend(s[order])
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor_id": out_n, "score": out_s}
-        )
-
-    local = (
-        c.groupBy("cell")
-        .cogroup(q.groupBy("cell"))
-        .applyInPandas(score, _ivf_out_schema(queries, corpus))
-    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id")
     )

@@ -429,8 +429,9 @@ def finalize(spark: SparkSession, store: SnapshotStore) -> dict:
 
     filtered = finalize_emails(bag)  # F10
     # K5: global email dedup — deterministic surrogate ids by email text,
-    # assigned distributed (range-partition + local rank + offsets); a
-    # global Window.orderBy here would single-task ALL distinct emails
+    # assigned distributed (a range sort and Spark's distributed sequence
+    # id); a global Window.orderBy here would single-task ALL distinct
+    # emails
     from ..operators.merge import assign_dense_ids
 
     emails_dim = assign_dense_ids(

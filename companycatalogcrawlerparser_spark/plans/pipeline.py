@@ -101,8 +101,9 @@ def curate_training_corpus(
     Laziness contract: the returned frame's lineage contains two EAGER
     materialization points the constituent operators require —
     ``jaccard_verify``'s localCheckpoint of the candidate pairs and
-    ``pack_shards``'s partition-id freeze (×2: order index + packing).
-    Everything else stays lazy until the caller acts. The pins are
+    ``pack_shards``'s partition-id freeze (once: the order index is a
+    lazy distributed sequence id). Everything else stays lazy until the
+    caller acts. The pins are
     localCheckpoints: non-replicated, so on a preemptible fleet prefer a
     reliable checkpoint dir (the pack_shards caveat applies here too).
     """

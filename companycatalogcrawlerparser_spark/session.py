@@ -103,6 +103,23 @@ def get_spark(
     return spark
 
 
+def global_index(df: DataFrame, keys: list, col: str) -> DataFrame:
+    """``df`` sorted by ``keys`` with ``col`` = the row's 0-based position
+    in that order: ``row_number() OVER (ORDER BY keys) - 1`` without the
+    window's single partition.
+
+    The sort range-partitions the rows, and Spark's
+    ``distributed_sequence_id`` (the ``AttachDistributedSequence`` node
+    behind pandas-on-Spark's default index) numbers each partition from
+    the sizes of the ones before it. On unique keys a row's position is
+    the number of smaller keys, so it is the same under any partitioning
+    and on every recomputation; within a tie the order is arbitrary.
+    NULLs sort first, as in the ascending window."""
+    from pyspark.sql.internal import InternalFunction
+
+    return df.orderBy(*keys).withColumn(col, InternalFunction.distributed_sequence_id())
+
+
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """A frame of driver-side rows (tuples, in ``schema`` column order).
 

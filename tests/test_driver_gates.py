@@ -1,16 +1,14 @@
 """Cross-path equality for the r8 size-gated driver fallbacks.
 
-connected_components / pagerank / assign_dense_ids each run a
-driver-side kernel below a size gate (CC_DRIVER_MAX_EDGES /
-PR_DRIVER_MAX_EDGES / IDS_DRIVER_MAX_BYTES) and the unchanged
+connected_components / pagerank each run a driver-side kernel below a
+size gate (CC_DRIVER_MAX_EDGES / PR_DRIVER_MAX_EDGES) and the unchanged
 distributed algorithm above it. The driver's larger scale factors can
 cross a gate that the local fixtures never do, so the equality of the
 two paths IS the correctness claim — these tests pin it by
 monkeypatching each gate to -1 (forcing the distributed path) and
 asserting bit-identical output against the default (driver) path on
 the same inputs, including the adversarial shapes (high-diameter
-chains for CC, dangling nodes for pagerank, NULL-first ordering and
-non-ASCII keys for dense ids).
+chains for CC, dangling nodes for pagerank).
 """
 
 import pytest
@@ -18,7 +16,6 @@ from pyspark.sql import functions as F
 
 from companycatalogcrawlerparser_spark.operators import dedup as D
 from companycatalogcrawlerparser_spark.operators import linkgraph as LG
-from companycatalogcrawlerparser_spark.operators import merge as M
 
 
 def _pairs(spark, edges):
@@ -95,40 +92,3 @@ class TestPageRankGate:
         monkeypatch.setattr(LG, "PR_DRIVER_MAX_EDGES", -1)
         dist = sorted(tuple(r) for r in LG.pagerank(df, iters=0).collect())
         assert dist == driver
-
-
-class TestDenseIdsGate:
-    def test_distributed_equals_driver(self, spark, monkeypatch):
-        # non-ASCII + NULL keys: Python str sort must equal Spark's UTF8
-        # binary ordering, NULLS FIRST mirrored
-        vals = [f"user{i:04d}@host{i % 13}.ru" for i in range(500)]
-        vals += ["ünïcode@ex.com", "Ztail@ex.com", "0lead@ex.com", None]
-        df = spark.createDataFrame([(v,) for v in vals], ["email"])
-        driver = {
-            r["email"]: r["email_id"]
-            for r in M.assign_dense_ids(df, "email", "email_id").collect()
-        }
-        monkeypatch.setattr(M, "IDS_DRIVER_MAX_BYTES", -1)
-        dist = {
-            r["email"]: r["email_id"]
-            for r in M.assign_dense_ids(df, "email", "email_id").collect()
-        }
-        assert dist == driver
-        # dense from 1, no gaps
-        assert sorted(driver.values()) == list(range(1, 1 + len(vals)))
-
-    def test_wide_rows_take_distributed_path(self, spark, monkeypatch):
-        """The gate counts bytes, not rows: three 2 MiB keys are over it
-        and take the distributed path, with the driver path's ids."""
-        vals = [c * (2 << 20) for c in "bca"]
-        df = spark.createDataFrame([(v,) for v in vals], ["email"])
-
-        def ids(out):
-            return {r["email"][0]: r["email_id"] for r in out.collect()}
-
-        wide = M.assign_dense_ids(df, "email", "email_id")
-        assert "LocalTableScan" not in wide._jdf.queryExecution().executedPlan().toString()
-        monkeypatch.setattr(M, "IDS_DRIVER_MAX_BYTES", 1 << 30)
-        driver = M.assign_dense_ids(df, "email", "email_id")
-        assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
-        assert ids(wide) == ids(driver) == {"a": 1, "b": 2, "c": 3}

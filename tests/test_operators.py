@@ -10,6 +10,7 @@ from companycatalogcrawlerparser_spark.operators import linkgraph as LG
 from companycatalogcrawlerparser_spark.operators import similarity as SIM
 from companycatalogcrawlerparser_spark.operators import textquality as TQ
 from companycatalogcrawlerparser_spark.operators.urlseen import SIZE_WORD, UrlSeen, seen_key
+from conftest import PARTITIONINGS, partitioning
 
 
 class TestBloom:
@@ -189,7 +190,8 @@ class TestPolitenessSchedule:
 
 class TestAssignDenseIds:
     """Distributed replacement for row_number() OVER (ORDER BY …) — the
-    global-window email-id bottleneck (VERDICT r01 #4 / ADVICE r01)."""
+    global-window email-id bottleneck (VERDICT r01 #4 / ADVICE r01) —
+    built on Spark's distributed sequence id (session.global_index)."""
 
     def test_ids_match_global_window(self, spark):
         from pyspark.sql import Window
@@ -198,27 +200,29 @@ class TestAssignDenseIds:
             assign_dense_ids,
         )
 
+        # non-ASCII + NULL keys: Spark's UTF8 binary order, NULLS FIRST
         vals = [f"user{i:04d}@host{i % 13}.ru" for i in range(997)]
-        df = spark.createDataFrame([(v,) for v in vals], ["email"])
-        got = {
-            r["email"]: r["email_id"]
-            for r in assign_dense_ids(df, "email", "email_id").collect()
-        }
+        vals += ["ünïcode@ex.com", "Ztail@ex.com", "0lead@ex.com", None]
+        df = spark.createDataFrame([(v,) for v in vals], "email string")
         expected = {
             r["email"]: r["rn"]
             for r in df.withColumn(
                 "rn", F.row_number().over(Window.orderBy("email"))
             ).collect()
         }
-        assert got == expected
-        # stability: recompute → identical ids
-        got2 = {
-            r["email"]: r["email_id"]
-            for r in assign_dense_ids(df, "email", "email_id").collect()
-        }
-        assert got2 == got
+        assert expected[None] == 1
+        for p, aqe in PARTITIONINGS:
+            with partitioning(spark, p, aqe):
+                got = {
+                    r["email"]: r["email_id"]
+                    for r in assign_dense_ids(df, "email", "email_id").collect()
+                }
+            assert got == expected, (p, aqe)
 
     def test_no_single_partition_exchange(self, spark):
+        """One range shuffle and the AttachDistributedSequence node. This
+        pins the internal API: a Spark that drops or changes the node
+        fails here, not in a crawl."""
         from companycatalogcrawlerparser_spark.operators.merge import (
             assign_dense_ids,
         )
@@ -227,7 +231,10 @@ class TestAssignDenseIds:
             F.concat(F.lit("e"), F.col("id")).alias("email")
         )
         out = assign_dense_ids(df, "email", "email_id")
+        assert out.agg(F.min("email_id"), F.max("email_id")).first() == (1, 5000)
         plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "AttachDistributedSequence" in plan, plan
+        assert "rangepartitioning" in plan, plan
         assert "SinglePartition" not in plan, plan
 
 
@@ -640,10 +647,12 @@ class TestSimilarity:
         )
         assert expr == arrow and len(expr) == 4 * 3
 
-    def test_ivf_arrow_cogroup_fallback_matches_fused(self, spark, monkeypatch):
-        """Query sets past the broadcast gate fall back to the r5
-        cell-cogroup variant; both arrow paths and the expr kernel agree
-        row-for-row."""
+    def test_ivf_arrow_over_query_gate_uses_expr_kernel(
+        self, spark, monkeypatch
+    ):
+        """Query sets past the broadcast gate run the expr kernel: no
+        Python cogroup in the plan, and probing every cell equals brute
+        force row for row."""
         emb = self._emb(spark, n=100)
         q = emb.filter(F.col("vec_id") < 5)
 
@@ -653,19 +662,20 @@ class TestSimilarity:
                 for r in df.collect()
             )
 
-        expr = norm(SIM.cosine_topk_ivf(q, emb, k=4, n_cells=12, nprobe=4))
+        bf = norm(SIM.cosine_topk_bruteforce(q, emb, k=4))
         fused = norm(
             SIM.cosine_topk_ivf(
-                q, emb, k=4, n_cells=12, nprobe=4, kernel="arrow"
+                q, emb, k=4, n_cells=12, nprobe=12, kernel="arrow"
             )
         )
         monkeypatch.setattr(SIM, "_ARROW_IVF_MAX_QUERIES", 2)
-        cogrp = norm(
-            SIM.cosine_topk_ivf(
-                q, emb, k=4, n_cells=12, nprobe=4, kernel="arrow"
-            )
+        over = SIM.cosine_topk_ivf(
+            q, emb, k=4, n_cells=12, nprobe=12, kernel="arrow"
         )
-        assert expr == fused == cogrp
+        plan = over._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" not in plan, plan
+        assert "MapInPandas" not in plan, plan
+        assert norm(over) == fused == bf and len(bf) == 5 * 4
 
     def test_ivf_arrow_empty_query_set(self, spark):
         emb = self._emb(spark, n=30)
@@ -1139,30 +1149,27 @@ class TestCuration:
         rows = [(i, (i * 37) % 90 + 1) for i in range(400)]
         rows[123] = (123, 1000)  # longer than the budget: one shard, unsplit
         df = spark.createDataFrame(rows, "doc_id long, n_tok long")
-        got = {
-            r["doc_id"]: r["shard_id"]
-            for r in CU.pack_shards(df, "n_tok", 500, num_partitions=7).collect()
-        }
         run, want = 0, {}
         for i, t in sorted(rows):
             want[i] = run // 500
             run += t
-        assert got == want
         # shard ids start at 0 and are non-decreasing in pack order
         # (gaps are legal: an over-budget doc skips whole budget windows)
-        ordered = [got[i] for i in sorted(got)]
+        ordered = [want[i] for i in sorted(want)]
         assert ordered[0] == 0
         assert all(a <= b for a, b in zip(ordered, ordered[1:]))
         # partition-count invariance
-        got2 = {
-            r["doc_id"]: r["shard_id"]
-            for r in CU.pack_shards(df, "n_tok", 500, num_partitions=2).collect()
-        }
-        assert got2 == want
+        for p, aqe in PARTITIONINGS:
+            with partitioning(spark, p, aqe):
+                got = {
+                    r["doc_id"]: r["shard_id"]
+                    for r in CU.pack_shards(df, "n_tok", 500).collect()
+                }
+            assert got == want, (p, aqe)
 
     def test_global_order_index_matches_python(self, spark):
         """Deterministic training shuffle: train_pos must equal the rank
-        of md5(key) in pure Python, at two partition counts."""
+        of md5(key) in pure Python, at every swept partitioning."""
         import hashlib
 
         from companycatalogcrawlerparser_spark.operators import curation as CU
@@ -1177,14 +1184,13 @@ class TestCuration:
                 )
             )
         }
-        for n_parts in (3, 16):
-            got = {
-                r["doc_id"]: r["train_pos"]
-                for r in CU.global_order_index(
-                    df, num_partitions=n_parts
-                ).collect()
-            }
-            assert got == want, n_parts
+        for p, aqe in PARTITIONINGS:
+            with partitioning(spark, p, aqe):
+                got = {
+                    r["doc_id"]: r["train_pos"]
+                    for r in CU.global_order_index(df).collect()
+                }
+            assert got == want, (p, aqe)
         # a different salt is a different permutation
         other = {
             r["doc_id"]: r["train_pos"]
@@ -1196,8 +1202,8 @@ class TestCuration:
     def test_cap_per_domain_matches_python(self, spark):
         """Domain rebalancing: over-cap domains keep exactly the cap-many
         smallest md5-permutation keys (rank exported), under-cap domains
-        pass through rank-NULL — vs pure Python, at two partition
-        counts."""
+        pass through rank-NULL — vs pure Python, at every swept
+        partitioning."""
         import hashlib
         from collections import defaultdict
 
@@ -1227,14 +1233,13 @@ class TestCuration:
                     key=lambda i: hashlib.md5(str(i).encode()).hexdigest(),
                 )
                 want.update({i: r for r, i in enumerate(ranked[:cap], 1)})
-        for n_parts in (3, 16):
-            got = {
-                r["doc_id"]: r["domain_rank"]
-                for r in CU.cap_per_domain(
-                    df, "domain", cap, num_partitions=n_parts
-                ).collect()
-            }
-            assert got == want, n_parts
+        for p, aqe in PARTITIONINGS:
+            with partitioning(spark, p, aqe):
+                got = {
+                    r["doc_id"]: r["domain_rank"]
+                    for r in CU.cap_per_domain(df, "domain", cap).collect()
+                }
+            assert got == want, (p, aqe)
         # survivor counts: min(cap, domain size) per domain
         sizes = defaultdict(int)
         for i in got:
@@ -1277,14 +1282,12 @@ class TestCuration:
         )
         budget = 1000
         expected_last_shard = (sum(toks) - toks[-1]) // budget
-        for n_parts in (32, 3):
-            packed = CU.pack_shards(
-                df, "n_tok", budget, num_partitions=n_parts
-            )
-            got = packed.agg(
-                F.max("shard_id"), F.sum("n_tok"), F.count("*")
-            ).first()
-            assert got[0] == expected_last_shard, (n_parts, got)
+        for p, aqe in PARTITIONINGS:
+            with partitioning(spark, p, aqe):
+                got = CU.pack_shards(df, "n_tok", budget).agg(
+                    F.max("shard_id"), F.sum("n_tok"), F.count("*")
+                ).first()
+            assert got[0] == expected_last_shard, (p, aqe, got)
             assert (got[1], got[2]) == (sum(toks), 50_000)
 
 
@@ -1311,17 +1314,16 @@ class TestExactQuantiles:
             f: s[min(max(math.ceil(f * len(s)), 1), len(s)) - 1]
             for f in fracs
         }
-        for nparts in (3, 8):
+        for p, aqe in PARTITIONINGS:
             df = spark.createDataFrame(
                 [(v,) for v in vals], "v long"
-            ).repartition(nparts)
-            got = {
-                r["frac"]: r["value"]
-                for r in CU.exact_quantiles(
-                    df, "v", fracs, num_partitions=nparts
-                ).collect()
-            }
-            assert got == want, nparts
+            ).repartition(p)
+            with partitioning(spark, p, aqe):
+                got = {
+                    r["frac"]: r["value"]
+                    for r in CU.exact_quantiles(df, "v", fracs).collect()
+                }
+            assert got == want, (p, aqe)
 
     def test_tiny_and_all_ties(self, spark):
         from companycatalogcrawlerparser_spark.operators import (

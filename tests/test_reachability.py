@@ -316,8 +316,7 @@ def test_every_public_function_is_referenced_or_listed():
     assert sorted(set(UNREACHED_FUNCTIONS) - set(unreferenced)) == []
 
 
-TEST_HOOK = ("the hook tests use to vary the permutation (salt) or the "
-             "partitioning (num_partitions) the result must not depend on")
+TEST_HOOK = "the hook tests use to vary the permutation (salt)"
 OBSERVATION = ("the skew cap's only in-job report of the volume it skipped; "
                "the cap tests read it")
 
@@ -326,10 +325,7 @@ OBSERVATION = ("the skew cap's only in-job report of the volume it skipped; "
 # tests turn: delete it (for a fixed value, or a module constant tests
 # monkeypatch) rather than maintain it.
 UNPASSED_PARAMETERS = {
-    "operators/curation.py::cap_per_domain(num_partitions)": TEST_HOOK,
     "operators/curation.py::cap_per_domain(salt)": TEST_HOOK,
-    "operators/curation.py::exact_quantiles(num_partitions)": TEST_HOOK,
-    "operators/curation.py::global_order_index(num_partitions)": TEST_HOOK,
     "operators/curation.py::global_order_index(salt)": TEST_HOOK,
     "operators/curation.py::span_corruption(salt)": TEST_HOOK,
     "operators/dedup.py::minhash_lsh_pairs(observation)": OBSERVATION,

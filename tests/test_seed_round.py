@@ -20,9 +20,10 @@ from companycatalogcrawlerparser_spark.plans.crawl import CrawlConfig, run_crawl
 from companycatalogcrawlerparser_spark.sources import webgen
 from companycatalogcrawlerparser_spark.sources.pages import fetch_join, redirect_map
 from companycatalogcrawlerparser_spark.storage.snapshots import SnapshotStore
+from conftest import partitioning
 
 N_COMPANIES = 20
-PARTITIONINGS = (1, 3, 8)
+SHUFFLE_PARTITIONS = (1, 3, 8)
 _HASH_MOD = 2_147_483_647
 
 
@@ -61,13 +62,21 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def crawls(spark, corpus, tmp_path_factory):
-    """{num_partitions: (store dir, run_crawl result)} over one corpus."""
+    """{shuffle partitions: (store dir, output checksums, {email:
+    email_id})} over one corpus: each crawl, its finalize included, runs
+    with ``spark.sql.shuffle.partitions`` set to that value."""
     pages, seeds = corpus
     out = {}
-    for p in PARTITIONINGS:
+    for p in SHUFFLE_PARTITIONS:
         d = str(tmp_path_factory.mktemp(f"seed_round_p{p}"))
-        out[p] = (d, run_crawl(spark, pages, seeds, d,
-                               CrawlConfig(num_partitions=p, n_buckets=16)))
+        with partitioning(spark, p):
+            res = run_crawl(spark, pages, seeds, d, CrawlConfig(n_buckets=16))
+            tables = {k: res[k] for k in
+                      ("emails", "company_email", "flags", "trace", "url_seen")}
+            tables["bag"] = SnapshotStore(spark, d).read_union("bag")
+            sums = {k: _checksum(v) for k, v in tables.items()}
+            ids = {r["email"]: r["email_id"] for r in res["emails"].collect()}
+        out[p] = (d, sums, ids)
     return out
 
 
@@ -183,13 +192,12 @@ class TestPlans:
 
 
 class TestPartitioning:
-    def test_outputs_equal_across_num_partitions(self, spark, crawls):
-        sums = {}
-        for p, (d, res) in crawls.items():
-            tables = {k: res[k] for k in
-                      ("emails", "company_email", "flags", "trace", "url_seen")}
-            tables["bag"] = SnapshotStore(spark, d).read_union("bag")
-            sums[p] = {k: _checksum(v) for k, v in tables.items()}
-        assert sums[1]["bag"][0] > 0
-        for p in PARTITIONINGS[1:]:
-            assert sums[p] == sums[PARTITIONINGS[0]], p
+    def test_outputs_and_email_ids_equal_across_shuffle_partitions(self, crawls):
+        first_sums, first_ids = crawls[SHUFFLE_PARTITIONS[0]][1:]
+        assert first_sums["bag"][0] > 0 and first_ids
+        assert sorted(first_ids.values()) == list(range(1, len(first_ids) + 1))
+        assert [first_ids[e] for e in sorted(first_ids)] == sorted(first_ids.values())
+        for p in SHUFFLE_PARTITIONS[1:]:
+            sums, ids = crawls[p][1:]
+            assert ids == first_ids, p
+            assert sums == first_sums, p

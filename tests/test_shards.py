@@ -4,6 +4,7 @@ assignment — parity vs a pure-Python reference and the budget bound."""
 from pyspark.sql import functions as F
 
 from companycatalogcrawlerparser_spark.operators import curation as CU
+from conftest import PARTITIONINGS, partitioning
 
 BUDGET = 50
 
@@ -18,10 +19,8 @@ def _docs(spark, n=60):
 
 def _packed(spark, n=60):
     """global shuffle order + token-budget shard assignment."""
-    ordered = CU.global_order_index(_docs(spark, n), num_partitions=4)
-    return CU.pack_shards(
-        ordered, "n_tokens", BUDGET, order_col="train_pos", num_partitions=4
-    )
+    ordered = CU.global_order_index(_docs(spark, n))
+    return CU.pack_shards(ordered, "n_tokens", BUDGET, order_col="train_pos")
 
 
 def _py_reference(rows):
@@ -35,14 +34,19 @@ def _py_reference(rows):
 
 class TestCommitShards:
     def test_budget_respected(self, spark, tmp_path):
-        packed = _packed(spark)
-        rows = packed.collect()
-        exp_shard = _py_reference(rows)
-        for r in rows:
-            assert exp_shard[r["doc_id"]] == r["shard_id"], r
+        placed = {}
+        for p, aqe in PARTITIONINGS:
+            with partitioning(spark, p, aqe):
+                rows = _packed(spark).collect()
+            exp_shard = _py_reference(rows)
+            for r in rows:
+                assert exp_shard[r["doc_id"]] == r["shard_id"], (p, aqe, r)
+            placed[p, aqe] = {r["doc_id"]: (r["train_pos"], r["shard_id"]) for r in rows}
+        first = placed[PARTITIONINGS[0]]
+        assert all(v == first for v in placed.values())
         sums = {
             r["shard_id"]: r["tok"]
-            for r in packed.groupBy("shard_id")
+            for r in _packed(spark).groupBy("shard_id")
             .agg(F.sum("n_tokens").alias("tok"))
             .collect()
         }
